@@ -701,10 +701,12 @@ object Bench {
       s""""vs_baseline":${num3(vsBaseline)},"run_factor":${num3(runFactor)},""" +
       s""""pin_factor":${num3(runPinFactor)},"n_pin_drift":${drifting.size},""" +
       s""""pin_drift_persistent":$persistentJson,"sf":"$sfDir""""
-    java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_FULL.json"),
+    // best-effort like writePriorRatios: a read-only checkout still gets
+    // the metric line and the exit code
+    scala.util.Try(java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_FULL.json"),
       (s"""{"metric":"total","value":$total,"unit":"sec","queries":$qsFull,""" +
         s""""vs_baseline_queries":$ratioJson,"pin_drift":$driftJson,""" +
-        s"$scalars}\n").getBytes("UTF-8"))
+        s"$scalars}\n").getBytes("UTF-8")))
     println(s"""{"metric":"total","value":${num3(total)},"unit":"sec",""" +
       s""""queries":$qs,$scalars}""")
     persistent.foreach(q => System.err.println(s"[bench] PIN DRIFT (2 rounds): $q — " +

@@ -15,7 +15,7 @@ final case class WriteResult(validation: ValidationResult, writtenPaths: Seq[Str
 /** Contract-governed IO — the Spark-native core of dc43's
   * `read_with_governance` / `write_with_governance`
   * (`spark/io/read.py`, `spark/io/write.py`, `spark/io/base.py:459-535`):
-  * load → metrics (one pass) → evaluate → align; and on write
+  * load → metrics (one pre-scan) → evaluate → align; and on write
   * observe-the-input → evaluate → plan via a violation strategy → write.
   *
   * Scale notes (100 TB posture):
@@ -23,19 +23,16 @@ final case class WriteResult(validation: ValidationResult, writtenPaths: Seq[Str
   *     auto-casts can mask type mismatches (reference order,
   *     `spark/io/base.py:782,801`).
   *   - When the strategy does not gate on the verdict, metrics ride the
-  *     primary write via `Dataset.observe` — zero extra scans, zero cache.
+  *     primary write via `Dataset.observe` — 0 extra jobs, zero cache.
   *   - When it does (Split/Strict), or the contract carries unique/query
-  *     rules (not expressible in observe), exactly one metrics pre-scan
-  *     runs. Nothing is ever persisted: Split's valid/reject subsets are
-  *     two pushed-down filter scans of the source, not a cached
-  *     materialisation of the whole input.
+  *     rules (not expressible in observe), one metrics pre-scan runs
+  *     first ([[Metrics.computeWithQueries]]): 1 Spark job, 2 with
+  *     `unique` rules, plus the jobs of each `query` rule's SQL. Nothing
+  *     is ever persisted: Split's valid/reject subsets are two pushed-down
+  *     filter scans of the source, not a cached materialisation of the
+  *     whole input.
   */
 object ContractIO {
-
-  private def metricsOf(df: DataFrame, specs: Seq[ExpectationSpec]): Map[String, Any] =
-    if (specs.exists(s => s.rule == "query" && s.query.isDefined))
-      Metrics.computeWithQueries(df, specs, df.sparkSession)
-    else Metrics.compute(df, specs)
 
   def read(
       spark: SparkSession,
@@ -55,7 +52,7 @@ object ContractIO {
     val raw = spark.read.format(format).options(options).load(path)
     val specs = Expectations.fromContract(contract)
     val metrics: Map[String, Any] =
-      if (collectMetrics) metricsOf(raw, specs) else Map.empty
+      if (collectMetrics) Metrics.computeWithQueries(raw, specs, spark) else Map.empty
     val validation = Evaluator.evaluate(contract, SchemaSnapshot.of(raw).toMap, metrics)
     if (enforce && !validation.ok)
       throw new IllegalStateException(
@@ -126,14 +123,10 @@ object ContractIO {
           ValidationResult(ok = true, Nil, Nil, Map.empty, schema))
         plan.primary.foreach(execute)
         plan.additional.foreach(execute)
-        val metrics: Map[String, Any] = obs.get.map {
-          case (k, v: Number) => k -> (v.longValue: Any)
-          case (k, v)         => k -> v
-        }
-        Evaluator.evaluate(contract, schema, metrics)
+        Evaluator.evaluate(contract, schema, Metrics.metricMap(obs.get))
       } else {
         // one metrics pre-scan on the input, then plan against the verdict
-        val metrics = metricsOf(df0, specs)
+        val metrics = Metrics.computeWithQueries(df0, specs, df0.sparkSession)
         val v = Evaluator.evaluate(contract, schema, metrics)
         val aligned = ApplyContract.align(df0, contract, autoCast)
         val plan = strategy.plan(aligned, specs, v)

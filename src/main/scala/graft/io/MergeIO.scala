@@ -33,11 +33,8 @@ object MergeIO {
     val spark = df.sparkSession
     val specs = Expectations.fromContract(contract)
 
-    // validate the input frame (pre-align) — one metrics pass, as in write()
-    val metrics: Map[String, Any] =
-      if (specs.exists(s => s.rule == "query" && s.query.isDefined))
-        Metrics.computeWithQueries(df, specs, spark)
-      else Metrics.compute(df, specs)
+    // validate the input frame (pre-align) — one metrics pre-scan, as in write()
+    val metrics = Metrics.computeWithQueries(df, specs, spark)
     val validation = Evaluator.evaluate(contract, SchemaSnapshot.of(df).toMap, metrics)
     val aligned = ApplyContract.align(df, contract, autoCast)
     val plan = strategy.plan(aligned, specs, validation)

@@ -41,10 +41,8 @@ object Caching {
     // read storageLevel NONE here (neither is persisted yet), and
     // persisting the second would hit CacheManager's "already cached"
     // warning the header of this file exists to avoid
-    val seen = scala.collection.mutable.HashSet
-      .empty[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]
-    val fresh = dfs.filter(df => df.storageLevel == StorageLevel.NONE &&
-      seen.add(df.queryExecution.analyzed.canonicalized))
+    val fresh = dfs.filter(_.storageLevel == StorageLevel.NONE)
+      .distinctBy(_.queryExecution.analyzed.canonicalized)
     if (fresh.isEmpty) return
     fresh.foreach(_.persist())
     fresh.map(_.select(lit(1).as("_m"))).reduce(_ union _).count()

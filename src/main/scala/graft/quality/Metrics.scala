@@ -1,66 +1,91 @@
 package graft.quality
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Single-pass expectation metric computation.
+/** Expectation metrics as one aggregate.
   *
   * The reference (dc43 `spark/data_quality.py:98-196`) issues one Spark job
   * per expectation (`df.filter(NOT pred).count()` each, plus
   * `distinct().count()` per unique column, plus a bare `count()`): at N
   * expectations that is N+1 full scans of the dataset. Here every predicate
-  * violation count is a conditional sum and every uniqueness check a
-  * `count - count_distinct - has_null` delta inside ONE `agg`, so the whole
-  * metric set costs a single scan regardless of contract size — the
-  * difference between 1 and 40 passes at 100 TB.
+  * violation is a per-row 0/1 flag and every uniqueness check a
+  * `count - count_distinct - has_null` delta, all in ONE aggregate, so
+  * contract size never adds a scan.
+  *
+  * The driver-side maps ([[compute]], [[computeWithObservations]],
+  * [[computeWithQueries]]) observe that aggregate with `Dataset.observe` on
+  * a `noop`-sink action: observed metrics merge per-task partials on the
+  * driver, so no `SinglePartition` exchange (and no job of its own under
+  * AQE) is needed. Jobs per metric pre-scan:
+  *   - 1 without `unique` rules;
+  *   - 2 with any number of them: the frame is grouped once by the unique
+  *     key(s) (one shuffle over a (rule index, typed key) expansion, the
+  *     shape of Spark's distinct-aggregate rewrite) and the observed
+  *     aggregate over the groups yields `Σ(n − 1)` per key — exactly
+  *     `count − countDistinct − hasNull`, since NULL keys form one group;
+  *   - 0 when the metrics ride a governed write (`ContractIO`'s observe
+  *     branch, [[aggregateExprs]] on the written frame).
+  * The observed aggregate always sits in the result stage: accumulator
+  * updates of a re-executed shuffle-map stage may be applied twice.
   */
 object Metrics {
 
-  /** Aggregate expressions for the metric set: `row_count` plus one
-    * `violations.<key>` per countable spec. Usable in both `df.agg` (batch)
-    * and `Dataset.observe` (streaming, zero extra jobs). */
-  def aggregateExprs(specs: Seq[ExpectationSpec], columns: Set[String]): Seq[Column] = {
-    val rowCount = count(lit(1)).as("row_count")
-    val violationCols = specs.flatMap { spec =>
-      val metricName = s"violations.${spec.key}"
+  /** What one countable spec measures. */
+  private sealed trait Measure
+  /** `flag` is 1 on a violating row, else 0. */
+  private final case class Flagged(name: String, flag: Column) extends Measure
+  /** The spec's column is absent: every row violates (reference semantics). */
+  private final case class EveryRow(name: String) extends Measure
+  /** Rows beyond the first per distinct `key`, NULL being one value. */
+  private final case class UniqueKey(name: String, key: Column) extends Measure
+
+  private def measures(specs: Seq[ExpectationSpec], columns: Set[String]): Seq[Measure] =
+    specs.flatMap { spec =>
+      val name = s"violations.${spec.key}"
       spec.rule match {
         case "query" => None
         case "unique" =>
-          spec.column.map { c =>
-            if (!columns.contains(c)) count(lit(1)).as(metricName) // column absent: all rows violate (reference semantics)
-            else {
-              // total - distinct, where NULL counts as one distinct value
-              // (matches reference `total - df.select(c).distinct().count()`)
-              (count(lit(1)) - countDistinct(Expectations.qcol(c))
-                - max(when(Expectations.qcol(c).isNull, 1L).otherwise(0L))).as(metricName)
-            }
-          }
+          spec.column.map(c => if (columns.contains(c)) UniqueKey(name, Expectations.qcol(c)) else EveryRow(name))
         case _ =>
           Expectations.passPredicate(spec).map { pred =>
             spec.column match {
-              case Some(c) if !columns.contains(c) => count(lit(1)).as(metricName)
+              case Some(c) if !columns.contains(c) => EveryRow(name)
               // when(!pred) is NULL for NULL inputs → otherwise(0): null values
               // do not count as threshold/enum/regex violations, matching the
               // reference's `filter(NOT (pred)).count()` semantics.
-              case _ => sum(when(!pred, 1L).otherwise(0L)).as(metricName)
+              case _ => Flagged(name, when(!pred, 1L).otherwise(0L))
             }
           }
       }
     }
-    rowCount +: violationCols
-  }
 
-  /** Compute `row_count` + all violation counts in one aggregation pass.
-    * Specs whose column is missing from `df` count every row as violating,
-    * mirroring the reference. */
-  def compute(df: DataFrame, specs: Seq[ExpectationSpec]): Map[String, Long] = {
-    val columns = df.columns.toSet
-    val exprs = aggregateExprs(specs, columns)
-    val row = df.agg(exprs.head, exprs.tail: _*).collect()(0)
-    row.schema.fieldNames.zipWithIndex.map { case (name, i) =>
-      name -> (if (row.isNullAt(i)) 0L else row.getLong(i))
-    }.toMap
-  }
+  /** Aggregate expressions for the metric set: `row_count` plus one
+    * `violations.<key>` per countable spec, over the rows of the frame.
+    * Usable in `df.agg` and, without present `unique` columns (count
+    * distinct cannot be observed), in `Dataset.observe`. */
+  def aggregateExprs(specs: Seq[ExpectationSpec], columns: Set[String]): Seq[Column] =
+    count(lit(1)).as("row_count") +: measures(specs, columns).map {
+      case Flagged(name, flag) => sum(flag).as(name)
+      case EveryRow(name) => count(lit(1)).as(name)
+      // total - distinct, where NULL counts as one distinct value
+      // (matches reference `total - df.select(c).distinct().count()`)
+      case UniqueKey(name, key) =>
+        (count(lit(1)) - countDistinct(key) - max(when(key.isNull, 1L).otherwise(0L))).as(name)
+    }
+
+  /** Per enum spec on a present column: the row's value as a string when
+    * it is outside the allowed set, else NULL. */
+  private def enumViolations(specs: Seq[ExpectationSpec], columns: Set[String]): Seq[(String, Column)] =
+    specs.filter(s => s.rule == "enum" && s.column.exists(columns.contains))
+      .flatMap { spec =>
+        Expectations.passPredicate(spec).map { pred =>
+          s"observed.${spec.key}" -> when(!pred, Expectations.qcol(spec.column.get).cast("string"))
+        }
+      }
+
+  private def sortedCapped(values: Column, cap: Int): Column =
+    slice(array_sort(collect_set(values)), 1, cap)
 
   /** Observed-value aggregates for enum specs: per spec a capped, SORTED
     * array of distinct values seen outside the allowed set, keyed
@@ -69,39 +94,103 @@ object Metrics {
     * values instead of dropping it (`contracts/backend/drafting.py:158-201`
     * reads `observed.enum_<field>` off the validation metrics).
     *
-    * Values ride the same single aggregation pass as the violation counts.
-    * Sorting makes the payload deterministic across partitioning (a bare
-    * `collect_set` is arrival-ordered); `cap` bounds what reaches the
-    * driver. The aggregation state itself is bounded by the column's
-    * distinct VIOLATING values — fine for the categorical columns enum
-    * rules describe; don't point an enum rule at a free-text column. */
+    * Values ride the same aggregate as the violation counts. Sorting makes
+    * the payload deterministic across partitioning (a bare `collect_set`
+    * is arrival-ordered); `cap` bounds what reaches the driver. The
+    * aggregation state itself is bounded by the column's distinct
+    * VIOLATING values — fine for the categorical columns enum rules
+    * describe; don't point an enum rule at a free-text column. */
   def observedEnumExprs(specs: Seq[ExpectationSpec], columns: Set[String],
                         cap: Int = 32): Seq[Column] =
-    specs.filter(s => s.rule == "enum" && s.column.exists(columns.contains))
-      .flatMap { spec =>
-        Expectations.passPredicate(spec).map { pred =>
-          val c = Expectations.qcol(spec.column.get)
-          slice(array_sort(collect_set(when(!pred, c.cast("string")))), 1, cap)
-            .as(s"observed.${spec.key}")
-        }
-      }
+    enumViolations(specs, columns).map { case (name, v) => sortedCapped(v, cap).as(name) }
 
-  /** [[compute]] plus enum observations — still ONE aggregation pass.
-    * Violation counts come back as `Long`, observations as `Seq[String]`
-    * under `observed.enum_<field>` (only present when non-empty, matching
-    * the reference's "no observations → no extension" contract). */
-  def computeWithObservations(df: DataFrame, specs: Seq[ExpectationSpec],
-                              observedCap: Int = 32): Map[String, Any] = {
+  // column names of the frame the metrics are observed on
+  private val SetCol = "_graft_set"
+  private val RowsCol = "_graft_n"
+  private def flagCol(i: Int) = s"_graft_f$i"
+  private def slotCol(i: Int) = s"_graft_k$i"
+
+  /** The frame the metrics are observed on and the observed aggregate.
+    *
+    * Each row of that frame stands for `_graft_n` input rows of one set
+    * (`_graft_set`) and carries the summed violation flags (set 0 only)
+    * and one value slot per set. Without present unique columns it is a
+    * projection of the input: set 0, one row each, every enum value in
+    * its slot. With them it is the input grouped by (set, slots), where
+    * set 0 groups by the first unique key and every further unique key
+    * and enum value is an extra set whose rows fill only its own slot —
+    * so the groups of set `i` are exactly the distinct values of slot `i`,
+    * NULL included. The frame only projects what the metrics read, so a
+    * columnar scan stays pruned. */
+  private def observedPlan(df: DataFrame, specs: Seq[ExpectationSpec],
+                           observedCap: Option[Int]): (DataFrame, Seq[Column]) = {
     val columns = df.columns.toSet
-    val exprs = aggregateExprs(specs, columns) ++ observedEnumExprs(specs, columns, observedCap)
-    val row = df.agg(exprs.head, exprs.tail: _*).collect()(0)
-    row.schema.fieldNames.zipWithIndex.flatMap { case (name, i) =>
-      if (name.startsWith("observed.")) {
-        val vs = if (row.isNullAt(i)) Nil else row.getSeq[String](i).filter(_ != null)
-        if (vs.isEmpty) None else Some(name -> (vs: Any))
-      } else Some(name -> (if (row.isNullAt(i)) 0L else row.getLong(i): Any))
-    }.toMap
+    val ms = measures(specs, columns)
+    val flags = ms.collect { case Flagged(_, flag) => flag }
+    val keys = ms.collect { case UniqueKey(_, key) => key }
+    val enums = observedCap.fold(Seq.empty[(String, Column)])(_ => enumViolations(specs, columns))
+    val slots = keys ++ enums.map(_._2)
+    lazy val types = df.select(slots: _*).schema.map(_.dataType)
+    def set(s: Int, fills: Int => Boolean): Seq[Column] =
+      Seq(lit(s).as(SetCol), lit(1L).as(RowsCol)) ++
+        flags.zipWithIndex.map { case (f, i) => (if (s == 0) f else lit(0L)).as(flagCol(i)) } ++
+        slots.zipWithIndex.map { case (v, i) => (if (fills(i)) v else lit(null).cast(types(i))).as(slotCol(i)) }
+    val sets = if (keys.isEmpty) Seq(set(0, _ => true)) else slots.indices.map(s => set(s, _ == s))
+    val rows = sets match {
+      case Seq(only) => df.select(only: _*)
+      case _ => df.select(explode(array(sets.map(s => struct(s: _*)): _*)).as("_graft_r")).select("_graft_r.*")
+    }
+    val summed = (RowsCol +: flags.indices.map(flagCol)).map(c => sum(c).as(c))
+    val frame =
+      if (keys.isEmpty) rows
+      else rows.groupBy(col(SetCol) +: slots.indices.map(i => col(slotCol(i))): _*).agg(summed.head, summed.tail: _*)
+    val flagIndex = ms.collect { case m: Flagged => m.name }.zipWithIndex.toMap
+    val setIndex = ms.collect { case m: UniqueKey => m.name }.zipWithIndex.toMap
+    val rowCount = sum(when(col(SetCol) === 0, col(RowsCol)))
+    val metricExprs = ms.map {
+      case Flagged(name, _) => sum(col(flagCol(flagIndex(name)))).as(name)
+      case EveryRow(name) => rowCount.as(name)
+      case UniqueKey(name, _) => sum(when(col(SetCol) === setIndex(name), col(RowsCol) - 1)).as(name)
+    }
+    val enumExprs = enums.zipWithIndex.map { case ((name, _), e) =>
+      sortedCapped(col(slotCol(keys.size + e)), observedCap.get).as(name)
+    }
+    (frame, (rowCount.as("row_count") +: metricExprs) ++ enumExprs)
   }
+
+  /** `row_count` + all violation counts. Specs whose column is missing
+    * from `df` count every row as violating, mirroring the reference. */
+  def compute(df: DataFrame, specs: Seq[ExpectationSpec]): Map[String, Long] =
+    observe(df, specs, None).collect { case (k, n: Long) => k -> n }
+
+  /** [[compute]] plus enum observations, in the same jobs. Violation counts
+    * come back as `Long`, observations as `Seq[String]` under
+    * `observed.enum_<field>` (only present when non-empty, matching the
+    * reference's "no observations → no extension" contract). */
+  def computeWithObservations(df: DataFrame, specs: Seq[ExpectationSpec],
+                              observedCap: Int = 32): Map[String, Any] =
+    observe(df, specs, Some(observedCap))
+
+  /** The one metric action: observe [[observedPlan]]'s aggregate on a
+    * `noop`-sink write of its frame. */
+  private def observe(df: DataFrame, specs: Seq[ExpectationSpec], observedCap: Option[Int]): Map[String, Any] = {
+    val (frame, exprs) = observedPlan(df, specs, observedCap)
+    val obs = Observation("graft_dq_" + java.util.UUID.randomUUID().toString.replace("-", ""))
+    frame.observe(obs, exprs.head, exprs.tail: _*).write.format("noop").mode("overwrite").save()
+    metricMap(obs.get)
+  }
+
+  /** Observed metric values as the verdict reads them: counts as `Long`
+    * (NULL sums of empty input as 0), `observed.*` payloads as their
+    * non-null values, dropped when empty. */
+  private[graft] def metricMap(observed: Map[String, Any]): Map[String, Any] =
+    observed.flatMap {
+      case (k, v) if k.startsWith("observed.") =>
+        val vs = Option(v).toSeq.flatMap(_.asInstanceOf[Seq[String]]).filter(_ != null)
+        if (vs.isEmpty) None else Some(k -> vs)
+      case (k, n: Number) => Some(k -> n.longValue)
+      case (k, _) => Some(k -> 0L)
+    }
 
   /** Canonical dataset alias that `query` rules reference in their SQL. */
   val QueryViewAlias = "_graft_dq_tmp"

@@ -1,0 +1,97 @@
+package graft.quality
+
+import graft.SparkSpec
+import graft.contracts._
+import graft.io.ContractIO
+import graft.strategies.{NoOpStrategy, SplitStrategy}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.types._
+
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+/** Spark jobs per metric pre-scan and per governed write, counted by a
+  * listener on the job group the work runs under. */
+class MetricsJobsSpec extends SparkSpec {
+
+  /** Counts the jobs of `group`; releases `flushed` when a job of `marker`
+    * ends — the listener bus delivers in order, so every earlier event has
+    * been seen by then. */
+  private final class GroupJobs(group: String, marker: String) extends SparkListener {
+    val jobs = new AtomicInteger
+    val flushed = new CountDownLatch(1)
+    private val markerJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    private def groupOf(props: java.util.Properties): String =
+      Option(props).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).orNull
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      val g = groupOf(e.properties)
+      if (g == group) jobs.incrementAndGet()
+      else if (g == marker) markerJobs.add(e.jobId)
+    }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit =
+      if (markerJobs.contains(e.jobId)) flushed.countDown()
+  }
+
+  /** `body`'s result and the number of Spark jobs it ran. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val id = java.util.UUID.randomUUID().toString
+    val listener = new GroupJobs(s"jobs-$id", s"flush-$id")
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(s"jobs-$id", "counted")
+      val result = try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"flush-$id", "listener flush")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(listener.flushed.await(60, TimeUnit.SECONDS), "listener bus did not flush")
+      (result, listener.jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private val schema = StructType(Seq(
+    StructField("id", LongType), StructField("code", StringType), StructField("v", DoubleType)))
+
+  /** A parquet source with a duplicated id, a NULL id and a negative v. */
+  private lazy val source = {
+    val path = tmpDir("graft_jobs_src") + "/src"
+    spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+      Row(1L, "a", 1.0), Row(2L, "b", -1.0), Row(2L, "c", 2.0), Row(null, "a", 3.0), Row(4L, "a", 4.0)), 2), schema)
+      .write.parquet(path)
+    spark.read.parquet(path)
+  }
+
+  private def contract(uniques: String*): Contract = Contract(id = "t.jobs", version = "1.0.0",
+    schema = Seq(SchemaObjectDef("t", Seq(
+      FieldDef("id", Some("bigint"), required = true, unique = uniques.contains("id")),
+      FieldDef("code", Some("string"), unique = uniques.contains("code"),
+        quality = Seq(QualityRule(rule = Some("enum"), values = Seq("a", "b")))),
+      FieldDef("v", Some("double"), quality = Seq(QualityRule(mustBeGreaterThan = Some(BigDecimal(0)))))))))
+
+  private def specs(uniques: String*) = Expectations.fromContract(contract(uniques: _*))
+
+  test("a metrics pre-scan is one job, two with unique rules") {
+    val df = source
+    assert(jobsOf(Metrics.compute(df, specs()))._2 == 1)
+    assert(jobsOf(Metrics.computeWithObservations(df, specs()))._2 == 1)
+    assert(jobsOf(Metrics.compute(df, specs("id")))._2 == 2)
+    assert(jobsOf(Metrics.computeWithObservations(df, specs("id")))._2 == 2)
+    val (two, jobs) = jobsOf(Metrics.compute(df, specs("id", "code")))
+    assert(jobs == 2)
+    assert(two("violations.unique_id") == 1L && two("violations.unique_code") == 2L)
+  }
+
+  test("a verdict-gated Split write is a two-job pre-scan plus one job per subset") {
+    val (res, jobs) = jobsOf(ContractIO.write(source, tmpDir("graft_jobs_split"), contract("id"),
+      mode = "overwrite", strategy = SplitStrategy()))
+    assert(!res.validation.ok && res.writtenPaths.size == 2)
+    assert(jobs == 2 + 2)
+  }
+
+  test("a NoOp write observes the write itself: one job") {
+    val (res, jobs) = jobsOf(ContractIO.write(source, tmpDir("graft_jobs_noop"), contract(),
+      mode = "overwrite", strategy = NoOpStrategy))
+    assert(res.validation.metrics("violations.gt_v") == 1L)
+    assert(jobs == 1)
+  }
+}
