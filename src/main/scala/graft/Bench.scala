@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs the SURVEY §6 headline queries against
-  * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line
-  * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`.
+  * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line of scalars
+  * ([[stdoutLine]]); the per-query seconds, ratios and drift lists go to
+  * the `BENCH_FULL.json` side file.
   *
   * - Materialises results through the `noop` sink so projections are not
   *   pruned away by a bare count() — the timing covers the full computation.
@@ -464,6 +465,19 @@ object Bench {
   private[graft] def num3(r: Double): String =
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(r))
 
+  /** The stdout metric line: scalars only (3-decimal), a fixed set of
+    * fields whatever the headline set, so a reader that keeps only the
+    * last ~2 KB of output can parse it (with the per-query map it had
+    * outgrown that window). The maps and drift lists live in
+    * BENCH_FULL.json. */
+  private[graft] def stdoutLine(total: Double, vsBaseline: Double, runFactor: Double,
+                                pinFactor: Double, nPinDrift: Int,
+                                nPinDriftPersistent: Int, sfDir: String): String =
+    s"""{"metric":"total","value":${num3(total)},"unit":"sec",""" +
+      s""""vs_baseline":${num3(vsBaseline)},"run_factor":${num3(runFactor)},""" +
+      s""""pin_factor":${num3(pinFactor)},"n_pin_drift":$nPinDrift,""" +
+      s""""n_pin_drift_persistent":$nPinDriftPersistent,"sf":"$sfDir"}"""
+
   /** Persist this run's DRIFT SET for the next run's persistence
     * comparison — best-effort (a read-only checkout must not fail the
     * bench). */
@@ -668,16 +682,6 @@ object Bench {
         f"$name ${secs}%.2f>${budgetSecs(name) * runFactor}%.2f"
     }
     val blBreaches = if (!budgetsOn) Nil else baselineBreaches(results, runPinFactor)
-    // the driver captures only the last ~2 KB of output, and through r16
-    // its per-query parse never succeeded ("parsed": null in every
-    // BENCH_r*.json) because this line had outgrown that window — so the
-    // stdout line is kept COMPACT (3-decimal seconds; the ratio and
-    // drift MAPS move to BENCH_FULL.json, stdout keeps their counts)
-    // while the full-precision payload with every map goes to the
-    // BENCH_FULL.json side file. Measurement methodology is unchanged:
-    // same queries, same warm-up, same best-of-3, same retries.
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + num3(v) }
-      .mkString("{", ",", "}")
     val qsFull = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
@@ -707,8 +711,8 @@ object Bench {
       (s"""{"metric":"total","value":$total,"unit":"sec","queries":$qsFull,""" +
         s""""vs_baseline_queries":$ratioJson,"pin_drift":$driftJson,""" +
         s"$scalars}\n").getBytes("UTF-8")))
-    println(s"""{"metric":"total","value":${num3(total)},"unit":"sec",""" +
-      s""""queries":$qs,$scalars}""")
+    println(stdoutLine(total, vsBaseline, runFactor, runPinFactor, drifting.size,
+      persistent.size, sfDir))
     persistent.foreach(q => System.err.println(s"[bench] PIN DRIFT (2 rounds): $q — " +
       "fix the regression or re-base the pin with evidence (Bench.pinnedSecs policy)"))
     // persist the normalized DRIFT SET, not raw ratios: a round run

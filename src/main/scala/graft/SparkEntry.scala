@@ -62,15 +62,9 @@ object SparkEntry {
     * order — the k-bounded artifact collect (PQ-codebook precedent)
     * shared by the q_bpe_segment / q_bpe_tokenize / q_pack_tokens
     * builders so merge count and ordering can never silently diverge
-    * between the gated queries. Uses the PRODUCTION trainer
-    * (trainMergesLocal — one distributed vocab aggregation, then the
-    * driver-side delta loop; spec-pinned byte-equal to the distributed
-    * trainer in BpeSpec, oracle-gated as q_bpe_train64): the
-    * per-round-Spark-job trainer is still gated directly by
-    * q_bpe_train, but the consumers shouldn't pay 5 chained jobs for
-    * an artifact the delta loop derives from one. */
+    * between the gated queries. Uses the trainer q_bpe_train gates. */
   private def collectedMerges(docs: DataFrame, n: Int): Seq[(String, String)] =
-    graft.ops.Bpe.trainMergesLocal(graft.ops.Bpe.wordVocab(docs), n, maxTypes = 0)
+    graft.ops.Bpe.trainMerges(docs, n)
       .orderBy(col("step")).collect()
       .map(r => (r.getAs[String]("pair"), r.getAs[String]("merged"))).toSeq
 
@@ -1568,10 +1562,8 @@ object SparkEntry {
     // word-type vocabulary — deterministic (count DESC, pair ASC) wins
     "q_bpe_train" -> ((s, d) =>
       graft.ops.Bpe.trainMerges(t(s, d, "documents"), 5)),
-    // production-k induction: distributed vocab aggregation + the
-    // driver-side delta merge loop (only pair-containing word types
-    // recount per merge) — 64 merges without 64 chained Spark jobs;
-    // spec-pinned equal to the distributed trainer, oracle-gated
+    // production-k induction through the capped entry point (no cap
+    // here): 64 merges from one vocabulary collect, oracle-gated
     // against DuckDB executing all 64 steps in SQL
     "q_bpe_train64" -> ((s, d) =>
       graft.ops.Bpe.trainMergesLocal(

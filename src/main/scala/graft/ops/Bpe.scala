@@ -13,24 +13,26 @@ import org.apache.spark.sql.functions._
   * vocabulary (distinct words weighted by corpus frequency), not the
   * token stream — so each merge iteration's state is vocabulary-sized,
   * and the corpus is touched exactly once to build the initial counts.
-  * That is the 100 TB shape: one corpus-sized aggregation up front,
-  * then bounded per-iteration work (pair stats over word types, one
-  * shuffle each), nothing quadratic anywhere.
+  * That is the 100 TB shape: one corpus-sized vocabulary aggregation,
+  * one collect of the word types, then every merge learned on the
+  * driver (the PQ/IVF trainer architecture) — no Spark job per merge,
+  * nothing quadratic anywhere.
   *
   * Representation: each word type is kept as its space-joined unit
   * string (`"l o w </w>"`), the end-of-word marker a unit of its own.
   * A merge replaces the winning pair substring with its concatenation
   * (`"l o w </w>"` + merge `o w` → `"l ow </w>"`). Because units never
   * contain spaces, substring replacement on this form IS unit-pair
-  * merging, and both Spark's and the oracle engines' `replace` apply
-  * left-to-right non-overlapping — the same greedy order the reference
-  * algorithm uses on overlapping runs (`a a a` merges to `aa a`).
+  * merging, and Java's, Spark's and the oracle engines' `replace` all
+  * apply left-to-right non-overlapping — the same greedy order the
+  * reference algorithm uses on overlapping runs (`a a a` merges to
+  * `aa a`).
   *
   * Determinism: pair counts are exact Long sums; the winning pair is
-  * picked by (count DESC, pair ASC) — a total order, so any engine
-  * reproduces the same merge table bit-for-bit. Ties in published BPE
-  * are implementation-defined; fixing lexicographic-ascending makes
-  * the artifact portable.
+  * picked by (count DESC, pair ASC) with pairs compared as UTF-8 bytes
+  * — a total order, so any engine reproduces the same merge table
+  * bit-for-bit. Ties in published BPE are implementation-defined;
+  * fixing lexicographic-ascending makes the artifact portable.
   */
 object Bpe {
 
@@ -47,13 +49,11 @@ object Bpe {
   private def charUnits(word: Column): Column =
     concat(trim(regexp_replace(word, "(.)", "$1 ")), lit(" </w>"))
 
-  /** Learn `nMerges` BPE merges from the corpus. Returns one row per
-    * merge: (`step` INT, `pair` STRING — the two units space-joined,
-    * `merged` STRING, `cnt` BIGINT — the pair's weighted frequency when
-    * it won). Each iteration is: adjacent-pair stats over the cached
-    * word-type frame (one vocabulary-sized shuffle), a 1-row
-    * deterministic top pick, and a broadcast rewrite of the word
-    * types. */
+  /** Learn `nMerges` BPE merges from the corpus: one vocabulary
+    * aggregation, one collect, then driver-side merges. Returns one row
+    * per merge in training order: (`step` INT, `pair` STRING — the two
+    * units space-joined, `merged` STRING, `cnt` BIGINT — the pair's
+    * weighted frequency when it won). */
   def trainMerges(docs: DataFrame, nMerges: Int,
                   textCol: String = "text"): DataFrame =
     trainMergesFromVocab(wordVocab(docs, textCol), nMerges)
@@ -65,104 +65,60 @@ object Bpe {
     * corpus. `priorMerges` (in training order) resumes learning from an
     * already-merged unit state, numbering new merges from
     * `priorMerges.size + 1` — training n then extending by k equals
-    * training n+k from scratch. */
+    * training n+k from scratch. Fewer than `nMerges` rows come back
+    * when the vocabulary runs out of pairs.
+    *
+    * The word types are collected once (prior merges folded in as SQL
+    * `replace`) and [[localMergeLoop]] learns every merge on the
+    * driver, so the whole training is one vocabulary-sized collect
+    * whatever `nMerges` is. The driver must hold the vocabulary;
+    * [[trainMergesLocal]] caps it for corpora where it cannot. */
   def trainMergesFromVocab(vocab: DataFrame, nMerges: Int,
                            priorMerges: Seq[(String, String)] = Nil): DataFrame = {
     require(nMerges > 0, "nMerges must be positive")
-    val spark = vocab.sparkSession
     val start = priorMerges.foldLeft(charUnits(col("word"))) {
       case (c, (pair, merged)) => replace(c, lit(pair), lit(merged))
     }
-    var w = Caching.ensureCachedLazy(
-      vocab.select(start.as("s"), col("cnt")))
-    // Each round COLLECTS its single winning row (one merge — the
-    // artifact itself, the PQ-codebook collect precedent) and bakes it
-    // back as literals. Keeping the winner as a crossJoin frame instead
-    // (the pre-r9 shape) embeds round k-1's plan TWICE in round k —
-    // once under the rewrite, once under the winner's aggregation — so
-    // logical plans duplicate EXPONENTIALLY in the merge count (2^12
-    // subtree copies OOM'd the analyzer at nMerges=12). Literals make
-    // plans linear; the checkpoint window then bounds even that.
-    val win = new Caching.CheckpointWindow(every = 8)
-    val out = Seq.newBuilder[(Int, String, String, Long)]
-    var drained = false
-    for (i0 <- 1 to nMerges if !drained) {
-      val i = priorMerges.size + i0
-      val top = pairStats(w)
-        .orderBy(col("c").desc, col("pair").asc)
-        .limit(1).collect()
-      if (top.isEmpty) drained = true // vocab exhausted: stop early
-      else {
-        val pair = top.head.getString(0)
-        val merged = pair.replace(" ", "")
-        out += ((i, pair, merged, top.head.getLong(1)))
-        w = win.advance(
-          w.select(replace(col("s"), lit(pair), lit(merged)).as("s"), col("cnt")))
-      }
-    }
-    // nothing outlives the loop (the merge table was collected row by
-    // row) — release every trailing cached round now instead of leaving
-    // up to `every - 1` frames to the ContextCleaner
-    win.release(null)
+    val words = vocab.select(start.as("s"), col("cnt"))
+      .collect().map(r => (r.getString(0), r.getLong(1)))
+    val spark = vocab.sparkSession
     import spark.implicits._
-    out.result().toDF("step", "pair", "merged", "cnt")
+    localMergeLoop(words, nMerges)
+      .map { case (step, pair, merged, cnt) => (priorMerges.size + step, pair, merged, cnt) }
+      .toDF("step", "pair", "merged", "cnt")
   }
 
-  /** Production-k merge induction: the vocabulary aggregation stays
-    * DISTRIBUTED (the only corpus-sized step — the part that matters at
-    * 100 TB), then the merge loop runs DRIVER-SIDE over the collected
-    * word-type table with incremental pair-count maintenance: each merge
-    * re-counts only the word types whose unit string CONTAINS the
-    * winning pair, so merge k costs O(affected) pair updates plus one
-    * O(V) containment scan — not a full vocabulary re-aggregation, and
-    * never a Spark job. This is the same architecture as the PQ/IVF
-    * trainers (bounded-state artifact learned at the driver, corpus
-    * touched once); a 32k-merge tokenizer is ~minutes of driver CPU on a
-    * million-type vocab where the distributed loop would be 32k chained
-    * jobs.
-    *
-    * `maxTypes` caps the collected vocabulary at the most frequent word
-    * types ((cnt DESC, word ASC) — deterministic), the standard
-    * frequency-floor practice; 0 collects everything. Semantics are
-    * spec-pinned EQUAL to [[trainMergesFromVocab]] (BpeSpec property):
-    * identical stringy left-to-right `replace` rewrite, identical
-    * (count DESC, pair ASC) wins. Returns the same (step, pair, merged,
-    * cnt) frame. */
+  /** Production-k merge induction over a capped vocabulary: `maxTypes`
+    * keeps the most frequent word types ((cnt DESC, word ASC) —
+    * deterministic), the standard frequency-floor practice for corpora
+    * whose vocabulary is too large for the driver; 0 keeps everything.
+    * Then the same trainer as [[trainMergesFromVocab]]: one collect,
+    * driver-side merges, the same (step, pair, merged, cnt) frame. A
+    * 32k-merge tokenizer is ~minutes of driver CPU on a million-type
+    * vocab. */
   def trainMergesLocal(vocab: DataFrame, nMerges: Int,
                        maxTypes: Int = 1000000): DataFrame = {
-    require(nMerges > 0, "nMerges must be positive")
     require(maxTypes >= 0, "maxTypes must be non-negative")
-    val spark = vocab.sparkSession
     val capped =
       if (maxTypes == 0) vocab
       else vocab.orderBy(col("cnt").desc, col("word").asc).limit(maxTypes)
-    val collected = capped.select(charUnits(col("word")).as("s"), col("cnt"))
-      .collect().map(r => (r.getString(0), r.getLong(1)))
-    val merges = localMergeLoop(collected, nMerges)
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(
-      merges.map { case (step, pair, merged, cnt) =>
-        org.apache.spark.sql.Row(step, pair, merged, cnt) }.asJava,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("step",
-          org.apache.spark.sql.types.IntegerType, nullable = false),
-        org.apache.spark.sql.types.StructField("pair",
-          org.apache.spark.sql.types.StringType, nullable = false),
-        org.apache.spark.sql.types.StructField("merged",
-          org.apache.spark.sql.types.StringType, nullable = false),
-        org.apache.spark.sql.types.StructField("cnt",
-          org.apache.spark.sql.types.LongType, nullable = false))))
+    trainMergesFromVocab(capped, nMerges)
   }
 
-  /** The in-memory merge loop with delta pair maintenance. Pair counts
-    * are derived from SPLIT units (matching [[pairStats]]); the rewrite
-    * is java.lang.String.replace — left-to-right non-overlapping, the
-    * exact semantics of the SQL `replace` the distributed trainer and
-    * the oracles use. Affected-word detection is substring containment
-    * on the joined string (NOT the split-pair index) for the same
-    * reason: `replace` can fire across unit boundaries when one unit is
-    * a suffix of another (`"ab b"` contains `"b b"`), and fidelity to
-    * the distributed semantics beats BPE-textbook purity here. */
+  /** The in-memory merge loop with delta pair maintenance: pair counts
+    * are kept incrementally, and each merge re-counts only the word
+    * types whose unit string CONTAINS the winning pair — O(affected)
+    * pair updates plus one O(V) containment scan per merge, never a
+    * full re-aggregation. Pair counts are derived from SPLIT units
+    * (single-unit words contribute none); the rewrite is
+    * java.lang.String.replace — left-to-right non-overlapping, the exact
+    * semantics of the SQL `replace` the oracles use. Affected-word
+    * detection is substring containment on the joined string (NOT the
+    * split-pair index) for the same reason: `replace` can fire across
+    * unit boundaries when one unit is a suffix of another (`"ab b"`
+    * contains `"b b"`), and fidelity to the oracles' stringy semantics
+    * beats BPE-textbook purity here. Stops early when no pair is left;
+    * steps are numbered from 1. */
   private[ops] def localMergeLoop(words0: Array[(String, Long)],
                                   nMerges: Int): Seq[(Int, String, String, Long)] = {
     val words = words0.map(_._1).toBuffer
@@ -183,7 +139,7 @@ object Bpe {
     // supplementary characters (surrogate pairs start 0xD8xx, below
     // U+E000..U+FFFF in UTF-16 but above in UTF-8): an emoji-containing
     // pair tied on count would pick a different winner and diverge the
-    // whole merge chain from the distributed trainer and the oracle
+    // whole merge chain from the oracle
     def utf8Less(a: String, b: String): Boolean = {
       val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
       val y = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)
@@ -198,7 +154,7 @@ object Bpe {
     }
     val out = Seq.newBuilder[(Int, String, String, Long)]
     for (step <- 1 to nMerges if pairCounts.nonEmpty) {
-      // (count DESC, pair ASC) — the distributed trainer's total order
+      // (count DESC, pair ASC) — the oracles' total order
       val (bestPair, bestCnt) = pairCounts.foldLeft(("", Long.MinValue)) {
         case (acc @ (bp, bc), (p, c)) =>
           if (c > bc || (c == bc && utf8Less(p, bp))) (p, c) else acc
@@ -220,22 +176,6 @@ object Bpe {
     }
     out.result()
   }
-
-  /** Weighted adjacent-pair frequencies over a (s, cnt) word-type
-    * frame. Single-unit words (fully merged — reachable at production
-    * merge counts) contribute no pairs: without the size guard,
-    * `sequence(1, size-1)` at size = 1 is sequence(1, 0), which Spark
-    * generates DESCENDING as [1, 0] and the i+1 access throws — DuckDB's
-    * generate_series(1, 0) is empty, so the guard is also what keeps
-    * oracle parity. */
-  private def pairStats(w: DataFrame): DataFrame =
-    w.withColumn("_bpe_u", split(col("s"), " "))
-      .filter(size(col("_bpe_u")) >= 2)
-      .select(explode(expr(
-        "transform(sequence(1, size(_bpe_u) - 1), " +
-          "i -> concat(element_at(_bpe_u, i), ' ', element_at(_bpe_u, i + 1)))"))
-        .as("pair"), col("cnt"))
-      .groupBy(col("pair")).agg(sum(col("cnt")).as("c"))
 
   /** Stateless segmentation under FROZEN merges — the ingest-time twin
     * (merges are a k-bounded learned artifact, like PQ codebooks or

@@ -206,4 +206,22 @@ class BenchGateSpec extends AnyFunSuite {
       new java.io.File(dir, Bench.PriorRatiosFile).toPath, "{broken".getBytes)
     assert(Bench.priorRatios(dir).isEmpty)
   }
+
+  test("the stdout line is scalars only and stays under 1 KB for the full headline set") {
+    // worst case: every headline query timed, slow, and drifting for two
+    // rounds; a long scale-factor path
+    val results = Bench.headline.map(q => q -> Bench.pinnedSecs(q) * 100)
+    val line = Bench.stdoutLine(results.map(_._2).sum, 100.0, 3.0, 3.0,
+      Bench.headline.size, Bench.headline.size, "/data/graft/testdata/" + "x" * 100)
+    assert(line.getBytes("UTF-8").length < 1024, s"${line.length} bytes: $line")
+    import org.json4s._
+    val fields = org.json4s.jackson.JsonMethods.parse(line) match {
+      case JObject(fs) => fs
+      case other => fail(s"not a JSON object: $other")
+    }
+    assert(fields.forall { case (_, v) => !v.isInstanceOf[JObject] && !v.isInstanceOf[JArray] },
+      s"non-scalar field: $line")
+    assert(fields.map(_._1).toSet == Set("metric", "value", "unit", "vs_baseline",
+      "run_factor", "pin_factor", "n_pin_drift", "n_pin_drift_persistent", "sf"))
+  }
 }

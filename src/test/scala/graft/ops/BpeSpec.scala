@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class BpeSpec extends SparkSpec {
@@ -105,43 +106,108 @@ class BpeSpec extends SparkSpec {
     assert(m.head._2 == "o </w>" && m.head._4 == 4L, s"weighting wrong: $m")
   }
 
+  /** The per-round Spark SQL trainer, kept as an independent reference:
+    * each round sums adjacent-pair counts over the word types
+    * (explode/groupBy), picks the (count DESC, pair ASC) winner with a
+    * top-1 collect, and rewrites the word types with a literal SQL
+    * `replace`. Returns (step, pair, merged, cnt), stopping early when
+    * no pair is left. */
+  private def referenceMerges(vocab: DataFrame, nMerges: Int): Seq[(Int, String, String, Long)] = {
+    var w = vocab.select(
+      concat(trim(regexp_replace(col("word"), "(.)", "$1 ")), lit(" </w>")).as("s"),
+      col("cnt"))
+    val out = Seq.newBuilder[(Int, String, String, Long)]
+    var step = 1
+    var drained = false
+    while (step <= nMerges && !drained) {
+      val top = w.withColumn("u", split(col("s"), " "))
+        .filter(size(col("u")) >= 2)
+        .select(explode(expr(
+          "transform(sequence(1, size(u) - 1), " +
+            "i -> concat(element_at(u, i), ' ', element_at(u, i + 1)))")).as("pair"),
+          col("cnt"))
+        .groupBy(col("pair")).agg(sum(col("cnt")).as("c"))
+        .orderBy(col("c").desc, col("pair").asc)
+        .limit(1).collect()
+      if (top.isEmpty) drained = true
+      else {
+        val pair = top.head.getString(0)
+        val merged = pair.replace(" ", "")
+        out += ((step, pair, merged, top.head.getLong(1)))
+        w = w.select(replace(col("s"), lit(pair), lit(merged)).as("s"), col("cnt"))
+        step += 1
+      }
+    }
+    out.result()
+  }
+
+  private def rows(merges: DataFrame): Seq[(Int, String, String, Long)] =
+    merges.orderBy(col("step"))
+      .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
+
+  private def vocabOf(texts: Seq[String]): DataFrame =
+    Bpe.wordVocab(texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("doc_id", "text"))
+
   test("trainMergesLocal equals the distributed trainer, including adversarial vocabs") {
-    def both(texts: Seq[String], n: Int) = {
-      val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-        .toDF("doc_id", "text")
-      val vocab = Bpe.wordVocab(docs)
-      val dist = Bpe.trainMergesFromVocab(vocab, n)
-        .orderBy(col("step"))
-        .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
-      val local = Bpe.trainMergesLocal(vocab, n, maxTypes = 0)
-        .orderBy(col("step"))
-        .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
-      (dist, local)
+    def check(texts: Seq[String], n: Int, what: String): Seq[(Int, String, String, Long)] = {
+      val vocab = vocabOf(texts)
+      val ref = referenceMerges(vocab, n)
+      val fromVocab = rows(Bpe.trainMergesFromVocab(vocab, n))
+      val local = rows(Bpe.trainMergesLocal(vocab, n, maxTypes = 0))
+      assert(fromVocab == ref, s"$what: trainer $fromVocab vs reference $ref (texts=$texts)")
+      assert(local == ref, s"$what: trainMergesLocal $local vs reference $ref (texts=$texts)")
+      ref
     }
     // ordinary corpus
-    val (d1, l1) = both(Seq("low lower lowest", "new newer newest", "wide wider"), 12)
-    assert(d1 == l1, s"dist $d1 vs local $l1")
+    check(Seq("low lower lowest", "new newer newest", "wide wider"), 12, "ordinary")
     // adversarial: overlapping runs ("a a a" greedy L-to-R) and the
-    // cross-unit substring hazard ("ab b" contains "b b") — the local
-    // trainer must replicate the stringy replace semantics exactly
-    val (d2, l2) = both(Seq("aaa aa aaaa", "ab b bb abb"), 8)
-    assert(d2 == l2, s"adversarial: dist $d2 vs local $l2")
+    // cross-unit substring hazard ("ab b" contains "b b") — the driver
+    // loop must replicate the stringy SQL replace semantics exactly
+    check(Seq("aaa aa aaaa", "ab b bb abb"), 8, "adversarial")
     // non-BMP tie-break: after ("a </w>", 2) merges, the pairs
     // ("� a</w>") and ("😀 a</w>") tie at 1. Spark/DuckDB compare
     // UTF-8 bytes (� = EF BF BD < F0 9F 98 80 = 😀) while Java
-    // String '<' compares UTF-16 units (\uD83D < �) — the local
-    // trainer must follow the engines' byte order or the chains diverge
-    val (d3, l3) = both(Seq("😀a �a"), 2)
-    assert(d3 == l3, s"non-BMP tie: dist $d3 vs local $l3")
-    assert(d3(1)._2 == "� a</w>", s"UTF-8 order must win the tie: $d3")
+    // String '<' compares UTF-16 units (\uD83D < �) — the driver
+    // loop must follow the engines' byte order or the chains diverge
+    val tie = check(Seq("😀a �a"), 2, "non-BMP tie")
+    assert(tie(1)._2 == "� a</w>", s"UTF-8 order must win the tie: $tie")
     // deterministic seeded fuzz across random small vocabs
     val rnd = new scala.util.Random(42)
     for (trial <- 1 to 3) {
       val texts = Seq.fill(8)(Seq.fill(1 + rnd.nextInt(5))(
         Seq.fill(1 + rnd.nextInt(6))(('a' + rnd.nextInt(3)).toChar).mkString).mkString(" "))
-      val (d, l) = both(texts, 6)
-      assert(d == l, s"fuzz trial $trial: dist $d vs local $l (texts=$texts)")
+      check(texts, 6, s"fuzz trial $trial")
     }
+  }
+
+  test("priorMerges resumes training: n then k more equals n + k") {
+    val vocab = vocabOf(Seq("low lower lowest", "new newer newest", "wide wider"))
+    val (n, k) = (4, 5)
+    val all = rows(Bpe.trainMergesFromVocab(vocab, n + k))
+    assert(all.size == n + k, s"corpus drained early: $all")
+    val prior = all.take(n).map(r => (r._2, r._3))
+    val resumed = rows(Bpe.trainMergesFromVocab(vocab, k, prior))
+    assert(resumed == all.drop(n), s"resumed $resumed vs ${all.drop(n)}")
+  }
+
+  test("a vocabulary that drains before nMerges returns the reference's shorter table") {
+    // "ab" and "c" have 3 pairs between them, merged away in 3 steps
+    val vocab = vocabOf(Seq("ab ab c"))
+    val ref = referenceMerges(vocab, 10)
+    assert(ref.size == 3, s"reference: $ref")
+    assert(rows(Bpe.trainMergesFromVocab(vocab, 10)) == ref)
+    assert(rows(Bpe.trainMergesLocal(vocab, 10, maxTypes = 0)) == ref)
+  }
+
+  test("training runs the same Spark jobs for 1 merge as for 16") {
+    val docs = Seq((1L, "low lower lowest newest widest"), (2L, "new newer wide wider"))
+      .toDF("doc_id", "text")
+    // training is eager: every job runs while the merge frame is built
+    val (one, jobsOne) = jobsOf(Bpe.trainMerges(docs, 1))
+    val (many, jobsMany) = jobsOf(Bpe.trainMerges(docs, 16))
+    assert(rows(one).size == 1 && rows(many).size == 16)
+    assert(jobsOne == jobsMany, s"1 merge: $jobsOne jobs, 16 merges: $jobsMany jobs")
   }
 
   test("segmentTokens: ordered sequences, zero shuffle, counts consistent") {
