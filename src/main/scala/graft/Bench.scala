@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs the SURVEY §6 headline queries against
   * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line of scalars
   * ([[stdoutLine]]); the per-query seconds, ratios and drift lists go to
@@ -131,7 +129,7 @@ object Bench {
     // q_curation_ingest is corpus-wide but NOT benched: it re-runs
     // seven already-benched stage families end to end, so benching it
     // would double-count every one — the q_substr_strip precedent; its
-    // cost profile lives in CiProfileTool + PERF.md r11.)
+    // cost profile lives in PERF.md r11.)
     "q_redact_cards", "q_extract_links", "q_quantile_sketch",
     // r14: stupid-backoff scoring — trains BOTH reference models and
     // scores the corpus trigram stream, so it is the order-3 family's
@@ -221,7 +219,7 @@ object Bench {
     // q_labelprop re-based TIGHTER in r11 (2.66 -> 1.55 = 1.19 warmed ×
     // 1.3) after the raw-vote repartition + eager per-round checkpoint
     // were replaced by map-side partial aggregation on the pipelined
-    // lazy-cache window (the pageRank shape; LabelpropProfile evidence)
+    // lazy-cache window (the pageRank shape; evidence in PERF.md r11)
     "q_kmeans" -> 1.25, "q_labelprop" -> 1.55,
     // r8 continuation 2: local warmed best-of-3
     // (1.12 / 0.66 / 0.54 / 0.30) × 1.3
@@ -322,10 +320,10 @@ object Bench {
     * RE-BASE POLICY (the q_pack_chunks precedent, PERF.md r10): a pin
     * may be moved ONLY with evidence that the code is not slower —
     * either a git bisect proving the dataflow byte-identical to the
-    * pinned revision (the number was never reproducible), or an idle
-    * `Test/runMain graft.TimeTool <query>` warmed best-of-3 in the SAME
-    * harness context after a deliberate, documented plan change (the
-    * q_labelprop r11 re-pin). "The suite got slower this round" is not
+    * pinned revision (the number was never reproducible), or the min of
+    * an idle `runMain graft.Profile <query>` in the SAME harness context
+    * after a deliberate, documented plan change (the q_labelprop r11
+    * re-pin). "The suite got slower this round" is not
     * evidence — that is what the gate exists to catch. Drift that is
     * real but under the 2x gate surfaces in the `pin_drift` report
     * below ([[pinDriftReport]]): persistent >1.3x two rounds running is
@@ -611,26 +609,17 @@ object Bench {
     (results, bf, pf)
   }
 
+  /** Local cores for the Bench and Profile sessions: `SPARK_GRAFT_CPUS`,
+    * default the machine's cores capped at 32. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(math.min(32, Runtime.getRuntime.availableProcessors()))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
 
-    def runOnce(name: String): Double = {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
+    def runOnce(name: String): Double = Profile.timeQuery(spark, sfDir, name)
 
     var failed = false
     // untimed warm-up pass: JIT, codegen compile, file listing, shuffle

@@ -2,10 +2,13 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Opinionated SparkSession factory with graft's recommended settings:
+/** The one SparkSession factory, with graft's recommended settings:
   * native function extensions, AQE with skew-join handling, UTC session
-  * time, and nanos-parquet tolerance. `shufflePartitions` should track
-  * the cluster's total cores (locally: the `local[n]` n). */
+  * time, nanos-parquet tolerance and no web UI (chain
+  * `.config("spark.ui.enabled", "true")` to get it back).
+  * `shufflePartitions` should track the cluster's total cores (locally:
+  * the `local[n]` n). Every session in this repository is built here;
+  * `SessionFactorySpec` fails on a builder anywhere else. */
 object GraftSession {
 
   def builder(
@@ -21,6 +24,7 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
+      .config("spark.ui.enabled", "false")
 
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession =
     builder(s"local[$cores]", cores).getOrCreate()

@@ -37,23 +37,23 @@ object SparkEntry {
   // 3-sentence span; extras keep every page over the C4 sentence floor
   // and the Gopher stopword/word floors; injections are one per
   // doc_id % 4 class.
-  private[graft] val IngestFooter = "Subscribe to our newsletter for updates and offers today"
-  private[graft] val IngestBlock =
+  private val IngestFooter = "Subscribe to our newsletter for updates and offers today"
+  private val IngestBlock =
     "Shared alpha beta gamma. Shared delta epsilon zeta. Shared eta theta iota."
-  private[graft] val IngestExtras =
+  private val IngestExtras =
     "The first extra sentence is here with all of the usual words. " +
     "It keeps the page over every quality floor that matters to us. " +
     "These sentences carry common stopwords and letters that have weight with them. " +
     "This last extra closes out the page with a clean period here."
-  private[graft] val IngestInjCard = "Pay 4539578763621486 for this now."
-  private[graft] val IngestInjEmail = "Mail bob@example.com about this today."
+  private val IngestInjCard = "Pay 4539578763621486 for this now."
+  private val IngestInjEmail = "Mail bob@example.com about this today."
   // the m=3 dirt class: a quote-terminated TRAILING line — C4's line
   // filter keeps it (ends on a closing quote), the sentence-span
   // rebuild drops it (no terminal mark), and the chain must COUNT the
   // drop (n_tail_dropped — flags emitted, never silently applied)
-  private[graft] val IngestTail =
+  private val IngestTail =
     "He said the page continues \"beyond the last period\""
-  private[graft] val IngestEval =
+  private val IngestEval =
     "Zibbleflort quandrosine veltapark mizzenbrook caltrovane siphonelle " +
     "drakemoor pellucidar quintavex norrelbane taskerfield ombrelline " +
     "juddervast wexfordia."
@@ -176,7 +176,7 @@ object SparkEntry {
   /** One per-JVM scratch root for gate-internal artifacts (the z-order
     * write of q_skipping_scan, the minhash index of q_decontaminate_near):
     * repeated query invocations REUSE the same subdirectory (every
-    * writer below runs in overwrite mode), so Verify sweeps, TimeTool
+    * writer below runs in overwrite mode), so Verify sweeps, Profile
     * loops, and dev reruns do not accumulate temp directories. */
   private lazy val gateScratch: String =
     java.nio.file.Files.createTempDirectory("graft_gate").toString

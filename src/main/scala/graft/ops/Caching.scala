@@ -74,10 +74,7 @@ object Caching {
     * RDD blocks drop). Lineage depth and live storage are both bounded
     * by the window length at ANY iteration count, while a 5-round gated
     * query with `every = 8` pays nothing it didn't already pay.
-    * `every = 1` degenerates to checkpoint-per-round — the right
-    * setting when per-round materialisation also HELPS the plan (label
-    * propagation: AQE sees real sizes for the winners join instead of a
-    * blind nested estimate). */
+    * `every = 1` degenerates to checkpoint-per-round. */
   final class CheckpointWindow(every: Int) {
     require(every >= 1, "checkpoint interval must be >= 1")
     private var sinceCp = 0

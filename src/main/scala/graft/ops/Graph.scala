@@ -34,9 +34,10 @@ import org.apache.spark.sql.types.LongType
   * driver and no step is quadratic: work per iteration is O(|E|) and
   * the iteration count is the caller's explicit budget. At 100 TB the
   * edge list would be bucketed by src so the rank join co-locates, and
-  * each iteration's rank frame checkpointed to cut lineage — the
-  * `materializeEach` flag is that knob (on by default; each cached
-  * frame is |V| rows, two Longs wide).
+  * the rank frame checkpointed to cut lineage — every loop here runs
+  * on a [[Caching.CheckpointWindow]] of 8 rounds (lazily cached rounds,
+  * an eager checkpoint every 8th; each cached frame is |V| rows, two
+  * Longs wide).
   *
   * Dangling nodes (no out-edges) keep receiving the teleport base but
   * leak their damped mass, the standard "remove dangling mass"
@@ -56,8 +57,7 @@ object Graph {
   def pageRank(edges: DataFrame, iters: Int,
                srcCol: String = "src", dstCol: String = "dst",
                dampNum: Long = 85L, dampDen: Long = 100L,
-               scale: Long = 1000000000000L,
-               materializeEach: Boolean = true): DataFrame = {
+               scale: Long = 1000000000000L): DataFrame = {
     val (nodes, eDeg) = prepare(edges, srcCol, dstCol)
     // |V| and the teleport base as broadcast scalars — a literal would
     // need a driver-side count (an extra job before the plan is even
@@ -69,7 +69,7 @@ object Graph {
         .select(col("node"),
           expr(s"${teleportScaled}L div _pr_n").as("_pr_base"),
           expr(s"${scale}L div _pr_n").as("_pr_init")))
-    iterate(based, eDeg, iters, dampNum, dampDen, materializeEach)
+    iterate(based, eDeg, iters, dampNum, dampDen)
   }
 
   /** Personalized (seeded) PageRank — TrustRank: the teleport mass
@@ -84,8 +84,7 @@ object Graph {
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame, iters: Int,
                            srcCol: String = "src", dstCol: String = "dst",
                            dampNum: Long = 85L, dampDen: Long = 100L,
-                           scale: Long = 1000000000000L,
-                           materializeEach: Boolean = true): DataFrame = {
+                           scale: Long = 1000000000000L): DataFrame = {
     val (nodes, eDeg) = prepare(edges, srcCol, dstCol)
     val seedsIn = seeds.select(col("node").cast(LongType).as("_pr_seed"))
       .filter(col("_pr_seed").isNotNull).distinct()
@@ -101,7 +100,7 @@ object Graph {
             .otherwise(lit(0L)).as("_pr_base"),
           when(col("_pr_seed").isNotNull, expr(s"${scale}L div _pr_s"))
             .otherwise(lit(0L)).as("_pr_init")))
-    iterate(based, eDeg, iters, dampNum, dampDen, materializeEach)
+    iterate(based, eDeg, iters, dampNum, dampDen)
   }
 
   /** Synchronous label propagation (community detection): every node
@@ -137,9 +136,7 @@ object Graph {
     * checkpoints to keep AQE sane — 4.1 s vs 1.1 s on q_labelprop, and
     * strictly more bytes through the exchange at any scale. */
   def labelPropagation(edges: DataFrame, iters: Int,
-                       srcCol: String = "src", dstCol: String = "dst",
-                       materializeEach: Boolean = true,
-                       checkpointEvery: Int = 8): DataFrame = {
+                       srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
     require(iters >= 0, "iters must be non-negative")
     val (nodes, eC) = prepare(edges, srcCol, dstCol, withDeg = false)
     var labels = nodes.select(col("node"), col("node").as("label"))
@@ -147,7 +144,7 @@ object Graph {
     // stay on the pipelined lazy-cache path (zero extra jobs; eager
     // per-round checkpointing measured 4.1 s vs 1.2 s here), crawl-
     // scale budgets checkpoint every 8 rounds to bound lineage depth
-    val win = new CheckpointWindow(every = checkpointEvery)
+    val win = new CheckpointWindow(every = 8)
     for (_ <- 1 to iters) {
       // plurality label per dst: count (dst, label) votes, then a
       // min_by over the (-count, label) struct — "count DESC, label
@@ -162,7 +159,7 @@ object Graph {
       val next = labels
         .join(winners, col("node") === col("_pr_dst"), "left")
         .select(col("node"), coalesce(col("_lp_win"), col("label")).as("label"))
-      labels = if (materializeEach) win.advance(next) else next
+      labels = win.advance(next)
     }
     win.release(labels) // trailing lazily-cached rounds, keep the result
     labels
@@ -276,8 +273,7 @@ object Graph {
     * frame: per-node teleport base and start mass are data, so the
     * uniform and personalized variants share every moving part. */
   private def iterate(based: DataFrame, eDeg: DataFrame, iters: Int,
-                      dampNum: Long, dampDen: Long,
-                      materializeEach: Boolean): DataFrame = {
+                      dampNum: Long, dampDen: Long): DataFrame = {
     require(iters >= 0, "iters must be non-negative")
     var rank = based.select(col("node"), col("_pr_init").as("rank"))
     // window of 8: the gated 5-iteration queries stay on the pipelined
@@ -301,7 +297,7 @@ object Graph {
           (col("_pr_base") +
             expr(s"(${dampNum}L * coalesce(_pr_sum, 0L)) div ${dampDen}L"))
             .as("rank"))
-      rank = if (materializeEach) win.advance(next) else next
+      rank = win.advance(next)
     }
     // the returned frame keeps its cache; the superseded trailing
     // rounds it no longer needs are released here rather than lingering

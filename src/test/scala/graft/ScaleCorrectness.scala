@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Correctness (not timing) evidence at the 10× (sf1-equivalent) scale
@@ -136,12 +136,7 @@ object ScaleCorrectness {
   def main(args: Array[String]): Unit = {
     val replicas = args.headOption.map(_.toInt).getOrElse(10)
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions).master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.local(32)
     spark.sparkContext.setLogLevel("ERROR")
     val bigDir = ScaleEvidence.ensureReplica(spark, srcDir, replicas)
     val shift = ScaleEvidence.ReplicaShift

@@ -145,12 +145,7 @@ object ScaleEvidence {
     val replicas = args.headOption.map(_.toInt).getOrElse(10)
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outDir = s"/tmp/graft_scale_x$replicas"
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions).master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.local(32)
     spark.sparkContext.setLogLevel("ERROR")
 
     println(s"[scale] building ${replicas}x replica of $srcDir at $outDir")

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class GraphSpec extends SparkSpec {
@@ -154,6 +155,32 @@ class GraphSpec extends SparkSpec {
     val r = runLpa(edges, 3)
     assert(r(5L) == 1L, s"tie broke upward: $r")
     assert(r(1L) == 1L && r(2L) == 2L, s"source-only labels moved: $r")
+  }
+
+  test("persisted RDDs are bounded by the checkpoint window, not the iteration count") {
+    // 24 rounds cross three 8-round windows; each checkpoint releases the
+    // rounds it supersedes, so the long run leaves no more persisted RDDs
+    // than the 4-round run. Each run gets its own node ids, so neither
+    // reuses the other's operator-internal caches. Counted as the ids
+    // that are new after the call: the context holds persisted RDDs
+    // weakly, so the map's size can also shrink whenever the JVM collects.
+    val sc = spark.sparkContext
+    var base = 0L
+    def persistedBy(op: (DataFrame, Int) => DataFrame, iters: Int): Int = {
+      base += 1000L
+      val ring = (0L until 12L).map(i => (base + i, base + (i + 1) % 12))
+      val edges = (ring ++ ring.map(_.swap) :+ ((base, base + 6L))).toDF("src", "dst")
+      val before = sc.getPersistentRDDs.keySet.toSet
+      op(edges, iters).count()
+      sc.getPersistentRDDs.keys.count(!before(_))
+    }
+    for ((name, op) <- Seq[(String, (DataFrame, Int) => DataFrame)](
+        "labelPropagation" -> ((e, n) => Graph.labelPropagation(e, n)),
+        "pageRank" -> ((e, n) => Graph.pageRank(e, n)))) {
+      val short = persistedBy(op, 4)
+      val long = persistedBy(op, 24)
+      assert(long <= short, s"$name left $long persisted RDDs at 24 rounds, $short at 4")
+    }
   }
 
   test("connectedComponents: exact reachability where labelprop sees communities") {

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Evidence tool behind PERF.md's scale-stress numbers (not a test — run
@@ -37,13 +37,7 @@ object StressTool {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(16)
     spark.sparkContext.setLogLevel("ERROR")
 
     val docs = graft.T.load(spark, "/root/testdata/sf0.1", "documents")
