@@ -1,6 +1,7 @@
 package graft
 
 import graft.contracts._
+import graft.io.Sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Test-table loader for the driver-generated TPC-H-ish parquet data. */
@@ -13,7 +14,7 @@ object T {
     * nanos); normalise such columns back to micros timestamps, matching
     * DuckDB's nanos→micros truncation. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"${dir.stripSuffix("/")}/$name.parquet")
+    val df = Sources.parquet(spark, s"${dir.stripSuffix("/")}/$name.parquet")
     if (name == "events" && df.schema("ts").dataType == LongType)
       df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
     else df

@@ -1,7 +1,11 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
+
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 /** The query profiler over [[SparkEntry.queries]], read from
   * `SPARK_GRAFT_SF_DIR` (default `~/testdata/sf0.1`) on a
@@ -9,8 +13,8 @@ import org.apache.spark.sql.execution.FormattedMode
   *
   * - `runMain graft.Profile <query>...`: one untimed warm-up, then
   *   `SPARK_GRAFT_ITERS` (default 3) timed noop-sink runs; prints their
-  *   min (the number the `Bench.pinnedSecs` re-base policy asks for) and
-  *   median.
+  *   min (the number the `Bench.pinnedSecs` re-base policy asks for),
+  *   median and Spark jobs per run (with the warm-up's jobs beside them).
   * - `--plan [query...]`: each query's formatted physical plan; every
   *   registered query's when none is named.
   * - `--ab key=value <query>...`: runs alternate with the conf unset and
@@ -59,9 +63,30 @@ object Profile {
     (System.nanoTime() - t0) / 1e9
   }
 
-  private def minMed(ts: Seq[Double]): String = {
-    val s = ts.sorted
-    f"min=${s.head}%.3f med=${s(s.size / 2)}%.3f"
+  /** `body`'s result and the number of Spark jobs it ran, counted by a
+    * listener on the job group `body` runs under. */
+  def jobsOf[T](spark: SparkSession)(body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val id = java.util.UUID.randomUUID().toString
+    val listener = new GroupJobs(s"jobs-$id", s"flush-$id")
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(s"jobs-$id", "counted")
+      val result = try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"flush-$id", "listener flush")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      if (!listener.flushed.await(60, TimeUnit.SECONDS))
+        throw new IllegalStateException("listener bus did not flush")
+      (result, listener.jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Min and median seconds, and jobs per run (one number when every run
+    * ran the same). */
+  private def summary(runs: Seq[(Double, Int)]): String = {
+    val s = runs.map(_._1).sorted
+    val jobs = runs.map(_._2).distinct
+    f"min=${s.head}%.3f med=${s(s.size / 2)}%.3f jobs=${jobs.mkString("/")}"
   }
 
   def main(args: Array[String]): Unit = {
@@ -72,26 +97,44 @@ object Profile {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", s"${sys.props("user.home")}/testdata/sf0.1")
     val spark = GraftSession.local(Bench.cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    def once(name: String): Double = timeQuery(spark, sfDir, name)
+    def once(name: String): (Double, Int) = jobsOf(spark)(timeQuery(spark, sfDir, name))
     for (name <- req.queries) req.mode match {
       case Plan =>
         println(s"==== $name ====")
         println(SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(FormattedMode))
       case Time =>
-        once(name)
-        val ts = Seq.fill(iters)(once(name))
-        println(s"[profile] $name ${minMed(ts)} (iters=$iters, $sfDir)")
+        val warmupJobs = once(name)._2
+        val runs = Seq.fill(iters)(once(name))
+        println(s"[profile] $name ${summary(runs)} (warm-up jobs=$warmupJobs, iters=$iters, $sfDir)")
       case AB(key, value) =>
-        def side(set: Boolean): Double = {
+        def side(set: Boolean): (Double, Int) = {
           if (set) spark.conf.set(key, value) else spark.conf.unset(key)
           once(name)
         }
         side(false); side(true)
         val (unset, set) = Seq.fill(iters)((side(false), side(true))).unzip
         spark.conf.unset(key)
-        println(s"[profile] $name unset ${minMed(unset)} | $key=$value ${minMed(set)} " +
+        println(s"[profile] $name unset ${summary(unset)} | $key=$value ${summary(set)} " +
           s"(iters=$iters, $sfDir)")
     }
     spark.stop()
   }
+}
+
+/** Counts the jobs of `group`; releases `flushed` when a job of `marker`
+  * ends — the listener bus delivers in order, so every earlier event has
+  * been seen by then. */
+private final class GroupJobs(group: String, marker: String) extends SparkListener {
+  val jobs = new AtomicInteger
+  val flushed = new CountDownLatch(1)
+  private val markerJobs = ConcurrentHashMap.newKeySet[Int]()
+  private def groupOf(props: java.util.Properties): String =
+    Option(props).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).orNull
+  override def onJobStart(e: SparkListenerJobStart): Unit = {
+    val g = groupOf(e.properties)
+    if (g == group) jobs.incrementAndGet()
+    else if (g == marker) markerJobs.add(e.jobId)
+  }
+  override def onJobEnd(e: SparkListenerJobEnd): Unit =
+    if (markerJobs.contains(e.jobId)) flushed.countDown()
 }

@@ -1,5 +1,6 @@
 package graft.contracts
 
+import graft.io.Sources
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -23,7 +24,7 @@ class SparkTableContractStore(spark: SparkSession, path: String,
   }
 
   private def all = {
-    val base = spark.read.format(format).load(path)
+    val base = Sources.reader(spark, format).load(path)
     // stores written before the tiebreak column existed lack `seq`
     val withSeq = if (base.columns.contains("seq")) base else base.withColumn("seq", lit(0L))
     withSeq

@@ -1,5 +1,6 @@
 package graft.governance
 
+import graft.io.Sources
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -32,7 +33,7 @@ class SparkTableGovernanceStore(spark: SparkSession, path: String,
       .coalesce(1).write.mode(SaveMode.Append).format(format).save(dir(sub))
 
   private def latestPerKey(sub: String, keys: Seq[String]): DataFrame = {
-    spark.read.format(format).load(dir(sub))
+    Sources.reader(spark, format).load(dir(sub))
       .withColumn("rn", row_number().over(
         org.apache.spark.sql.expressions.Window
           .partitionBy(keys.map(col): _*)
@@ -84,14 +85,14 @@ class SparkTableGovernanceStore(spark: SparkSession, path: String,
 
   override def activityLines(datasetId: String): Seq[String] =
     if (!exists("activity")) Nil
-    else spark.read.format(format).load(dir("activity"))
+    else Sources.reader(spark, format).load(dir("activity"))
       .filter(col("dataset_id") === datasetId)
       .orderBy(col("written_at"), col("seq"))
       .select("payload").as[String].collect().toSeq
 
   override def allActivityLines(): Seq[String] =
     if (!exists("activity")) Nil
-    else spark.read.format(format).load(dir("activity"))
+    else Sources.reader(spark, format).load(dir("activity"))
       .orderBy(col("dataset_id"), col("written_at"), col("seq"))
       .select("payload").as[String].collect().toSeq
 }

@@ -19,6 +19,14 @@ final case class WriteResult(validation: ValidationResult, writtenPaths: Seq[Str
   * observe-the-input → evaluate → plan via a violation strategy → write.
   *
   * Scale notes (100 TB posture):
+  *   - A governed read runs its metric pre-scan and nothing else: 1 Spark
+  *     job, 2 with `unique` rules, plus the jobs of each `query` rule's
+  *     SQL. The source opens through
+  *     [[Sources.reader]], which reads one parquet footer on the driver
+  *     (the file Spark's inference would pick), not in a Spark job; with
+  *     `mergeSchema` every footer is merged in one job, as in Spark.
+  *     The frame keeps the file's physical schema, which is what
+  *     `SchemaSnapshot` compares against the contract.
   *   - Observations are collected on the *input* frame, before alignment
   *     auto-casts can mask type mismatches (reference order,
   *     `spark/io/base.py:782,801`).
@@ -49,7 +57,7 @@ object ContractIO {
     statusPolicy.foreach(_.check(contract))
     val ctx = InterceptorContext("read", None, Some(path), Some(contract))
     interceptors.foreach(_.preRead(ctx))
-    val raw = spark.read.format(format).options(options).load(path)
+    val raw = Sources.reader(spark, format).options(options).load(path)
     val specs = Expectations.fromContract(contract)
     val metrics: Map[String, Any] =
       if (collectMetrics) Metrics.computeWithQueries(raw, specs, spark) else Map.empty

@@ -64,7 +64,7 @@ object MergeIO {
     val target = new Path(path)
     val merged =
       if (fs.exists(target)) {
-        val existing = spark.read.format(format).load(path)
+        val existing = Sources.reader(spark, format).load(path)
         existing.join(source.select(keys.map(org.apache.spark.sql.functions.col): _*).distinct(),
             keys, "left_anti")
           .unionByName(source)
@@ -143,7 +143,7 @@ object MergeIO {
     recoverIfCrashed(fs, path)
     val next =
       if (fs.exists(new Path(path))) {
-        val history = spark.read.format(format).load(path)
+        val history = Sources.reader(spark, format).load(path)
         // the lazy plan reads the files the swap will delete — break
         // the lineage before overwriting
         val materialized = history.localCheckpoint(true)

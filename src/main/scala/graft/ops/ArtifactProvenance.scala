@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.governance.GovernanceBackend
+import graft.io.Sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.json4s._
@@ -235,7 +236,7 @@ object ArtifactProvenance {
     require(fs.exists(snapPath),
       s"no provenance snapshot under $dir — stamp the artifact with " +
         "stampWithSnapshot to enable staleness checks")
-    val old = spark.read.parquet(snapshotPath(dir))
+    val old = Sources.parquet(spark, snapshotPath(dir))
       .withColumnRenamed("fingerprint", "_ap_old")
     val cur = currentDocs.select(col(idCol).as("doc_id"),
       TextOps.fingerprintCol(col(textCol)).as("_ap_new"))

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.io.Sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -47,7 +48,7 @@ object BmIndex {
             provenance: Option[ArtifactProvenance.Target] = None): Unit = {
     ArtifactPaths.requireDistinct(spark, dir, outDir)
     val old = readMeta(spark, dir)
-    val combined = spark.read.parquet(s"$dir/df")
+    val combined = Sources.parquet(spark, s"$dir/df")
       .unionByName(dfOf(newDocs))
       .groupBy(col("term")).agg(sum(col("df")).as("df"))
     val newStats = lenStatsOf(newDocs)
@@ -89,7 +90,7 @@ object BmIndex {
     require(nDocs > 0, s"$dir records an empty corpus")
     // query-sized artifact lookup: sorted-by-term parquet prunes to the
     // touched row groups; the collect is k-bounded metadata
-    val dfByTerm = spark.read.parquet(s"$dir/df")
+    val dfByTerm = Sources.parquet(spark, s"$dir/df")
       .filter(col("term").isin(terms.map(lit): _*))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val avgdl = sumDl.toDouble / nDocs
@@ -140,7 +141,7 @@ object BmIndex {
     df.repartitionByRange(numFiles, col("term"))
       .sortWithinPartitions(col("term"))
       .write.mode("overwrite").parquet(s"$dir/df")
-    val nTerms = spark.read.parquet(s"$dir/df").count()
+    val nTerms = Sources.parquet(spark, s"$dir/df").count()
     val json = org.json4s.jackson.JsonMethods.compact(
       org.json4s.jackson.JsonMethods.render(
         org.json4s.JsonAST.JObject(

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.io.Sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.json4s._
@@ -52,7 +53,7 @@ object BpeIndex {
             provenance: Option[ArtifactProvenance.Target] = None): Unit = {
     ArtifactPaths.requireDistinct(spark, dir, outDir)
     val m = readMeta(spark, dir)
-    val combined = spark.read.parquet(s"$dir/vocab")
+    val combined = Sources.parquet(spark, s"$dir/vocab")
       .unionByName(Bpe.wordVocab(newDocs, textCol))
       .groupBy(col("word")).agg(sum(col("cnt")).as("cnt"))
     writeArtifact(spark, combined, outDir, m.nMerges, numFiles)
@@ -67,10 +68,10 @@ object BpeIndex {
              extraMerges: Int, numFiles: Int = 2): Unit = {
     ArtifactPaths.requireDistinct(spark, dir, outDir)
     val m = readMeta(spark, dir)
-    val vocab = spark.read.parquet(s"$dir/vocab")
+    val vocab = Sources.parquet(spark, s"$dir/vocab")
     val prior = loadMerges(spark, dir)
     val more = Bpe.trainMergesFromVocab(vocab, extraMerges, prior)
-    val all = spark.read.parquet(s"$dir/merges").unionByName(more)
+    val all = Sources.parquet(spark, s"$dir/merges").unionByName(more)
     writeParts(vocab, all, outDir, numFiles)
     writeMeta(spark, outDir, Meta(m.nMerges + extraMerges,
       vocab.count()))
@@ -79,7 +80,7 @@ object BpeIndex {
   /** The ordered merge list — k-bounded artifact metadata for
     * [[Bpe.segmentCounts]] and stream twins. */
   def loadMerges(spark: SparkSession, dir: String): Seq[(String, String)] =
-    spark.read.parquet(s"$dir/merges")
+    Sources.parquet(spark, s"$dir/merges")
       .orderBy(col("step"))
       .select(col("pair"), col("merged"))
       .collect().map(r => (r.getString(0), r.getString(1))).toSeq

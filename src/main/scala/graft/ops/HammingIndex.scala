@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.io.Sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -117,7 +118,7 @@ object HammingIndex {
     * [[NearDup.hammingProbe]]/[[NearDup.hammingAppend]] validate it; an
     * index written outside [[build]] (or damaged) is refused there. */
   private def loadData(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/data")
+    Sources.parquet(spark, s"$dir/data")
 
   private def writeMeta(spark: SparkSession, dir: String, kind: String,
                         bits: Int, maxHamming: Int): Unit = {

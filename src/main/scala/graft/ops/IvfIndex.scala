@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.io.Sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -178,7 +179,7 @@ object IvfIndex {
     * grouping stays on `cid`, so shard boundaries never hide a pair. */
   def semanticPairs(spark: SparkSession, dir: String, threshold: Double = 0.9,
                     targetBlock: Int = 4096): DataFrame = {
-    val data = spark.read.parquet(s"$dir/data")
+    val data = Sources.parquet(spark, s"$dir/data")
     VectorOps.gridPairs(
       // safeNrm: layouts built before the null-guarded norm may persist a
       // raw 0.0 for degenerate vectors; gridPairs' division assumes the
@@ -208,7 +209,7 @@ object IvfIndex {
     require(cents.length <= VectorOps.CentroidLiteralMax,
       s"append needs a literal-assignable index (k <= " +
         s"${VectorOps.CentroidLiteralMax}), got ${cents.length} centroids")
-    require(!spark.read.parquet(s"$dir/data").columns.contains("sub"),
+    require(!Sources.parquet(spark, s"$dir/data").columns.contains("sub"),
       "sub-sharded layouts are not appendable — rebuild instead")
     val centRows: Array[org.apache.spark.sql.Row] = cents.map(c =>
       org.apache.spark.sql.Row(c.cid, c.cv.toSeq, c.cn)).toArray
@@ -261,7 +262,7 @@ object IvfIndex {
         element_at(VectorOps.nearestClusterArray(
           VectorOps.centroidLiteralOf(centRows).get, 1), 1).getField("cid")
     val arrivals = VectorOps.prepared(newEmbeddings).withColumn("cid", cidExpr)
-    val data = spark.read.parquet(s"$dir/data")
+    val data = Sources.parquet(spark, s"$dir/data")
       .select(col("vec_id").as("_ix_vid"), col("v").as("_ix_v"),
         VectorOps.safeNrm(col("nrm")).as("_ix_nrm"),
         col("cid").cast("long").as("cid"))
@@ -303,7 +304,7 @@ object IvfIndex {
       .select(col("probe_id"), col("pv"), col("pn"), col("cid")))
 
     // cid is a partition column: this filter prunes directories, not rows
-    val data = spark.read.parquet(s"$dir/data")
+    val data = Sources.parquet(spark, s"$dir/data")
       .filter(col("cid").isin(probedCids: _*))
     Some(data.join(probeDf, Seq("cid"))
       .filter(col("vec_id") =!= col("probe_id"))

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.io.Sources
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -105,8 +106,26 @@ object Layout {
                     numFiles: Int, bits: Int = 16): Unit =
     zOrderBy(df, cols, numFiles, bits).write.mode("overwrite").parquet(path)
 
-  /** Where [[writeManifest]] parks the stats manifest for `path`. */
+  /** Where [[writeManifest]] parks the stats manifest for `path`. The
+    * leading underscore hides it from data scans of `path`. */
   def manifestPath(path: String): String = s"$path/_graft_manifest"
+
+  /** The stats manifest of `path`, read from its part files: naming the
+    * hidden manifest directory itself makes Spark log that all paths were
+    * ignored. */
+  def readManifest(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
+    val dir = new org.apache.hadoop.fs.Path(manifestPath(path))
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Sources.parquet(spark,
+      dataFileNames(fs, dir).sorted.map(n => s"${manifestPath(path)}/$n").toIndexedSeq: _*)
+  }
+
+  /** Names of the data files directly under `dir`: no directories, no
+    * `_`- or `.`-prefixed side files. */
+  private def dataFileNames(fs: org.apache.hadoop.fs.FileSystem,
+                            dir: org.apache.hadoop.fs.Path): Array[String] =
+    fs.listStatus(dir).filter(_.isFile).map(_.getPath.getName)
+      .filter(n => !n.startsWith("_") && !n.startsWith("."))
 
   /** Per-FILE min/max stats manifest over `statsCols` of the parquet
     * dataset at `path`: one row per data file —
@@ -123,7 +142,7 @@ object Layout {
   def statsManifest(spark: org.apache.spark.sql.SparkSession, path: String,
                     statsCols: Seq[String]): DataFrame = {
     require(statsCols.nonEmpty, "statsCols must not be empty")
-    manifestOf(spark.read.parquet(path), statsCols)
+    manifestOf(Sources.parquet(spark, path), statsCols)
   }
 
   /** The manifest aggregation over an already-opened parquet frame —
@@ -156,22 +175,20 @@ object Layout {
     val mPath = new org.apache.hadoop.fs.Path(manifestPath(path))
     if (!fs.exists(mPath)) {
       writeManifest(spark, path, statsCols)
-      return spark.read.parquet(manifestPath(path)).count()
+      return readManifest(spark, path).count()
     }
-    val dataFiles = fs.listStatus(hPath).filter(_.isFile)
-      .map(_.getPath.getName)
-      .filter(n => !n.startsWith("_") && !n.startsWith("."))
+    val dataFiles = dataFileNames(fs, hPath)
     // manifest rows are files-sized: materialise before the overwrite
     // below (self-overwrite of a lazily-read path is illegal) and for
     // the known-name set
-    val existing = spark.read.parquet(manifestPath(path)).localCheckpoint(true)
+    val existing = readManifest(spark, path).localCheckpoint(true)
     val known = existing.select(col("file")).collect()
       .map(r => r.getString(0).substring(r.getString(0).lastIndexOf('/') + 1))
       .toSet
     val newNames = dataFiles.filterNot(known)
     if (newNames.isEmpty) return 0L
     val newStats = manifestOf(
-      spark.read.parquet(newNames.map(n => s"$path/$n").toIndexedSeq: _*), statsCols)
+      Sources.parquet(spark, newNames.map(n => s"$path/$n").toIndexedSeq: _*), statsCols)
     existing.unionByName(newStats).coalesce(1)
       .write.mode("overwrite").parquet(manifestPath(path))
     newNames.length.toLong
@@ -226,7 +243,7 @@ object Layout {
                        c: String, prefix: String,
                        manifest: Option[DataFrame] = None): DataFrame = {
     require(prefix.nonEmpty, "prefix must not be empty")
-    val m = manifest.getOrElse(spark.read.parquet(manifestPath(path)))
+    val m = manifest.getOrElse(readManifest(spark, path))
     readKept(spark, path, m.filter(col(s"max_$c") >= prefix &&
       (col(s"min_$c") <= prefix || col(s"min_$c").startsWith(prefix))))
   }
@@ -236,7 +253,7 @@ object Layout {
                              bounds: Seq[(String, Column, Column)],
                              manifest: Option[DataFrame]): DataFrame = {
     require(bounds.nonEmpty, "bounds must not be empty")
-    val m = manifest.getOrElse(spark.read.parquet(manifestPath(path)))
+    val m = manifest.getOrElse(readManifest(spark, path))
     val keep = bounds.foldLeft(m) { case (acc, (c, lo, hi)) =>
       acc.filter(col(s"max_$c") >= lo && col(s"min_$c") <= hi)
     }
@@ -248,8 +265,8 @@ object Layout {
     val files = keep.select(col("file")).collect().map(_.getString(0))
     if (files.isEmpty)
       // schema-preserving empty frame: footer-only read, no data scan
-      spark.read.parquet(path).limit(0)
-    else spark.read.parquet(files.toIndexedSeq: _*)
+      Sources.parquet(spark, path).limit(0)
+    else Sources.parquet(spark, files.toIndexedSeq: _*)
   }
 
   /** Small-file compaction plan: first-fit-decreasing bin packing of the
@@ -372,8 +389,8 @@ object Layout {
         "directories, so filter the plan by parent path)")
     val totalBytes = plan.flatten.map(_._2).sum
     val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    val reader = basePath.fold(spark.read)(b => spark.read.option("basePath", b))
-    val df = reader.parquet(files: _*)
+    val reader = basePath.fold(Sources.reader(spark))(Sources.reader(spark).option("basePath", _))
+    val df = reader.load(files: _*)
     val shapeCols = (partCols ++ sortCols).map(col)
     val shaped =
       if (sortCols.nonEmpty)

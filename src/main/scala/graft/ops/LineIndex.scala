@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.io.Sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -110,7 +111,7 @@ object LineIndex {
     // counts before the lazy union plan reads them, losing the artifact
     ArtifactPaths.requireDistinct(spark, dir, outDir)
     val kind = readMeta(spark, dir)
-    val combined = spark.read.parquet(s"$dir/counts")
+    val combined = Sources.parquet(spark, s"$dir/counts")
       .unionByName(countsOf(newDocs, kind, idCol, textCol))
       .groupBy(col("h1"), col("h2")).agg(sum(col("n")).as("n"))
     writeCounts(combined, outDir, numFiles)
@@ -138,14 +139,14 @@ object LineIndex {
       s"$dir holds a '${kind.name}' artifact (${kind}), not the expected " +
         s"'${k.name}' ($k) — thresholding one kind's counts under " +
         "another's semantics would silently mis-clean"))
-    spark.read.parquet(s"$dir/counts")
+    Sources.parquet(spark, s"$dir/counts")
       .filter(col("n") >= threshold)
       .select(col("h1"), col("h2"), col("n").as(kind.countCol))
   }
 
   /** The raw unpruned count frame (diagnostics, re-thresholding). */
   def counts(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/counts")
+    Sources.parquet(spark, s"$dir/counts")
 
   /** The artifact's pinned [[Kind]]. */
   def meta(spark: SparkSession, dir: String): Kind = readMeta(spark, dir)

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.io.Sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -185,8 +186,8 @@ object LmIndex {
       val freshSlice = fresh.filter(col(langCol) === l).drop(langCol)
       val combined =
         if (!stored.contains(l)) freshSlice
-        else if (!newLangs.contains(l)) spark.read.parquet(s"$dir/lang=$l/counts")
-        else spark.read.parquet(s"$dir/lang=$l/counts")
+        else if (!newLangs.contains(l)) Sources.parquet(spark, s"$dir/lang=$l/counts")
+        else Sources.parquet(spark, s"$dir/lang=$l/counts")
           .unionByName(freshSlice)
           .groupBy(col("w1"), col("w2")).agg(sum(col("n")).as("n"))
       val sub = s"$outDir/lang=$l"
@@ -259,7 +260,7 @@ object LmIndex {
       val m = readMeta(spark, sub)
       // Exact variant: per-language continuation totals land on .5e-6
       // probability boundaries routinely (see statsFromCountsExact)
-      TextOps.statsFromCountsExact(spark.read.parquet(s"$sub/counts"),
+      TextOps.statsFromCountsExact(Sources.parquet(spark, s"$sub/counts"),
           m.minCount)
         .select(lit(l).as(langCol), col("w1"), col("w2"), col("p_cond"))
     }.reduce(_.unionByName(_))
@@ -305,7 +306,7 @@ object LmIndex {
       if (m.minCount5.isDefined) 5 else if (m.minCount3.isDefined) 3 else 2
     def mergeLayer(path: String, fresh: DataFrame, k: Int): DataFrame = {
       val keys = (1 to k).map(i => col(s"w$i"))
-      spark.read.parquet(path).unionByName(fresh)
+      Sources.parquet(spark, path).unionByName(fresh)
         .groupBy(keys: _*).agg(sum(col("n")).as("n"))
     }
     if (maxOrder == 2)
@@ -338,7 +339,7 @@ object LmIndex {
            broadcastMaxRows: Long = 4L << 20): DataFrame = {
     val m = readMeta(spark, dir)
     val df = TextOps.statsFromCounts(
-      spark.read.parquet(s"$dir/counts"), m.minCount)
+      Sources.parquet(spark, s"$dir/counts"), m.minCount)
     if (m.nBigrams <= broadcastMaxRows) broadcast(df) else df
   }
 
@@ -353,7 +354,7 @@ object LmIndex {
       s"$dir has no trigram layer (v1 artifact) — rebuild with " +
         "buildWithTrigrams to enable backoff scoring")
     val df = TextOps.trigramStatsFromCounts(
-      spark.read.parquet(s"$dir/counts3"), m.minCount3.get)
+      Sources.parquet(spark, s"$dir/counts3"), m.minCount3.get)
     if (m.nTrigrams.getOrElse(Long.MaxValue) <= broadcastMaxRows)
       broadcast(df)
     else df
@@ -394,7 +395,7 @@ object LmIndex {
       s"$dir has no order-$k layer (pre-v3 artifact) — rebuild with " +
         "buildWithOrders to enable order-5 backoff scoring")
     val df = TextOps.ngramStatsFromCounts(
-      spark.read.parquet(countsPath(dir, k)), k, mc.get)
+      Sources.parquet(spark, countsPath(dir, k)), k, mc.get)
     if (n.getOrElse(Long.MaxValue) <= broadcastMaxRows) broadcast(df) else df
   }
 
@@ -465,10 +466,10 @@ object LmIndex {
                            minCount4: Option[Long] = None,
                            minCount5: Option[Long] = None): Meta = {
     val n = TextOps.statsFromCounts(
-      spark.read.parquet(s"$dir/counts"), minCount).count()
+      Sources.parquet(spark, s"$dir/counts"), minCount).count()
     def prunedCount(k: Int, mc: Option[Long]): Option[Long] =
       mc.map(m => TextOps.ngramStatsFromCounts(
-        spark.read.parquet(countsPath(dir, k)), k, m).count())
+        Sources.parquet(spark, countsPath(dir, k)), k, m).count())
     Meta(minCount, n, None, minCount3, prunedCount(3, minCount3),
       minCount4 = minCount4, n4grams = prunedCount(4, minCount4),
       minCount5 = minCount5, n5grams = prunedCount(5, minCount5))

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.io.Sources
 import graft.stream.StreamNearDup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -83,7 +84,7 @@ object MinhashIndex {
     // signatures before the lazy union plan reads them, losing the index
     ArtifactPaths.requireDistinct(spark, dir, outDir)
     val (k, mode) = readMeta(spark, dir)
-    spark.read.parquet(s"$dir/data")
+    Sources.parquet(spark, s"$dir/data")
       .unionByName(StreamNearDup.bandedSignatures(newDocs, k, mode)
         .select(col("doc_id"), col("nsh"), col("band"),
           col("band_hash").cast("long").as("band_hash")))
@@ -109,7 +110,7 @@ object MinhashIndex {
     // edited corpus silently under-dedups — fail loudly instead
     ArtifactProvenance.checkFresh(spark, dir, freshAgainst)
     val (k, mode) = readMeta(spark, dir)
-    val stored = spark.read.parquet(s"$dir/data")
+    val stored = Sources.parquet(spark, s"$dir/data")
       .select(col("doc_id").as("_ix_id"), col("nsh").as("_ix_nsh"),
         col("band"), col("band_hash"))
     val cand = StreamNearDup.bandedSignatures(newDocs, k, mode)

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.io.Sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -695,7 +696,7 @@ object NearDup {
   def hammingLoad(spark: SparkSession, dir: String,
                   freshAgainst: Option[DataFrame] = None): DataFrame = {
     ArtifactProvenance.checkFresh(spark, dir, freshAgainst)
-    spark.read.parquet(s"$dir/data")
+    Sources.parquet(spark, s"$dir/data")
   }
 
   /** Probe arrivals against a banded Hamming index ([[hammingIndex]],

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.io.Sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -229,7 +230,7 @@ object PqIndex {
   }
 
   private def loadData(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/data")
+    Sources.parquet(spark, s"$dir/data")
 
   private def writeMeta(spark: SparkSession, dir: String, m: Int, k: Int,
                         dim: Int, books: Array[Array[Array[Double]]]): Unit = {

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.io.Sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -61,7 +62,7 @@ object SketchIndex {
     val k = m("k").toInt
     val fresh = Sketch.kmvSketch(df, groupCol, valueCol, k, m("salt"),
       modeOf(m("mode")))
-    writeMerged(spark, Seq(spark.read.parquet(s"$dir/data"), fresh), k,
+    writeMerged(spark, Seq(Sources.parquet(spark, s"$dir/data"), fresh), k,
       outDir, numFiles)
     writeMeta(spark, outDir, "kmv", m)
     ArtifactProvenance.stampArtifact(spark, outDir, "sketch-kmv", "append",
@@ -78,8 +79,8 @@ object SketchIndex {
     val a = readMeta(spark, dirA, "kmv")
     val b = readMeta(spark, dirB, "kmv")
     require(a == b, s"KMV artifacts disagree on parameters: $a vs $b")
-    writeMerged(spark, Seq(spark.read.parquet(s"$dirA/data"),
-      spark.read.parquet(s"$dirB/data")), a("k").toInt, outDir, numFiles)
+    writeMerged(spark, Seq(Sources.parquet(spark, s"$dirA/data"),
+      Sources.parquet(spark, s"$dirB/data")), a("k").toInt, outDir, numFiles)
     writeMeta(spark, outDir, "kmv", a)
     ArtifactProvenance.stampArtifact(spark, outDir, "sketch-kmv", "merge",
       provenance)
@@ -89,7 +90,7 @@ object SketchIndex {
     * est_distinct)` via [[Sketch.kmvEstimate]] under the stored k. */
   def estimateKmv(spark: SparkSession, dir: String): DataFrame = {
     val m = readMeta(spark, dir, "kmv")
-    Sketch.kmvEstimate(spark.read.parquet(s"$dir/data"), m("k").toInt)
+    Sketch.kmvEstimate(Sources.parquet(spark, s"$dir/data"), m("k").toInt)
   }
 
   private def writeMerged(spark: SparkSession, parts: Seq[DataFrame], k: Int,
@@ -143,7 +144,7 @@ object SketchIndex {
     val k = m("k").toInt
     val fresh = Sketch.quantileSketch(df, groupCol, keyCol, valueCol, k,
       m("salt"), modeOf(m("mode")))
-    writeMergedQuantile(spark, Seq(spark.read.parquet(s"$dir/data"), fresh),
+    writeMergedQuantile(spark, Seq(Sources.parquet(spark, s"$dir/data"), fresh),
       k, outDir, numFiles)
     writeMeta(spark, outDir, "quantile", m)
     ArtifactProvenance.stampArtifact(spark, outDir, "sketch-quantile",
@@ -160,8 +161,8 @@ object SketchIndex {
     val a = readMeta(spark, dirA, "quantile")
     val b = readMeta(spark, dirB, "quantile")
     require(a == b, s"quantile artifacts disagree on parameters: $a vs $b")
-    writeMergedQuantile(spark, Seq(spark.read.parquet(s"$dirA/data"),
-      spark.read.parquet(s"$dirB/data")), a("k").toInt, outDir, numFiles)
+    writeMergedQuantile(spark, Seq(Sources.parquet(spark, s"$dirA/data"),
+      Sources.parquet(spark, s"$dirB/data")), a("k").toInt, outDir, numFiles)
     writeMeta(spark, outDir, "quantile", a)
     ArtifactProvenance.stampArtifact(spark, outDir, "sketch-quantile",
       "merge", provenance)
@@ -172,7 +173,7 @@ object SketchIndex {
   def estimateQuantile(spark: SparkSession, dir: String,
                        pcts: Seq[Int] = Seq(25, 50, 75, 90)): DataFrame = {
     readMeta(spark, dir, "quantile") // kind check
-    Sketch.quantileEstimate(spark.read.parquet(s"$dir/data"), pcts)
+    Sketch.quantileEstimate(Sources.parquet(spark, s"$dir/data"), pcts)
   }
 
   private def writeMergedQuantile(spark: SparkSession, parts: Seq[DataFrame],
@@ -218,7 +219,7 @@ object SketchIndex {
     val m = readMeta(spark, dir, "cm")
     val fresh = Sketch.countMin(df, valueCol, m("d").toInt, m("w").toInt,
       m("salt"), modeOf(m("mode")))
-    spark.read.parquet(s"$dir/data").unionByName(fresh)
+    Sources.parquet(spark, s"$dir/data").unionByName(fresh)
       .groupBy(col("row"), col("bucket"))
       .agg(sum(col("cnt")).as("cnt"))
       .repartition(numFiles)
@@ -234,7 +235,7 @@ object SketchIndex {
   def estimateCm(spark: SparkSession, dir: String, probes: DataFrame,
                  valueCol: String): DataFrame = {
     val m = readMeta(spark, dir, "cm")
-    Sketch.cmEstimate(spark.read.parquet(s"$dir/data"), probes, valueCol,
+    Sketch.cmEstimate(Sources.parquet(spark, s"$dir/data"), probes, valueCol,
       m("d").toInt, m("w").toInt, m("salt"), modeOf(m("mode")))
   }
 

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.io.Sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.json4s._
@@ -61,7 +62,7 @@ object UnigramIndex {
             provenance: Option[ArtifactProvenance.Target] = None): Unit = {
     ArtifactPaths.requireDistinct(spark, dir, outDir)
     val m = readMeta(spark, dir)
-    val combined = spark.read.parquet(s"$dir/vocab")
+    val combined = Sources.parquet(spark, s"$dir/vocab")
       .unionByName(Bpe.wordVocab(newDocs, textCol))
       .groupBy(col("word")).agg(sum(col("cnt")).as("cnt"))
     writeArtifact(spark, combined, outDir, m.vocabSize, m.maxPieceLen,
@@ -72,7 +73,7 @@ object UnigramIndex {
 
   /** The fitted vocabulary `(piece, freq, logp_micro)`. */
   def loadPieces(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/pieces")
+    Sources.parquet(spark, s"$dir/pieces")
 
   /** Segment `docs` against the frozen artifact: per-doc piece counts +
     * total micro score through the persisted word cache
@@ -87,7 +88,7 @@ object UnigramIndex {
                     freshAgainst: Option[DataFrame] = None): DataFrame = {
     ArtifactProvenance.checkFresh(spark, dir, freshAgainst)
     val m = readMeta(spark, dir)
-    val segDf0 = spark.read.parquet(s"$dir/wordsegs")
+    val segDf0 = Sources.parquet(spark, s"$dir/wordsegs")
     val segDf = if (m.nWordTypes <= broadcastMaxRows) broadcast(segDf0)
                 else segDf0
     // the char weights are alphabet-bounded metadata (a map literal in

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.io.Sources
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -733,7 +734,7 @@ object WarcOps {
     * totality contract instead of failing the scan. */
   def readWarc(spark: SparkSession, path: String,
                globFilter: String = "*.warc*"): DataFrame =
-    parseFiles(spark.read.format("binaryFile")
+    parseFiles(Sources.reader(spark, "binaryFile")
       .option("pathGlobFilter", globFilter).load(path))
 
   /** Streaming twin of [[readWarc]]: crawl shards parse as they LAND —

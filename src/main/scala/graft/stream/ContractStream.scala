@@ -3,7 +3,7 @@ package graft.stream
 import graft.align.ApplyContract
 import graft.analytics.Analytics
 import graft.contracts.Contract
-import graft.io.ContractIO
+import graft.io.{ContractIO, Sources}
 import graft.quality._
 import graft.strategies.{NoOpStrategy, ViolationStrategy}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -66,7 +66,7 @@ object ContractStream {
   ): DataFrame = {
     val sourceSchema = format match {
       case "parquet" | "orc" =>
-        scala.util.Try(spark.read.format(format).options(options).load(path).schema)
+        scala.util.Try(Sources.reader(spark, format).options(options).load(path).schema)
           .getOrElse(ApplyContract.toStructType(contract))
       case _ => ApplyContract.toStructType(contract)
     }

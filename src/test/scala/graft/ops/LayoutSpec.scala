@@ -1,10 +1,16 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
+
+import scala.jdk.CollectionConverters._
 
 class LayoutSpec extends SparkSpec {
   import spark.implicits._
@@ -292,5 +298,42 @@ class LayoutSpec extends SparkSpec {
     }
     for (d <- Seq("2026-01-01", "2026-01-02"))
       assert(spark.read.parquet(s"$outDir/$d").count() == 6L, s"rows under $d")
+  }
+
+  /** `body`'s result and the WARN-or-worse messages Spark's `DataSource`
+    * logged while it ran. */
+  private def dataSourceWarnings[T](body: => T): (T, Seq[String]) = {
+    val logger = LogManager.getLogger("org.apache.spark.sql.execution.datasources.DataSource")
+      .asInstanceOf[CoreLogger]
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val capture = new AbstractAppender(s"capture-${java.util.UUID.randomUUID()}",
+        null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN)) seen.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    logger.addAppender(capture)
+    try (body, seen.asScala.toSeq)
+    finally { logger.removeAppender(capture); capture.stop() }
+  }
+
+  test("readManifest reads the hidden manifest without Spark's ignored-paths warning") {
+    val df = (0 until 2000).map(i => (i.toLong, (i * 7L) % 997)).toDF("id", "a")
+    val dir = tmpDir("layout_read_manifest")
+    Layout.writeZordered(df, dir, Seq("id", "a"), numFiles = 4)
+    Layout.writeManifest(spark, dir, Seq("a"))
+    def canon(d: DataFrame) = d.orderBy("file").collect().toSeq
+    // naming the hidden directory warns: the capture sees Spark's message
+    val (direct, directWarnings) =
+      dataSourceWarnings(canon(spark.read.parquet(Layout.manifestPath(dir))))
+    assert(directWarnings.exists(_.contains("All paths were ignored")))
+    val (read, warnings) = dataSourceWarnings {
+      val rows = canon(Layout.readManifest(spark, dir))
+      Layout.prunedRead(spark, dir, Seq(("a", 0L, 100L))).count()
+      Layout.updateManifest(spark, dir, Seq("a"))
+      rows
+    }
+    assert(read.size == 4 && read == direct)
+    assert(!warnings.exists(_.contains("All paths were ignored")), warnings.mkString("; "))
   }
 }

@@ -1,27 +1,28 @@
 package graft.quality
 
-import graft.SparkSpec
+import graft.{SparkSpec, T}
 import graft.contracts._
-import graft.io.ContractIO
+import graft.io.{ContractIO, Sources}
 import graft.strategies.{NoOpStrategy, SplitStrategy}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
-/** Spark jobs per metric pre-scan and per governed write, counted by
-  * [[SparkSpec.jobsOf]]. */
+/** Spark jobs per metric pre-scan, per governed read and write, and per
+  * parquet load, counted by [[SparkSpec.jobsOf]]. */
 class MetricsJobsSpec extends SparkSpec {
 
   private val schema = StructType(Seq(
     StructField("id", LongType), StructField("code", StringType), StructField("v", DoubleType)))
 
   /** A parquet source with a duplicated id, a NULL id and a negative v. */
-  private lazy val source = {
+  private lazy val sourcePath = {
     val path = tmpDir("graft_jobs_src") + "/src"
     spark.createDataFrame(spark.sparkContext.parallelize(Seq(
       Row(1L, "a", 1.0), Row(2L, "b", -1.0), Row(2L, "c", 2.0), Row(null, "a", 3.0), Row(4L, "a", 4.0)), 2), schema)
       .write.parquet(path)
-    spark.read.parquet(path)
+    path
   }
+  private lazy val source = spark.read.parquet(sourcePath)
 
   private def contract(uniques: String*): Contract = Contract(id = "t.jobs", version = "1.0.0",
     schema = Seq(SchemaObjectDef("t", Seq(
@@ -55,5 +56,23 @@ class MetricsJobsSpec extends SparkSpec {
       mode = "overwrite", strategy = NoOpStrategy))
     assert(res.validation.metrics("violations.gt_v") == 1L)
     assert(jobs == 1)
+  }
+
+  test("a governed parquet read runs only its metric pre-scan") {
+    val (plain, jobs) = jobsOf(ContractIO.read(spark, sourcePath, contract()))
+    assert(plain.validation.metrics("violations.gt_v") == 1L)
+    assert(jobs == 1)
+    val (unique, uniqueJobs) = jobsOf(ContractIO.read(spark, sourcePath, contract("id")))
+    assert(unique.validation.metrics("violations.unique_id") == 1L)
+    assert(uniqueJobs == 2)
+  }
+
+  test("opening a parquet dataset runs no Spark job") {
+    val (df, jobs) = jobsOf(Sources.parquet(spark, sourcePath))
+    assert(df.columns.toSeq == Seq("id", "code", "v") && jobs == 0)
+    val dir = tmpDir("graft_jobs_tables")
+    source.write.parquet(s"$dir/orders.parquet")
+    val (table, tableJobs) = jobsOf(T.load(spark, dir, "orders"))
+    assert(table.schema == source.schema && tableJobs == 0)
   }
 }
