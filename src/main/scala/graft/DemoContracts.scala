@@ -6,19 +6,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Test-table loader for the driver-generated TPC-H-ish parquet data. */
 object T {
-  import org.apache.spark.sql.functions._
-  import org.apache.spark.sql.types.LongType
 
-  /** Loads a table. `events.parquet` stores TIMESTAMP(NANOS), which Spark
-    * only reads via `spark.sql.legacy.parquet.nanosAsLong` (as epoch
-    * nanos); normalise such columns back to micros timestamps, matching
-    * DuckDB's nanos→micros truncation. */
-  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = Sources.parquet(spark, s"${dir.stripSuffix("/")}/$name.parquet")
-    if (name == "events" && df.schema("ts").dataType == LongType)
-      df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    else df
-  }
+  /** Loads a table, `<dir>/<name>.parquet`. Every table, `events.ts`
+    * included, stores timestamps in microseconds, which Spark and DuckDB
+    * read alike. */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame =
+    Sources.parquet(spark, s"${dir.stripSuffix("/")}/$name.parquet")
 }
 
 /** Demo contracts over the driver test tables, used by `SparkEntry` queries

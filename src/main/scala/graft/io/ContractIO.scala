@@ -30,15 +30,39 @@ final case class WriteResult(validation: ValidationResult, writtenPaths: Seq[Str
   *   - Observations are collected on the *input* frame, before alignment
   *     auto-casts can mask type mismatches (reference order,
   *     `spark/io/base.py:782,801`).
-  *   - When the strategy does not gate on the verdict, metrics ride the
-  *     primary write via `Dataset.observe` — 0 extra jobs, zero cache.
-  *   - When it does (Split/Strict), or the contract carries unique/query
-  *     rules (not expressible in observe), one metrics pre-scan runs
-  *     first ([[Metrics.computeWithQueries]]): 1 Spark job, 2 with
-  *     `unique` rules, plus the jobs of each `query` rule's SQL. Nothing
-  *     is ever persisted: Split's valid/reject subsets are two pushed-down
-  *     filter scans of the source, not a cached materialisation of the
-  *     whole input.
+  *   - When the strategy does not gate on the verdict and the contract
+  *     carries no unique/query rules, metrics ride the primary write via
+  *     `Dataset.observe` — 0 extra jobs, zero cache.
+  *   - When it does gate (Split/Strict) and the write is a file format
+  *     (parquet, orc, json, csv, text) on a store where rename is a
+  *     metadata operation (local, HDFS, viewfs), the input is read once:
+  *     every aligned row is written once, `partitionBy` its composite pass
+  *     flag (TRUE / FALSE / NULL), into `<path>/_graft_staging_<uuid>`,
+  *     hidden from Spark reads of `path` by its `_` prefix. The metrics
+  *     are observed on that write ([[Metrics.observedForWrite]]): 1 Spark
+  *     job, plus one shuffle stage (one job under AQE) per `unique` key,
+  *     plus the jobs of each `query` rule's SQL. Then the verdict picks
+  *     the plan, and each planned subset is published by renaming its
+  *     staged files: clean, every staged row (NULL-pass included) to
+  *     `path`; violations, TRUE rows to `<path>/valid` and FALSE rows to
+  *     `<path>/reject` (NULL rows to neither). `mode` applies to each
+  *     published directory as `DataFrameWriter.save` would; a subset
+  *     without rows is written empty through Spark (1 more job), so it
+  *     stays readable. A plan whose frames are not row subsets (Flag
+  *     under Strict) drops the staging and writes its frames as planned.
+  *     A Strict abort, a failed write or an `error`-mode
+  *     clash deletes the staging directory, and the target directories
+  *     the write created if nothing was published into them. A process
+  *     killed mid-write leaves a hidden staging directory (invisible to
+  *     readers, safe to delete); killed mid-publish, a partly published
+  *     subset — as a killed `DataFrameWriter` job commit would.
+  *   - Otherwise (other formats; object stores, where rename is a copy)
+  *     one metrics pre-scan runs first ([[Metrics.computeWithQueries]]):
+  *     1 Spark job, 2 with `unique` rules, plus the jobs of each `query`
+  *     rule's SQL, then one write per planned subset. Nothing is ever
+  *     persisted: Split's valid/reject subsets are two pushed-down filter
+  *     scans of the source, not a cached materialisation of the whole
+  *     input.
   */
 object ContractIO {
 
@@ -113,12 +137,18 @@ object ContractIO {
 
     val written = Seq.newBuilder[String]
     val warnings = Seq.newBuilder[String]
+    def target(req: WriteRequest): String =
+      req.pathSuffix.map(s => s"${path.stripSuffix("/")}/$s").getOrElse(path)
     def execute(req: WriteRequest): Unit = {
-      val target = req.pathSuffix.map(s => s"${path.stripSuffix("/")}/$s").getOrElse(path)
-      req.df.write.format(format).options(options).mode(mode).save(target)
-      written += target
+      req.df.write.format(format).options(options).mode(mode).save(target(req))
+      written += target(req)
       warnings ++= req.warnings
     }
+    // strict strategies abort before anything is published
+    def abortIfFailed(plan: WritePlan, v: ValidationResult): Unit =
+      plan.failWith.foreach { msg =>
+        throw new IllegalStateException(s"$msg: ${v.errors.mkString("; ")}")
+      }
 
     val validation =
       if (observable) {
@@ -132,16 +162,37 @@ object ContractIO {
         plan.primary.foreach(execute)
         plan.additional.foreach(execute)
         Evaluator.evaluate(contract, schema, Metrics.metricMap(obs.get))
+      } else if (strategy.gatesOnVerdict && Staging.supports(df0.sparkSession, path, format)) {
+        // every row staged once, partitioned by its pass flag, the metrics
+        // observed on that write; then evaluate and publish by rename
+        val saveMode = Staging.saveMode(mode)
+        val queries = Metrics.queryMetrics(df0, specs, df0.sparkSession)
+        val obs = Observation("graft_dq_" + java.util.UUID.randomUUID().toString.replace("-", ""))
+        val observed = ApplyContract.align(Metrics.observedForWrite(df0, specs, obs), contract, autoCast)
+        val staged = Staging.stage(observed.withColumn(Staging.PassColumn, Strategies.passAll(specs)),
+          path, format, options)
+        try {
+          val v = Evaluator.evaluate(contract, schema, Metrics.metricMap(obs.get) ++ queries)
+          val plan = strategy.plan(ApplyContract.align(df0, contract, autoCast), specs, v)
+          abortIfFailed(plan, v)
+          val requests = plan.primary.toSeq ++ plan.additional
+          if (requests.forall(_.rows.isDefined)) {
+            staged.publish(requests.map(r => Staging.Publish(r.rows.get, target(r), r.df)), saveMode)
+            requests.foreach { r => written += target(r); warnings ++= r.warnings }
+          } else {
+            // a derived frame (Flag under Strict) is not a staged subset
+            staged.discard()
+            requests.foreach(execute)
+          }
+          v
+        } finally staged.discard()
       } else {
         // one metrics pre-scan on the input, then plan against the verdict
         val metrics = Metrics.computeWithQueries(df0, specs, df0.sparkSession)
         val v = Evaluator.evaluate(contract, schema, metrics)
         val aligned = ApplyContract.align(df0, contract, autoCast)
         val plan = strategy.plan(aligned, specs, v)
-        // strict strategies abort before anything is written
-        plan.failWith.foreach { msg =>
-          throw new IllegalStateException(s"$msg: ${v.errors.mkString("; ")}")
-        }
+        abortIfFailed(plan, v)
         plan.primary.foreach(execute)
         plan.additional.foreach(execute)
         v

@@ -33,7 +33,8 @@ object MergeIO {
     val spark = df.sparkSession
     val specs = Expectations.fromContract(contract)
 
-    // validate the input frame (pre-align) — one metrics pre-scan, as in write()
+    // validate the input frame (pre-align) — one metrics pre-scan, as in
+    // write()'s pre-scan branch
     val metrics = Metrics.computeWithQueries(df, specs, spark)
     val validation = Evaluator.evaluate(contract, SchemaSnapshot.of(df).toMap, metrics)
     val aligned = ApplyContract.align(df, contract, autoCast)
@@ -90,15 +91,6 @@ object MergeIO {
 
   import org.apache.spark.sql.functions._
 
-  // Hadoop FileSystem.rename reports failure by RETURNING FALSE, not by
-  // throwing — every rename in the swap must be checked or a failed
-  // promote could fall through to the __old cleanup and delete the only
-  // remaining copy of the previous snapshot
-  private def renameOrFail(fs: org.apache.hadoop.fs.FileSystem,
-                           from: Path, to: Path, what: String): Unit =
-    if (!fs.rename(from, to))
-      throw new java.io.IOException(s"$what failed: rename($from -> $to) returned false")
-
   /** Crash recovery: a previous swap that died between rename(target →
     * __old) and rename(__staging → target) left the dataset only under
     * __old — restore it before reading, so readers (and the next merge)
@@ -108,7 +100,7 @@ object MergeIO {
     val target = new Path(path)
     val retired = new Path(path.stripSuffix("/") + "__old")
     if (fs.exists(retired) && !fs.exists(target))
-      renameOrFail(fs, retired, target, "crash recovery")
+      Staging.renameOrFail(fs, retired, target, "crash recovery")
   }
 
   /** Snapshot swap: write staging, move old aside, promote, drop old —
@@ -120,8 +112,8 @@ object MergeIO {
     val retired = new Path(path.stripSuffix("/") + "__old")
     frame.write.format(format).mode("overwrite").save(staging.toString)
     if (fs.exists(retired)) fs.delete(retired, true)
-    if (fs.exists(target)) renameOrFail(fs, target, retired, "retiring current snapshot")
-    renameOrFail(fs, staging, target, "promoting staged snapshot")
+    if (fs.exists(target)) Staging.renameOrFail(fs, target, retired, "retiring current snapshot")
+    Staging.renameOrFail(fs, staging, target, "promoting staged snapshot")
     if (fs.exists(retired)) fs.delete(retired, true)
   }
 

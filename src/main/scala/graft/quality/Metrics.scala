@@ -1,6 +1,7 @@
 package graft.quality
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Expectation metrics as one aggregate.
@@ -24,8 +25,10 @@ import org.apache.spark.sql.functions._
   *     shape of Spark's distinct-aggregate rewrite) and the observed
   *     aggregate over the groups yields `Σ(n − 1)` per key — exactly
   *     `count − countDistinct − hasNull`, since NULL keys form one group;
-  *   - 0 when the metrics ride a governed write (`ContractIO`'s observe
-  *     branch, [[aggregateExprs]] on the written frame).
+  *   - 0 when the metrics ride a governed write: `ContractIO`'s observe
+  *     branch ([[aggregateExprs]] on the written frame) and its staged
+  *     branch ([[observedForWrite]], one shuffle per unique key inside the
+  *     write).
   * The observed aggregate always sits in the result stage: accumulator
   * updates of a re-executed shuffle-map stage may be applied twice.
   */
@@ -65,14 +68,39 @@ object Metrics {
     * Usable in `df.agg` and, without present `unique` columns (count
     * distinct cannot be observed), in `Dataset.observe`. */
   def aggregateExprs(specs: Seq[ExpectationSpec], columns: Set[String]): Seq[Column] =
-    count(lit(1)).as("row_count") +: measures(specs, columns).map {
+    // total - distinct, where NULL counts as one distinct value
+    // (matches reference `total - df.select(c).distinct().count()`)
+    rowExprs(measures(specs, columns), (_, key) =>
+      count(lit(1)) - countDistinct(key) - max(when(key.isNull, 1L).otherwise(0L)))
+
+  /** `row_count` plus one `violations.<key>` per measure over the rows of
+    * a frame, `unique(name, key)` giving a unique measure's count. */
+  private def rowExprs(ms: Seq[Measure], unique: (String, Column) => Column): Seq[Column] =
+    count(lit(1)).as("row_count") +: ms.map {
       case Flagged(name, flag) => sum(flag).as(name)
       case EveryRow(name) => count(lit(1)).as(name)
-      // total - distinct, where NULL counts as one distinct value
-      // (matches reference `total - df.select(c).distinct().count()`)
-      case UniqueKey(name, key) =>
-        (count(lit(1)) - countDistinct(key) - max(when(key.isNull, 1L).otherwise(0L))).as(name)
+      case UniqueKey(name, key) => unique(name, key).as(name)
     }
+
+  /** `df` observed into `obs` with the metrics of [[compute]], for a
+    * write to carry them: the same `row_count` and `violations.*` values,
+    * read off the rows the write passes. A unique rule cannot be observed
+    * as a count distinct, so each present unique key adds a per-row
+    * marker, `row_number() over (partition by key) > 1`, whose sum is
+    * `count − countDistinct − hasNull` (NULL keys form one partition).
+    * Each marker is one shuffle by its key inside the write's plan; the
+    * observation sits above them, in the result stage. The markers are
+    * dropped again: the returned frame has `df`'s columns. */
+  def observedForWrite(df: DataFrame, specs: Seq[ExpectationSpec], obs: Observation): DataFrame = {
+    val ms = measures(specs, df.columns.toSet)
+    val keys = ms.collect { case UniqueKey(name, key) => name -> key }
+    val markOf = keys.map(_._1).zipWithIndex.map { case (name, i) => name -> s"_graft_dup$i" }.toMap
+    val marked = keys.foldLeft(df) { case (d, (name, key)) =>
+      d.withColumn(markOf(name), when(row_number().over(Window.partitionBy(key).orderBy(key)) > 1, 1L).otherwise(0L))
+    }
+    val exprs = rowExprs(ms, (name, _) => sum(col(markOf(name))))
+    marked.observe(obs, exprs.head, exprs.tail: _*).drop(markOf.values.toSeq: _*)
+  }
 
   /** Per enum spec on a present column: the row's value as a string when
     * it is outside the allowed set, else NULL. */
@@ -204,20 +232,22 @@ object Metrics {
       df: DataFrame,
       specs: Seq[ExpectationSpec],
       spark: SparkSession
-  ): Map[String, Any] = {
-    val base: Map[String, Any] = compute(df, specs)
+  ): Map[String, Any] = compute(df, specs) ++ queryMetrics(df, specs, spark)
+
+  /** The `query` rules' metrics alone: each rule's SQL over `df`, one
+    * action per rule. Empty, and no view registered, without such rules. */
+  def queryMetrics(df: DataFrame, specs: Seq[ExpectationSpec], spark: SparkSession): Map[String, Any] = {
     val querySpecs = specs.filter(s => s.rule == "query" && s.query.isDefined)
-    if (querySpecs.isEmpty) return base
+    if (querySpecs.isEmpty) return Map.empty
     val view = "graft_dq_" + java.util.UUID.randomUUID().toString.replace("-", "")
     df.createOrReplaceTempView(view)
     try {
-      val queryMetrics = querySpecs.flatMap { s =>
+      querySpecs.flatMap { s =>
         val rows = spark.sql(s.query.get.replace(QueryViewAlias, view)).collect()
         rows.headOption.flatMap(r => Option(r.get(0))).collect {
           case n: Number => s.key -> (n: Any)
         }
-      }
-      base ++ queryMetrics
+      }.toMap
     } finally spark.catalog.dropTempView(view)
   }
 

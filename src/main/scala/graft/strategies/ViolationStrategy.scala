@@ -4,11 +4,26 @@ import graft.quality.{ExpectationSpec, Expectations, ValidationResult}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** A single write produced by a strategy plan. */
+/** Which rows of the planned frame a request writes, unchanged. */
+sealed trait RowSet
+object RowSet {
+  case object All extends RowSet
+  /** Rows whose composite predicate ([[Strategies.passAll]]) is TRUE. */
+  case object Passing extends RowSet
+  /** Rows whose composite predicate is FALSE; NULL rows are in neither. */
+  case object Failing extends RowSet
+}
+
+/** A single write produced by a strategy plan. `rows` names the subset
+  * `df` holds when it is a row subset of the planned frame; `None` when it
+  * is derived otherwise (Flag's extra column). A staged write
+  * (`graft.io.ContractIO`) publishes a request with `rows` from its staged
+  * files and runs `df` only for the others. */
 final case class WriteRequest(
     df: DataFrame,
     pathSuffix: Option[String],
-    warnings: Seq[String] = Nil
+    warnings: Seq[String] = Nil,
+    rows: Option[RowSet] = None
 )
 
 /** What to write given a validation outcome (reference:
@@ -60,21 +75,24 @@ sealed trait ViolationStrategy {
 
   /** Whether the plan's shape depends on the validation verdict. When
     * false, governed writes collect metrics via `Dataset.observe` on the
-    * write pass itself (zero extra scans); when true, one metrics
-    * pre-scan runs before the write. */
+    * write pass itself (zero extra scans); when true, the write stages
+    * every row once and publishes after the verdict, or runs one metrics
+    * pre-scan first where it cannot stage (`graft.io.ContractIO`). */
   def gatesOnVerdict: Boolean = false
 }
 
 /** Write the aligned frame as-is regardless of violations. */
 case object NoOpStrategy extends ViolationStrategy {
   def plan(df: DataFrame, specs: Seq[ExpectationSpec], validation: ValidationResult): WritePlan =
-    WritePlan(primary = Some(WriteRequest(df, None)))
+    WritePlan(primary = Some(WriteRequest(df, None, rows = Some(RowSet.All))))
 }
 
 /** Split the frame into `<path>/valid` and `<path>/reject` subsets on the
   * composite expectation predicate when violations occur. Both subsets are
-  * filters over the SAME aligned frame, so with caching upstream the scan
-  * happens once. */
+  * filters over the same aligned frame: run as planned, each is a scan of
+  * its own. A governed write on a file format reads the input once
+  * instead: it stages every row partitioned by the predicate and
+  * publishes each request's [[RowSet]] by rename (`graft.io.ContractIO`). */
 final case class SplitStrategy(
     validSuffix: String = "valid",
     rejectSuffix: String = "reject",
@@ -84,16 +102,17 @@ final case class SplitStrategy(
 ) extends ViolationStrategy {
   override def gatesOnVerdict: Boolean = true
   def plan(df: DataFrame, specs: Seq[ExpectationSpec], validation: ValidationResult): WritePlan = {
-    if (!Strategies.hasViolations(validation)) return WritePlan(Some(WriteRequest(df, None)))
+    val all = WriteRequest(df, None, rows = Some(RowSet.All))
+    if (!Strategies.hasViolations(validation)) return WritePlan(Some(all))
     val pass = Strategies.passAll(specs)
     val requests = Seq.newBuilder[WriteRequest]
     if (includeValid)
       requests += WriteRequest(df.filter(pass), Some(validSuffix),
-        Seq(s"Valid subset written to dataset suffix '$validSuffix'"))
+        Seq(s"Valid subset written to dataset suffix '$validSuffix'"), Some(RowSet.Passing))
     if (includeReject)
       requests += WriteRequest(df.filter(!pass), Some(rejectSuffix),
-        Seq(s"Rejected subset written to dataset suffix '$rejectSuffix'"))
-    val primary = if (writePrimaryOnViolation) Some(WriteRequest(df, None)) else None
+        Seq(s"Rejected subset written to dataset suffix '$rejectSuffix'"), Some(RowSet.Failing))
+    val primary = if (writePrimaryOnViolation) Some(all) else None
     WritePlan(primary, requests.result())
   }
 }

@@ -3,7 +3,7 @@ package graft.quality
 import graft.{SparkSpec, T}
 import graft.contracts._
 import graft.io.{ContractIO, Sources}
-import graft.strategies.{NoOpStrategy, SplitStrategy}
+import graft.strategies.{NoOpStrategy, SplitStrategy, StrictStrategy}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
@@ -44,11 +44,35 @@ class MetricsJobsSpec extends SparkSpec {
     assert(two("violations.unique_id") == 1L && two("violations.unique_code") == 2L)
   }
 
-  test("a verdict-gated Split write is a two-job pre-scan plus one job per subset") {
+  test("a violating Split write is one job, two with unique") {
     val (res, jobs) = jobsOf(ContractIO.write(source, tmpDir("graft_jobs_split"), contract("id"),
       mode = "overwrite", strategy = SplitStrategy()))
     assert(!res.validation.ok && res.writtenPaths.size == 2)
-    assert(jobs == 2 + 2)
+    assert(res.validation.metrics("violations.unique_id") == 1L)
+    assert(jobs == 2)
+    val (plain, plainJobs) = jobsOf(ContractIO.write(source, tmpDir("graft_jobs_split"), contract(),
+      mode = "overwrite", strategy = SplitStrategy()))
+    assert(!plain.validation.ok && plain.writtenPaths.size == 2)
+    assert(plainJobs == 1)
+  }
+
+  /** The source's rows that pass every rule, with distinct ids. */
+  private def cleanSource = source.filter("id IS NOT NULL AND v > 0 AND code IN ('a', 'b')")
+
+  test("a clean Split write with a unique rule is two jobs") {
+    val (res, jobs) = jobsOf(ContractIO.write(cleanSource, tmpDir("graft_jobs_clean"), contract("id"),
+      mode = "overwrite", strategy = SplitStrategy()))
+    assert(res.validation.ok && res.writtenPaths.size == 1)
+    assert(jobs == 2)
+  }
+
+  test("a Strict write is one job, clean or violated") {
+    val (res, jobs) = jobsOf(ContractIO.write(cleanSource, tmpDir("graft_jobs_strict"), contract(),
+      mode = "overwrite", strategy = StrictStrategy()))
+    assert(res.validation.ok && jobs == 1)
+    val (failed, failedJobs) = jobsOf(intercept[IllegalStateException](ContractIO.write(source,
+      tmpDir("graft_jobs_strict"), contract(), mode = "overwrite", strategy = StrictStrategy())))
+    assert(failed.getMessage.contains("violations") && failedJobs == 1)
   }
 
   test("a NoOp write observes the write itself: one job") {
