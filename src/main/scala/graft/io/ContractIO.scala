@@ -30,39 +30,39 @@ final case class WriteResult(validation: ValidationResult, writtenPaths: Seq[Str
   *   - Observations are collected on the *input* frame, before alignment
   *     auto-casts can mask type mismatches (reference order,
   *     `spark/io/base.py:782,801`).
-  *   - When the strategy does not gate on the verdict and the contract
-  *     carries no unique/query rules, metrics ride the primary write via
-  *     `Dataset.observe` — 0 extra jobs, zero cache.
-  *   - When it does gate (Split/Strict) and the write is a file format
-  *     (parquet, orc, json, csv, text) on a store where rename is a
-  *     metadata operation (local, HDFS, viewfs), the input is read once:
-  *     every aligned row is written once, `partitionBy` its composite pass
-  *     flag (TRUE / FALSE / NULL), into `<path>/_graft_staging_<uuid>`,
-  *     hidden from Spark reads of `path` by its `_` prefix. The metrics
-  *     are observed on that write ([[Metrics.observedForWrite]]): 1 Spark
-  *     job, plus one shuffle stage (one job under AQE) per `unique` key,
-  *     plus the jobs of each `query` rule's SQL. Then the verdict picks
-  *     the plan, and each planned subset is published by renaming its
-  *     staged files: clean, every staged row (NULL-pass included) to
-  *     `path`; violations, TRUE rows to `<path>/valid` and FALSE rows to
-  *     `<path>/reject` (NULL rows to neither). `mode` applies to each
-  *     published directory as `DataFrameWriter.save` would; a subset
-  *     without rows is written empty through Spark (1 more job), so it
-  *     stays readable. A plan whose frames are not row subsets (Flag
-  *     under Strict) drops the staging and writes its frames as planned.
-  *     A Strict abort, a failed write or an `error`-mode
-  *     clash deletes the staging directory, and the target directories
-  *     the write created if nothing was published into them. A process
-  *     killed mid-write leaves a hidden staging directory (invisible to
-  *     readers, safe to delete); killed mid-publish, a partly published
-  *     subset — as a killed `DataFrameWriter` job commit would.
-  *   - Otherwise (other formats; object stores, where rename is a copy)
-  *     one metrics pre-scan runs first ([[Metrics.computeWithQueries]]):
-  *     1 Spark job, 2 with `unique` rules, plus the jobs of each `query`
+  *   - A write takes one of three paths, chosen by the strategy's
+  *     `gatesOnVerdict` and [[Staging.supports]] alone. On the first two
+  *     the metrics ride the one write of the rows
+  *     ([[Metrics.observedForWrite]]): 1 Spark job, plus one shuffle stage
+  *     (one job under AQE) per `unique` key, which shuffles the written
+  *     rows by that key, plus the jobs of each `query` rule's SQL.
+  *   - Not gated (NoOp, Flag): the planned frame is written as is.
+  *   - Gated (Split, Strict), to a file format (parquet, orc, json, csv,
+  *     text) on a store where rename is a metadata operation (local,
+  *     HDFS, viewfs): the primary frame of the strategy's clean-verdict
+  *     plan (the aligned rows; the flagged rows for Flag under Strict) is
+  *     written once, `partitionBy` its composite pass flag (TRUE / FALSE
+  *     / NULL), into `<path>/_graft_staging_<uuid>`, hidden from Spark
+  *     reads of `path` by its `_` prefix. Then the verdict picks the
+  *     plan, whose every request is a row subset ([[RowSet]]) of the
+  *     staged frame, published by renaming its staged files: clean, every
+  *     staged row (NULL-pass included) to `path`; violations, TRUE rows to
+  *     `<path>/valid` and FALSE rows to `<path>/reject` (NULL rows to
+  *     neither). `mode` applies to each published directory as
+  *     `DataFrameWriter.save` would; a subset without rows is written
+  *     empty through Spark (1 more job), so it stays readable. A Strict
+  *     abort, a failed write or an `error`-mode clash deletes the staging
+  *     directory, and the target directories the write created if
+  *     nothing was published into them. A process killed mid-write leaves
+  *     a hidden staging directory (invisible to readers, safe to delete);
+  *     killed mid-publish, a partly published subset — as a killed
+  *     `DataFrameWriter` job commit would.
+  *   - Gated, to other formats or object stores (where rename is a copy):
+  *     one metrics pre-scan first ([[Metrics.computeWithQueries]]): 1
+  *     Spark job, 2 with `unique` rules, plus the jobs of each `query`
   *     rule's SQL, then one write per planned subset. Nothing is ever
   *     persisted: Split's valid/reject subsets are two pushed-down filter
-  *     scans of the source, not a cached materialisation of the whole
-  *     input.
+  *     scans of the source, not a cached materialisation of the input.
   */
 object ContractIO {
 
@@ -129,76 +129,76 @@ object ContractIO {
   ): WriteResult = {
     val ctx = InterceptorContext("write", None, Some(path), Some(contract))
     val df0 = interceptors.foldLeft(df)((d, i) => i.preWrite(ctx, d))
+    val spark = df0.sparkSession
     val specs = Expectations.fromContract(contract)
     val schema = SchemaSnapshot.of(df0).toMap
-    // observe can't express count_distinct (unique) or custom SQL (query)
-    val observable = !strategy.gatesOnVerdict &&
-      !specs.exists(s => s.rule == "unique" || s.rule == "query")
 
     val written = Seq.newBuilder[String]
     val warnings = Seq.newBuilder[String]
     def target(req: WriteRequest): String =
       req.pathSuffix.map(s => s"${path.stripSuffix("/")}/$s").getOrElse(path)
-    def execute(req: WriteRequest): Unit = {
+    def execute(plan: WritePlan): Unit = (plan.primary.toSeq ++ plan.additional).foreach { req =>
       req.df.write.format(format).options(options).mode(mode).save(target(req))
       written += target(req)
       warnings ++= req.warnings
     }
-    // strict strategies abort before anything is published
-    def abortIfFailed(plan: WritePlan, v: ValidationResult): Unit =
-      plan.failWith.foreach { msg =>
-        throw new IllegalStateException(s"$msg: ${v.errors.mkString("; ")}")
-      }
 
     val validation =
-      if (observable) {
-        // metrics ride the primary write: one scan total
-        val obs = Observation("graft_dq_" + java.util.UUID.randomUUID().toString.replace("-", ""))
-        val exprs = Metrics.aggregateExprs(specs, df0.columns.toSet)
-        val observed = df0.observe(obs, exprs.head, exprs.tail: _*)
-        val aligned = ApplyContract.align(observed, contract, autoCast)
-        val plan = strategy.plan(aligned, specs,
-          ValidationResult(ok = true, Nil, Nil, Map.empty, schema))
-        plan.primary.foreach(execute)
-        plan.additional.foreach(execute)
-        Evaluator.evaluate(contract, schema, Metrics.metricMap(obs.get))
-      } else if (strategy.gatesOnVerdict && Staging.supports(df0.sparkSession, path, format)) {
-        // every row staged once, partitioned by its pass flag, the metrics
-        // observed on that write; then evaluate and publish by rename
-        val saveMode = Staging.saveMode(mode)
-        val queries = Metrics.queryMetrics(df0, specs, df0.sparkSession)
+      if (strategy.gatesOnVerdict && !Staging.supports(spark, path, format)) {
+        // one metrics pre-scan on the input, then plan against the verdict
+        val (v, _, plan) = prescan(df0, contract, strategy, autoCast)
+        execute(plan)
+        v
+      } else {
+        // the metrics ride the one write of the rows: one input scan
+        val queries = Metrics.queryMetrics(df0, specs, spark)
         val obs = Observation("graft_dq_" + java.util.UUID.randomUUID().toString.replace("-", ""))
         val observed = ApplyContract.align(Metrics.observedForWrite(df0, specs, obs), contract, autoCast)
-        val staged = Staging.stage(observed.withColumn(Staging.PassColumn, Strategies.passAll(specs)),
-          path, format, options)
-        try {
-          val v = Evaluator.evaluate(contract, schema, Metrics.metricMap(obs.get) ++ queries)
-          val plan = strategy.plan(ApplyContract.align(df0, contract, autoCast), specs, v)
-          abortIfFailed(plan, v)
-          val requests = plan.primary.toSeq ++ plan.additional
-          if (requests.forall(_.rows.isDefined)) {
-            staged.publish(requests.map(r => Staging.Publish(r.rows.get, target(r), r.df)), saveMode)
+        val cleanPlan = strategy.plan(observed, specs, ValidationResult(ok = true, Nil, Nil, Map.empty, schema))
+        def verdict() = Evaluator.evaluate(contract, schema, Metrics.metricMap(obs.get) ++ queries)
+        if (!strategy.gatesOnVerdict) {
+          execute(cleanPlan)
+          verdict()
+        } else {
+          // the clean plan's frame staged once, partitioned by its pass
+          // flag; every request of the verdict's plan is a subset of it,
+          // published by rename
+          val saveMode = Staging.saveMode(mode)
+          val withPass = cleanPlan.primary.get.df.withColumn(Staging.PassColumn, Strategies.passAll(specs))
+          val staged = Staging.stage(withPass, path, format, options)
+          try {
+            val v = verdict()
+            val plan = strategy.plan(ApplyContract.align(df0, contract, autoCast), specs, v)
+            abortIfFailed(plan, v)
+            val requests = plan.primary.toSeq ++ plan.additional
+            staged.publish(requests.map(r => Staging.Publish(r.rows, target(r), r.df)), saveMode)
             requests.foreach { r => written += target(r); warnings ++= r.warnings }
-          } else {
-            // a derived frame (Flag under Strict) is not a staged subset
-            staged.discard()
-            requests.foreach(execute)
-          }
-          v
-        } finally staged.discard()
-      } else {
-        // one metrics pre-scan on the input, then plan against the verdict
-        val metrics = Metrics.computeWithQueries(df0, specs, df0.sparkSession)
-        val v = Evaluator.evaluate(contract, schema, metrics)
-        val aligned = ApplyContract.align(df0, contract, autoCast)
-        val plan = strategy.plan(aligned, specs, v)
-        abortIfFailed(plan, v)
-        plan.primary.foreach(execute)
-        plan.additional.foreach(execute)
-        v
+            v
+          } finally staged.discard()
+        }
       }
     val result = WriteResult(validation, written.result(), validation.warnings ++ warnings.result())
     interceptors.foreach(_.postWrite(ctx, result))
     result
   }
+
+  /** The pre-scan verdict step of a governed write: one metrics pre-scan
+    * of `df`, its verdict, the aligned frame and the strategy's plan for
+    * it; throws when the plan fails the write, before anything is written. */
+  private[io] def prescan(df: DataFrame, contract: Contract, strategy: ViolationStrategy,
+                          autoCast: Boolean): (ValidationResult, DataFrame, WritePlan) = {
+    val specs = Expectations.fromContract(contract)
+    val metrics = Metrics.computeWithQueries(df, specs, df.sparkSession)
+    val v = Evaluator.evaluate(contract, SchemaSnapshot.of(df).toMap, metrics)
+    val aligned = ApplyContract.align(df, contract, autoCast)
+    val plan = strategy.plan(aligned, specs, v)
+    abortIfFailed(plan, v)
+    (v, aligned, plan)
+  }
+
+  // strict strategies abort before anything is published
+  private def abortIfFailed(plan: WritePlan, v: ValidationResult): Unit =
+    plan.failWith.foreach { msg =>
+      throw new IllegalStateException(s"$msg: ${v.errors.mkString("; ")}")
+    }
 }

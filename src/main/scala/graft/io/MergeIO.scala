@@ -1,8 +1,6 @@
 package graft.io
 
-import graft.align.ApplyContract
 import graft.contracts.Contract
-import graft.quality._
 import graft.strategies.{NoOpStrategy, ViolationStrategy}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
@@ -31,17 +29,8 @@ object MergeIO {
   ): WriteResult = {
     require(keys.nonEmpty, "merge keys must not be empty")
     val spark = df.sparkSession
-    val specs = Expectations.fromContract(contract)
-
-    // validate the input frame (pre-align) — one metrics pre-scan, as in
-    // write()'s pre-scan branch
-    val metrics = Metrics.computeWithQueries(df, specs, spark)
-    val validation = Evaluator.evaluate(contract, SchemaSnapshot.of(df).toMap, metrics)
-    val aligned = ApplyContract.align(df, contract, autoCast)
-    val plan = strategy.plan(aligned, specs, validation)
-    plan.failWith.foreach { msg =>
-      throw new IllegalStateException(s"$msg: ${validation.errors.mkString("; ")}")
-    }
+    // validate the input frame (pre-align): write()'s pre-scan path
+    val (validation, aligned, plan) = ContractIO.prescan(df, contract, strategy, autoCast)
     // Split-style plans route their valid subset (by the strategy's OWN
     // suffix) into the merge; when no mergeable subset exists (e.g.
     // includeValid=false) nothing reaches the target. Other subsets land

@@ -25,10 +25,10 @@ import org.apache.spark.sql.functions._
   *     shape of Spark's distinct-aggregate rewrite) and the observed
   *     aggregate over the groups yields `Σ(n − 1)` per key — exactly
   *     `count − countDistinct − hasNull`, since NULL keys form one group;
-  *   - 0 when the metrics ride a governed write: `ContractIO`'s observe
-  *     branch ([[aggregateExprs]] on the written frame) and its staged
-  *     branch ([[observedForWrite]], one shuffle per unique key inside the
-  *     write).
+  *   - 0 of their own when the metrics ride a governed write
+  *     ([[observedForWrite]]): every NoOp or Flag write, and every Split
+  *     or Strict write that stages (`graft.io.ContractIO`); each present
+  *     unique key adds one shuffle stage inside the write.
   * The observed aggregate always sits in the result stage: accumulator
   * updates of a re-executed shuffle-map stage may be applied twice.
   */

@@ -4,7 +4,8 @@ import graft.quality.{ExpectationSpec, Expectations, ValidationResult}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Which rows of the planned frame a request writes, unchanged. */
+/** Which rows of a strategy's clean-verdict primary frame a request
+  * writes, unchanged: every plan is a row subset of that one frame. */
 sealed trait RowSet
 object RowSet {
   case object All extends RowSet
@@ -15,15 +16,15 @@ object RowSet {
 }
 
 /** A single write produced by a strategy plan. `rows` names the subset
-  * `df` holds when it is a row subset of the planned frame; `None` when it
-  * is derived otherwise (Flag's extra column). A staged write
-  * (`graft.io.ContractIO`) publishes a request with `rows` from its staged
-  * files and runs `df` only for the others. */
+  * of the clean-verdict plan's primary frame that `df` holds. A staged
+  * write (`graft.io.ContractIO`) stages that frame once and publishes each
+  * request's `rows` from the staged files; `df` itself runs only when no
+  * staged row belongs to it, or where nothing can be staged. */
 final case class WriteRequest(
     df: DataFrame,
     pathSuffix: Option[String],
-    warnings: Seq[String] = Nil,
-    rows: Option[RowSet] = None
+    rows: RowSet,
+    warnings: Seq[String] = Nil
 )
 
 /** What to write given a validation outcome (reference:
@@ -74,17 +75,18 @@ sealed trait ViolationStrategy {
   def plan(df: DataFrame, specs: Seq[ExpectationSpec], validation: ValidationResult): WritePlan
 
   /** Whether the plan's shape depends on the validation verdict. When
-    * false, governed writes collect metrics via `Dataset.observe` on the
-    * write pass itself (zero extra scans); when true, the write stages
-    * every row once and publishes after the verdict, or runs one metrics
-    * pre-scan first where it cannot stage (`graft.io.ContractIO`). */
+    * false, a governed write observes its metrics on the write of its
+    * rows, whatever the contract's rules; when true, it stages the frame
+    * of the clean-verdict plan once and publishes after the verdict, or
+    * runs one metrics pre-scan first where it cannot stage
+    * (`graft.io.ContractIO`). */
   def gatesOnVerdict: Boolean = false
 }
 
 /** Write the aligned frame as-is regardless of violations. */
 case object NoOpStrategy extends ViolationStrategy {
   def plan(df: DataFrame, specs: Seq[ExpectationSpec], validation: ValidationResult): WritePlan =
-    WritePlan(primary = Some(WriteRequest(df, None, rows = Some(RowSet.All))))
+    WritePlan(primary = Some(WriteRequest(df, None, RowSet.All)))
 }
 
 /** Split the frame into `<path>/valid` and `<path>/reject` subsets on the
@@ -102,16 +104,16 @@ final case class SplitStrategy(
 ) extends ViolationStrategy {
   override def gatesOnVerdict: Boolean = true
   def plan(df: DataFrame, specs: Seq[ExpectationSpec], validation: ValidationResult): WritePlan = {
-    val all = WriteRequest(df, None, rows = Some(RowSet.All))
+    val all = WriteRequest(df, None, RowSet.All)
     if (!Strategies.hasViolations(validation)) return WritePlan(Some(all))
     val pass = Strategies.passAll(specs)
     val requests = Seq.newBuilder[WriteRequest]
     if (includeValid)
-      requests += WriteRequest(df.filter(pass), Some(validSuffix),
-        Seq(s"Valid subset written to dataset suffix '$validSuffix'"), Some(RowSet.Passing))
+      requests += WriteRequest(df.filter(pass), Some(validSuffix), RowSet.Passing,
+        Seq(s"Valid subset written to dataset suffix '$validSuffix'"))
     if (includeReject)
-      requests += WriteRequest(df.filter(!pass), Some(rejectSuffix),
-        Seq(s"Rejected subset written to dataset suffix '$rejectSuffix'"), Some(RowSet.Failing))
+      requests += WriteRequest(df.filter(!pass), Some(rejectSuffix), RowSet.Failing,
+        Seq(s"Rejected subset written to dataset suffix '$rejectSuffix'"))
     val primary = if (writePrimaryOnViolation) Some(all) else None
     WritePlan(primary, requests.result())
   }
@@ -122,7 +124,7 @@ final case class SplitStrategy(
 final case class FlagStrategy(columnName: String = "_corrupted_data") extends ViolationStrategy {
   def plan(df: DataFrame, specs: Seq[ExpectationSpec], validation: ValidationResult): WritePlan =
     WritePlan(Some(WriteRequest(
-      df.withColumn(columnName, Strategies.failedExpectationsColumn(specs)), None)))
+      df.withColumn(columnName, Strategies.failedExpectationsColumn(specs)), None, RowSet.All)))
 }
 
 /** Decorate another strategy and fail the run when violations persist. */

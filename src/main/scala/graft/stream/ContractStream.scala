@@ -107,8 +107,9 @@ object ContractStream {
   /** Governed streaming write: align, observe, and write each micro-batch
     * through the batch governance path (`foreachBatch` → [[ContractIO]]),
     * mirroring the reference's per-batch validation attach
-    * (`streaming.py:236`). Violation strategies apply per batch; the
-    * intervention strategy can stop the stream (`streaming.py:82-93`),
+    * (`streaming.py:236`); a batch is a static frame, so its `unique` and
+    * `query` rules are measured too. Violation strategies apply per batch;
+    * the intervention strategy can stop the stream (`streaming.py:82-93`),
     * and every batch verdict is published to the observation sink. */
   def write(
       df: DataFrame,

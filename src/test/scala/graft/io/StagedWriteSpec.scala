@@ -1,8 +1,9 @@
 package graft.io
 
 import graft.SparkSpec
+import graft.align.ApplyContract
 import graft.contracts._
-import graft.quality.{Metrics, ValidationResult}
+import graft.quality.{Expectations, Metrics, ValidationResult}
 import graft.strategies._
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -34,15 +35,17 @@ class StagedWriteSpec extends SparkSpec {
   private val schema = StructType(Seq(
     StructField("id", LongType), StructField("code", StringType), StructField("v", DoubleType)))
 
-  private def frame(rows: Row*): DataFrame =
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+  private def frame(rows: Row*): DataFrame = partitioned(3, rows)
+  private def partitioned(partitions: Int, rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, partitions), schema)
 
   private val cleanRows = Seq(Row(1L, "a", 1.0), Row(2L, "b", 2.0), Row(3L, "a", 3.0), Row(4L, "b", 4.0))
   private val clean = frame(cleanRows: _*)
   // a NULL id (not_null), an enum miss, a non-positive v, a duplicated id
   // and code; `code` NULL and `v` NULL make the composite predicate NULL
-  private val violating = frame(cleanRows ++ Seq(Row(null, "a", 5.0), Row(6L, "z", 6.0), Row(7L, "b", -7.0),
-    Row(1L, "b", 8.0), Row(9L, null, 9.0), Row(10L, "a", null)): _*)
+  private val violatingRows = cleanRows ++ Seq(Row(null, "a", 5.0), Row(6L, "z", 6.0), Row(7L, "b", -7.0),
+    Row(1L, "b", 8.0), Row(9L, null, 9.0), Row(10L, "a", null))
+  private val violating = frame(violatingRows: _*)
 
   private def contract(uniques: Seq[String] = Seq("id"), vType: String = "double",
                        query: Boolean = false): Contract =
@@ -176,9 +179,49 @@ class StagedWriteSpec extends SparkSpec {
     assert(again.last.failure.nonEmpty && kept.map(_._1) == Set(""))
   }
 
-  test("Strict over Flag writes the flagged frame, not the staged rows") {
+  test("Strict over Flag stages the flagged frame; violated, it leaves nothing") {
     val (out, _, d) = both(StrictStrategy(FlagStrategy()), contract(), clean -> "overwrite")
     assert(out.head.validation.get.ok && d("")._1.fieldNames.contains("_corrupted_data"))
+    val (failed, t, _) = both(StrictStrategy(FlagStrategy()), contract(), violating -> "error")
+    assert(failed.head.failure.exists(_.contains("IllegalStateException")) && t.isEmpty)
+    val (again, kept, _) = both(StrictStrategy(FlagStrategy()), contract(),
+      clean -> "overwrite", violating -> "overwrite")
+    assert(again.last.failure.nonEmpty && kept.map(_._1) == Set(""))
+  }
+
+  test("NoOp and Flag observe the write: the pre-scan's metrics, the planned rows") {
+    val c = contract(uniques = Seq("id", "code"), query = true)
+    val specs = Expectations.fromContract(c)
+    val aligned = ApplyContract.align(violating, c)
+    val flagged = aligned.withColumn("_corrupted_data", Strategies.failedExpectationsColumn(specs))
+    for ((strategy, planned) <- Seq(NoOpStrategy -> aligned, FlagStrategy() -> flagged)) {
+      val dir = new File(tmpDir("graft_observed"), "t")
+      val r = ContractIO.write(violating, dir.getPath, c, strategy = strategy)
+      assert(r.validation.metrics == Metrics.computeWithQueries(violating, specs, spark))
+      assert(r.writtenPaths == Seq(dir.getPath))
+      val (written, rows) = data(dir)("")
+      assert(written.map(f => f.name -> f.dataType) == planned.schema.map(f => f.name -> f.dataType))
+      assert(rows == planned.collect().map(_.toString).toSeq.sorted)
+    }
+  }
+
+  test("staged and observed writes give one answer for any partitioning") {
+    val c = contract(uniques = Seq("id", "code"))
+    val conf = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.getOption(conf)
+    def run(strategy: ViolationStrategy, shufflePartitions: Int, inputPartitions: Int) = {
+      spark.conf.set(conf, shufflePartitions.toString)
+      val dir = new File(tmpDir("graft_determinism"), "t")
+      val r = ContractIO.write(partitioned(inputPartitions, violatingRows), dir.getPath, c, strategy = strategy)
+      (r.validation.metrics, data(dir))
+    }
+    try {
+      for (strategy <- Seq(SplitStrategy(), NoOpStrategy)) {
+        val outcomes = for (shuffle <- Seq(1, 7); input <- Seq(1, 5)) yield run(strategy, shuffle, input)
+        assert(outcomes.head._1("violations.unique_id") == 1L)
+        outcomes.tail.foreach(o => assert(o == outcomes.head))
+      }
+    } finally saved.fold(spark.conf.unset(conf))(spark.conf.set(conf, _))
   }
 
   test("a write failing mid-job leaves no published or staged output") {

@@ -3,7 +3,7 @@ package graft.quality
 import graft.{SparkSpec, T}
 import graft.contracts._
 import graft.io.{ContractIO, Sources}
-import graft.strategies.{NoOpStrategy, SplitStrategy, StrictStrategy}
+import graft.strategies.{FlagStrategy, NoOpStrategy, SplitStrategy, StrictStrategy}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
@@ -79,6 +79,39 @@ class MetricsJobsSpec extends SparkSpec {
     val (res, jobs) = jobsOf(ContractIO.write(source, tmpDir("graft_jobs_noop"), contract(),
       mode = "overwrite", strategy = NoOpStrategy))
     assert(res.validation.metrics("violations.gt_v") == 1L)
+    assert(jobs == 1)
+  }
+
+  /** `c` with an object-level `query` rule counting the rows with v > 3. */
+  private def withQuery(c: Contract): Contract = c.copy(schema = c.schema.map(_.copy(quality = Seq(
+    QualityRule(rule = Some("query"), name = Some("big_v"),
+      query = Some(s"SELECT count(*) FROM ${Metrics.QueryViewAlias} WHERE v > 3"))))))
+
+  test("a NoOp write with a unique rule observes it on the write: two jobs") {
+    val (res, jobs) = jobsOf(ContractIO.write(source, tmpDir("graft_jobs_noop_unique"), contract("id"),
+      mode = "overwrite", strategy = NoOpStrategy))
+    assert(res.validation.metrics("violations.unique_id") == 1L)
+    assert(jobs == 2)
+  }
+
+  test("a Flag write with a unique rule observes it on the write: two jobs") {
+    val (res, jobs) = jobsOf(ContractIO.write(source, tmpDir("graft_jobs_flag_unique"), contract("id"),
+      mode = "overwrite", strategy = FlagStrategy()))
+    assert(res.validation.metrics("violations.unique_id") == 1L)
+    assert(jobs == 2)
+  }
+
+  test("a NoOp write with a query rule is its query's jobs plus the write") {
+    val (res, jobs) = jobsOf(ContractIO.write(source, tmpDir("graft_jobs_noop_query"), withQuery(contract()),
+      mode = "overwrite", strategy = NoOpStrategy))
+    assert(res.validation.metrics("big_v") == 1L && res.validation.metrics("violations.gt_v") == 1L)
+    assert(jobs == 3)
+  }
+
+  test("a clean Strict over Flag write is one job") {
+    val (res, jobs) = jobsOf(ContractIO.write(cleanSource, tmpDir("graft_jobs_strict_flag"), contract(),
+      mode = "overwrite", strategy = StrictStrategy(FlagStrategy())))
+    assert(res.validation.ok && res.writtenPaths.size == 1)
     assert(jobs == 1)
   }
 

@@ -2,9 +2,13 @@ package graft.stream
 
 import graft.SparkSpec
 import graft.contracts._
+import graft.io.WriteResult
 import graft.obs.BufferingObservationSink
+import graft.quality.{Expectations, Metrics}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.StreamingQueryException
+
+import scala.jdk.CollectionConverters._
 
 final case class Rec(id: Long, v: Double)
 
@@ -39,5 +43,26 @@ class InterventionSpec extends SparkSpec {
       // the clean batch's rows were appended before the stop
       assert(spark.read.parquet(s"$out/data").count() >= 2)
     } finally q.stop()
+  }
+
+  test("governed streaming write observes unique rules per batch, as a pre-scan of the batch") {
+    val unique = contract.copy(schema = contract.schema.map(o =>
+      o.copy(properties = o.properties.map(f => if (f.name == "id") f.copy(unique = true) else f))))
+    val batches = Seq(Seq(Rec(1, 1.0), Rec(1, 2.0), Rec(2, -3.0)), Seq(Rec(3, 1.0), Rec(3, 1.0), Rec(3, 2.0), Rec(4, 5.0)))
+    val results = new java.util.concurrent.ConcurrentLinkedQueue[WriteResult]()
+    val mem = MemoryStream[Rec](spark)
+    val out = tmpDir("graft_stream_unique")
+    val q = ContractStream.write(mem.toDF(), s"$out/data", unique, checkpointLocation = s"$out/ckpt",
+      onBatch = (_, r) => results.add(r))
+    try batches.foreach { rows => mem.addData(rows: _*); q.processAllAvailable() }
+    finally q.stop()
+    assert(results.size == batches.size)
+    val specs = Expectations.fromContract(unique)
+    batches.zip(results.asScala).zipWithIndex.foreach { case ((rows, result), i) =>
+      val expected = Metrics.compute(rows.toDF(), specs)
+      val observed = result.validation.metrics
+      assert(expected("violations.unique_id") == i + 1L)
+      assert(expected.forall { case (k, v) => observed(k) == v })
+    }
   }
 }
