@@ -1,5 +1,7 @@
 package graft
 
+import graft.gates.{Gates, Pin}
+
 /** Benchmark main: runs the SURVEY §6 headline queries against
   * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line of scalars
   * ([[stdoutLine]]); the per-query seconds, ratios and drift lists go to
@@ -29,282 +31,44 @@ package graft
   */
 object Bench {
 
-  val headline: Seq[String] = Seq(
-    "q1_pricing", "q3_topn_join", "q5_join5", "q_metrics",
-    "q_dedup_exact", "q_dedup_minhash", "q_ann_brute", "q_text_quality",
-    "q_topk_groups", "q_ann_ivf", "q_source_cap", "q_pack_chunks",
-    "q_pack_chunks_sharded",
-    // round-6 operators
-    "q_stratified_sample", "q_entropy", "q_bigram_lm", "q_boilerplate",
-    "q_ann_radius", "q_ann_radius_ivf", "q_interval_join", "q_dedup_semantic",
-    // round-6 continuation (q_dedup_keep_best is gated but not benched:
-    // its cost is duplicateClusters' iterative loop, already characterised
-    // via q_dedup_cluster's absence for the same reason)
-    "q_weighted_sample", "q_gopher_rules", "q_line_dedup",
-    "q_classifier_score", "q_dedup_semantic_mp",
-    "q_upsample", "q_window_chunks", "q_lm_score", "q_curation_pipeline2",
-    // r6 final sweep (q_substr_strip shares the spans computation; the
-    // spans query is the cost driver and is what gets benched)
-    "q_substr_spans", "q_dsir", "q_nb_classify", "q_cluster_sample",
-    "q_epoch_order",
-    // r7 additions (q_fuzzy_join is gated but not benched: the synthetic
-    // 8-word name vocabulary makes blocks corpus/8-sized, so its sf0.1
-    // cost is the deliberate within-block quadratic — characterised in
-    // PERF.md, same precedent as q_dedup_cluster/q_dedup_keep_best)
-    "q_temperature_mix",
-    // r8: iterative link-graph authority (5 fixed-point iterations;
-    // q_trustrank is gated but not benched — it shares the iteration
-    // engine and differs only in the teleport frame, same precedent as
-    // q_substr_strip sharing the spans computation)
-    "q_pagerank",
-    // r8: BPE merge induction (q_bpe_segment and q_bpe_tokenize not
-    // benched: their cost IS the training pass plus a stateless
-    // projection); r9 adds the
-    // production-k path — distributed vocab agg + driver-side delta
-    // merge loop (64 merges, no chained Spark jobs)
-    "q_bpe_train", "q_bpe_train64",
-    // r8 continuation: Lloyd training gated on its own output (the
-    // vector family's quantizer build) and synchronous label
-    // propagation (ONE dst-hash shuffle per voting round since the r8
-    // repartition fix — the explicit repartition serves both the
-    // (dst,label) count and the dst argmax; r9 additionally
-    // checkpoints each round, which AQE repays by planning the winners
-    // join from real sizes). q_multimodal_decode — and the r10
-    // transforms q_image_resize / q_audio_frames — are NOT benched:
-    // their fixture sets are bounded (doc_id < 120) by design, so
-    // their cost is O(1) in sf — constant-work smokes, not throughput
-    // signals.
-    "q_kmeans", "q_labelprop",
-    // r8 continuation 2: exact-decimal correlation profile + the event
-    // analytics trio (q_skipping_scan is NOT benched: its cost is the
-    // 6M-row z-ordered write, a layout build, not a query)
-    "q_corr", "q_resample", "q_funnel", "q_cohort",
-    // r8 continuation 3: the profiling/warehouse quartet (cube through
-    // one Expand + one grid exchange; histogram/outliers/winsorize are
-    // groups-sized aggregates broadcast back; scd2 is two per-key
-    // windows) + the IR pair (PMI margins off the shared bigram frame;
-    // BM25 with query-filtered explode + TakeOrderedAndProject)
-    "q_cube", "q_histogram", "q_outliers", "q_winsorize", "q_scd2",
-    "q_pmi", "q_bm25",
-    // r8 continuation 4: time-series analytics (window-framed exact
-    // decimal sums; transition matrix off one per-key window) +
-    // pivoted cross-tab and exact-moment profiling
-    "q_moving_avg", "q_transitions", "q_pivot", "q_skew_stats",
-    // r8 continuation 4b: semi-structured payload path (from_json
-    // projection + the JSON->aggregation pipeline) and dependency/key
-    // profiling (the contract-drafting discovery pass)
-    "q_json_extract", "q_json_stats", "q_fd_violations", "q_key_profile",
-    // r8 continuation 4c: degree-ordered triangle counting (wedge work
-    // bounded by sum outdeg^2 <= m^1.5, the compact-forward bound),
-    // rank transform, and the exact-integer EWMA recurrence
-    "q_triangles", "q_rank_normalize", "q_ewma",
-    // r8 continuation 4d: cross-table integrity (anti-join orphans)
-    // and the exact-power-sum Welch t
-    "q_ref_orphans", "q_ref_integrity", "q_abtest",
-    // composed winsorize -> rank pipeline, interval-weighted TWAP,
-    // and per-group median imputation
-    "q_feature_pipeline", "q_twap", "q_impute",
-    // windowed funnel (the conversion-timeout variant), normalized
-    // retention, and lag-1 series autocorrelation
-    "q_funnel_window", "q_retention_rate", "q_autocorr", "q_mode",
-    "q_pop", "q_zscore", "q_chi2", "q_dup_stats", "q_seasonality",
-    "q_gini",
-    // r10: the corpus-wide cleaning projections and the end-to-end
-    // shard-writer composition — the paths that touch every byte of a
-    // 100 TB corpus, so a regression here may not ride along outside
-    // the gate. q_bpe_tokenize is NOT benched: its cost is the 5-merge
-    // training pass + the stateless tokenize projection, both of which
-    // run INSIDE q_pack_tokens (train -> tokenize -> chunk -> pack), so
-    // benching both would double-count the same work (the
-    // q_substr_strip/q_trustrank precedent).
-    "q_unicode_nfc", "q_clean_text", "q_mojibake", "q_pack_tokens",
-    "q_html_strip", "q_ingest_clean", "q_c4_rules", "q_dedup_sentences",
-    // r10 continuation: the checksum-validated card scrub and the
-    // crawl-graph link extraction are corpus-wide projections; the
-    // quantile sketch is a corpus-wide bounded aggregation. (The
-    // multimodal transforms stay excluded with q_multimodal_decode:
-    // bounded fixture sets, O(1) in sf. r11's q_jpeg_decode and
-    // q_video_meta join that exclusion — both doc_id < 120 fixtures —
-    // as does r13's q_video_dhash (same bounded video fixture).
-    // q_curation_ingest is corpus-wide but NOT benched: it re-runs
-    // seven already-benched stage families end to end, so benching it
-    // would double-count every one — the q_substr_strip precedent; its
-    // cost profile lives in PERF.md r11.)
-    "q_redact_cards", "q_extract_links", "q_quantile_sketch",
-    // r14: stupid-backoff scoring — trains BOTH reference models and
-    // scores the corpus trigram stream, so it is the order-3 family's
-    // cost driver (q_trigram_lm is NOT benched: its counting pass runs
-    // INSIDE q_lm_score3 — the q_substr_strip precedent; its corpus
-    // growth is ScaleBudget's trigram_counts band instead)
-    "q_lm_score3",
-    // r15: the order-5 family's cost driver — trains all FOUR backoff
-    // models from one tokenisation and scores the 5-gram stream
-    // (q_ppl_buckets5 is NOT benched: it is q_lm_score5 plus one scalar
-    // quartile aggregation — the double-count precedent; the counting
-    // stage's corpus growth is ScaleBudget's ngram5_counts band)
-    "q_lm_score5",
-    // r15: order-3 DSIR — four models from one grouped tokenisation plus
-    // the doubly-joined trigram scoring stream (q_dsir3_sample is NOT
-    // benched: it is q_dsir3 plus the already-benched weighted-sample
-    // tail). q_wet_records/q_wat_records are NOT benched: bounded
-    // fixtures (doc_id < 120), O(1) in sf — the q_multimodal_decode
-    // exclusion class; the companion formats' byte-walk throughput is
-    // WARC's, already carried by ScaleBudget's warc_ingest band.
-    "q_dsir3",
-    // r15: trained language ID — the char-trigram training pass + the
-    // integer-micro argmax inference, both corpus-wide projections
-    "q_lang_id_trained")
+  /** Every gate that carries a [[Pin]], in registry order. Why a gate is
+    * or is not benched is noted at the gate. */
+  private val benched: Seq[(String, Pin)] =
+    Gates.all.flatMap(g => g.bench.map(g.name -> _))
+
+  /** The headline queries. */
+  val headline: Seq[String] = benched.map(_._1)
 
   /** Round-over-round regression budgets, calibrated against the round
     * driver's OWN machine: the BENCH_r04 per-query seconds (a contended
     * end-of-round run — every query ~1.3× slower than an idle box, i.e.
     * the realistic worst case this gate actually runs under) + 25%, plus
-    * a 0.3 s absolute jitter floor. q_ann_ivf uses the idle-machine 0.79 s
-    * with extra headroom instead of its r4 outlier (3.86 s — adjudicated
-    * as driver-side optimizer CPU on a contended machine; the typedLit
-    * centroid literal removes that sensitivity). Breaching any budget
-    * fails the process — a regression must not ride along silently. */
-  val budgetSecs: Map[String, Double] = Map(
-    "q1_pricing" -> 1.57, "q3_topn_join" -> 1.19, "q5_join5" -> 1.31,
-    "q_metrics" -> 0.66, "q_dedup_exact" -> 0.31, "q_dedup_minhash" -> 1.91,
-    "q_text_quality" -> 0.53,
-    "q_topk_groups" -> 1.16,
-    "q_source_cap" -> 0.59,
-    // pack family RE-BASED in r10 with bisect evidence (PERF.md r10):
-    // every line of the q_pack_chunks dataflow (packChunks shards=1
-    // branch, tokenCount, T.load, the SparkEntry query body) is
-    // byte-identical between the r5 baseline pin and HEAD — the drift
-    // (0.165 -> 0.42/0.51 idle warmed best-of-3) is harness context,
-    // not code: the warm-up pass grew 13 -> 83 queries and the r8
-    // round-robin experiment already measured that JIT/codegen-cache
-    // thrash at ~1.5x uniform. New base = r10 idle TimeTool warmed
-    // best-of-3 (0.425 / 0.514) x 1.3.
-    "q_pack_chunks" -> 0.55, "q_pack_chunks_sharded" -> 0.67,
-    // r6 operators: local warmed best-of-3 × 1.3 (the contended-driver
-    // factor observed between local and driver runs since r4)
-    "q_stratified_sample" -> 0.39, "q_entropy" -> 0.66,
-    "q_bigram_lm" -> 0.31, "q_boilerplate" -> 0.74,
-    "q_interval_join" -> 0.36,
-    // vector family re-based after the norm Generate-barrier fix
-    // (prepared() no longer inlines the norm per centroid reference):
-    // local warmed measurements × 1.3 — deliberately TIGHTER than the old
-    // bases so the 2-3× win cannot silently regress
-    "q_ann_brute" -> 0.39, "q_ann_ivf" -> 0.61,
-    "q_ann_radius" -> 0.22, "q_ann_radius_ivf" -> 0.49,
-    // q_dedup_semantic_mp re-based TIGHTER (2.31 -> 1.80 = local warmed
-    // med 1.385 × 1.3) after the r7 static canonical-block filter +
-    // _mp_arr Generate barrier (interleaved A/B: pair stage 1.68 -> 1.29 s,
-    // full query ~1.9 -> 1.385 s; see PERF.md r7)
-    "q_dedup_semantic" -> 0.99, "q_dedup_semantic_mp" -> 1.80,
-    // round-6 continuation: local warmed best-of-3 × 1.3
-    "q_weighted_sample" -> 0.38, "q_gopher_rules" -> 0.86,
-    "q_line_dedup" -> 0.77, "q_classifier_score" -> 0.59,
-    "q_upsample" -> 0.32, "q_window_chunks" -> 0.44,
-    "q_lm_score" -> 1.53, "q_curation_pipeline2" -> 1.54,
-    // r6 final sweep: local warmed best-of-3 (1.07 / 1.43 / 0.87 / 0.60) × 1.3;
-    // q_dsir re-based TIGHTER after the single-tokenisation dsirModels
-    // rewrite (1.66 -> 1.43) so the win cannot silently regress
-    "q_substr_spans" -> 1.39, "q_dsir" -> 1.86,
-    "q_nb_classify" -> 1.14, "q_cluster_sample" -> 0.78,
-    "q_epoch_order" -> 0.16,
-    // r7: local warmed best-of-3 (0.43/0.47) × 1.3
-    "q_temperature_mix" -> 0.61,
-    // r8: local warmed best-of-3 (1.14) × 1.3; q_bpe_train re-based
-    // TIGHTER in r9 (1.79 -> 1.08 = 0.83 warmed × 1.3) after the
-    // collect-per-round literal rewrite (exponential-plan crossJoin
-    // removed) so the win cannot silently regress; q_bpe_train64 is the
-    // r9 driver-side delta trainer (0.38 warmed × 1.3)
-    "q_pagerank" -> 1.48, "q_bpe_train" -> 1.08, "q_bpe_train64" -> 0.50,
-    // r8 continuation: local warmed best-of-3 (0.96) × 1.3;
-    // q_labelprop re-based TIGHTER in r11 (2.66 -> 1.55 = 1.19 warmed ×
-    // 1.3) after the raw-vote repartition + eager per-round checkpoint
-    // were replaced by map-side partial aggregation on the pipelined
-    // lazy-cache window (the pageRank shape; evidence in PERF.md r11)
-    "q_kmeans" -> 1.25, "q_labelprop" -> 1.55,
-    // r8 continuation 2: local warmed best-of-3
-    // (1.12 / 0.66 / 0.54 / 0.30) × 1.3
-    "q_corr" -> 1.45, "q_resample" -> 0.85, "q_funnel" -> 0.70,
-    "q_cohort" -> 0.39,
-    // r8 continuation 3: local warmed best-of-3
-    // (0.45 / 0.45 / 0.80 / 0.57 / 0.65 / 0.65 / 0.65) × 1.3; q_cube
-    // re-based TIGHTER (2.78 -> 0.59) after the finest-level-grid
-    // rewrite (2.14 -> 0.45 local) so the 4.8x win cannot silently
-    // regress
-    "q_cube" -> 0.59, "q_histogram" -> 0.59, "q_outliers" -> 1.04,
-    "q_winsorize" -> 0.74, "q_scd2" -> 0.84, "q_pmi" -> 0.84,
-    "q_bm25" -> 0.85,
-    // r8 continuation 4: local warmed best-of-3
-    // (0.66 / 0.79 / 0.40 / 0.39) × 1.3
-    "q_moving_avg" -> 0.86, "q_transitions" -> 1.03, "q_pivot" -> 0.52,
-    "q_skew_stats" -> 0.51,
-    // r8 continuation 4b: local warmed best-of-3 (0.71 / 0.77 / 0.51 /
-    // 0.46) × 1.3
-    "q_json_extract" -> 0.93, "q_json_stats" -> 1.01,
-    "q_fd_violations" -> 0.66, "q_key_profile" -> 0.60,
-    // r8 continuation 4c: local warmed best-of-3 (1.34 / 0.52 / 0.53) × 1.3
-    "q_triangles" -> 1.74, "q_rank_normalize" -> 0.68, "q_ewma" -> 0.69,
-    // r8 continuation 4d: local warmed best-of-3 (0.61 / 0.55 / 0.50) × 1.3
-    "q_ref_orphans" -> 0.79, "q_ref_integrity" -> 0.72, "q_abtest" -> 0.65,
-    // local warmed best-of-3 (0.96 / 0.65 / 0.53) × 1.3
-    "q_feature_pipeline" -> 1.25, "q_twap" -> 0.85, "q_impute" -> 0.69,
-    // local warmed best-of-3 (1.08 / 0.77 / 0.50) × 1.3
-    "q_funnel_window" -> 1.40, "q_retention_rate" -> 1.00,
-    "q_autocorr" -> 0.65, "q_mode" -> 0.66,
-    // local warmed best-of-3 (0.52 / 0.57 / 0.84 / 0.50) × 1.3
-    "q_pop" -> 0.68, "q_zscore" -> 0.74, "q_chi2" -> 1.09,
-    "q_dup_stats" -> 0.65,
-    // local warmed best-of-3 (0.56 / 0.29) × 1.3
-    "q_seasonality" -> 0.73, "q_gini" -> 0.38,
-    // r10: local warmed best-of-3 (0.289 / 0.326 / 0.304 / 0.390) × 1.3;
-    // q_pack_tokens re-based TIGHTER (2.65 -> 1.70 = 1.311 warmed × 1.3)
-    // after collectedMerges switched to the production delta trainer
-    // (2.04 -> 1.31 s) so the win cannot silently regress
-    "q_unicode_nfc" -> 0.38, "q_clean_text" -> 0.43,
-    "q_mojibake" -> 0.40, "q_pack_tokens" -> 1.70,
-    "q_html_strip" -> 0.51,
-    // r10: the composed 4-stage ingest pipeline (0.570 warmed × 1.3)
-    "q_ingest_clean" -> 0.74,
-    // r10: C4 battery — synthetic 6-line pages, 3 regex predicates per
-    // line (0.720 warmed × 1.3)
-    "q_c4_rules" -> 0.94,
-    // r10: sentence-span dedup — shingle rank exchange + span join
-    // (0.767 warmed × 1.3)
-    "q_dedup_sentences" -> 1.0,
-    // r10 continuation: Luhn card scrub (0.395 warmed × 1.3), link
-    // extraction (0.360 × 1.3), min-k quantile sketch (0.494 × 1.3)
-    "q_redact_cards" -> 0.51, "q_extract_links" -> 0.47,
-    "q_quantile_sketch" -> 0.64,
-    // r14: stupid-backoff scoring — trains both reference models and
-    // scores the trigram stream (1.976 warmed × 1.3)
-    "q_lm_score3" -> 2.57,
-    // r15: local warmed best-of-3 (2.779 / 2.978 / 3.530) × 1.3.
-    // q_lang_id_trained's base already carries the r15 char-array
-    // rewrite (substr's per-window UTF-8 boundary scan was O(len²) per
-    // document — 32.6 s → 3.53 s at sf0.1): the budget pins the fixed
-    // shape so the quadratic cannot quietly return
-    "q_lm_score5" -> 3.61, "q_dsir3" -> 3.87, "q_lang_id_trained" -> 4.59
+    * a 0.1 s absolute jitter floor (0.3 s until r11). q_ann_ivf uses the
+    * idle-machine 0.79 s with extra headroom instead of its r4 outlier
+    * (3.86 s — adjudicated as driver-side optimizer CPU on a contended
+    * machine; the typedLit centroid literal removes that sensitivity).
+    * Breaching any budget fails the process — a regression must not ride
+    * along silently.
+    * Each gate's [[Pin.budget]] holds the raw number, and its `budget:`
+    * note the measurement behind it: "X s warmed (rN)" is a local warmed
+    * best-of-3 from round N, × 1.3 (the slowdown observed since r4 from
+    * an idle local run to the contended bench machine). */
+  val budgetSecs: Map[String, Double] =
     // slack shrunk r11 (0.3 -> 0.1 flat): the r10 driver run showed an
     // event-analytics cluster riding 2-3x over its r9 numbers with
     // rc=0 — for a 0.3-0.5 s query the flat 0.3 s was ~2-3x of
     // headroom all by itself. 0.1 s covers measured same-harness
     // jitter; verified breach-free against the r11 settled idle run.
-  ).map { case (k, v) => k -> (v * 1.25 + 0.1) }
+    benched.map { case (k, p) => k -> (p.budget * 1.25 + 0.1) }.toMap
 
   /** Pinned baseline: the round-5 clean-run seconds per query (sf0.1,
     * local[32], warmed best-of-3, idle machine) — also recorded in
     * BASELINE.json. The emitted `vs_baseline` ratio (this run's total /
     * baseline total over the shared query set) is what makes the
-    * "within 2× of baseline" gate measurable round over round. */
-  val baselineSecs: Map[String, Double] = Map(
-    "q1_pricing" -> 0.961, "q3_topn_join" -> 0.630, "q5_join5" -> 0.914,
-    "q_metrics" -> 0.377, "q_dedup_exact" -> 0.240, "q_dedup_minhash" -> 1.183,
-    "q_ann_brute" -> 0.302, "q_text_quality" -> 0.289, "q_topk_groups" -> 0.491,
-    "q_ann_ivf" -> 0.650, "q_source_cap" -> 0.345,
-    // pack family re-based r10 (idle TimeTool warmed best-of-3) after a
-    // git bisect proved the dataflow byte-identical to the r5 pin — the
-    // 0.165/0.260 originals are unreproducible under the 6x-larger
-    // warm-up pass; evidence in PERF.md r10 and the budget comment above
-    "q_pack_chunks" -> 0.425, "q_pack_chunks_sharded" -> 0.514)
+    * "within 2× of baseline" gate measurable round over round. These
+    * are the pins marked [[Pin.baseline]]. */
+  val baselineSecs: Map[String, Double] =
+    benched.collect { case (k, p) if p.baseline => k -> p.pin }.toMap
 
   /** FULL-coverage per-query pins (r11): every headline query, not just
     * the 13 r5-baseline ones — the r10 verdict's blind spot was exactly
@@ -328,55 +92,9 @@ object Bench {
     * real but under the 2x gate surfaces in the `pin_drift` report
     * below ([[pinDriftReport]]): persistent >1.3x two rounds running is
     * the signal to either fix the regression or re-base WITH evidence,
-    * before rot compounds under the gate. */
-  val pinnedSecs: Map[String, Double] = baselineSecs ++ Map(
-    "q_abtest" -> 0.228, "q_ann_radius" -> 0.184,
-    "q_ann_radius_ivf" -> 0.346, "q_autocorr" -> 0.378,
-    "q_bigram_lm" -> 0.283, "q_bm25" -> 0.511, "q_boilerplate" -> 0.572,
-    "q_bpe_train" -> 0.768, "q_bpe_train64" -> 0.107,
-    "q_c4_rules" -> 0.266, "q_chi2" -> 0.280,
-    "q_classifier_score" -> 0.333, "q_clean_text" -> 0.172,
-    "q_cluster_sample" -> 0.537, "q_cohort" -> 0.341, "q_corr" -> 1.127,
-    "q_cube" -> 0.294, "q_curation_pipeline2" -> 0.941,
-    "q_dedup_semantic" -> 0.631, "q_dedup_semantic_mp" -> 1.543,
-    "q_dedup_sentences" -> 0.361, "q_dsir" -> 1.521,
-    "q_dup_stats" -> 0.215, "q_entropy" -> 0.523,
-    "q_epoch_order" -> 0.134, "q_ewma" -> 0.389,
-    "q_extract_links" -> 0.141, "q_fd_violations" -> 0.317,
-    "q_feature_pipeline" -> 0.555, "q_funnel" -> 0.436,
-    "q_funnel_window" -> 0.359, "q_gini" -> 0.152,
-    "q_gopher_rules" -> 0.576, "q_histogram" -> 0.241,
-    "q_html_strip" -> 0.184, "q_impute" -> 0.299,
-    "q_ingest_clean" -> 0.365, "q_interval_join" -> 0.279,
-    "q_json_extract" -> 0.548, "q_json_stats" -> 0.705,
-    "q_key_profile" -> 0.315, "q_kmeans" -> 0.737,
-    // q_labelprop re-pinned after the r11 repartition/checkpoint rework
-    // (3.156 -> idle TimeTool 1.194; full-bench and TimeTool contexts
-    // agreed within 1% for this query pre-change)
-    "q_labelprop" -> 1.20, "q_line_dedup" -> 0.463,
-    "q_lm_score" -> 0.915,
-    // r14: pinned from the round's first settled full-harness run
-    // (sf0.1, idle box, the only context pins are comparable in)
-    "q_lm_score3" -> 1.849,
-    // r15: pinned from this round's first settled full-harness run
-    // (rc=0, vs_baseline 0.950, run_factor/pin_factor both 1.000)
-    "q_lm_score5" -> 2.496, "q_dsir3" -> 2.794,
-    "q_lang_id_trained" -> 3.714,
-    "q_mode" -> 0.183, "q_mojibake" -> 0.185,
-    "q_moving_avg" -> 0.380, "q_nb_classify" -> 0.667,
-    "q_outliers" -> 0.542, "q_pack_tokens" -> 0.939,
-    "q_pagerank" -> 0.579, "q_pivot" -> 0.276, "q_pmi" -> 0.412,
-    "q_pop" -> 0.165, "q_quantile_sketch" -> 0.190,
-    "q_rank_normalize" -> 0.321, "q_redact_cards" -> 0.143,
-    "q_ref_integrity" -> 0.261, "q_ref_orphans" -> 0.285,
-    "q_resample" -> 0.726, "q_retention_rate" -> 0.345,
-    "q_scd2" -> 0.387, "q_seasonality" -> 0.202,
-    "q_skew_stats" -> 0.320, "q_stratified_sample" -> 0.357,
-    "q_substr_spans" -> 1.066, "q_temperature_mix" -> 0.257,
-    "q_transitions" -> 0.385, "q_triangles" -> 1.109,
-    "q_twap" -> 0.316, "q_unicode_nfc" -> 0.096, "q_upsample" -> 0.107,
-    "q_weighted_sample" -> 0.209, "q_window_chunks" -> 0.209,
-    "q_winsorize" -> 0.469, "q_zscore" -> 0.291)
+    * before rot compounds under the gate. Each gate's [[Pin.pin]] holds
+    * its value, with its provenance noted at the gate. */
+  val pinnedSecs: Map[String, Double] = benched.map { case (k, p) => k -> p.pin }.toMap
 
   /** Per-query ratio of this run's seconds to its pin, for every
     * successfully-timed query [[pinnedSecs]] covers (since r11: the

@@ -14,7 +14,7 @@ object T {
     Sources.parquet(spark, s"${dir.stripSuffix("/")}/$name.parquet")
 }
 
-/** Demo contracts over the driver test tables, used by `SparkEntry` queries
+/** Demo contracts over the test tables, used by the `graft.gates` queries
   * and the ScalaTest suites. Thresholds are chosen so the data genuinely
   * violates some expectations (the engine's interesting path). */
 object DemoContracts {

@@ -1,5 +1,6 @@
 package graft
 
+import graft.gates.Gates
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
@@ -7,7 +8,7 @@ import org.apache.spark.sql.execution.FormattedMode
 import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
-/** The query profiler over [[SparkEntry.queries]], read from
+/** The query profiler over the gate registry ([[graft.gates.Gates]]), read from
   * `SPARK_GRAFT_SF_DIR` (default `~/testdata/sf0.1`) on a
   * `GraftSession.local` session of [[Bench.cpus]] cores:
   *
@@ -16,7 +17,7 @@ import java.util.concurrent.atomic.AtomicInteger
   *   min (the number the `Bench.pinnedSecs` re-base policy asks for),
   *   median and Spark jobs per run (with the warm-up's jobs beside them).
   * - `--plan [query...]`: each query's formatted physical plan; every
-  *   registered query's when none is named.
+  *   registered query's, in registry order, when none is named.
   * - `--ab key=value <query>...`: runs alternate with the conf unset and
   *   set inside one JVM (both shapes warmed first), so drift between JVMs
   *   cannot swamp the delta, e.g. `--ab graft.fan.maxInputBytes=0`.
@@ -35,7 +36,8 @@ object Profile {
   /** Checks the arguments before any session starts: rejects unknown
     * options, an `--ab` argument that is not `key=value`, unknown query
     * names (all listed) and a timing mode with no query. */
-  def parse(args: Seq[String], registered: collection.Set[String]): Either[String, Request] = {
+  def parse(args: Seq[String], registered: Iterable[String]): Either[String, Request] = {
+    val known = registered.toSet
     val (mode, rest) = args match {
       case "--plan" +: tail => (Right(Plan), tail)
       case "--ab" +: kv +: tail => kv.split("=", 2) match {
@@ -46,12 +48,12 @@ object Profile {
       case _ => (Right(Time), args)
     }
     val (options, names) = rest.partition(_.startsWith("--"))
-    val unknown = names.filterNot(registered)
+    val unknown = names.filterNot(known)
     mode.flatMap { m =>
       if (options.nonEmpty) Left(s"unexpected option(s): ${options.mkString(", ")}; $Usage")
       else if (unknown.nonEmpty) Left(s"unknown query name(s): ${unknown.mkString(", ")}")
       else if (names.isEmpty && m != Plan) Left(Usage)
-      else Right(Request(m, if (names.isEmpty) registered.toSeq.sorted else names))
+      else Right(Request(m, if (names.isEmpty) registered.toSeq else names))
     }
   }
 
@@ -90,7 +92,7 @@ object Profile {
   }
 
   def main(args: Array[String]): Unit = {
-    val req = parse(args.toSeq, SparkEntry.queries.keySet)
+    val req = parse(args.toSeq, Gates.all.map(_.name))
       .fold(err => { System.err.println(s"[profile] $err"); sys.exit(2) }, identity)
     val iters = sys.env.getOrElse("SPARK_GRAFT_ITERS", "3").toInt
     require(iters >= 1, "SPARK_GRAFT_ITERS must be >= 1")

@@ -36,7 +36,10 @@ final case class WriteResult(validation: ValidationResult, writtenPaths: Seq[Str
   *     ([[Metrics.observedForWrite]]): 1 Spark job, plus one shuffle stage
   *     (one job under AQE) per `unique` key, which shuffles the written
   *     rows by that key, plus the jobs of each `query` rule's SQL.
-  *   - Not gated (NoOp, Flag): the planned frame is written as is.
+  *   - Not gated (NoOp, Flag): the planned frame is written as is. Under
+  *     `mode = "ignore"` onto an existing path Spark skips the write, so
+  *     the input is measured by the pre-scan instead and nothing is
+  *     written.
   *   - Gated (Split, Strict), to a file format (parquet, orc, json, csv,
   *     text) on a store where rename is a metadata operation (local,
   *     HDFS, viewfs): the primary frame of the strategy's clean-verdict
@@ -137,10 +140,10 @@ object ContractIO {
     val warnings = Seq.newBuilder[String]
     def target(req: WriteRequest): String =
       req.pathSuffix.map(s => s"${path.stripSuffix("/")}/$s").getOrElse(path)
+    def record(req: WriteRequest): Unit = { written += target(req); warnings ++= req.warnings }
     def execute(plan: WritePlan): Unit = (plan.primary.toSeq ++ plan.additional).foreach { req =>
       req.df.write.format(format).options(options).mode(mode).save(target(req))
-      written += target(req)
-      warnings ++= req.warnings
+      record(req)
     }
 
     val validation =
@@ -157,8 +160,15 @@ object ContractIO {
         val cleanPlan = strategy.plan(observed, specs, ValidationResult(ok = true, Nil, Nil, Map.empty, schema))
         def verdict() = Evaluator.evaluate(contract, schema, Metrics.metricMap(obs.get) ++ queries)
         if (!strategy.gatesOnVerdict) {
-          execute(cleanPlan)
-          verdict()
+          if (Staging.ignoresExisting(spark, path, format, mode)) {
+            // Spark skips this write, and the observation with it: the
+            // input is measured instead, and nothing is written
+            (cleanPlan.primary.toSeq ++ cleanPlan.additional).foreach(record)
+            Evaluator.evaluate(contract, schema, Metrics.compute(df0, specs) ++ queries)
+          } else {
+            execute(cleanPlan)
+            verdict()
+          }
         } else {
           // the clean plan's frame staged once, partitioned by its pass
           // flag; every request of the verdict's plan is a subset of it,
@@ -172,7 +182,7 @@ object ContractIO {
             abortIfFailed(plan, v)
             val requests = plan.primary.toSeq ++ plan.additional
             staged.publish(requests.map(r => Staging.Publish(r.rows, target(r), r.df)), saveMode)
-            requests.foreach { r => written += target(r); warnings ++= r.warnings }
+            requests.foreach(record)
             v
           } finally staged.discard()
         }

@@ -31,6 +31,12 @@ private[io] object Staging {
     FileFormats(format.toLowerCase(Locale.ROOT)) &&
       RenameSchemes(fsOf(spark, path).getUri.getScheme)
 
+  /** Whether Spark skips a file write of `format` to `path` under `mode`:
+    * `ignore` onto a path that exists. Only `ignore` reads the filesystem. */
+  def ignoresExisting(spark: SparkSession, path: String, format: String, mode: String): Boolean =
+    mode.equalsIgnoreCase("ignore") && FileFormats(format.toLowerCase(Locale.ROOT)) &&
+      fsOf(spark, path).exists(new Path(path))
+
   private def fsOf(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 

@@ -1,6 +1,9 @@
 package graft
 
+import graft.gates.Gates
 import org.scalatest.funsuite.AnyFunSuite
+
+import scala.jdk.CollectionConverters._
 
 /** The driver contract's internal consistency: every oracle names a
   * registered query, and every registered query carries an oracle (the
@@ -18,6 +21,29 @@ class EntryConsistencySpec extends AnyFunSuite {
     val missing = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet --
       allowedRowsOnly
     assert(missing.isEmpty, s"queries without an oracle: $missing")
+  }
+
+  test("gate names are unique, so the name-keyed views keep every gate") {
+    val names = Gates.all.map(_.name)
+    val dups = names.diff(names.distinct).distinct
+    assert(dups.isEmpty, s"gate names registered twice: $dups")
+    assert(SparkEntry.queries.size == Gates.all.size)
+    assert(SparkEntry.oracleSql.size == Gates.all.size)
+  }
+
+  test("each gate name is a string literal in exactly one src/main file") {
+    // a gate is defined in one place: no parallel name-keyed list elsewhere
+    val files = {
+      val s = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally s.close()
+    }
+    val texts = files.map(f => f -> new String(java.nio.file.Files.readAllBytes(f), "UTF-8"))
+    val spread = Gates.all.map(_.name).flatMap { n =>
+      val in = texts.collect { case (f, t) if t.contains("\"" + n + "\"") => f.getFileName.toString }
+      if (in.size == 1) None else Some(n -> in)
+    }
+    assert(spread.isEmpty, s"gate names quoted in zero or several files: $spread")
   }
 
   test("README/SURVEY/PERF quote the registry's one query count (no stale docs)") {

@@ -54,7 +54,7 @@ class TestdataInvariantSpec extends SparkSpec {
         .count()
       assert(over == 0L,
         s"$sf documents.text carries words longer than 8 chars — raise " +
-          "the unigram oracles' maxW (SparkEntry.unigramCtes) to the new " +
+          "the unigram oracles' maxW (GraphTokenizerGates.unigramCtes) to the new " +
           "max word length before trusting those gates")
     }
 }

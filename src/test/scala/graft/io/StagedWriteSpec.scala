@@ -205,6 +205,20 @@ class StagedWriteSpec extends SparkSpec {
     }
   }
 
+  test("NoOp and Flag under ignore onto an existing target measure the input and write nothing") {
+    val c = contract(uniques = Seq("id", "code"), query = true)
+    val specs = Expectations.fromContract(c)
+    for (strategy <- Seq(NoOpStrategy, FlagStrategy())) {
+      val dir = new File(tmpDir("graft_ignore"), "t")
+      ContractIO.write(violating, dir.getPath, c, strategy = strategy)
+      val before = data(dir)
+      val r = ContractIO.write(violating, dir.getPath, c, mode = "ignore", strategy = strategy)
+      assert(r.validation.metrics == Metrics.computeWithQueries(violating, specs, spark), strategy)
+      assert(r.validation.metrics("violations.unique_id") == 1L && r.writtenPaths == Seq(dir.getPath))
+      assert(data(dir) == before)
+    }
+  }
+
   test("staged and observed writes give one answer for any partitioning") {
     val c = contract(uniques = Seq("id", "code"))
     val conf = "spark.sql.shuffle.partitions"

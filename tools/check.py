@@ -6,7 +6,8 @@ Usage: python3 tools/check.py <verify_out_dir> <sf_dir> [query ...]
 Reads <verify_out_dir>/oracle_sql.json (written by graft.Verify), runs each
 oracle against DuckDB views over the sf_dir parquet tables, loads the Spark
 result parquet, sorts columns by name and rows by all columns, and compares
-exactly. Queries without an oracle get a rows-only report.
+exactly. Queries without an oracle get a rows-only report; an oracle whose
+query left no result directory (it threw inside Verify) is a FAIL.
 
 Dev tooling only — the engine itself is pure Scala/Spark.
 """
@@ -49,6 +50,11 @@ def main():
     qdirs = sorted(d for d in os.listdir(out_dir)
                    if os.path.isdir(os.path.join(out_dir, d)))
     n_ok = n_bad = 0
+    for q in sorted(set(oracles) - set(qdirs)):
+        if only and q not in only:
+            continue
+        print(f"FAIL  {q}: no Spark result (see '[verify] {q} failed' in Verify's stderr)")
+        n_bad += 1
     for q in qdirs:
         if only and q not in only:
             continue
