@@ -20,7 +20,11 @@ import java.util.concurrent.atomic.AtomicInteger
   *   registered query's, in registry order, when none is named.
   * - `--ab key=value <query>...`: runs alternate with the conf unset and
   *   set inside one JVM (both shapes warmed first), so drift between JVMs
-  *   cannot swamp the delta, e.g. `--ab graft.fan.maxInputBytes=0`.
+  *   cannot swamp the delta, e.g. `--ab spark.sql.shuffle.partitions=8`.
+  *
+  * `--plan` clears the session cache before each query, so a plan does
+  * not depend on what earlier queries left cached; the timing modes do
+  * not clear it.
   */
 object Profile {
 
@@ -102,6 +106,7 @@ object Profile {
     def once(name: String): (Double, Int) = jobsOf(spark)(timeQuery(spark, sfDir, name))
     for (name <- req.queries) req.mode match {
       case Plan =>
+        spark.catalog.clearCache()
         println(s"==== $name ====")
         println(SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(FormattedMode))
       case Time =>

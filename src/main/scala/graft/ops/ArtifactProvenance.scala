@@ -4,18 +4,16 @@ import graft.governance.GovernanceBackend
 import graft.io.Sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.json4s._
-import org.json4s.jackson.JsonMethods
 
-/** Provenance for the build-once/probe-many artifact family
-  * ([[MinhashIndex]], [[IvfIndex]], [[LmIndex]], [[BmIndex]],
-  * [[SketchIndex]], [[BpeIndex]], the persisted
-  * [[NearDup.hammingIndex]] frame): WHICH corpus dataset/version built
-  * an artifact, recorded both IN the artifact directory (it travels
-  * with the files) and in the governance activity log (the audit view —
-  * the exact dataset↔consumer link dc43's governance store exists to
-  * hold, reference `governance/unity_catalog.py` DatasetContractLinkHook
-  * + the pipeline-activity records in `governance/backend/stores/`).
+/** Provenance for the build-once/probe-many artifact family (listed in
+  * [[ArtifactMeta]], which also owns the `provenance.json` format) and
+  * the persisted [[NearDup.hammingIndex]] frame: WHICH corpus
+  * dataset/version built an artifact, recorded both IN the artifact
+  * directory (it travels with the files) and in the governance activity
+  * log (the audit view — the exact dataset↔consumer link dc43's
+  * governance store exists to hold, reference
+  * `governance/unity_catalog.py` DatasetContractLinkHook + the
+  * pipeline-activity records in `governance/backend/stores/`).
   * Without it a stale artifact is undetectable: yesterday's Bloom
   * filter silently under-strips today's corpus.
   *
@@ -84,7 +82,7 @@ object ArtifactProvenance {
     * idempotent, nothing to do when none exists. */
   def clearStamp(spark: SparkSession, dir: String): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val meta = new org.apache.hadoop.fs.Path(metaPath(dir))
+    val meta = new org.apache.hadoop.fs.Path(s"$dir/$StampFile")
     val snap = new org.apache.hadoop.fs.Path(snapshotPath(dir))
     val fs = meta.getFileSystem(conf)
     if (fs.exists(meta)) fs.delete(meta, false)
@@ -113,7 +111,7 @@ object ArtifactProvenance {
     embeddings.select(col(idCol).as("doc_id"),
       concat_ws(",", col(vecCol).cast("array<string>")).as("text"))
 
-  private def metaPath(dir: String) = s"$dir/provenance.json"
+  private val StampFile = "provenance.json"
   private def snapshotPath(dir: String) = s"$dir/provenance_snapshot"
 
   /** The pipeline name provenance events are recorded under. */
@@ -134,16 +132,7 @@ object ArtifactProvenance {
         "stamp is exactly the undetectable-staleness gap provenance closes")
     val p = Provenance(artifactKind, datasetId, datasetVersion, operation,
       System.currentTimeMillis())
-    val json = JsonMethods.compact(JsonMethods.render(JObject(
-      "artifactKind" -> JString(p.artifactKind),
-      "datasetId" -> JString(p.datasetId),
-      "datasetVersion" -> JString(p.datasetVersion),
-      "operation" -> JString(p.operation),
-      "builtAt" -> JLong(p.builtAt))))
-    val path = new org.apache.hadoop.fs.Path(metaPath(dir))
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(path, true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
+    ArtifactMeta.write(spark, dir, StampFile, p)
     governance.foreach(_.recordActivity(
       pipeline = ActivityPipeline,
       operation = s"$operation:$artifactKind",
@@ -166,40 +155,19 @@ object ArtifactProvenance {
     * parse exception — re-stamp to repair. Filesystem failures
     * (DFS outage, permission denied) still PROPAGATE: an infrastructure
     * error must not read as "no provenance recorded". */
-  def read(spark: SparkSession, dir: String): Option[Provenance] = {
-    val path = new org.apache.hadoop.fs.Path(metaPath(dir))
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) None
-    else {
-      // content CORRUPTION (a torn write fails the filesystem's checksum
-      // before we ever see bytes) degrades like a parse failure, and a
-      // file deleted between exists and open (a concurrent re-stamp's
-      // delete-then-create window) is by definition "no provenance
-      // recorded"; other I/O errors (outage, permission) throw through
-      val json =
-        try {
-          val in = fs.open(path)
-          try new String(in.readAllBytes(), "UTF-8") finally in.close()
-        } catch {
-          case _: org.apache.hadoop.fs.ChecksumException => ""
-          case _: java.io.FileNotFoundException => ""
-        }
-      scala.util.Try(JsonMethods.parse(json)).toOption.flatMap {
-        case JObject(fields) =>
-          val m = fields.toMap
-          def str(k: String) = m.get(k).collect { case JString(s) => s }
-          for {
-            kind <- str("artifactKind"); ds <- str("datasetId")
-            ver <- str("datasetVersion")
-          } yield Provenance(kind, ds, ver, str("operation").getOrElse("build"),
-            m.get("builtAt").collect {
-              case JLong(v) => v
-              case JInt(v) => v.toLong
-            }.getOrElse(0L))
-        case _ => None
-      }
+  def read(spark: SparkSession, dir: String): Option[Provenance] =
+    // ArtifactMeta rejects a missing, unparseable or incomplete stamp
+    // with an IllegalArgumentException; content CORRUPTION (a torn write
+    // fails the filesystem's checksum before we ever see bytes) degrades
+    // like a parse failure, and a file deleted between exists and open
+    // (a concurrent re-stamp's delete-then-create window) is by
+    // definition "no provenance recorded"; other I/O errors (outage,
+    // permission) throw through
+    try Some(ArtifactMeta.readAs[Provenance](spark, dir, StampFile))
+    catch {
+      case _: IllegalArgumentException | _: org.apache.hadoop.fs.ChecksumException |
+           _: java.io.FileNotFoundException => None
     }
-  }
 
   /** [[stamp]] plus the corpus content snapshot the staleness check
     * diffs against: one `(doc_id, fingerprint)` row per corpus document

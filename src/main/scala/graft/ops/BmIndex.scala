@@ -10,7 +10,7 @@ import org.apache.spark.sql.types._
   * query scores ANY frame — batch or stream — as a pure projection.
   * The IR twin of [[LmIndex]] (frozen reference stats, stateless online
   * scoring) and the retrieval member of the build-once artifact family
-  * (LmIndex / MinhashIndex / IvfIndex / BpeIndex / SketchIndex).
+  * (listed with each member's metadata file in [[ArtifactMeta]]).
   *
   * Layout: `dir/df/…parquet` (term, df) range-partitioned and sorted by
   * term — sorted runs give parquet min/max row-group pruning for the
@@ -32,6 +32,8 @@ import org.apache.spark.sql.types._
   * only the new documents are tokenised. */
 object BmIndex {
 
+  private final case class Meta(nDocs: Long, sumDl: Long, nTerms: Long)
+
   /** Count corpus stats on `docs` and persist under `dir`. */
   def build(docs: DataFrame, dir: String, numFiles: Int = 4,
             provenance: Option[ArtifactProvenance.Target] = None): Unit = {
@@ -47,7 +49,7 @@ object BmIndex {
             outDir: String, numFiles: Int = 4,
             provenance: Option[ArtifactProvenance.Target] = None): Unit = {
     ArtifactPaths.requireDistinct(spark, dir, outDir)
-    val old = readMeta(spark, dir)
+    val old = meta(spark, dir)
     val combined = Sources.parquet(spark, s"$dir/df")
       .unionByName(dfOf(newDocs))
       .groupBy(col("term")).agg(sum(col("df")).as("df"))
@@ -60,8 +62,8 @@ object BmIndex {
 
   /** The artifact's recorded `(nDocs, sumDl, nTerms)`. */
   def meta(spark: SparkSession, dir: String): (Long, Long, Long) = {
-    val m = readMeta(spark, dir)
-    (m._1, m._2, m._3)
+    val m = ArtifactMeta.readAs[Meta](spark, dir, "meta.json")
+    (m.nDocs, m.sumDl, m.nTerms)
   }
 
   /** Score `docs` for `queryTerms` against the FROZEN corpus statistics
@@ -142,32 +144,6 @@ object BmIndex {
       .sortWithinPartitions(col("term"))
       .write.mode("overwrite").parquet(s"$dir/df")
     val nTerms = Sources.parquet(spark, s"$dir/df").count()
-    val json = org.json4s.jackson.JsonMethods.compact(
-      org.json4s.jackson.JsonMethods.render(
-        org.json4s.JsonAST.JObject(
-          "nDocs" -> org.json4s.JsonAST.JInt(BigInt(lens._1)),
-          "sumDl" -> org.json4s.JsonAST.JInt(BigInt(lens._2)),
-          "nTerms" -> org.json4s.JsonAST.JInt(BigInt(nTerms)))))
-    val path = new org.apache.hadoop.fs.Path(s"$dir/meta.json")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(path, true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
-  }
-
-  private def readMeta(spark: SparkSession, dir: String): (Long, Long, Long) = {
-    val path = new org.apache.hadoop.fs.Path(s"$dir/meta.json")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(path)
-    val json = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    org.json4s.jackson.JsonMethods.parse(json) match {
-      case org.json4s.JsonAST.JObject(fields) =>
-        val m = fields.toMap
-        def longOf(k: String): Long = m.get(k) match {
-          case Some(org.json4s.JsonAST.JInt(v)) => v.toLong
-          case _ => 0L
-        }
-        (longOf("nDocs"), longOf("sumDl"), longOf("nTerms"))
-      case _ => (0L, 0L, 0L)
-    }
+    ArtifactMeta.write(spark, dir, "meta.json", Meta(lens._1, lens._2, nTerms))
   }
 }

@@ -3,8 +3,6 @@ package graft.ops
 import graft.io.Sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.json4s._
-import org.json4s.jackson.JsonMethods
 
 /** Persisted BPE tokenizer artifact — the subword twin of [[LmIndex]]
   * in the build-once family: learn the merge table from a corpus once,
@@ -73,8 +71,8 @@ object BpeIndex {
     val more = Bpe.trainMergesFromVocab(vocab, extraMerges, prior)
     val all = Sources.parquet(spark, s"$dir/merges").unionByName(more)
     writeParts(vocab, all, outDir, numFiles)
-    writeMeta(spark, outDir, Meta(m.nMerges + extraMerges,
-      vocab.count()))
+    ArtifactMeta.write(spark, outDir, "meta.json",
+      Meta(m.nMerges + extraMerges, vocab.count()))
   }
 
   /** The ordered merge list — k-bounded artifact metadata for
@@ -106,18 +104,16 @@ object BpeIndex {
     Bpe.segmentTokens(docs, loadMerges(spark, dir), idCol, textCol)
   }
 
-  def readMeta(spark: SparkSession, dir: String): Meta = {
-    implicit val fmts: Formats = DefaultFormats
-    val json = spark.sparkContext.textFile(s"$dir/meta.json", 1).collect().mkString
-    JsonMethods.parse(json).extract[Meta]
-  }
+  /** The artifact's `meta.json`, read on the driver (no Spark job). */
+  def readMeta(spark: SparkSession, dir: String): Meta =
+    ArtifactMeta.readAs[Meta](spark, dir, "meta.json")
 
   private def writeArtifact(spark: SparkSession, vocab: DataFrame,
                             dir: String, nMerges: Int, numFiles: Int): Unit = {
     val cached = Caching.ensureCachedLazy(vocab)
     val merges = Bpe.trainMergesFromVocab(cached, nMerges)
     writeParts(cached, merges, dir, numFiles)
-    writeMeta(spark, dir, Meta(nMerges, cached.count()))
+    ArtifactMeta.write(spark, dir, "meta.json", Meta(nMerges, cached.count()))
   }
 
   private def writeParts(vocab: DataFrame, merges: DataFrame, dir: String,
@@ -128,14 +124,5 @@ object BpeIndex {
       .sortWithinPartitions(col("word"))
       .write.mode("overwrite").parquet(s"$dir/vocab")
     merges.coalesce(1).write.mode("overwrite").parquet(s"$dir/merges")
-  }
-
-  private def writeMeta(spark: SparkSession, dir: String, m: Meta): Unit = {
-    val json = JsonMethods.compact(JsonMethods.render(
-      JObject("nMerges" -> JInt(m.nMerges), "nWordTypes" -> JLong(m.nWordTypes))))
-    val path = new org.apache.hadoop.fs.Path(s"$dir/meta.json")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(path, true)
-    out.write(json.getBytes("UTF-8")); out.close()
   }
 }

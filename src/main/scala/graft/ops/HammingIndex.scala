@@ -42,6 +42,8 @@ import org.apache.spark.sql.functions._
   * persisted corpus per micro-batch. */
 object HammingIndex {
 
+  private final case class Meta(kind: String, bits: Int, maxHamming: Int)
+
   /** Band the fingerprint corpus and persist. `hashes` carries
     * `(idCol, hashCol)`; null hashes drop (no fingerprint to compare). */
   def build(hashes: DataFrame, dir: String, maxHamming: Int, kind: String,
@@ -51,12 +53,14 @@ object HammingIndex {
     require(kind.trim.nonEmpty, "kind must name the fingerprint family")
     val banded = NearDup.hammingIndex(hashes, maxHamming, hashCol, idCol, bits)
     NearDup.hammingSave(banded, dir, numFiles, provenance, operation = "build")
-    writeMeta(hashes.sparkSession, dir, kind, bits, maxHamming)
+    ArtifactMeta.write(hashes.sparkSession, dir, "meta.json", Meta(kind, bits, maxHamming))
   }
 
   /** The artifact's pinned `(kind, bits, maxHamming)`. */
-  def meta(spark: SparkSession, dir: String): (String, Int, Int) =
-    readMeta(spark, dir)
+  def meta(spark: SparkSession, dir: String): (String, Int, Int) = {
+    val m = ArtifactMeta.readAs[Meta](spark, dir, "meta.json")
+    (m.kind, m.bits, m.maxHamming)
+  }
 
   /** Fold new fingerprints into the index at `dir`, writing the combined
     * index to `outDir` — banded rows are per-fingerprint, so the merge
@@ -75,7 +79,7 @@ object HammingIndex {
     // an in-place merge (outDir == dir) would overwrite-delete the input
     // bands before the lazy union plan reads them, losing the index
     ArtifactPaths.requireDistinct(spark, dir, outDir)
-    val (kind, bits, maxHamming) = readMeta(spark, dir)
+    val (kind, bits, maxHamming) = meta(spark, dir)
     // the same cross-family guard probe carries: folding audio contours
     // into an image index would succeed silently and poison every later
     // probe that passes the kind check — the caller must state which
@@ -88,7 +92,7 @@ object HammingIndex {
       loadData(spark, dir), newHashes, maxHamming, hashCol, idCol, bits)
     NearDup.hammingSave(combined, outDir, numFiles, provenance,
       operation = "merge")
-    writeMeta(spark, outDir, kind, bits, maxHamming)
+    ArtifactMeta.write(spark, outDir, "meta.json", Meta(kind, bits, maxHamming))
   }
 
   /** Probe arrivals against the persisted index:
@@ -104,7 +108,7 @@ object HammingIndex {
             idCol: String = "doc_id",
             freshAgainst: Option[DataFrame] = None): DataFrame = {
     ArtifactProvenance.checkFresh(spark, dir, freshAgainst)
-    val (kind, bits, maxHamming) = readMeta(spark, dir)
+    val (kind, bits, maxHamming) = meta(spark, dir)
     require(kind == expectedKind,
       s"hamming index kind mismatch: $dir holds '$kind' fingerprints, " +
         s"probe expects '$expectedKind' — two families share the 64-bit " +
@@ -119,45 +123,4 @@ object HammingIndex {
     * index written outside [[build]] (or damaged) is refused there. */
   private def loadData(spark: SparkSession, dir: String): DataFrame =
     Sources.parquet(spark, s"$dir/data")
-
-  private def writeMeta(spark: SparkSession, dir: String, kind: String,
-                        bits: Int, maxHamming: Int): Unit = {
-    import org.json4s.JsonAST._
-    val json = org.json4s.jackson.JsonMethods.compact(
-      org.json4s.jackson.JsonMethods.render(JObject(
-        "kind" -> JString(kind),
-        "bits" -> JInt(BigInt(bits)),
-        "maxHamming" -> JInt(BigInt(maxHamming)))))
-    val path = new org.apache.hadoop.fs.Path(s"$dir/meta.json")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(path, true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
-  }
-
-  private def readMeta(spark: SparkSession, dir: String): (String, Int, Int) = {
-    val path = new org.apache.hadoop.fs.Path(s"$dir/meta.json")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(path),
-      s"$dir has no meta.json — not a HammingIndex artifact (an unstamped " +
-        "banded frame can be probed via NearDup.hammingProbe directly)")
-    val in = fs.open(path)
-    val json = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    org.json4s.jackson.JsonMethods.parse(json) match {
-      case org.json4s.JsonAST.JObject(fields) =>
-        val m = fields.toMap
-        val kind = m.get("kind") match {
-          case Some(org.json4s.JsonAST.JString(s)) => s
-          case _ => throw new IllegalArgumentException(
-            s"$dir/meta.json carries no kind")
-        }
-        def intOf(k: String): Int = m.get(k) match {
-          case Some(org.json4s.JsonAST.JInt(v)) => v.toInt
-          case _ => throw new IllegalArgumentException(
-            s"$dir/meta.json carries no $k")
-        }
-        (kind, intOf("bits"), intOf("maxHamming"))
-      case _ => throw new IllegalArgumentException(
-        s"$dir/meta.json is not a JSON object")
-    }
-  }
 }

@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * Deterministic given (corpus, nCentroids, kmeansIters). */
 object IvfIndex {
 
-  private case class Centroid(cid: Long, cv: Array[Double], cn: Double)
+  private[ops] final case class Centroid(cid: Long, cv: Array[Double], cn: Double)
 
   /** Build the index. Assignment follows [[VectorOps.annIvf]] exactly
     * (seeded or Lloyd-refined centroids, literal-vs-join cutover), so a
@@ -80,47 +80,16 @@ object IvfIndex {
     }
 
     // centroids: k rows of k×dim scalars — driver-sized metadata
-    val json = org.json4s.jackson.JsonMethods.compact(
-      org.json4s.jackson.JsonMethods.render(
-        org.json4s.JsonAST.JArray(centRows.sortBy(_.getLong(0)).toList.map { r =>
-          org.json4s.JsonAST.JObject(
-            "cid" -> org.json4s.JsonAST.JInt(BigInt(r.getLong(0))),
-            "cv" -> org.json4s.JsonAST.JArray(
-              r.getSeq[Double](1).toList.map(org.json4s.JsonAST.JDouble(_))),
-            "cn" -> org.json4s.JsonAST.JDouble(r.getDouble(2)))
-        })))
-    val path = new org.apache.hadoop.fs.Path(s"$dir/centroids.json")
-    val fs = path.getFileSystem(embeddings.sparkSession.sparkContext.hadoopConfiguration)
-    val out = fs.create(path, true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
+    ArtifactMeta.write(embeddings.sparkSession, dir, "centroids.json",
+      centRows.sortBy(_.getLong(0)).toList.map(r =>
+        Centroid(r.getLong(0), r.getSeq[Double](1).toArray, r.getDouble(2))))
     // vector corpora snapshot through ArtifactProvenance.embeddingSnapshot
     ArtifactProvenance.stampArtifact(embeddings.sparkSession, dir, "ivf-index",
       "build", provenance)
   }
 
-  private def loadCentroids(spark: SparkSession, dir: String): Seq[Centroid] = {
-    val path = new org.apache.hadoop.fs.Path(s"$dir/centroids.json")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(path)
-    val json = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    org.json4s.jackson.JsonMethods.parse(json) match {
-      case org.json4s.JsonAST.JArray(items) => items.map { item =>
-        val m = item.asInstanceOf[org.json4s.JsonAST.JObject].obj.toMap
-        Centroid(
-          m("cid") match { case org.json4s.JsonAST.JInt(v) => v.toLong; case _ => 0L },
-          m("cv") match {
-            case org.json4s.JsonAST.JArray(vs) => vs.map {
-              case org.json4s.JsonAST.JDouble(d) => d
-              case org.json4s.JsonAST.JInt(i) => i.toDouble
-              case _ => 0.0
-            }.toArray
-            case _ => Array.empty[Double]
-          },
-          m("cn") match { case org.json4s.JsonAST.JDouble(d) => d; case _ => 0.0 })
-      }
-      case _ => Nil
-    }
-  }
+  private[ops] def centroids(spark: SparkSession, dir: String): Seq[Centroid] =
+    ArtifactMeta.readAs[List[Centroid]](spark, dir, "centroids.json")
 
   /** Search the index for external probe vectors `(probe_id, v, nrm)`
     * (use [[VectorOps.prepared]] + renames to shape them). Probe→cluster
@@ -204,7 +173,7 @@ object IvfIndex {
   def append(spark: SparkSession, dir: String,
              newEmbeddings: DataFrame,
              provenance: Option[ArtifactProvenance.Target] = None): Unit = {
-    val cents = loadCentroids(spark, dir)
+    val cents = centroids(spark, dir)
     require(cents.nonEmpty, "index has no centroids")
     require(cents.length <= VectorOps.CentroidLiteralMax,
       s"append needs a literal-assignable index (k <= " +
@@ -248,7 +217,7 @@ object IvfIndex {
                  threshold: Double = 0.9,
                  freshAgainst: Option[DataFrame] = None): DataFrame = {
     ArtifactProvenance.checkFresh(spark, dir, freshAgainst)
-    val cents = loadCentroids(spark, dir)
+    val cents = centroids(spark, dir)
     require(cents.nonEmpty, "index has no centroids")
     require(cents.length <= VectorOps.CentroidLiteralMax,
       s"probePairs needs a literal-assignable index (k <= " +
@@ -281,7 +250,7 @@ object IvfIndex {
     * probe set is empty. */
   private def scoredCandidates(spark: SparkSession, dir: String, probes: DataFrame,
                                nProbeClusters: Int): Option[DataFrame] = {
-    val cents = loadCentroids(spark, dir)
+    val cents = centroids(spark, dir)
     val probeRows = probes.select(col("probe_id"), col("v"), col("nrm")).collect()
     if (probeRows.isEmpty || cents.isEmpty) return None
 

@@ -4,6 +4,8 @@ import graft.io.Sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import scala.collection.immutable.ListMap
+
 /** Persisted frequent-gram artifact for the Bloom-backed cleaning
   * family: the UNPRUNED digest-pair counts behind
   * [[Curate.frequentLines]] (boilerplate lines),
@@ -92,7 +94,7 @@ object LineIndex {
             provenance: Option[ArtifactProvenance.Target] = None): Unit = {
     val spark = docs.sparkSession
     writeCounts(countsOf(docs, kind, idCol, textCol), dir, numFiles)
-    writeMeta(spark, dir, kind)
+    writeKind(spark, dir, kind)
     ArtifactProvenance.stampArtifact(spark, dir, "line-index", "build",
       provenance)
   }
@@ -110,12 +112,12 @@ object LineIndex {
     // an in-place merge (outDir == dir) would overwrite-delete the input
     // counts before the lazy union plan reads them, losing the artifact
     ArtifactPaths.requireDistinct(spark, dir, outDir)
-    val kind = readMeta(spark, dir)
+    val kind = meta(spark, dir)
     val combined = Sources.parquet(spark, s"$dir/counts")
       .unionByName(countsOf(newDocs, kind, idCol, textCol))
       .groupBy(col("h1"), col("h2")).agg(sum(col("n")).as("n"))
     writeCounts(combined, outDir, numFiles)
-    writeMeta(spark, outDir, kind)
+    writeKind(spark, outDir, kind)
     ArtifactProvenance.stampArtifact(spark, outDir, "line-index", "merge",
       provenance)
   }
@@ -134,7 +136,7 @@ object LineIndex {
       "threshold must be >= 2 (1 would flag every gram; the frequent* " +
         "operators' own floor)")
     ArtifactProvenance.checkFresh(spark, dir, freshAgainst)
-    val kind = readMeta(spark, dir)
+    val kind = meta(spark, dir)
     expectKind.foreach(k => require(k == kind,
       s"$dir holds a '${kind.name}' artifact (${kind}), not the expected " +
         s"'${k.name}' ($k) — thresholding one kind's counts under " +
@@ -149,7 +151,16 @@ object LineIndex {
     Sources.parquet(spark, s"$dir/counts")
 
   /** The artifact's pinned [[Kind]]. */
-  def meta(spark: SparkSession, dir: String): Kind = readMeta(spark, dir)
+  def meta(spark: SparkSession, dir: String): Kind = {
+    val f = ArtifactMeta.read(spark, dir, "meta.json")
+    f.str("kind") match {
+      case "lines" => Kind.Lines(f.str("sep"))
+      case "windows" => Kind.Windows(f.int("size"))
+      case "shingles" => Kind.Shingles(f.int("size"))
+      case other => throw new IllegalArgumentException(
+        s"$dir: unknown LineIndex kind $other")
+    }
+  }
 
   private def writeCounts(counts: DataFrame, dir: String,
                           numFiles: Int): Unit = {
@@ -160,46 +171,11 @@ object LineIndex {
       .write.mode("overwrite").parquet(s"$dir/counts")
   }
 
-  private def writeMeta(spark: SparkSession, dir: String, kind: Kind): Unit = {
-    import org.json4s.JsonAST._
-    val fields = List("version" -> (JInt(1): JValue),
-      "kind" -> (JString(kind.name): JValue)) ++ (kind match {
-      case Kind.Lines(sep) => List("sep" -> (JString(sep): JValue))
-      case Kind.Windows(l) => List("size" -> (JInt(BigInt(l)): JValue))
-      case Kind.Shingles(n) => List("size" -> (JInt(BigInt(n)): JValue))
-    })
-    val json = org.json4s.jackson.JsonMethods.compact(
-      org.json4s.jackson.JsonMethods.render(JObject(fields: _*)))
-    val path = new org.apache.hadoop.fs.Path(s"$dir/meta.json")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(path, true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
-  }
-
-  private def readMeta(spark: SparkSession, dir: String): Kind = {
-    val path = new org.apache.hadoop.fs.Path(s"$dir/meta.json")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(path), s"$dir is not a LineIndex artifact (no meta.json)")
-    val in = fs.open(path)
-    val json = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    org.json4s.jackson.JsonMethods.parse(json) match {
-      case org.json4s.JsonAST.JObject(fields) =>
-        val m = fields.toMap
-        def str(k: String) = m.get(k).collect {
-          case org.json4s.JsonAST.JString(s) => s
-        }
-        def int(k: String) = m.get(k).collect {
-          case org.json4s.JsonAST.JInt(v) => v.toInt
-        }
-        str("kind") match {
-          case Some("lines") => Kind.Lines(str("sep").getOrElse("\n"))
-          case Some("windows") => Kind.Windows(int("size").getOrElse(20))
-          case Some("shingles") => Kind.Shingles(int("size").getOrElse(3))
-          case other => throw new IllegalArgumentException(
-            s"$dir: unknown LineIndex kind $other")
-        }
-      case _ => throw new IllegalArgumentException(
-        s"$dir: unparseable LineIndex meta.json")
-    }
-  }
+  private def writeKind(spark: SparkSession, dir: String, kind: Kind): Unit =
+    ArtifactMeta.write(spark, dir, "meta.json",
+      ListMap("version" -> 1, "kind" -> kind.name) ++ (kind match {
+        case Kind.Lines(sep) => ListMap("sep" -> sep)
+        case Kind.Windows(l) => ListMap("size" -> l)
+        case Kind.Shingles(n) => ListMap("size" -> n)
+      }))
 }

@@ -4,6 +4,8 @@ import graft.io.Sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import scala.collection.immutable.ListMap
+
 /** Persisted reference-LM artifact: [[TextOps.bigramLm]] statistics written
   * once from a curated reference corpus, then fed to
   * [[TextOps.lmScoreWith]] any number of times without retraining — the
@@ -45,7 +47,7 @@ import org.apache.spark.sql.functions._
   * order entry points fail loudly on them), [[merge]] preserves
   * whichever layout its input has — a v2/v3 merge re-counts ALL the
   * new corpus's orders in ONE shared tokenisation pass — and
-  * [[readMeta]] REJECTS artifacts stamped with a version above what
+  * every reader REJECTS artifacts stamped with a version above what
   * this reader knows (a future v4 must fail loudly, not load silently
   * under v3 semantics).
   */
@@ -67,7 +69,7 @@ object LmIndex {
             provenance: Option[ArtifactProvenance.Target] = None): Unit = {
     val spark = docs.sparkSession
     writeCountsData(TextOps.bigramCounts(docs), dir, numFiles)
-    writeMeta(spark, dir, metaFromDisk(spark, dir, minCount, None))
+    putMeta(spark, dir, metaFromDisk(spark, dir, minCount, None))
     ArtifactProvenance.stampArtifact(spark, dir, "lm-index", "build",
       provenance)
   }
@@ -89,7 +91,7 @@ object LmIndex {
     Caching.ensureCached(kg)
     writeCountsData(TextOps.bigramCountsOf(kg), dir, numFiles)
     writeCounts3Data(TextOps.trigramCountsOf(kg), dir, numFiles)
-    writeMeta(spark, dir, metaFromDisk(spark, dir, minCount, Some(minCount3)))
+    putMeta(spark, dir, metaFromDisk(spark, dir, minCount, Some(minCount3)))
     ArtifactProvenance.stampArtifact(spark, dir, "lm-index", "build",
       provenance)
   }
@@ -112,7 +114,7 @@ object LmIndex {
     writeCountsData(TextOps.bigramCountsOf(kg), dir, numFiles)
     (3 to 5).foreach(k =>
       writeCountsKData(TextOps.ngramCountsOf(kg, k), dir, k, numFiles))
-    writeMeta(spark, dir, metaFromDisk(spark, dir, minCount,
+    putMeta(spark, dir, metaFromDisk(spark, dir, minCount,
       Some(minCount3), Some(minCount4), Some(minCount5)))
     ArtifactProvenance.stampArtifact(spark, dir, "lm-index", "build",
       provenance)
@@ -152,9 +154,9 @@ object LmIndex {
       val sub = s"$dir/lang=$l"
       writeCountsData(counts.filter(col(langCol) === l).drop(langCol),
         sub, numFiles)
-      writeMeta(spark, sub, metaFromDisk(spark, sub, minCount, None))
+      putMeta(spark, sub, metaFromDisk(spark, sub, minCount, None))
     }
-    writeLangsMeta(spark, dir, langs, minCount)
+    ArtifactMeta.write(spark, dir, "langs.json", Langs(langs.toList, minCount))
     ArtifactProvenance.stampArtifact(spark, dir, "lm-index-perlang", "build",
       provenance)
   }
@@ -173,7 +175,7 @@ object LmIndex {
                    numFiles: Int = 4,
                    provenance: Option[ArtifactProvenance.Target] = None): Unit = {
     ArtifactPaths.requireDistinct(spark, dir, outDir)
-    val (stored, minCount) = readLangsMeta(spark, dir)
+    val Langs(stored, minCount) = langsMeta(spark, dir)
     val fresh = TextOps.bigramCountsByKey(newDocs, langCol)
     Caching.ensureCached(fresh)
     val newLangs = fresh.select(col(langCol).cast("string")).distinct()
@@ -192,48 +194,24 @@ object LmIndex {
           .groupBy(col("w1"), col("w2")).agg(sum(col("n")).as("n"))
       val sub = s"$outDir/lang=$l"
       writeCountsData(combined, sub, numFiles)
-      writeMeta(spark, sub, metaFromDisk(spark, sub, minCount, None))
+      putMeta(spark, sub, metaFromDisk(spark, sub, minCount, None))
     }
-    writeLangsMeta(spark, outDir, all, minCount)
+    ArtifactMeta.write(spark, outDir, "langs.json", Langs(all.toList, minCount))
     ArtifactProvenance.stampArtifact(spark, outDir, "lm-index-perlang",
       "merge", provenance)
   }
 
   /** The language set a [[buildPerLang]] artifact carries. */
   def langs(spark: SparkSession, dir: String): Seq[String] =
-    readLangsMeta(spark, dir)._1
+    langsMeta(spark, dir).langs
 
-  /** The family metadata: (languages, the pinned minCount every layer
-    * was — and every merged-in layer will be — pruned under). */
-  private def readLangsMeta(spark: SparkSession, dir: String): (Seq[String], Long) = {
-    val path = new org.apache.hadoop.fs.Path(s"$dir/langs.json")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(path),
-      s"$dir has no langs.json — not a per-language LmIndex artifact")
-    val in = fs.open(path)
-    val json = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    org.json4s.jackson.JsonMethods.parse(json) match {
-      case org.json4s.JsonAST.JObject(fields) =>
-        val m = fields.toMap
-        val ls = m.get("langs") match {
-          case Some(org.json4s.JsonAST.JArray(items)) => items.map {
-            case org.json4s.JsonAST.JString(s) => s
-            case _ => throw new IllegalArgumentException(
-              s"$dir/langs.json langs must be strings")
-          }
-          case _ => throw new IllegalArgumentException(
-            s"$dir/langs.json carries no langs array")
-        }
-        val mc = m.get("minCount") match {
-          case Some(org.json4s.JsonAST.JInt(v)) => v.toLong
-          case _ => throw new IllegalArgumentException(
-            s"$dir/langs.json carries no minCount")
-        }
-        (ls, mc)
-      case _ => throw new IllegalArgumentException(
-        s"$dir/langs.json is not a JSON object")
-    }
-  }
+  /** The family metadata `langs.json`: the languages, and the pinned
+    * minCount every layer was — and every merged-in layer will be —
+    * pruned under. */
+  private[ops] final case class Langs(langs: List[String], minCount: Long)
+
+  private[ops] def langsMeta(spark: SparkSession, dir: String): Langs =
+    ArtifactMeta.readAs[Langs](spark, dir, "langs.json")
 
   /** Language-dispatched scoring against the persisted per-language
     * family: the per-language stats frames (each derived under ITS OWN
@@ -257,7 +235,7 @@ object LmIndex {
     val ls = langs(spark, dir)
     val stats = ls.map { l =>
       val sub = s"$dir/lang=$l"
-      val m = readMeta(spark, sub)
+      val m = metaOf(spark, sub)
       // Exact variant: per-language continuation totals land on .5e-6
       // probability boundaries routinely (see statsFromCountsExact)
       TextOps.statsFromCountsExact(Sources.parquet(spark, s"$sub/counts"),
@@ -266,22 +244,9 @@ object LmIndex {
     }.reduce(_.unionByName(_))
     // broadcast decision from the RECORDED pruned counts (zero jobs),
     // summed across languages — the union is what the join ships
-    val total = ls.map(l => readMeta(spark, s"$dir/lang=$l").nBigrams).sum
+    val total = ls.map(l => metaOf(spark, s"$dir/lang=$l").nBigrams).sum
     val hinted = if (total <= broadcastMaxRows) broadcast(stats) else stats
     TextOps.lmScoreByKeyWith(docs, hinted, langCol, unkLogP)
-  }
-
-  private def writeLangsMeta(spark: SparkSession, dir: String,
-                             langs: Seq[String], minCount: Long): Unit = {
-    import org.json4s.JsonAST._
-    val json = org.json4s.jackson.JsonMethods.compact(
-      org.json4s.jackson.JsonMethods.render(JObject(
-        "langs" -> JArray(langs.toList.map(JString(_))),
-        "minCount" -> JInt(BigInt(minCount)))))
-    val path = new org.apache.hadoop.fs.Path(s"$dir/langs.json")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(path, true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
   }
 
   /** Fold `newDocs` into the artifact at `dir`, writing the combined
@@ -301,7 +266,7 @@ object LmIndex {
     // an in-place merge (outDir == dir) would overwrite-delete the input
     // counts before the lazy union plan reads them, losing the artifact
     ArtifactPaths.requireDistinct(spark, dir, outDir)
-    val m = readMeta(spark, dir)
+    val m = metaOf(spark, dir)
     val maxOrder =
       if (m.minCount5.isDefined) 5 else if (m.minCount3.isDefined) 3 else 2
     def mergeLayer(path: String, fresh: DataFrame, k: Int): DataFrame = {
@@ -325,7 +290,7 @@ object LmIndex {
         mergeLayer(countsPath(dir, k), TextOps.ngramCountsOf(kg, k), k),
         outDir, k, numFiles))
     }
-    writeMeta(spark, outDir, metaFromDisk(spark, outDir, m.minCount,
+    putMeta(spark, outDir, metaFromDisk(spark, outDir, m.minCount,
       m.minCount3, m.minCount4, m.minCount5))
     ArtifactProvenance.stampArtifact(spark, outDir, "lm-index", "merge",
       provenance)
@@ -337,7 +302,7 @@ object LmIndex {
     * jobs). */
   def load(spark: SparkSession, dir: String,
            broadcastMaxRows: Long = 4L << 20): DataFrame = {
-    val m = readMeta(spark, dir)
+    val m = metaOf(spark, dir)
     val df = TextOps.statsFromCounts(
       Sources.parquet(spark, s"$dir/counts"), m.minCount)
     if (m.nBigrams <= broadcastMaxRows) broadcast(df) else df
@@ -349,7 +314,7 @@ object LmIndex {
     * layer would back every document off to the bigram floor. */
   def load3(spark: SparkSession, dir: String,
             broadcastMaxRows: Long = 4L << 20): DataFrame = {
-    val m = readMeta(spark, dir)
+    val m = metaOf(spark, dir)
     require(m.minCount3.isDefined,
       s"$dir has no trigram layer (v1 artifact) — rebuild with " +
         "buildWithTrigrams to enable backoff scoring")
@@ -386,7 +351,7 @@ object LmIndex {
 
   private def loadK(spark: SparkSession, dir: String, k: Int,
                     broadcastMaxRows: Long): DataFrame = {
-    val m = readMeta(spark, dir)
+    val m = metaOf(spark, dir)
     val (mc, n) = k match {
       case 4 => (m.minCount4, m.n4grams)
       case _ => (m.minCount5, m.n5grams)
@@ -417,14 +382,14 @@ object LmIndex {
 
   /** The v2 layer's recorded `(minCount3, nTrigrams)`, `None` on v1. */
   def meta3(spark: SparkSession, dir: String): Option[(Long, Long)] = {
-    val m = readMeta(spark, dir)
+    val m = metaOf(spark, dir)
     for (mc <- m.minCount3; n <- m.nTrigrams) yield (mc, n)
   }
 
   /** The v3 layers' recorded `(minCount4, n4grams, minCount5, n5grams)`,
     * `None` below v3. */
   def meta5(spark: SparkSession, dir: String): Option[(Long, Long, Long, Long)] = {
-    val m = readMeta(spark, dir)
+    val m = metaOf(spark, dir)
     for (m4 <- m.minCount4; n4 <- m.n4grams; m5 <- m.minCount5; n5 <- m.n5grams)
       yield (m4, n4, m5, n5)
   }
@@ -489,7 +454,7 @@ object LmIndex {
 
   /** The artifact's recorded `(minCount, nBigrams)`. */
   def meta(spark: SparkSession, dir: String): (Long, Long) = {
-    val m = readMeta(spark, dir)
+    val m = metaOf(spark, dir)
     (m.minCount, m.nBigrams)
   }
 
@@ -510,14 +475,14 @@ object LmIndex {
         round(percentile(col("avg_logp"), lit(0.75)), 6).as("p75"))
       .collect()(0)
     require(!row.isNullAt(0), "calibration corpus produced no scorable document")
-    val m = readMeta(spark, dir)
-    writeMeta(spark, dir,
+    val m = metaOf(spark, dir)
+    putMeta(spark, dir,
       m.copy(cuts = Some((row.getDouble(0), row.getDouble(1)))))
   }
 
   /** The recorded `(p25, p75)` cut points, if [[recordCuts]] ran. */
   def cuts(spark: SparkSession, dir: String): Option[(Double, Double)] =
-    readMeta(spark, dir).cuts
+    metaOf(spark, dir).cuts
 
   /** [[recordCuts]] for the ORDER-3 score distribution: quartile cuts
     * of [[score3]] over a calibration corpus, stored as a separate
@@ -534,14 +499,14 @@ object LmIndex {
         round(percentile(col("avg_logp3"), lit(0.75)), 6).as("p75"))
       .collect()(0)
     require(!row.isNullAt(0), "calibration corpus produced no scorable document")
-    val m = readMeta(spark, dir)
-    writeMeta(spark, dir,
+    val m = metaOf(spark, dir)
+    putMeta(spark, dir,
       m.copy(cuts3 = Some((row.getDouble(0), row.getDouble(1)))))
   }
 
   /** The recorded order-3 cut points, if [[recordCuts3]] ran. */
   def cuts3(spark: SparkSession, dir: String): Option[(Double, Double)] =
-    readMeta(spark, dir).cuts3
+    metaOf(spark, dir).cuts3
 
   /** [[recordCuts3]] at order 5: quartile cuts of [[score5]] over a
     * calibration corpus, stored as their own `(p25_5, p75_5)` pair —
@@ -555,14 +520,14 @@ object LmIndex {
         round(percentile(col("avg_logp5"), lit(0.75)), 6).as("p75"))
       .collect()(0)
     require(!row.isNullAt(0), "calibration corpus produced no scorable document")
-    val m = readMeta(spark, dir)
-    writeMeta(spark, dir,
+    val m = metaOf(spark, dir)
+    putMeta(spark, dir,
       m.copy(cuts5 = Some((row.getDouble(0), row.getDouble(1)))))
   }
 
   /** The recorded order-5 cut points, if [[recordCuts5]] ran. */
   def cuts5(spark: SparkSession, dir: String): Option[(Double, Double)] =
-    readMeta(spark, dir).cuts5
+    metaOf(spark, dir).cuts5
 
   /** [[bucket3]] at order 5 — the CCNet head/middle/tail split under
     * the production model order, against [[recordCuts5]]'s frozen
@@ -621,93 +586,56 @@ object LmIndex {
       .select(col("doc_id"), col("n_bigrams"), col("avg_logp"), col("bucket"))
   }
 
-  private case class Meta(minCount: Long, nBigrams: Long,
-                          cuts: Option[(Double, Double)],
-                          minCount3: Option[Long] = None,
-                          nTrigrams: Option[Long] = None,
-                          cuts3: Option[(Double, Double)] = None,
-                          minCount4: Option[Long] = None,
-                          n4grams: Option[Long] = None,
-                          minCount5: Option[Long] = None,
-                          n5grams: Option[Long] = None,
-                          cuts5: Option[(Double, Double)] = None)
+  private[ops] final case class Meta(minCount: Long, nBigrams: Long,
+                                     cuts: Option[(Double, Double)],
+                                     minCount3: Option[Long] = None,
+                                     nTrigrams: Option[Long] = None,
+                                     cuts3: Option[(Double, Double)] = None,
+                                     minCount4: Option[Long] = None,
+                                     n4grams: Option[Long] = None,
+                                     minCount5: Option[Long] = None,
+                                     n5grams: Option[Long] = None,
+                                     cuts5: Option[(Double, Double)] = None)
 
-  private def writeMeta(spark: SparkSession, dir: String, m: Meta): Unit = {
-    import org.json4s.JsonAST._
-    val base = List(
-      "minCount" -> (JInt(BigInt(m.minCount)): JValue),
-      "nBigrams" -> (JInt(BigInt(m.nBigrams)): JValue))
+  private def putMeta(spark: SparkSession, dir: String, m: Meta): Unit = {
     def cutsOf(key: String, c: Option[(Double, Double)]) =
-      c.toList.flatMap { case (p25, p75) =>
-        List(s"p25$key" -> (JDouble(p25): JValue),
-          s"p75$key" -> (JDouble(p75): JValue))
-      }
+      c.toList.flatMap { case (p25, p75) => List(s"p25$key" -> p25, s"p75$key" -> p75) }
     // the version stamp travels with the highest layer present (absent
     // on v1 artifacts); each layer's minCount/pruned-count pair is
-    // emitted IFF that layer exists — readMeta's "layer presence = key
+    // emitted IFF that layer exists — metaOf's "layer presence = key
     // presence" invariant, so a hypothetical order-5-without-order-3
     // meta can never write a phantom zero-valued layer
     val version: Long =
       if (m.minCount5.isDefined) 3L else if (m.minCount3.isDefined) 2L else 1L
-    def layer(mcKey: String, mc: Option[Long],
-              nKey: String, nv: Option[Long]): List[(String, JValue)] =
-      mc.toList.flatMap(v =>
-        List(mcKey -> (JInt(BigInt(v)): JValue),
-          nKey -> (JInt(BigInt(nv.getOrElse(0L))): JValue)))
-    val layerFields =
-      (if (version >= 2) List("version" -> (JInt(BigInt(version)): JValue))
-       else Nil) ++
+    def layer(mcKey: String, mc: Option[Long], nKey: String, nv: Option[Long]) =
+      mc.toList.flatMap(v => List(mcKey -> v, nKey -> nv.getOrElse(0L)))
+    val fields = List("minCount" -> m.minCount, "nBigrams" -> m.nBigrams) ++
+      cutsOf("", m.cuts) ++ cutsOf("_3", m.cuts3) ++ cutsOf("_5", m.cuts5) ++
+      (if (version >= 2) List("version" -> version) else Nil) ++
       layer("minCount3", m.minCount3, "nTrigrams", m.nTrigrams) ++
       layer("minCount4", m.minCount4, "n4grams", m.n4grams) ++
       layer("minCount5", m.minCount5, "n5grams", m.n5grams)
-    val withCuts = base ++ cutsOf("", m.cuts) ++ cutsOf("_3", m.cuts3) ++
-      cutsOf("_5", m.cuts5) ++ layerFields
-    val json = org.json4s.jackson.JsonMethods.compact(
-      org.json4s.jackson.JsonMethods.render(JObject(withCuts: _*)))
-    val path = new org.apache.hadoop.fs.Path(s"$dir/meta.json")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(path, true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
+    ArtifactMeta.write(spark, dir, "meta.json", ListMap(fields: _*))
   }
 
-  private def readMeta(spark: SparkSession, dir: String): Meta = {
-    val path = new org.apache.hadoop.fs.Path(s"$dir/meta.json")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(path)
-    val json = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    org.json4s.jackson.JsonMethods.parse(json) match {
-      case org.json4s.JsonAST.JObject(fields) =>
-        val m = fields.toMap
-        def longOf(k: String): Long = m.get(k) match {
-          case Some(org.json4s.JsonAST.JInt(v)) => v.toLong
-          case _ => 0L
-        }
-        def dblOf(k: String): Option[Double] = m.get(k) match {
-          case Some(org.json4s.JsonAST.JDouble(v)) => Some(v)
-          case Some(org.json4s.JsonAST.JInt(v)) => Some(v.toDouble)
-          case _ => None
-        }
-        def optLong(k: String): Option[Long] = m.get(k).collect {
-          case org.json4s.JsonAST.JInt(v) => v.toLong
-        }
-        def cutsOf(key: String): Option[(Double, Double)] =
-          for (a <- dblOf(s"p25$key"); b <- dblOf(s"p75$key")) yield (a, b)
-        // the explicit version stamp gates forward compatibility: a
-        // future v4 artifact must fail HERE, loudly, instead of loading
-        // silently under v3 semantics (layer presence alone cannot tell
-        // — v4 would carry every v3 key too)
-        val version = optLong("version").getOrElse(1L)
-        require(version <= MaxVersion,
-          s"$dir is an LmIndex format v$version artifact; this reader " +
-            s"understands up to v$MaxVersion — upgrade before loading")
-        // layer presence = key presence (the writers emit a layer's keys
-        // iff the layer exists), so a legitimate minCount of 0 still
-        // reads back as a present layer
-        Meta(longOf("minCount"), longOf("nBigrams"), cutsOf(""),
-          optLong("minCount3"), optLong("nTrigrams"), cutsOf("_3"),
-          optLong("minCount4"), optLong("n4grams"),
-          optLong("minCount5"), optLong("n5grams"), cutsOf("_5"))
-      case _ => Meta(0L, 0L, None)
-    }
+  private[ops] def metaOf(spark: SparkSession, dir: String): Meta = {
+    val f = ArtifactMeta.read(spark, dir, "meta.json")
+    // the explicit version stamp gates forward compatibility: a
+    // future v4 artifact must fail HERE, loudly, instead of loading
+    // silently under v3 semantics (layer presence alone cannot tell
+    // — v4 would carry every v3 key too)
+    val version = f.longOpt("version").getOrElse(1L)
+    require(version <= MaxVersion,
+      s"$dir is an LmIndex format v$version artifact; this reader " +
+        s"understands up to v$MaxVersion — upgrade before loading")
+    def cutsOf(key: String): Option[(Double, Double)] =
+      for (a <- f.doubleOpt(s"p25$key"); b <- f.doubleOpt(s"p75$key")) yield (a, b)
+    // layer presence = key presence (the writers emit a layer's keys
+    // iff the layer exists), so a legitimate minCount of 0 still
+    // reads back as a present layer
+    Meta(f.long("minCount"), f.long("nBigrams"), cutsOf(""),
+      f.longOpt("minCount3"), f.longOpt("nTrigrams"), cutsOf("_3"),
+      f.longOpt("minCount4"), f.longOpt("n4grams"),
+      f.longOpt("minCount5"), f.longOpt("n5grams"), cutsOf("_5"))
   }
 }

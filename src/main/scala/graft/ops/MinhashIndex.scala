@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import scala.collection.immutable.ListMap
+
 /** Persisted MinHash-LSH dedup index: the corpus's banded signatures
   * written once, so every later batch (or stream) dedups AGAINST the
   * historical corpus without re-signaturing it — the incremental-ingest
@@ -55,14 +57,17 @@ object MinhashIndex {
       .repartitionByRange(numFiles, col("band"), col("band_hash"))
       .sortWithinPartitions(col("band"), col("band_hash"))
       .write.mode("overwrite").parquet(s"$dir/data")
-    writeMeta(docs.sparkSession, dir, k, mode)
+    ArtifactMeta.write(docs.sparkSession, dir, "meta.json",
+      ListMap("k" -> k, "mode" -> mode.name))
     ArtifactProvenance.stampArtifact(docs.sparkSession, dir, "minhash-index",
       "build", provenance)
   }
 
   /** The artifact's pinned `(k, mode)`. */
-  def meta(spark: SparkSession, dir: String): (Int, HashMode) =
-    readMeta(spark, dir)
+  def meta(spark: SparkSession, dir: String): (Int, HashMode) = {
+    val f = ArtifactMeta.read(spark, dir, "meta.json")
+    (f.int("k"), HashMode.named(f.str("mode")))
+  }
 
   /** Fold `newDocs` into the index at `dir`, writing the combined index
     * to `outDir` — banded signatures are per-document rows, so the merge
@@ -83,7 +88,7 @@ object MinhashIndex {
     // an in-place merge (outDir == dir) would overwrite-delete the input
     // signatures before the lazy union plan reads them, losing the index
     ArtifactPaths.requireDistinct(spark, dir, outDir)
-    val (k, mode) = readMeta(spark, dir)
+    val (k, mode) = meta(spark, dir)
     Sources.parquet(spark, s"$dir/data")
       .unionByName(StreamNearDup.bandedSignatures(newDocs, k, mode)
         .select(col("doc_id"), col("nsh"), col("band"),
@@ -91,7 +96,8 @@ object MinhashIndex {
       .repartitionByRange(numFiles, col("band"), col("band_hash"))
       .sortWithinPartitions(col("band"), col("band_hash"))
       .write.mode("overwrite").parquet(s"$outDir/data")
-    writeMeta(spark, outDir, k, mode)
+    ArtifactMeta.write(spark, outDir, "meta.json",
+      ListMap("k" -> k, "mode" -> mode.name))
     ArtifactProvenance.stampArtifact(spark, outDir, "minhash-index",
       "merge", provenance)
   }
@@ -109,7 +115,7 @@ object MinhashIndex {
     // opt-in staleness guard: probing yesterday's index against an
     // edited corpus silently under-dedups — fail loudly instead
     ArtifactProvenance.checkFresh(spark, dir, freshAgainst)
-    val (k, mode) = readMeta(spark, dir)
+    val (k, mode) = meta(spark, dir)
     val stored = Sources.parquet(spark, s"$dir/data")
       .select(col("doc_id").as("_ix_id"), col("nsh").as("_ix_nsh"),
         col("band"), col("band_hash"))
@@ -130,55 +136,8 @@ object MinhashIndex {
   def probeVerified(spark: SparkSession, dir: String, newDocs: DataFrame,
                     docStore: DataFrame, threshold: Double = 0.7,
                     freshAgainst: Option[DataFrame] = None): DataFrame = {
-    val (k, _) = readMeta(spark, dir)
+    val (k, _) = meta(spark, dir)
     StreamNearDup.verified(probe(spark, dir, newDocs, threshold, freshAgainst),
       docStore, k, threshold)
-  }
-
-  private def writeMeta(spark: SparkSession, dir: String, k: Int,
-                        mode: HashMode): Unit = {
-    val json = org.json4s.jackson.JsonMethods.compact(
-      org.json4s.jackson.JsonMethods.render(org.json4s.JsonAST.JObject(
-        "k" -> org.json4s.JsonAST.JInt(BigInt(k)),
-        "mode" -> org.json4s.JsonAST.JString(modeName(mode)))))
-    val path = new org.apache.hadoop.fs.Path(s"$dir/meta.json")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(path, true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
-  }
-
-  private def modeName(mode: HashMode): String = mode match {
-    case HashMode.Default => "default"
-    case HashMode.Portable => "portable"
-    case HashMode.PortableComposable => "portable_composable"
-  }
-
-  private def modeOf(name: String): HashMode = name match {
-    case "default" => HashMode.Default
-    case "portable" => HashMode.Portable
-    case "portable_composable" => HashMode.PortableComposable
-    case other => throw new IllegalArgumentException(
-      s"unknown hash mode in index metadata: $other")
-  }
-
-  private def readMeta(spark: SparkSession, dir: String): (Int, HashMode) = {
-    val path = new org.apache.hadoop.fs.Path(s"$dir/meta.json")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(path)
-    val json = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    org.json4s.jackson.JsonMethods.parse(json) match {
-      case org.json4s.JsonAST.JObject(fields) =>
-        val m = fields.toMap
-        val k = m.get("k") match {
-          case Some(org.json4s.JsonAST.JInt(v)) => v.toInt
-          case _ => 3
-        }
-        val mode = m.get("mode") match {
-          case Some(org.json4s.JsonAST.JString(s)) => modeOf(s)
-          case _ => HashMode.Default
-        }
-        (k, mode)
-      case _ => (3, HashMode.Default)
-    }
   }
 }

@@ -10,8 +10,9 @@ import org.apache.spark.sql.types._
   * 60-bit non-negative value from md5 so a DuckDB oracle can reproduce every
   * signature bit-for-bit (`CAST('0x' || substr(md5(x), 1, 15) AS BIGINT)`);
   * staying below 2^63 sidesteps signed-vs-unsigned ordering differences, which
-  * matters because MinHash takes `min()` over these values. */
-sealed abstract class HashMode(val bits: Int) {
+  * matters because MinHash takes `min()` over these values. `name` is the
+  * mode's spelling in artifact metadata ([[HashMode.named]] reads it back). */
+sealed abstract class HashMode(val bits: Int, val name: String) {
   /** Hash of `cols`. CAVEAT for [[HashMode.Portable]]: multi-column input
     * is ':'-joined as strings, so free-form tuples like ("a:b","c") and
     * ("a","b:c") collide — every internal call site feeds fixed-count
@@ -56,7 +57,12 @@ sealed abstract class HashMode(val bits: Int) {
   def seededHashElem(i: Int, p: Column): Column
 }
 object HashMode {
-  case object Default extends HashMode(64) {
+  /** The mode spelled `name` in artifact metadata. */
+  def named(name: String): HashMode = Seq(Default, Portable, PortableComposable)
+    .find(_.name == name).getOrElse(throw new IllegalArgumentException(
+      s"unknown hash mode '$name' (default, portable or portable_composable)"))
+
+  case object Default extends HashMode(64, "default") {
     def hash(cols: Column*): Column = xxhash64(cols: _*)
     override def nonNegHash(cols: Column*): Column =
       shiftrightunsigned(xxhash64(cols: _*), 1)
@@ -72,7 +78,7 @@ object HashMode {
     * signed 64-bit exactly in both engines). [[Portable]] computes the
     * digest pair in one codegen'd expression; [[PortableComposable]] is
     * the extension-free spelling of the same bits. */
-  sealed abstract class Md5PortableLike extends HashMode(60) {
+  sealed abstract class Md5PortableLike(name: String) extends HashMode(60, name) {
     // null components encode as "-|" — distinct from the empty string's
     // "0|" and never dropped the way concat_ws skips nulls, so ("a", null)
     // and (null, "a") cannot collide either
@@ -94,7 +100,7 @@ object HashMode {
     * [[PortableComposable]] there — bit-identical results, built only
     * from stock functions, at the hex-encode/substring/parse cost per
     * hashed value that the codegen expression exists to skip. */
-  case object Portable extends Md5PortableLike {
+  case object Portable extends Md5PortableLike("portable") {
     // h1 of the codegen'd digest pair — bit-identical to
     // conv(substr(md5(x), 1, 15), 16, 10), which is what the DuckDB
     // oracles compute (HashModePortableParitySpec pins it); skips the
@@ -117,7 +123,7 @@ object HashMode {
     * `HashModePortableParitySpec` pins equality). For stock sessions and
     * for composing into engines where only SQL functions exist; prefer
     * [[Portable]] whenever GraftExtensions is installed. */
-  case object PortableComposable extends Md5PortableLike {
+  case object PortableComposable extends Md5PortableLike("portable_composable") {
     private def h1Of(digestHex: Column): Column =
       conv(substring(digestHex, 1, 15), 16, 10).cast(LongType)
     private def h2Of(digestHex: Column): Column =

@@ -14,11 +14,11 @@ import org.apache.spark.sql.DataFrame
   *
   * [[fan]] repartitions such an input round-robin across
   * `defaultParallelism` — but ONLY when the optimizer's size estimate for
-  * the frame is under a threshold (default 256 MiB, conf
-  * `graft.fan.maxInputBytes`), so the fan-out is a bounded micro-shuffle
-  * by construction: at 100 TB the estimate is far over the threshold and
-  * the operator keeps its zero-extra-shuffle shape (the natural scan
-  * parallelism of a large input already feeds every core). Streaming
+  * the frame is at most [[MaxInputBytes]] (256 MiB), so the fan-out is a
+  * bounded micro-shuffle by construction: at 100 TB the estimate is far
+  * over the ceiling and the operator keeps its zero-extra-shuffle shape
+  * (the natural scan parallelism of a large input already feeds every
+  * core). Streaming
   * frames pass through untouched (micro-batch sources size their own
   * partitions; the batch-only estimate below is not defined for them).
   *
@@ -29,41 +29,26 @@ import org.apache.spark.sql.DataFrame
   * retries, so fanning cannot change any gated result. */
 object Parallel {
 
-  /** Conf key for the fan-out input-size ceiling (bytes). */
-  val MaxInputBytesKey = "graft.fan.maxInputBytes"
-
-  /** Default ceiling: a 256 MiB round-robin shuffle is one or two
-    * seconds of network on any realistic deployment — negligible next
-    * to the CPU-dense map work it parallelises, and small enough that
-    * crossing it means the scan already has real split parallelism. */
-  val DefaultMaxInputBytes: Long = 256L * 1024 * 1024
+  /** The fan-out input-size ceiling: a 256 MiB round-robin shuffle is
+    * one or two seconds of network on any realistic deployment —
+    * negligible next to the CPU-dense map work it parallelises, and
+    * small enough that crossing it means the scan already has real
+    * split parallelism. */
+  val MaxInputBytes: Long = 256L * 1024 * 1024
 
   /** Fan `df` across the cluster when it is provably small (optimizer
-    * size estimate ≤ the ceiling); identity otherwise.
+    * size estimate ≤ [[MaxInputBytes]]); identity otherwise.
     *
-    * A ceiling ≤ 0 disables fanning outright (the kill-switch the
-    * profiling harness uses) — previously a frame whose size estimate
-    * was itself 0 would still have fanned under `ceiling = 0`. The
-    * estimate-trust assumption: the gate reads the OPTIMIZED plan's
+    * The estimate-trust assumption: the gate reads the OPTIMIZED plan's
     * `sizeInBytes`, which for a bare scan is the file size; a derived
     * plan's basic (non-CBO) estimate can under-count after selective
     * filters, but a >256 MiB frame mis-estimated under the ceiling costs
-    * one bounded round-robin pass, and `graft.fan.maxInputBytes = 0`
-    * turns the mechanism off everywhere if that ever bites. */
+    * one bounded round-robin pass. */
   def fan(df: DataFrame): DataFrame = {
     if (df.isStreaming) return df
-    val spark = df.sparkSession
-    val p = spark.sparkContext.defaultParallelism
+    val p = df.sparkSession.sparkContext.defaultParallelism
     if (p <= 1) return df
-    val ceiling = spark.conf.getOption(MaxInputBytesKey).map { s =>
-      try s.trim.toLong
-      catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"$MaxInputBytesKey must be a long byte count, got '$s'")
-      }
-    }.getOrElse(DefaultMaxInputBytes)
-    if (ceiling <= 0) return df
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (bytes <= ceiling) df.repartition(p) else df
+    if (bytes <= MaxInputBytes) df.repartition(p) else df
   }
 }

@@ -43,6 +43,9 @@ import org.apache.spark.sql.functions._
   * micro-batch with no state store. */
 object PqIndex {
 
+  private final case class Codebooks(m: Int, k: Int, dim: Int,
+                                     books: Array[Array[Array[Double]]])
+
   /** Train codebooks on the corpus ([[PQ.train]] — deterministic), encode
     * every vector, persist codes + frozen codebooks. One training pass
     * per Lloyd iteration plus one encode scan; the write carries
@@ -57,7 +60,8 @@ object PqIndex {
       .repartitionByRange(numFiles, col("vec_id"))
       .sortWithinPartitions("vec_id")
       .write.mode("overwrite").parquet(s"$dir/data")
-    writeMeta(embeddings.sparkSession, dir, m, books.head.length, dim, books)
+    ArtifactMeta.write(embeddings.sparkSession, dir, "codebooks.json",
+      Codebooks(m, books.head.length, dim, books))
     ArtifactProvenance.stampArtifact(embeddings.sparkSession, dir, "pq-index",
       "build", provenance)
   }
@@ -65,13 +69,13 @@ object PqIndex {
   /** The artifact's pinned `(m, k, dim)` (k is the EFFECTIVE codebook
     * size — corpora smaller than the requested k train fewer codes). */
   def meta(spark: SparkSession, dir: String): (Int, Int, Int) = {
-    val (m, k, dim, _) = readMeta(spark, dir)
-    (m, k, dim)
+    val c = codebooksOf(spark, dir)
+    (c.m, c.k, c.dim)
   }
 
   /** The frozen [m][k][dsub] codebooks. */
   def codebooks(spark: SparkSession, dir: String): Array[Array[Array[Double]]] =
-    readMeta(spark, dir)._4
+    codebooksOf(spark, dir).books
 
   /** Encode new vectors with the artifact's FROZEN codebooks — a
     * stateless projection ([[PQ.encodeExprStatic]] against literal
@@ -83,7 +87,7 @@ object PqIndex {
     * the codegen'd `slice` still fails per row on short vectors. */
   def encodeWith(spark: SparkSession, dir: String,
                  embeddings: DataFrame): DataFrame = {
-    val (_, _, dim, books) = readMeta(spark, dir)
+    val Codebooks(_, _, dim, books) = codebooksOf(spark, dir)
     // PER-ROW dim guard fused into the projection (raise_error fires
     // only on offending rows — free on the happy path, and it works on
     // streaming frames too): a first-row-only sample would let a
@@ -145,7 +149,7 @@ object PqIndex {
              freshAgainst: Option[DataFrame] = None,
              dropSelfIds: Boolean = true): DataFrame = {
     ArtifactProvenance.checkFresh(spark, dir, freshAgainst)
-    val (m, _, dim, books) = readMeta(spark, dir)
+    val Codebooks(m, _, dim, books) = codebooksOf(spark, dir)
     val probeRows = probes
       .select(col("probe_id"), col("v"), col("nrm")).collect()
       .sortBy(_.getLong(0))
@@ -202,7 +206,7 @@ object PqIndex {
                     probes: DataFrame, minApprox: Double,
                     freshAgainst: Option[DataFrame] = None): DataFrame = {
     ArtifactProvenance.checkFresh(spark, dir, freshAgainst)
-    val (m, _, dim, books) = readMeta(spark, dir)
+    val Codebooks(m, _, dim, books) = codebooksOf(spark, dir)
     val probeRows = probes
       .select(col("probe_id"), col("v"), col("nrm")).collect()
       .sortBy(_.getLong(0))
@@ -232,61 +236,6 @@ object PqIndex {
   private def loadData(spark: SparkSession, dir: String): DataFrame =
     Sources.parquet(spark, s"$dir/data")
 
-  private def writeMeta(spark: SparkSession, dir: String, m: Int, k: Int,
-                        dim: Int, books: Array[Array[Array[Double]]]): Unit = {
-    import org.json4s.JsonAST._
-    val json = org.json4s.jackson.JsonMethods.compact(
-      org.json4s.jackson.JsonMethods.render(JObject(
-        "m" -> JInt(BigInt(m)),
-        "k" -> JInt(BigInt(k)),
-        "dim" -> JInt(BigInt(dim)),
-        "books" -> JArray(books.toList.map(blk =>
-          JArray(blk.toList.map(c => JArray(c.toList.map(JDouble(_))))))))))
-    val path = new org.apache.hadoop.fs.Path(s"$dir/codebooks.json")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(path, true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
-  }
-
-  private def readMeta(spark: SparkSession, dir: String)
-      : (Int, Int, Int, Array[Array[Array[Double]]]) = {
-    val path = new org.apache.hadoop.fs.Path(s"$dir/codebooks.json")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(path),
-      s"$dir has no codebooks.json — not a PqIndex artifact (ad-hoc PQ " +
-        "search over raw vectors is PQ.annPq)")
-    val in = fs.open(path)
-    val json = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    def num(v: org.json4s.JsonAST.JValue): Double = v match {
-      case org.json4s.JsonAST.JDouble(d) => d
-      case org.json4s.JsonAST.JInt(i) => i.toDouble
-      case _ => throw new IllegalArgumentException(
-        s"$dir/codebooks.json carries a non-numeric codebook entry")
-    }
-    org.json4s.jackson.JsonMethods.parse(json) match {
-      case org.json4s.JsonAST.JObject(fields) =>
-        val fm = fields.toMap
-        def intOf(k: String): Int = fm.get(k) match {
-          case Some(org.json4s.JsonAST.JInt(v)) => v.toInt
-          case _ => throw new IllegalArgumentException(
-            s"$dir/codebooks.json carries no $k")
-        }
-        val books = fm.get("books") match {
-          case Some(org.json4s.JsonAST.JArray(blks)) => blks.map {
-            case org.json4s.JsonAST.JArray(cs) => cs.map {
-              case org.json4s.JsonAST.JArray(xs) => xs.map(num).toArray
-              case _ => throw new IllegalArgumentException(
-                s"$dir/codebooks.json books must be [m][k][dsub]")
-            }.toArray
-            case _ => throw new IllegalArgumentException(
-              s"$dir/codebooks.json books must be [m][k][dsub]")
-          }.toArray
-          case _ => throw new IllegalArgumentException(
-            s"$dir/codebooks.json carries no books")
-        }
-        (intOf("m"), intOf("k"), intOf("dim"), books)
-      case _ => throw new IllegalArgumentException(
-        s"$dir/codebooks.json is not a JSON object")
-    }
-  }
+  private def codebooksOf(spark: SparkSession, dir: String): Codebooks =
+    ArtifactMeta.readAs[Codebooks](spark, dir, "codebooks.json")
 }

@@ -4,9 +4,10 @@ import graft.io.Sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import scala.collection.immutable.ListMap
+
 /** Persisted profile sketches — the cardinality/frequency member of the
-  * build-once artifact family ([[IvfIndex]], [[LmIndex]],
-  * [[MinhashIndex]], [[BpeIndex]]).
+  * build-once artifact family (listed in [[ArtifactMeta]]).
   *
   * The production shape this enables: profile each ingest batch ONCE
   * into bounded state (a KMV buffer per group, a d×w count-min grid),
@@ -23,13 +24,20 @@ import org.apache.spark.sql.functions._
   *    two grids equals the grid of the concatenated stream.
   *
   * Layout: `dir/data/…parquet` plus `dir/meta.json` pinning the sketch
-  * parameters (kind, k or d×w, salt, hash mode) — readers take them
-  * from the metadata, so a probe/sketch parameter mismatch cannot
-  * happen. Metadata parsing fails loudly on an unknown kind: silently
-  * estimating from a mismatched artifact would be a wrong-answer bug,
-  * not a recoverable default.
+  * parameters (kind, k or d×w, salt, hash mode; every value a string) —
+  * readers take them from the metadata, so a probe/sketch parameter
+  * mismatch cannot happen. Metadata parsing fails loudly on another
+  * kind or a missing or non-string parameter: silently estimating from
+  * a mismatched artifact would be a wrong-answer bug, not a recoverable
+  * default.
   */
 object SketchIndex {
+
+  /** The parameter keys each sketch kind pins. */
+  private val ParamKeys = Map(
+    "kmv" -> Seq("k", "mode", "salt"),
+    "quantile" -> Seq("k", "mode", "salt"),
+    "cm" -> Seq("d", "mode", "salt", "w"))
 
   /** Sketch `(groupCol, valueCol)` with a k-sized KMV buffer per group
     * ([[Sketch.kmvSketch]]) and persist. The artifact is O(groups × k)
@@ -42,8 +50,8 @@ object SketchIndex {
     Sketch.kmvSketch(df, groupCol, valueCol, k, salt, mode)
       .repartition(numFiles)
       .write.mode("overwrite").parquet(s"$dir/data")
-    writeMeta(df.sparkSession, dir, "kmv", Map("k" -> k.toString, "salt" -> salt,
-      "mode" -> modeName(mode)))
+    writeParams(df.sparkSession, dir, "kmv", Map("k" -> k.toString, "salt" -> salt,
+      "mode" -> mode.name))
     ArtifactProvenance.stampArtifact(df.sparkSession, dir, "sketch-kmv",
       "build", provenance)
   }
@@ -58,13 +66,13 @@ object SketchIndex {
                 numFiles: Int = 1,
                 provenance: Option[ArtifactProvenance.Target] = None): Unit = {
     ArtifactPaths.requireDistinct(spark, dir, outDir)
-    val m = readMeta(spark, dir, "kmv")
+    val m = params(spark, dir, "kmv")
     val k = m("k").toInt
     val fresh = Sketch.kmvSketch(df, groupCol, valueCol, k, m("salt"),
-      modeOf(m("mode")))
+      HashMode.named(m("mode")))
     writeMerged(spark, Seq(Sources.parquet(spark, s"$dir/data"), fresh), k,
       outDir, numFiles)
-    writeMeta(spark, outDir, "kmv", m)
+    writeParams(spark, outDir, "kmv", m)
     ArtifactProvenance.stampArtifact(spark, outDir, "sketch-kmv", "append",
       provenance)
   }
@@ -76,12 +84,12 @@ object SketchIndex {
                provenance: Option[ArtifactProvenance.Target] = None): Unit = {
     ArtifactPaths.requireDistinct(spark, dirA, outDir)
     ArtifactPaths.requireDistinct(spark, dirB, outDir)
-    val a = readMeta(spark, dirA, "kmv")
-    val b = readMeta(spark, dirB, "kmv")
+    val a = params(spark, dirA, "kmv")
+    val b = params(spark, dirB, "kmv")
     require(a == b, s"KMV artifacts disagree on parameters: $a vs $b")
     writeMerged(spark, Seq(Sources.parquet(spark, s"$dirA/data"),
       Sources.parquet(spark, s"$dirB/data")), a("k").toInt, outDir, numFiles)
-    writeMeta(spark, outDir, "kmv", a)
+    writeParams(spark, outDir, "kmv", a)
     ArtifactProvenance.stampArtifact(spark, outDir, "sketch-kmv", "merge",
       provenance)
   }
@@ -89,7 +97,7 @@ object SketchIndex {
   /** Distinct-count estimates from a KMV artifact: `(group,
     * est_distinct)` via [[Sketch.kmvEstimate]] under the stored k. */
   def estimateKmv(spark: SparkSession, dir: String): DataFrame = {
-    val m = readMeta(spark, dir, "kmv")
+    val m = params(spark, dir, "kmv")
     Sketch.kmvEstimate(Sources.parquet(spark, s"$dir/data"), m("k").toInt)
   }
 
@@ -124,8 +132,8 @@ object SketchIndex {
     Sketch.quantileSketch(df, groupCol, keyCol, valueCol, k, salt, mode)
       .repartition(numFiles)
       .write.mode("overwrite").parquet(s"$dir/data")
-    writeMeta(df.sparkSession, dir, "quantile", Map("k" -> k.toString,
-      "salt" -> salt, "mode" -> modeName(mode)))
+    writeParams(df.sparkSession, dir, "quantile", Map("k" -> k.toString,
+      "salt" -> salt, "mode" -> mode.name))
     ArtifactProvenance.stampArtifact(df.sparkSession, dir, "sketch-quantile",
       "build", provenance)
   }
@@ -140,13 +148,13 @@ object SketchIndex {
                      outDir: String, numFiles: Int = 1,
                      provenance: Option[ArtifactProvenance.Target] = None): Unit = {
     ArtifactPaths.requireDistinct(spark, dir, outDir)
-    val m = readMeta(spark, dir, "quantile")
+    val m = params(spark, dir, "quantile")
     val k = m("k").toInt
     val fresh = Sketch.quantileSketch(df, groupCol, keyCol, valueCol, k,
-      m("salt"), modeOf(m("mode")))
+      m("salt"), HashMode.named(m("mode")))
     writeMergedQuantile(spark, Seq(Sources.parquet(spark, s"$dir/data"), fresh),
       k, outDir, numFiles)
-    writeMeta(spark, outDir, "quantile", m)
+    writeParams(spark, outDir, "quantile", m)
     ArtifactProvenance.stampArtifact(spark, outDir, "sketch-quantile",
       "append", provenance)
   }
@@ -158,12 +166,12 @@ object SketchIndex {
                     provenance: Option[ArtifactProvenance.Target] = None): Unit = {
     ArtifactPaths.requireDistinct(spark, dirA, outDir)
     ArtifactPaths.requireDistinct(spark, dirB, outDir)
-    val a = readMeta(spark, dirA, "quantile")
-    val b = readMeta(spark, dirB, "quantile")
+    val a = params(spark, dirA, "quantile")
+    val b = params(spark, dirB, "quantile")
     require(a == b, s"quantile artifacts disagree on parameters: $a vs $b")
     writeMergedQuantile(spark, Seq(Sources.parquet(spark, s"$dirA/data"),
       Sources.parquet(spark, s"$dirB/data")), a("k").toInt, outDir, numFiles)
-    writeMeta(spark, outDir, "quantile", a)
+    writeParams(spark, outDir, "quantile", a)
     ArtifactProvenance.stampArtifact(spark, outDir, "sketch-quantile",
       "merge", provenance)
   }
@@ -172,7 +180,7 @@ object SketchIndex {
     * [[Sketch.quantileEstimate]]. */
   def estimateQuantile(spark: SparkSession, dir: String,
                        pcts: Seq[Int] = Seq(25, 50, 75, 90)): DataFrame = {
-    readMeta(spark, dir, "quantile") // kind check
+    params(spark, dir, "quantile") // kind check
     Sketch.quantileEstimate(Sources.parquet(spark, s"$dir/data"), pcts)
   }
 
@@ -203,8 +211,8 @@ object SketchIndex {
     Sketch.countMin(df, valueCol, d, w, salt, mode)
       .repartition(numFiles)
       .write.mode("overwrite").parquet(s"$dir/data")
-    writeMeta(df.sparkSession, dir, "cm", Map("d" -> d.toString,
-      "w" -> w.toString, "salt" -> salt, "mode" -> modeName(mode)))
+    writeParams(df.sparkSession, dir, "cm", Map("d" -> d.toString,
+      "w" -> w.toString, "salt" -> salt, "mode" -> mode.name))
     ArtifactProvenance.stampArtifact(df.sparkSession, dir, "sketch-cm",
       "build", provenance)
   }
@@ -216,15 +224,15 @@ object SketchIndex {
                provenance: Option[ArtifactProvenance.Target] = None): Unit = {
     ArtifactPaths.requireDistinct(spark, dir, outDir)
     require(numFiles > 0, "numFiles must be positive")
-    val m = readMeta(spark, dir, "cm")
+    val m = params(spark, dir, "cm")
     val fresh = Sketch.countMin(df, valueCol, m("d").toInt, m("w").toInt,
-      m("salt"), modeOf(m("mode")))
+      m("salt"), HashMode.named(m("mode")))
     Sources.parquet(spark, s"$dir/data").unionByName(fresh)
       .groupBy(col("row"), col("bucket"))
       .agg(sum(col("cnt")).as("cnt"))
       .repartition(numFiles)
       .write.mode("overwrite").parquet(s"$outDir/data")
-    writeMeta(spark, outDir, "cm", m)
+    writeParams(spark, outDir, "cm", m)
     ArtifactProvenance.stampArtifact(spark, outDir, "sketch-cm", "append",
       provenance)
   }
@@ -234,52 +242,23 @@ object SketchIndex {
     * parameters. */
   def estimateCm(spark: SparkSession, dir: String, probes: DataFrame,
                  valueCol: String): DataFrame = {
-    val m = readMeta(spark, dir, "cm")
+    val m = params(spark, dir, "cm")
     Sketch.cmEstimate(Sources.parquet(spark, s"$dir/data"), probes, valueCol,
-      m("d").toInt, m("w").toInt, m("salt"), modeOf(m("mode")))
+      m("d").toInt, m("w").toInt, m("salt"), HashMode.named(m("mode")))
   }
 
-  private def modeName(mode: HashMode): String = mode match {
-    case HashMode.Default => "default"
-    case HashMode.Portable => "portable"
-    case HashMode.PortableComposable => "portable_composable"
-  }
+  private def writeParams(spark: SparkSession, dir: String, kind: String,
+                          params: Map[String, String]): Unit =
+    ArtifactMeta.write(spark, dir, "meta.json",
+      ListMap("kind" -> kind) ++ params.toSeq.sortBy(_._1))
 
-  private def modeOf(name: String): HashMode = name match {
-    case "default" => HashMode.Default
-    case "portable" => HashMode.Portable
-    case "portable_composable" => HashMode.PortableComposable
-    case other => throw new IllegalArgumentException(
-      s"unknown hash mode in sketch metadata: $other")
-  }
-
-  private def writeMeta(spark: SparkSession, dir: String, kind: String,
-                        fields: Map[String, String]): Unit = {
-    import org.json4s.JsonAST._
-    val json = org.json4s.jackson.JsonMethods.compact(
-      org.json4s.jackson.JsonMethods.render(
-        JObject(("kind" -> JString(kind)) ::
-          fields.toList.sortBy(_._1).map { case (k, v) => k -> (JString(v): JValue) })))
-    val path = new org.apache.hadoop.fs.Path(s"$dir/meta.json")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(path, true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
-  }
-
-  private def readMeta(spark: SparkSession, dir: String,
-                       expectKind: String): Map[String, String] = {
-    val path = new org.apache.hadoop.fs.Path(s"$dir/meta.json")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(path)
-    val json = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    val fields = org.json4s.jackson.JsonMethods.parse(json) match {
-      case org.json4s.JsonAST.JObject(fs0) => fs0.collect {
-        case (k, org.json4s.JsonAST.JString(v)) => k -> v
-      }.toMap
-      case _ => Map.empty[String, String]
-    }
-    require(fields.get("kind").contains(expectKind),
-      s"sketch artifact at $dir has kind ${fields.get("kind")}, expected $expectKind")
-    fields - "kind"
+  /** The parameters a `kind` artifact at `dir` pins, `kind` excluded. */
+  private[ops] def params(spark: SparkSession, dir: String,
+                          kind: String): Map[String, String] = {
+    val f = ArtifactMeta.read(spark, dir, "meta.json")
+    val stored = f.str("kind")
+    require(stored == kind,
+      s"sketch artifact at $dir has kind $stored, expected $kind")
+    ParamKeys(kind).map(k => k -> f.str(k)).toMap
   }
 }

@@ -3,8 +3,6 @@ package graft.ops
 import graft.io.Sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.json4s._
-import org.json4s.jackson.JsonMethods
 
 /** Persisted unigram-tokenizer artifact — [[BpeIndex]]'s discipline for
   * the [[Unigram]] family: fit the piece vocabulary once, persist it
@@ -99,16 +97,9 @@ object UnigramIndex {
     Unigram.segmentCountsWith(docs, segDf, charWts, idCol, textCol, unkMicro)
   }
 
-  def readMeta(spark: SparkSession, dir: String): Meta = {
-    implicit val fmts: Formats = DefaultFormats
-    val path = new org.apache.hadoop.fs.Path(s"$dir/meta.json")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(path),
-      s"$dir has no meta.json — not a UnigramIndex artifact")
-    val in = fs.open(path)
-    val json = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    JsonMethods.parse(json).extract[Meta]
-  }
+  /** The artifact's `meta.json`, read on the driver (no Spark job). */
+  def readMeta(spark: SparkSession, dir: String): Meta =
+    ArtifactMeta.readAs[Meta](spark, dir, "meta.json")
 
   private def writeArtifact(spark: SparkSession, vocab: DataFrame,
                             dir: String, vocabSize: Int, maxPieceLen: Int,
@@ -130,18 +121,7 @@ object UnigramIndex {
       .repartitionByRange(numFiles, col("word"))
       .sortWithinPartitions(col("word"))
       .write.mode("overwrite").parquet(s"$dir/wordsegs")
-    writeMeta(spark, dir, Meta(vocabSize, maxPieceLen, emIters, maxTypes,
-      cached.count()))
-  }
-
-  private def writeMeta(spark: SparkSession, dir: String, m: Meta): Unit = {
-    val json = JsonMethods.compact(JsonMethods.render(JObject(
-      "vocabSize" -> JInt(m.vocabSize), "maxPieceLen" -> JInt(m.maxPieceLen),
-      "emIters" -> JInt(m.emIters), "maxTypes" -> JInt(m.maxTypes),
-      "nWordTypes" -> JLong(m.nWordTypes))))
-    val path = new org.apache.hadoop.fs.Path(s"$dir/meta.json")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(path, true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
+    ArtifactMeta.write(spark, dir, "meta.json", Meta(vocabSize, maxPieceLen,
+      emIters, maxTypes, cached.count()))
   }
 }

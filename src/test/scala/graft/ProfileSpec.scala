@@ -25,8 +25,8 @@ class ProfileSpec extends AnyFunSuite {
   test("valid arguments parse to their mode; --plan alone plans the registry") {
     assert(parse(Seq("q_b", "q_a"), registered) == Right(Request(Time, Seq("q_b", "q_a"))))
     assert(parse(Seq("--plan"), registered) == Right(Request(Plan, Seq("q_a", "q_b"))))
-    assert(parse(Seq("--ab", "graft.fan.maxInputBytes=0", "q_a"), registered) ==
-      Right(Request(AB("graft.fan.maxInputBytes", "0"), Seq("q_a"))))
+    assert(parse(Seq("--ab", "spark.sql.shuffle.partitions=8", "q_a"), registered) ==
+      Right(Request(AB("spark.sql.shuffle.partitions", "8"), Seq("q_a"))))
     assert(parse(Seq("--ab", "k=a=b", "q_a"), registered) ==
       Right(Request(AB("k", "a=b"), Seq("q_a"))))
     assert(parse(Nil, registered).isLeft, "timing needs a query")

@@ -99,4 +99,12 @@ class BpeIndexSpec extends SparkSpec {
     // artifact untouched
     assert(BpeIndex.loadMerges(spark, dir).size == 2)
   }
+
+  test("readMeta reads meta.json on the driver: no Spark job") {
+    val dir = tmp()
+    BpeIndex.build(corpusA.toDF("doc_id", "text"), dir, nMerges = 3)
+    val (m, jobs) = jobsOf(BpeIndex.readMeta(spark, dir))
+    assert(m == BpeIndex.Meta(3, 4L))
+    assert(jobs == 0)
+  }
 }
