@@ -148,7 +148,7 @@ object Bench {
     * uniform contention or short-pin noise never poisons the next
     * round's persistence check); stored VALUES are the raw secs/pin
     * ratios for human reading, and membership alone carries the
-    * drifted-last-round fact. Written at the end of every bench run and
+    * drifted-last-round fact. Written at the end of every local[32] run and
     * committed with the round — the committed state IS the previous
     * round's settled close. (The driver's own BENCH_r*.json files
     * truncate the metric line and cannot serve.) Intra-round re-runs
@@ -193,6 +193,10 @@ object Bench {
       s""""vs_baseline":${num3(vsBaseline)},"run_factor":${num3(runFactor)},""" +
       s""""pin_factor":${num3(pinFactor)},"n_pin_drift":$nPinDrift,""" +
       s""""n_pin_drift_persistent":$nPinDriftPersistent,"sf":"$sfDir"}"""
+
+  /** Only a run in the pins' own `local[32]` context may replace
+    * [[PriorRatiosFile]]: ratios on fewer cores drift for want of cores. */
+  private[graft] def persistsPriorRatios(cpus: Int): Boolean = cpus == 32
 
   /** Persist this run's DRIFT SET for the next run's persistence
     * comparison — best-effort (a read-only checkout must not fail the
@@ -425,7 +429,7 @@ object Bench {
     // persist the normalized DRIFT SET, not raw ratios: a round run
     // under uniform contention (or short-pin jitter the floor absorbs)
     // must not read as drift in the next round's persistence check
-    writePriorRatios(drifting)
+    if (persistsPriorRatios(cpus)) writePriorRatios(drifting)
     breaches.foreach(b => System.err.println(s"[bench] BUDGET BREACH: $b " +
       "(budgets are wall-clock numbers from the round driver's machine; " +
       "set SPARK_GRAFT_BENCH_BUDGETS=off on other hardware)"))

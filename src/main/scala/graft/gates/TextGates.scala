@@ -575,7 +575,7 @@ object TextGates {
         |  FROM s GROUP BY 1)
         |SELECT doc_id, score FROM sc
         |QUALIFY row_number() OVER (ORDER BY score DESC, doc_id ASC) <= 20""".stripMargin,
-      // benched: BM25 with query-filtered explode + TakeOrderedAndProject.
+      // benched: one-pass BM25 (fanned tf/length projection) + TakeOrderedAndProject.
       // budget: 0.65 s warmed (r8).
       Some(Pin(0.85, 0.511))),
     Gate("q_text_quality", (s, d) => TextOps.textQuality(t(s, d, "documents")),

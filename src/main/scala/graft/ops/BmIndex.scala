@@ -82,12 +82,7 @@ object BmIndex {
             b: Double = 0.75,
             freshAgainst: Option[DataFrame] = None): DataFrame = {
     ArtifactProvenance.checkFresh(spark, dir, freshAgainst)
-    require(queryTerms.nonEmpty, "queryTerms must not be empty")
-    val terms = queryTerms.map(_.trim.toLowerCase)
-    require(terms.forall(t => t.nonEmpty && !t.exists(_.isWhitespace)),
-      "query terms must be single non-empty tokens")
-    require(terms.distinct.size == terms.size,
-      "queryTerms must be distinct after normalisation")
+    val terms = TextOps.bm25Terms(queryTerms)
     val (nDocs, sumDl, _) = meta(spark, dir)
     require(nDocs > 0, s"$dir records an empty corpus")
     // query-sized artifact lookup: sorted-by-term parquet prunes to the
@@ -98,22 +93,8 @@ object BmIndex {
     val avgdl = sumDl.toDouble / nDocs
     val norm = TextOps.normText(col("text"))
     val dl = TextOps.tokenCount(norm).cast(DoubleType)
-    // identical expression shape to TextOps.bm25Rank's per-term score —
-    // the spec-pinned equality depends on it
-    def termScore(t: String): Column = {
-      val dfT = dfByTerm.getOrElse(t, 0L)
-      // driver-side replica of Spark's round(_, 9): BigDecimal HALF_UP,
-      // not rint (half-even) — the equality pin depends on it
-      val idf = java.math.BigDecimal.valueOf(math.log(
-        (nDocs.toDouble - dfT + 0.5) / (dfT + 0.5) + 1.0))
-        .setScale(9, java.math.RoundingMode.HALF_UP).doubleValue()
-      val tf = regexp_count(concat(lit(" "), norm, lit(" ")),
-        lit("(?<= )" + java.util.regex.Pattern.quote(t) + "(?= )"))
-        .cast(LongType)
-      round(lit(idf) * (tf * lit(k1 + 1.0)) /
-        (tf + lit(k1) * (lit(1.0 - b) + lit(b) * dl / lit(avgdl))), 9)
-        .cast(DecimalType(28, 9))
-    }
+    def termScore(t: String): Column = TextOps.bm25TermScore(TextOps.bm25Tf(norm, t),
+      TextOps.bm25Idf(lit(nDocs), lit(dfByTerm.getOrElse(t, 0L))), dl, lit(avgdl), k1, b)
     docs.withColumn("score",
       round(terms.map(termScore).reduce(_ + _).cast(DoubleType), 6))
   }

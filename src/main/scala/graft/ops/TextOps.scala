@@ -1793,49 +1793,64 @@ object TextOps {
     * `Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1 − b + b·len/avgdl))` with
     * `idf = ln((N − df + ½)/(df + ½) + 1)` — the relevance ranking the
     * TF-IDF projection (`q_tfidf`) doesn't provide, and the retrieval
-    * primitive for eval-set mining / targeted corpus slicing.
+    * primitive for eval-set mining / targeted corpus slicing. Terms are
+    * [[bm25Terms]]; each row is one document, scored and counted in N
+    * and df on its own (a repeated `doc_id` is not merged).
     *
     * Determinism: idf and each per-term score round to 9 dp and sum as
     * exact decimals (the lm-score contract); the final score rounds to
-    * 6 dp and ranks with a doc_id tie-break. Scale shape: one token
-    * explode filtered TO THE QUERY TERMS (the match frame carries only
-    * matching tokens — query-sized × docs, not vocabulary-sized), doc
-    * lengths ride the same scan; df/N/avgdl are tiny aggregates
-    * broadcast back; the final top-k is a TakeOrderedAndProject (per
-    * partition heads + one k-sized merge), never a global sort. */
+    * 6 dp and ranks with a doc_id tie-break. Scale shape: one projection
+    * of the [[Parallel.fan]]ned docs gives each row's length and tfs; one
+    * aggregate of it (N, Σdl, every df) is broadcast back as one row;
+    * only matching rows are scored; the top-k is a TakeOrderedAndProject.
+    * No join, no (doc, token) shuffle, no cache: 0 jobs to build, 5 to run. */
   def bm25Rank(docs: DataFrame, queryTerms: Seq[String], topK: Int = 20,
                k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    require(queryTerms.nonEmpty, "queryTerms must not be empty")
-    require(queryTerms.map(_.trim.toLowerCase).distinct.size == queryTerms.size,
-      "queryTerms must be distinct after normalisation")
+    val terms = bm25Terms(queryTerms)
     require(topK > 0, "topK must be positive")
-    val lens = docs.select(col("doc_id"),
-      tokenCount(normText(col("text"))).as("_dl"))
-    Caching.ensureCached(lens)
-    val corpus = lens.agg(count(lit(1)).as("_nd"), sum(col("_dl")).as("_sl"))
-      .select(col("_nd"),
-        (col("_sl").cast(DoubleType) / col("_nd")).as("_avgdl"))
-    val terms = queryTerms.map(t => lit(t.trim.toLowerCase))
-    val tf = docs
-      .select(col("doc_id"), explode(split(normText(col("text")), " ")).as("_tok"))
-      .filter(col("_tok").isin(terms: _*))
-      .groupBy(col("doc_id"), col("_tok")).agg(count(lit(1)).as("_tf"))
-    val df9 = tf.groupBy(col("_tok")).agg(count(lit(1)).as("_df"))
-    val idf = df9.crossJoin(broadcast(corpus))
-      .select(col("_tok"), col("_nd"), col("_avgdl"),
-        round(log((col("_nd").cast(DoubleType) - col("_df") + lit(0.5)) /
-          (col("_df") + lit(0.5)) + lit(1.0)), 9).as("_idf"))
-    val termScore = tf.join(broadcast(idf), Seq("_tok")).join(lens, Seq("doc_id"))
-      .select(col("doc_id"),
-        round(col("_idf") * (col("_tf") * lit(k1 + 1.0)) /
-          (col("_tf") + lit(k1) * (lit(1.0 - b) +
-            lit(b) * col("_dl").cast(DoubleType) / col("_avgdl"))), 9)
-          .cast(DecimalType(28, 9)).as("_s"))
-    termScore.groupBy(col("doc_id"))
-      .agg(round(sum(col("_s")).cast(DoubleType), 6).as("score"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(topK)
+    val norm = normText(col("text"))
+    val ix = terms.indices
+    val stats = Parallel.fan(docs).select(col("doc_id") +: tokenCount(norm).as("_dl") +:
+      ix.map(i => bm25Tf(norm, terms(i)).as(s"_tf$i")): _*)
+    val corpus = stats.agg(count(lit(1)).as("_nd"), sum(col("_dl")).as("_sl") +:
+        ix.map(i => count_if(col(s"_tf$i") > 0).as(s"_df$i")): _*)
+      .select((col("_sl").cast(DoubleType) / col("_nd")).as("_avgdl") +:
+        ix.map(i => bm25Idf(col("_nd"), col(s"_df$i")).as(s"_idf$i")): _*)
+    stats.filter(ix.map(i => col(s"_tf$i") > 0).reduce(_ || _))
+      .crossJoin(broadcast(corpus))
+      .select(col("doc_id"), round(ix.map(i => bm25TermScore(col(s"_tf$i"), col(s"_idf$i"),
+        col("_dl").cast(DoubleType), col("_avgdl"), k1, b)).reduce(_ + _)
+        .cast(DoubleType), 6).as("score"))
+      .orderBy(col("score").desc, col("doc_id").asc).limit(topK)
   }
+
+  /** BM25 query terms, trimmed and lower-cased: distinct, each a single
+    * non-empty token (a term holding whitespace never equals a token). */
+  private[ops] def bm25Terms(queryTerms: Seq[String]): Seq[String] = {
+    require(queryTerms.nonEmpty, "queryTerms must not be empty")
+    val terms = queryTerms.map(_.trim.toLowerCase)
+    require(terms.forall(t => t.nonEmpty && !t.exists(_.isWhitespace)),
+      "query terms must be single non-empty tokens")
+    require(terms.distinct.size == terms.size,
+      "queryTerms must be distinct after normalisation")
+    terms
+  }
+
+  /** `term`'s tf in [[normText]] output: its whole-token occurrences. */
+  private[ops] def bm25Tf(norm: Column, term: String): Column =
+    regexp_count(concat(lit(" "), norm, lit(" ")),
+      lit("(?<= )" + java.util.regex.Pattern.quote(term) + "(?= )")).cast(LongType)
+
+  /** Okapi idf of a term in `df` of `nd` documents (longs), 9 dp. */
+  private[ops] def bm25Idf(nd: Column, df: Column): Column =
+    round(log((nd.cast(DoubleType) - df + lit(0.5)) / (df + lit(0.5)) + lit(1.0)), 9)
+
+  /** One term's Okapi score, 9 dp, as DECIMAL(28,9) (exactly 0 at tf 0):
+    * [[bm25Rank]] and [[BmIndex.score]] both score through it. */
+  private[ops] def bm25TermScore(tf: Column, idf: Column, dl: Column,
+                                 avgdl: Column, k1: Double, b: Double): Column =
+    when(tf === 0, lit(0.0)).otherwise(round(idf * (tf * lit(k1 + 1.0)) /
+      (tf + lit(k1) * (lit(1.0 - b) + lit(b) * dl / avgdl)), 9)).cast(DecimalType(28, 9))
 
   /** Corpus duplication health summary — the one-row dashboard number
     * the dedup family feeds: exact-duplicate group structure as doc and

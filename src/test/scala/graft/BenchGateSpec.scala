@@ -207,6 +207,12 @@ class BenchGateSpec extends AnyFunSuite {
     assert(Bench.priorRatios(dir).isEmpty)
   }
 
+  test("only a run in the pins' local[32] context replaces the prior-ratio state") {
+    assert(Bench.persistsPriorRatios(32))
+    for (cpus <- Seq(1, 4, 8, 16, 31, 33, 64))
+      assert(!Bench.persistsPriorRatios(cpus), s"$cpus cores must not overwrite it")
+  }
+
   test("the stdout line is scalars only and stays under 1 KB for the full headline set") {
     // worst case: every headline query timed, slow, and drifting for two
     // rounds; a long scale-factor path
