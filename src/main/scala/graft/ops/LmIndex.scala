@@ -29,27 +29,31 @@ import scala.collection.immutable.ListMap
   * artifact is exactly what `lmScoreWith`'s streaming contract wants: a
   * static reference the ingest pipeline probes micro-batch by micro-batch.
   *
-  * FORMAT VERSIONS. v1 (`meta.json` without a `version` field): the
-  * bigram layer only — every pre-r14 artifact. v2
-  * ([[buildWithTrigrams]]): adds `dir/counts3/…parquet`
-  * (w1, w2, w3, n — unpruned and additive like the bigram layer, same
-  * range-partitioned sorted layout) plus `minCount3`/`nTrigrams`
-  * metadata, serving stupid-backoff scoring ([[score3]] →
-  * [[TextOps.lmScore3With]]: trigram hit, else α-discounted bigram,
-  * else unk). v3 ([[buildWithOrders]], r15): adds `dir/counts4` and
-  * `dir/counts5` (per-order UNPRUNED additive counts, same layout
-  * discipline) plus `minCount4`/`n4grams`/`minCount5`/`n5grams`,
-  * serving the PRODUCTION backoff order ([[score5]] →
-  * [[TextOps.lmScore5With]]: 5-gram hit, else α^j-discounted lower
-  * orders 4→3→2, else unk — KenLM's default and the CCNet-lineage
-  * filtering order is 5). Readers are version-tolerant downward: v1/v2
-  * artifacts keep loading/scoring/merging exactly as before (higher-
-  * order entry points fail loudly on them), [[merge]] preserves
-  * whichever layout its input has — a v2/v3 merge re-counts ALL the
-  * new corpus's orders in ONE shared tokenisation pass — and
-  * every reader REJECTS artifacts stamped with a version above what
-  * this reader knows (a future v4 must fail loudly, not load silently
-  * under v3 semantics).
+  * FORMAT VERSIONS. Every version is a set of per-order LAYERS, each an
+  * unpruned additive count frame `dir/counts` (order 2) or `dir/countsK`
+  * (w1..wK, n — same range-partitioned sorted layout) plus its
+  * `minCount`/pruned-count pair in `meta.json`. v1 (`meta.json` without
+  * a `version` field): the bigram layer only — every pre-r14 artifact.
+  * v2 ([[buildWithTrigrams]]): adds the order-3 layer
+  * (`minCount3`/`nTrigrams`), serving stupid-backoff scoring
+  * ([[score3]]: trigram hit, else α-discounted bigram, else unk). v3
+  * ([[buildWithOrders]], r15): adds orders 4 and 5
+  * (`minCount4`/`n4grams`/`minCount5`/`n5grams`), serving the
+  * PRODUCTION backoff order ([[score5]] — KenLM's default and the
+  * CCNet-lineage filtering order is 5). One path serves every version:
+  * the builds and [[merge]] count all of an artifact's orders in one
+  * tokenisation ([[TextOps.countLayers]]) and write each layer through
+  * one writer; [[load]]/[[load3]]/[[load4]]/[[load5]] are one layer
+  * loader ([[TextOps.ngramStatsFromCounts]] over the layer); the
+  * scorers, cut recorders and bucketers are the order-generic core of
+  * [[TextOps]] ([[TextOps.lmScoreOf]], [[TextOps.quartileCuts]],
+  * [[TextOps.bucketBy]]) at the artifact's orders. Readers are
+  * version-tolerant downward: v1/v2 artifacts keep loading/scoring/
+  * merging exactly as before (higher-order entry points fail loudly on
+  * them), [[merge]] preserves whichever layout its input has, and every
+  * reader REJECTS artifacts stamped with a version above what this
+  * reader knows (a future v4 must fail loudly, not load silently under
+  * v3 semantics).
   */
 object LmIndex {
 
@@ -57,65 +61,48 @@ object LmIndex {
   val MaxVersion = 3L
 
   /** Train on `docs` and persist under `dir`. The artifact stores the
-    * UNPRUNED count frame ([[TextOps.bigramCounts]]) — counts are
-    * additive, so [[merge]] can fold new data in exactly; the pruned
-    * conditional probabilities [[load]] serves are derived from them
-    * with [[TextOps.statsFromCounts]] (a vocabulary-sized aggregation
+    * UNPRUNED count frame — counts are additive, so [[merge]] can fold
+    * new data in exactly; the pruned conditional probabilities [[load]]
+    * serves are derived from them with
+    * [[TextOps.ngramStatsFromCounts]] (a vocabulary-sized aggregation
     * per plan — the price of exact mergeability). `numFiles` bounds the
     * artifact's file count (vocabulary-sized data — a handful of sorted
     * files beats one file per shuffle partition). */
   def build(docs: DataFrame, dir: String, minCount: Long = 5,
             numFiles: Int = 4,
-            provenance: Option[ArtifactProvenance.Target] = None): Unit = {
-    val spark = docs.sparkSession
-    writeCountsData(TextOps.bigramCounts(docs), dir, numFiles)
-    putMeta(spark, dir, metaFromDisk(spark, dir, minCount, None))
-    ArtifactProvenance.stampArtifact(spark, dir, "lm-index", "build",
-      provenance)
-  }
+            provenance: Option[ArtifactProvenance.Target] = None): Unit =
+    buildLayers(docs, dir, Seq(2 -> minCount), numFiles, provenance)
 
   /** [[build]] plus the v2 trigram layer, from ONE corpus tokenisation:
-    * the pass emits each document's bigram AND trigram shingles into a
-    * single (k, gram)-keyed count (map-side combined — the shuffle
-    * carries one row per distinct gram per partition), which then splits
-    * into the two persisted layers. At 100 TB the corpus scan dominates
-    * an artifact build; paying it once for both orders is the point of
-    * building them together. */
+    * at 100 TB the corpus scan dominates an artifact build; paying it
+    * once for both orders is the point of building them together. */
   def buildWithTrigrams(docs: DataFrame, dir: String, minCount: Long = 5,
                         minCount3: Long = 3, numFiles: Int = 4,
-                        provenance: Option[ArtifactProvenance.Target] = None): Unit = {
-    val spark = docs.sparkSession
-    val kg = TextOps.ngramCounts23(docs)
-    // gram-vocabulary-sized, feeds two writes — cache so the corpus
-    // aggregation runs once, not once per layer
-    Caching.ensureCached(kg)
-    writeCountsData(TextOps.bigramCountsOf(kg), dir, numFiles)
-    writeCounts3Data(TextOps.trigramCountsOf(kg), dir, numFiles)
-    putMeta(spark, dir, metaFromDisk(spark, dir, minCount, Some(minCount3)))
-    ArtifactProvenance.stampArtifact(spark, dir, "lm-index", "build",
+                        provenance: Option[ArtifactProvenance.Target] = None): Unit =
+    buildLayers(docs, dir, Seq(2 -> minCount, 3 -> minCount3), numFiles,
       provenance)
-  }
 
   /** [[buildWithTrigrams]] extended to the v3 ORDER-5 layout: all four
-    * backoff layers (2, 3, 4, 5) from ONE corpus tokenisation
-    * ([[TextOps.ngramCountsUpTo]] — the pass emits every order's
-    * shingles into a single (k, gram)-keyed map-side-combined count),
-    * each layer persisted unpruned so [[merge]] stays an exact
-    * incremental retrain at every order. */
+    * backoff layers (2, 3, 4, 5) from ONE corpus tokenisation, each
+    * persisted unpruned so [[merge]] stays an exact incremental retrain
+    * at every order. */
   def buildWithOrders(docs: DataFrame, dir: String, minCount: Long = 5,
                       minCount3: Long = 3, minCount4: Long = 2,
                       minCount5: Long = 2, numFiles: Int = 4,
-                      provenance: Option[ArtifactProvenance.Target] = None): Unit = {
+                      provenance: Option[ArtifactProvenance.Target] = None): Unit =
+    buildLayers(docs, dir, Seq(2 -> minCount, 3 -> minCount3,
+      4 -> minCount4, 5 -> minCount5), numFiles, provenance)
+
+  /** Every build: each order's layer counted in one tokenisation and
+    * written, then the metadata recorded from the written layers. */
+  private def buildLayers(docs: DataFrame, dir: String,
+                          minCounts: Seq[(Int, Long)], numFiles: Int,
+                          provenance: Option[ArtifactProvenance.Target]): Unit = {
     val spark = docs.sparkSession
-    val kg = TextOps.ngramCountsUpTo(docs, 5)
-    // gram-vocabulary-sized, feeds four writes — cache so the corpus
-    // aggregation runs once, not once per layer
-    Caching.ensureCached(kg)
-    writeCountsData(TextOps.bigramCountsOf(kg), dir, numFiles)
-    (3 to 5).foreach(k =>
-      writeCountsKData(TextOps.ngramCountsOf(kg, k), dir, k, numFiles))
-    putMeta(spark, dir, metaFromDisk(spark, dir, minCount,
-      Some(minCount3), Some(minCount4), Some(minCount5)))
+    TextOps.countLayers(docs, minCounts.map(_._1)).foreach { case (k, counts) =>
+      writeLayer(counts, dir, k, numFiles)
+    }
+    putMeta(spark, dir, metaFromDisk(spark, dir, minCounts))
     ArtifactProvenance.stampArtifact(spark, dir, "lm-index", "build",
       provenance)
   }
@@ -142,20 +129,13 @@ object LmIndex {
     // a per-language filtered build would pay it once per language).
     // The keyed count frame is (lang, gram)-vocabulary-sized — cache it
     // so the per-language writes split a materialised frame.
-    val counts = TextOps.bigramCountsByKey(docs, langCol)
+    val counts = langCounts(docs, langCol)
     Caching.ensureCached(counts)
     val langs = counts.select(col(langCol).cast("string")).distinct()
       .collect().map(_.getString(0)).sorted.toSeq
     require(langs.nonEmpty, "no non-null language labels to train on")
-    langs.foreach { l =>
-      require(l.matches("[A-Za-z0-9_-]+"),
-        s"language '$l' is not a path-safe token — refusing to write it " +
-          "into an artifact directory name")
-      val sub = s"$dir/lang=$l"
-      writeCountsData(counts.filter(col(langCol) === l).drop(langCol),
-        sub, numFiles)
-      putMeta(spark, sub, metaFromDisk(spark, sub, minCount, None))
-    }
+    langs.foreach(l => writeLang(spark, dir, l,
+      counts.filter(col(langCol) === l).drop(langCol), minCount, numFiles))
     ArtifactMeta.write(spark, dir, "langs.json", Langs(langs.toList, minCount))
     ArtifactProvenance.stampArtifact(spark, dir, "lm-index-perlang", "build",
       provenance)
@@ -176,29 +156,42 @@ object LmIndex {
                    provenance: Option[ArtifactProvenance.Target] = None): Unit = {
     ArtifactPaths.requireDistinct(spark, dir, outDir)
     val Langs(stored, minCount) = langsMeta(spark, dir)
-    val fresh = TextOps.bigramCountsByKey(newDocs, langCol)
+    val fresh = langCounts(newDocs, langCol)
     Caching.ensureCached(fresh)
     val newLangs = fresh.select(col(langCol).cast("string")).distinct()
       .collect().map(_.getString(0)).toSeq
     val all = (stored ++ newLangs).distinct.sorted
     all.foreach { l =>
-      require(l.matches("[A-Za-z0-9_-]+"),
-        s"language '$l' is not a path-safe token — refusing to write it " +
-          "into an artifact directory name")
       val freshSlice = fresh.filter(col(langCol) === l).drop(langCol)
+      val storedPath = countsPath(s"$dir/lang=$l", 2)
       val combined =
         if (!stored.contains(l)) freshSlice
-        else if (!newLangs.contains(l)) Sources.parquet(spark, s"$dir/lang=$l/counts")
-        else Sources.parquet(spark, s"$dir/lang=$l/counts")
-          .unionByName(freshSlice)
-          .groupBy(col("w1"), col("w2")).agg(sum(col("n")).as("n"))
-      val sub = s"$outDir/lang=$l"
-      writeCountsData(combined, sub, numFiles)
-      putMeta(spark, sub, metaFromDisk(spark, sub, minCount, None))
+        else if (!newLangs.contains(l)) Sources.parquet(spark, storedPath)
+        else mergedLayer(spark, storedPath, freshSlice, 2)
+      writeLang(spark, outDir, l, combined, minCount, numFiles)
     }
     ArtifactMeta.write(spark, outDir, "langs.json", Langs(all.toList, minCount))
     ArtifactProvenance.stampArtifact(spark, outDir, "lm-index-perlang",
       "merge", provenance)
+  }
+
+  /** Bigram counts keyed by language, `(langCol, w1, w2, n)`, from one
+    * tokenisation; null-language rows train nothing. */
+  private def langCounts(docs: DataFrame, langCol: String): DataFrame =
+    TextOps.ngramCounts(docs.filter(col(langCol).isNotNull), Seq(2),
+      Seq(col(langCol)))
+
+  /** Write language `l`'s bigram layer and its metadata under
+    * `dir/lang=<l>`, refusing a code that is not a path-safe token. */
+  private def writeLang(spark: SparkSession, dir: String, l: String,
+                        counts: DataFrame, minCount: Long,
+                        numFiles: Int): Unit = {
+    require(l.matches("[A-Za-z0-9_-]+"),
+      s"language '$l' is not a path-safe token — refusing to write it " +
+        "into an artifact directory name")
+    val sub = s"$dir/lang=$l"
+    writeLayer(counts, sub, 2, numFiles)
+    putMeta(spark, sub, metaFromDisk(spark, sub, Seq(2 -> minCount)))
   }
 
   /** The language set a [[buildPerLang]] artifact carries. */
@@ -232,19 +225,17 @@ object LmIndex {
                   broadcastMaxRows: Long = 4L << 20,
                   freshAgainst: Option[DataFrame] = None): DataFrame = {
     ArtifactProvenance.checkFresh(spark, dir, freshAgainst)
-    val ls = langs(spark, dir)
-    val stats = ls.map { l =>
-      val sub = s"$dir/lang=$l"
-      val m = metaOf(spark, sub)
+    val metas = langs(spark, dir).map(l => l -> metaOf(spark, s"$dir/lang=$l"))
+    val stats = metas.map { case (l, m) =>
       // Exact variant: per-language continuation totals land on .5e-6
       // probability boundaries routinely (see statsFromCountsExact)
-      TextOps.statsFromCountsExact(Sources.parquet(spark, s"$sub/counts"),
-          m.minCount)
+      TextOps.statsFromCountsExact(
+          Sources.parquet(spark, countsPath(s"$dir/lang=$l", 2)), m.minCount)
         .select(lit(l).as(langCol), col("w1"), col("w2"), col("p_cond"))
     }.reduce(_.unionByName(_))
     // broadcast decision from the RECORDED pruned counts (zero jobs),
     // summed across languages — the union is what the join ships
-    val total = ls.map(l => metaOf(spark, s"$dir/lang=$l").nBigrams).sum
+    val total = metas.map(_._2.nBigrams).sum
     val hinted = if (total <= broadcastMaxRows) broadcast(stats) else stats
     TextOps.lmScoreByKeyWith(docs, hinted, langCol, unkLogP)
   }
@@ -267,177 +258,79 @@ object LmIndex {
     // counts before the lazy union plan reads them, losing the artifact
     ArtifactPaths.requireDistinct(spark, dir, outDir)
     val m = metaOf(spark, dir)
-    val maxOrder =
-      if (m.minCount5.isDefined) 5 else if (m.minCount3.isDefined) 3 else 2
-    def mergeLayer(path: String, fresh: DataFrame, k: Int): DataFrame = {
-      val keys = (1 to k).map(i => col(s"w$i"))
-      Sources.parquet(spark, path).unionByName(fresh)
-        .groupBy(keys: _*).agg(sum(col("n")).as("n"))
+    val minCounts = m.orders.map(k => k -> m.layer(k).get._1)
+    TextOps.countLayers(newDocs, m.orders).foreach { case (k, fresh) =>
+      writeLayer(mergedLayer(spark, countsPath(dir, k), fresh, k), outDir, k,
+        numFiles)
     }
-    if (maxOrder == 2)
-      writeCountsData(
-        mergeLayer(s"$dir/counts", TextOps.bigramCounts(newDocs), 2),
-        outDir, numFiles)
-    else {
-      // v2/v3: the new corpus pays ONE tokenisation for every layer,
-      // exactly like the multi-order builds
-      val kg = TextOps.ngramCountsUpTo(newDocs, maxOrder)
-      Caching.ensureCached(kg)
-      writeCountsData(
-        mergeLayer(s"$dir/counts", TextOps.bigramCountsOf(kg), 2),
-        outDir, numFiles)
-      (3 to maxOrder).foreach(k => writeCountsKData(
-        mergeLayer(countsPath(dir, k), TextOps.ngramCountsOf(kg, k), k),
-        outDir, k, numFiles))
-    }
-    putMeta(spark, outDir, metaFromDisk(spark, outDir, m.minCount,
-      m.minCount3, m.minCount4, m.minCount5))
+    putMeta(spark, outDir, metaFromDisk(spark, outDir, minCounts))
     ArtifactProvenance.stampArtifact(spark, outDir, "lm-index", "merge",
       provenance)
   }
+
+  /** The persisted order-`k` counts at `path` plus `fresh` counts. */
+  private def mergedLayer(spark: SparkSession, path: String, fresh: DataFrame,
+                          k: Int): DataFrame =
+    Sources.parquet(spark, path).unionByName(fresh)
+      .groupBy((1 to k).map(i => col(s"w$i")): _*).agg(sum(col("n")).as("n"))
 
   /** The model stats frame `(w1, w2, n, p_cond)` derived from the
     * persisted counts, broadcast-hinted when the recorded pruned row
     * count is at most `broadcastMaxRows` (decided from metadata — zero
     * jobs). */
   def load(spark: SparkSession, dir: String,
-           broadcastMaxRows: Long = 4L << 20): DataFrame = {
-    val m = metaOf(spark, dir)
-    val df = TextOps.statsFromCounts(
-      Sources.parquet(spark, s"$dir/counts"), m.minCount)
-    if (m.nBigrams <= broadcastMaxRows) broadcast(df) else df
-  }
+           broadcastMaxRows: Long = 4L << 20): DataFrame =
+    loadLayer(spark, dir, metaOf(spark, dir), 2, broadcastMaxRows)
 
   /** The trigram stats frame `(w1, w2, w3, n, p_cond)` from a v2
     * artifact, broadcast-hinted from the recorded pruned count exactly
     * like [[load]]. Loud on v1 artifacts — a silently-empty trigram
     * layer would back every document off to the bigram floor. */
   def load3(spark: SparkSession, dir: String,
-            broadcastMaxRows: Long = 4L << 20): DataFrame = {
-    val m = metaOf(spark, dir)
-    require(m.minCount3.isDefined,
-      s"$dir has no trigram layer (v1 artifact) — rebuild with " +
-        "buildWithTrigrams to enable backoff scoring")
-    val df = TextOps.trigramStatsFromCounts(
-      Sources.parquet(spark, s"$dir/counts3"), m.minCount3.get)
-    if (m.nTrigrams.getOrElse(Long.MaxValue) <= broadcastMaxRows)
-      broadcast(df)
-    else df
-  }
-
-  /** Stupid-backoff scoring against the persisted v2 model —
-    * [[TextOps.lmScore3With]] over [[load3]]+[[load]]; stream-safe the
-    * same way [[score]] is. */
-  def score3(spark: SparkSession, dir: String, docs: DataFrame,
-             alpha: Double = 0.4, unkLogP: Double = -10.0,
-             broadcastMaxRows: Long = 4L << 20,
-             freshAgainst: Option[DataFrame] = None): DataFrame = {
-    ArtifactProvenance.checkFresh(spark, dir, freshAgainst)
-    TextOps.lmScore3With(docs, load3(spark, dir, broadcastMaxRows),
-      load(spark, dir, broadcastMaxRows), alpha, unkLogP)
-  }
+            broadcastMaxRows: Long = 4L << 20): DataFrame =
+    loadLayer(spark, dir, metaOf(spark, dir), 3, broadcastMaxRows)
 
   /** The order-4 stats frame `(w1..w4, n, p_cond)` from a v3 artifact —
     * [[load3]]'s contract one order up; loud below v3. */
   def load4(spark: SparkSession, dir: String,
             broadcastMaxRows: Long = 4L << 20): DataFrame =
-    loadK(spark, dir, 4, broadcastMaxRows)
+    loadLayer(spark, dir, metaOf(spark, dir), 4, broadcastMaxRows)
 
   /** The order-5 stats frame `(w1..w5, n, p_cond)` from a v3 artifact;
     * loud below v3. */
   def load5(spark: SparkSession, dir: String,
             broadcastMaxRows: Long = 4L << 20): DataFrame =
-    loadK(spark, dir, 5, broadcastMaxRows)
+    loadLayer(spark, dir, metaOf(spark, dir), 5, broadcastMaxRows)
 
-  private def loadK(spark: SparkSession, dir: String, k: Int,
-                    broadcastMaxRows: Long): DataFrame = {
-    val m = metaOf(spark, dir)
-    val (mc, n) = k match {
-      case 4 => (m.minCount4, m.n4grams)
-      case _ => (m.minCount5, m.n5grams)
-    }
-    require(mc.isDefined,
-      s"$dir has no order-$k layer (pre-v3 artifact) — rebuild with " +
-        "buildWithOrders to enable order-5 backoff scoring")
+  /** The order-`k` layer's stats frame under its recorded prune,
+    * broadcast-hinted when its recorded pruned count is at most
+    * `broadcastMaxRows` (each layer decides on its own: a web-scale
+    * 5-gram layer falls back to a shuffle join while the bigram layer
+    * still broadcasts). Loud when the artifact lacks the layer. */
+  private def loadLayer(spark: SparkSession, dir: String, m: Meta, k: Int,
+                        broadcastMaxRows: Long): DataFrame = {
+    val (minCount, pruned) = m.layer(k).getOrElse(throw new IllegalArgumentException(
+      if (k == 3) s"$dir has no trigram layer (v1 artifact) — rebuild with " +
+        "buildWithTrigrams to enable backoff scoring"
+      else s"$dir has no order-$k layer (pre-v3 artifact) — rebuild with " +
+        "buildWithOrders to enable order-5 backoff scoring"))
     val df = TextOps.ngramStatsFromCounts(
-      Sources.parquet(spark, countsPath(dir, k)), k, mc.get)
-    if (n.getOrElse(Long.MaxValue) <= broadcastMaxRows) broadcast(df) else df
+      Sources.parquet(spark, countsPath(dir, k)), k, minCount)
+    if (pruned.getOrElse(Long.MaxValue) <= broadcastMaxRows) broadcast(df) else df
   }
 
-  /** Order-5 stupid-backoff scoring against the persisted v3 model —
-    * [[TextOps.lmScore5With]] over all four layers, each broadcast-
-    * decided at PLAN time from its own recorded pruned count (a
-    * web-scale 5-gram layer falls back to a shuffle join while the
-    * bigram layer still broadcasts); stream-safe like [[score]]. */
-  def score5(spark: SparkSession, dir: String, docs: DataFrame,
-             alpha: Double = 0.4, unkLogP: Double = -10.0,
-             broadcastMaxRows: Long = 4L << 20,
-             freshAgainst: Option[DataFrame] = None): DataFrame = {
+  /** Order-`k` stupid-backoff scoring against the persisted layers `k`
+    * down to 2 ([[TextOps.lmScoreOf]]); stream-safe (stream-static joins
+    * plus one stateful aggregation). */
+  private def scoreAt(spark: SparkSession, dir: String, docs: DataFrame,
+                      k: Int, alpha: Double, unkLogP: Double,
+                      broadcastMaxRows: Long,
+                      freshAgainst: Option[DataFrame]): DataFrame = {
     ArtifactProvenance.checkFresh(spark, dir, freshAgainst)
-    TextOps.lmScore5With(docs,
-      load5(spark, dir, broadcastMaxRows), load4(spark, dir, broadcastMaxRows),
-      load3(spark, dir, broadcastMaxRows), load(spark, dir, broadcastMaxRows),
+    val m = metaOf(spark, dir)
+    TextOps.lmScoreOf(docs,
+      (k to 2 by -1).map(loadLayer(spark, dir, m, _, broadcastMaxRows)),
       alpha, unkLogP)
-  }
-
-  /** The v2 layer's recorded `(minCount3, nTrigrams)`, `None` on v1. */
-  def meta3(spark: SparkSession, dir: String): Option[(Long, Long)] = {
-    val m = metaOf(spark, dir)
-    for (mc <- m.minCount3; n <- m.nTrigrams) yield (mc, n)
-  }
-
-  /** The v3 layers' recorded `(minCount4, n4grams, minCount5, n5grams)`,
-    * `None` below v3. */
-  def meta5(spark: SparkSession, dir: String): Option[(Long, Long, Long, Long)] = {
-    val m = metaOf(spark, dir)
-    for (m4 <- m.minCount4; n4 <- m.n4grams; m5 <- m.minCount5; n5 <- m.n5grams)
-      yield (m4, n4, m5, n5)
-  }
-
-  private def countsPath(dir: String, k: Int): String =
-    if (k == 2) s"$dir/counts" else s"$dir/counts$k"
-
-  private def writeCountsData(counts: DataFrame, dir: String,
-                              numFiles: Int): Unit = {
-    require(numFiles > 0, "numFiles must be positive")
-    counts
-      .repartitionByRange(numFiles, col("w1"), col("w2"))
-      .sortWithinPartitions(col("w1"), col("w2"))
-      .write.mode("overwrite").parquet(s"$dir/counts")
-  }
-
-  /** One order-`k` layer under the family layout discipline:
-    * range-partitioned and sorted on the full gram key (sorted runs
-    * compress well; parquet min/max prunes point lookups). */
-  private def writeCountsKData(counts: DataFrame, dir: String, k: Int,
-                               numFiles: Int): Unit = {
-    require(numFiles > 0, "numFiles must be positive")
-    val keys = (1 to k).map(i => col(s"w$i"))
-    counts
-      .repartitionByRange(numFiles, keys: _*)
-      .sortWithinPartitions(keys: _*)
-      .write.mode("overwrite").parquet(countsPath(dir, k))
-  }
-
-  private def writeCounts3Data(counts: DataFrame, dir: String,
-                               numFiles: Int): Unit =
-    writeCountsKData(counts, dir, 3, numFiles)
-
-  /** Pruned row counts read back from the just-written layers — the
-    * broadcast decision is about the frames the scoring joins actually
-    * see (one vocabulary-sized job per layer, at build time only). */
-  private def metaFromDisk(spark: SparkSession, dir: String, minCount: Long,
-                           minCount3: Option[Long],
-                           minCount4: Option[Long] = None,
-                           minCount5: Option[Long] = None): Meta = {
-    val n = TextOps.statsFromCounts(
-      Sources.parquet(spark, s"$dir/counts"), minCount).count()
-    def prunedCount(k: Int, mc: Option[Long]): Option[Long] =
-      mc.map(m => TextOps.ngramStatsFromCounts(
-        Sources.parquet(spark, countsPath(dir, k)), k, m).count())
-    Meta(minCount, n, None, minCount3, prunedCount(3, minCount3),
-      minCount4 = minCount4, n4grams = prunedCount(4, minCount4),
-      minCount5 = minCount5, n5grams = prunedCount(5, minCount5))
   }
 
   /** Score documents against the persisted reference model —
@@ -447,10 +340,27 @@ object LmIndex {
   def score(spark: SparkSession, dir: String, docs: DataFrame,
             unkLogP: Double = -10.0,
             broadcastMaxRows: Long = 4L << 20,
-            freshAgainst: Option[DataFrame] = None): DataFrame = {
-    ArtifactProvenance.checkFresh(spark, dir, freshAgainst)
-    TextOps.lmScoreWith(docs, load(spark, dir, broadcastMaxRows), unkLogP)
-  }
+            freshAgainst: Option[DataFrame] = None): DataFrame =
+    scoreAt(spark, dir, docs, 2, 1.0, unkLogP, broadcastMaxRows, freshAgainst)
+
+  /** Stupid-backoff scoring against the persisted v2 model —
+    * [[TextOps.lmScore3With]] over [[load3]]+[[load]]; stream-safe the
+    * same way [[score]] is. */
+  def score3(spark: SparkSession, dir: String, docs: DataFrame,
+             alpha: Double = 0.4, unkLogP: Double = -10.0,
+             broadcastMaxRows: Long = 4L << 20,
+             freshAgainst: Option[DataFrame] = None): DataFrame =
+    scoreAt(spark, dir, docs, 3, alpha, unkLogP, broadcastMaxRows, freshAgainst)
+
+  /** Order-5 stupid-backoff scoring against the persisted v3 model —
+    * [[TextOps.lmScore5With]] over all four layers, each broadcast-
+    * decided at PLAN time from its own recorded pruned count;
+    * stream-safe like [[score]]. */
+  def score5(spark: SparkSession, dir: String, docs: DataFrame,
+             alpha: Double = 0.4, unkLogP: Double = -10.0,
+             broadcastMaxRows: Long = 4L << 20,
+             freshAgainst: Option[DataFrame] = None): DataFrame =
+    scoreAt(spark, dir, docs, 5, alpha, unkLogP, broadcastMaxRows, freshAgainst)
 
   /** The artifact's recorded `(minCount, nBigrams)`. */
   def meta(spark: SparkSession, dir: String): (Long, Long) = {
@@ -458,111 +368,94 @@ object LmIndex {
     (m.minCount, m.nBigrams)
   }
 
+  /** The v2 layer's recorded `(minCount3, nTrigrams)`, `None` on v1. */
+  def meta3(spark: SparkSession, dir: String): Option[(Long, Long)] =
+    metaOf(spark, dir).layer(3).collect { case (mc, Some(n)) => (mc, n) }
+
+  /** The v3 layers' recorded `(minCount4, n4grams, minCount5, n5grams)`,
+    * `None` below v3. */
+  def meta5(spark: SparkSession, dir: String): Option[(Long, Long, Long, Long)] = {
+    val m = metaOf(spark, dir)
+    for ((m4, Some(n4)) <- m.layer(4); (m5, Some(n5)) <- m.layer(5))
+      yield (m4, n4, m5, n5)
+  }
+
+  private def countsPath(dir: String, k: Int): String =
+    if (k == 2) s"$dir/counts" else s"$dir/counts$k"
+
+  /** One order-`k` layer under the family layout discipline:
+    * range-partitioned and sorted on the full gram key (sorted runs
+    * compress well; parquet min/max prunes point lookups). */
+  private def writeLayer(counts: DataFrame, dir: String, k: Int,
+                         numFiles: Int): Unit = {
+    require(numFiles > 0, "numFiles must be positive")
+    val keys = (1 to k).map(i => col(s"w$i"))
+    counts
+      .repartitionByRange(numFiles, keys: _*)
+      .sortWithinPartitions(keys: _*)
+      .write.mode("overwrite").parquet(countsPath(dir, k))
+  }
+
+  /** Pruned row counts read back from the just-written layers — the
+    * broadcast decision is about the frames the scoring joins actually
+    * see (one vocabulary-sized job per layer, at build time only). */
+  private def metaFromDisk(spark: SparkSession, dir: String,
+                           minCounts: Seq[(Int, Long)]): Meta = {
+    val mc = minCounts.toMap
+    val pruned = minCounts.map { case (k, m) => k -> TextOps.ngramStatsFromCounts(
+      Sources.parquet(spark, countsPath(dir, k)), k, m).count() }.toMap
+    Meta(mc(2), pruned(2), None, mc.get(3), pruned.get(3),
+      minCount4 = mc.get(4), n4grams = pruned.get(4),
+      minCount5 = mc.get(5), n5grams = pruned.get(5))
+  }
+
   /** Score a calibration corpus under the artifact and RECORD its
     * quartile cut points into the metadata — after which [[bucket]] is a
     * stateless online operation. This is CCNet's actual deployment
     * shape: the percentile computation (a corpus-wide aggregation with
     * no streaming equivalent) runs once per calibration snapshot; every
-    * later batch or stream compares against FIXED cuts. Quartiles, not
-    * CCNet's terciles, for the same engine-exactness reason as
-    * [[TextOps.perplexityBuckets]] (quarter fractions interpolate
-    * bit-identically; a third does not). */
+    * later batch or stream compares against FIXED cuts
+    * ([[TextOps.quartileCuts]]: quartiles for engine-exactness). */
   def recordCuts(spark: SparkSession, dir: String, calibration: DataFrame,
-                 unkLogP: Double = -10.0): Unit = {
-    val row = score(spark, dir, calibration, unkLogP)
-      .filter(col("n_bigrams") > 0)
-      .agg(round(percentile(col("avg_logp"), lit(0.25)), 6).as("p25"),
-        round(percentile(col("avg_logp"), lit(0.75)), 6).as("p75"))
-      .collect()(0)
-    require(!row.isNullAt(0), "calibration corpus produced no scorable document")
-    val m = metaOf(spark, dir)
-    putMeta(spark, dir,
-      m.copy(cuts = Some((row.getDouble(0), row.getDouble(1)))))
-  }
+                 unkLogP: Double = -10.0): Unit =
+    recordCutsAt(spark, dir, calibration, 2, 1.0, unkLogP)
 
   /** The recorded `(p25, p75)` cut points, if [[recordCuts]] ran. */
   def cuts(spark: SparkSession, dir: String): Option[(Double, Double)] =
-    metaOf(spark, dir).cuts
+    metaOf(spark, dir).cutsAt(2)
 
-  /** [[recordCuts]] for the ORDER-3 score distribution: quartile cuts
-    * of [[score3]] over a calibration corpus, stored as a separate
-    * `(p25_3, p75_3)` pair — backoff scores live on a different scale
-    * than bigram scores (trigram hits score near ln 1, backed-off terms
-    * carry the α discount), so sharing one cut pair would misbucket
-    * both. Requires the v2 trigram layer ([[load3]]'s loud contract);
-    * preserves every other metadata field, including the bigram cuts. */
+  /** [[recordCuts]] for the ORDER-3 score distribution, stored as a
+    * separate `(p25_3, p75_3)` pair — backoff scores live on a different
+    * scale than bigram scores (trigram hits score near ln 1, backed-off
+    * terms carry the α discount), so sharing one cut pair would
+    * misbucket both. Requires the v2 trigram layer; preserves every other
+    * metadata field, including the bigram cuts. */
   def recordCuts3(spark: SparkSession, dir: String, calibration: DataFrame,
-                  alpha: Double = 0.4, unkLogP: Double = -10.0): Unit = {
-    val row = score3(spark, dir, calibration, alpha, unkLogP)
-      .filter(col("n_trigrams") > 0)
-      .agg(round(percentile(col("avg_logp3"), lit(0.25)), 6).as("p25"),
-        round(percentile(col("avg_logp3"), lit(0.75)), 6).as("p75"))
-      .collect()(0)
-    require(!row.isNullAt(0), "calibration corpus produced no scorable document")
-    val m = metaOf(spark, dir)
-    putMeta(spark, dir,
-      m.copy(cuts3 = Some((row.getDouble(0), row.getDouble(1)))))
-  }
+                  alpha: Double = 0.4, unkLogP: Double = -10.0): Unit =
+    recordCutsAt(spark, dir, calibration, 3, alpha, unkLogP)
 
   /** The recorded order-3 cut points, if [[recordCuts3]] ran. */
   def cuts3(spark: SparkSession, dir: String): Option[(Double, Double)] =
-    metaOf(spark, dir).cuts3
+    metaOf(spark, dir).cutsAt(3)
 
-  /** [[recordCuts3]] at order 5: quartile cuts of [[score5]] over a
-    * calibration corpus, stored as their own `(p25_5, p75_5)` pair —
-    * each order's backoff scores live on their own scale. Requires the
-    * v3 layers; preserves every other metadata field. */
+  /** [[recordCuts3]] at order 5, stored as its own `(p25_5, p75_5)` pair.
+    * Requires the v3 layers; preserves every other metadata field. */
   def recordCuts5(spark: SparkSession, dir: String, calibration: DataFrame,
-                  alpha: Double = 0.4, unkLogP: Double = -10.0): Unit = {
-    val row = score5(spark, dir, calibration, alpha, unkLogP)
-      .filter(col("n_5grams") > 0)
-      .agg(round(percentile(col("avg_logp5"), lit(0.25)), 6).as("p25"),
-        round(percentile(col("avg_logp5"), lit(0.75)), 6).as("p75"))
-      .collect()(0)
-    require(!row.isNullAt(0), "calibration corpus produced no scorable document")
-    val m = metaOf(spark, dir)
-    putMeta(spark, dir,
-      m.copy(cuts5 = Some((row.getDouble(0), row.getDouble(1)))))
-  }
+                  alpha: Double = 0.4, unkLogP: Double = -10.0): Unit =
+    recordCutsAt(spark, dir, calibration, 5, alpha, unkLogP)
 
   /** The recorded order-5 cut points, if [[recordCuts5]] ran. */
   def cuts5(spark: SparkSession, dir: String): Option[(Double, Double)] =
-    metaOf(spark, dir).cuts5
+    metaOf(spark, dir).cutsAt(5)
 
-  /** [[bucket3]] at order 5 — the CCNet head/middle/tail split under
-    * the production model order, against [[recordCuts5]]'s frozen
-    * quartiles: a pure post-scoring projection, stream-safe like
-    * [[score5]]; documents with fewer than 5 tokens bucket `unscored`. */
-  def bucket5(spark: SparkSession, dir: String, docs: DataFrame,
-              alpha: Double = 0.4, unkLogP: Double = -10.0): DataFrame = {
-    val (p25, p75) = cuts5(spark, dir).getOrElse(
-      throw new IllegalStateException(
-        s"$dir has no recorded order-5 cuts — run recordCuts5 first"))
-    score5(spark, dir, docs, alpha, unkLogP)
-      .withColumn("bucket",
-        when(col("n_5grams") === 0, lit("unscored"))
-          .when(col("avg_logp5") >= p75, lit("head"))
-          .when(col("avg_logp5") >= p25, lit("middle"))
-          .otherwise(lit("tail")))
-      .select(col("doc_id"), col("n_5grams"), col("avg_logp5"), col("bucket"))
-  }
-
-  /** [[bucket]] under the ORDER-3 cuts: head/middle/tail by the
-    * stupid-backoff score against [[recordCuts3]]'s frozen quartiles —
-    * a pure post-scoring projection, stream-safe like [[score3]];
-    * documents with fewer than 3 tokens bucket `unscored`. */
-  def bucket3(spark: SparkSession, dir: String, docs: DataFrame,
-              alpha: Double = 0.4, unkLogP: Double = -10.0): DataFrame = {
-    val (p25, p75) = cuts3(spark, dir).getOrElse(
-      throw new IllegalStateException(
-        s"$dir has no recorded order-3 cuts — run recordCuts3 first"))
-    score3(spark, dir, docs, alpha, unkLogP)
-      .withColumn("bucket",
-        when(col("n_trigrams") === 0, lit("unscored"))
-          .when(col("avg_logp3") >= p75, lit("head"))
-          .when(col("avg_logp3") >= p25, lit("middle"))
-          .otherwise(lit("tail")))
-      .select(col("doc_id"), col("n_trigrams"), col("avg_logp3"), col("bucket"))
+  private def recordCutsAt(spark: SparkSession, dir: String,
+                           calibration: DataFrame, k: Int, alpha: Double,
+                           unkLogP: Double): Unit = {
+    val row = TextOps.quartileCuts(scoreAt(spark, dir, calibration, k, alpha,
+      unkLogP, 4L << 20, None), k).collect()(0)
+    require(!row.isNullAt(0), "calibration corpus produced no scorable document")
+    putMeta(spark, dir,
+      metaOf(spark, dir).withCuts(k, (row.getDouble(0), row.getDouble(1))))
   }
 
   /** Head/middle/tail bucketing against the artifact's RECORDED cuts —
@@ -573,17 +466,29 @@ object LmIndex {
     * reproduces perplexityBuckets row for row; the point of the split is
     * bucketing NEW data against a frozen reference distribution. */
   def bucket(spark: SparkSession, dir: String, docs: DataFrame,
-             unkLogP: Double = -10.0): DataFrame = {
-    val (p25, p75) = cuts(spark, dir).getOrElse(
-      throw new IllegalStateException(
-        s"$dir has no recorded cuts — run recordCuts first"))
-    score(spark, dir, docs, unkLogP)
-      .withColumn("bucket",
-        when(col("n_bigrams") === 0, lit("unscored"))
-          .when(col("avg_logp") >= p75, lit("head"))
-          .when(col("avg_logp") >= p25, lit("middle"))
-          .otherwise(lit("tail")))
-      .select(col("doc_id"), col("n_bigrams"), col("avg_logp"), col("bucket"))
+             unkLogP: Double = -10.0): DataFrame =
+    bucketAt(spark, dir, docs, 2, 1.0, unkLogP)
+
+  /** [[bucket]] under the ORDER-3 cuts ([[recordCuts3]]); documents with
+    * fewer than 3 tokens bucket `unscored`. */
+  def bucket3(spark: SparkSession, dir: String, docs: DataFrame,
+              alpha: Double = 0.4, unkLogP: Double = -10.0): DataFrame =
+    bucketAt(spark, dir, docs, 3, alpha, unkLogP)
+
+  /** [[bucket]] under the ORDER-5 cuts ([[recordCuts5]]); documents with
+    * fewer than 5 tokens bucket `unscored`. */
+  def bucket5(spark: SparkSession, dir: String, docs: DataFrame,
+              alpha: Double = 0.4, unkLogP: Double = -10.0): DataFrame =
+    bucketAt(spark, dir, docs, 5, alpha, unkLogP)
+
+  private def bucketAt(spark: SparkSession, dir: String, docs: DataFrame,
+                       k: Int, alpha: Double, unkLogP: Double): DataFrame = {
+    val (p25, p75) = metaOf(spark, dir).cutsAt(k).getOrElse(
+      throw new IllegalStateException(s"$dir has no recorded " +
+        (if (k == 2) "cuts — run recordCuts first"
+        else s"order-$k cuts — run recordCuts$k first")))
+    TextOps.bucketBy(scoreAt(spark, dir, docs, k, alpha, unkLogP, 4L << 20, None),
+      k, lit(p25), lit(p75))
   }
 
   private[ops] final case class Meta(minCount: Long, nBigrams: Long,
@@ -595,7 +500,28 @@ object LmIndex {
                                      n4grams: Option[Long] = None,
                                      minCount5: Option[Long] = None,
                                      n5grams: Option[Long] = None,
-                                     cuts5: Option[(Double, Double)] = None)
+                                     cuts5: Option[(Double, Double)] = None) {
+    /** The order-`k` layer's `(minCount, pruned count)`, if present. */
+    def layer(k: Int): Option[(Long, Option[Long])] = k match {
+      case 2 => Some((minCount, Some(nBigrams)))
+      case 3 => minCount3.map((_, nTrigrams))
+      case 4 => minCount4.map((_, n4grams))
+      case 5 => minCount5.map((_, n5grams))
+      case _ => None
+    }
+
+    /** The orders whose layers the artifact carries. */
+    def orders: Seq[Int] = (2 to 5).filter(layer(_).isDefined)
+
+    def cutsAt(k: Int): Option[(Double, Double)] =
+      k match { case 2 => cuts case 3 => cuts3 case 5 => cuts5 case _ => None }
+
+    def withCuts(k: Int, c: (Double, Double)): Meta = k match {
+      case 2 => copy(cuts = Some(c))
+      case 3 => copy(cuts3 = Some(c))
+      case 5 => copy(cuts5 = Some(c))
+    }
+  }
 
   private def putMeta(spark: SparkSession, dir: String, m: Meta): Unit = {
     def cutsOf(key: String, c: Option[(Double, Double)]) =

@@ -802,71 +802,97 @@ object TextOps {
           .as("cum_share"))
   }
 
-  /** Corpus bigram language-model statistics: count and conditional
-    * probability `P(w2 | w1) = c(w1 w2) / Σ_w c(w1 w)` for every bigram
-    * occurring at least `minCount` times — the KenLM-style corpus-stats
-    * primitive (fluency scoring, domain drift, generation-artifact
-    * detection) at whatever scale the corpus is.
-    *
-    * Scale shape: one tokenisation pass feeds a bigram-keyed count
-    * (map-side combined — the shuffle carries one row per distinct bigram
-    * per partition), the `w1` denominators are a second aggregation over
-    * the already-aggregated bigram frame (vocabulary-sized, never the
-    * corpus), and `minCount` filters AFTER the denominator join so
-    * probabilities stay normalised over all continuations. */
-  def bigramLm(docs: DataFrame, minCount: Long = 5): DataFrame = {
-    val counts = bigramCounts(docs)
-    // persisted + eagerly materialised (NOTE: building this frame runs the
-    // corpus aggregation as a construction-time job — plan-only callers
-    // pay it too): `counts` feeds both the output join
-    // and the denominator aggregation — without this the plan re-tokenises
-    // the whole corpus for each consumer (no exchange reuse across the two
-    // subtrees). The cached frame is bigram-vocabulary-sized, not
-    // corpus-sized. Cached until the ContextCleaner GCs it; loop callers
-    // should clearCache() between batches.
-    Caching.ensureCached(counts)
-    statsFromCounts(counts, minCount)
-  }
+  // ---- n-gram language models ----
+  //
+  // The LM family (CCNet's perplexity proxy, DSIR importance scoring and
+  // the persisted [[LmIndex]]) runs every order through one core:
+  // [[gramStream]] tokenises and shingles once at any set of orders,
+  // [[ngramCounts]] counts it, [[ngramStatsFromCounts]] normalises per
+  // context, [[backoffScore]] scores documents under stupid-backoff
+  // model chains, and [[quartileCuts]]/[[bucketBy]] split the scores
+  // head/middle/tail. The per-order entry points only fix an order, its
+  // defaults and its output columns ([[scoreCols]]).
 
-  /** The UNPRUNED bigram count frame `(w1, w2, n)` — [[bigramLm]]'s first
-    * aggregation, exposed because counts (unlike pruned conditional
-    * probabilities) are ADDITIVE: two corpora's count frames union+sum to
-    * the combined corpus's counts exactly, which is what makes
-    * [[LmIndex.merge]] an exact incremental retrain. */
-  def bigramCounts(docs: DataFrame): DataFrame = {
-    val bigrams = NearDup.shinglesOf(col("toks"), k = 2,
+  /** The one tokenise-and-shingle pass of the LM family: each document's
+    * text tokenised once, through a Generate barrier (see
+    * [[NearDup.shinglesOf]]), then shingled at every order in `orders`,
+    * one row per gram. `keys` (doc_id, a language, a group predicate)
+    * ride the projection instead of being re-joined on afterwards, which
+    * would cost a corpus-sized exchange. One order gives
+    * `(keys…, gram)`; several give `(keys…, k, gram)`. */
+  private def gramStream(docs: DataFrame, orders: Seq[Int],
+                         keys: Seq[Column]): DataFrame = {
+    require(orders.nonEmpty && orders.forall(k => k >= 2 && k <= 8),
+      s"orders must be in [2, 8], got ${orders.mkString(", ")}")
+    val toks = Parallel.fan(docs).select(
+      keys :+ explode(array(split(normText(col("text")), " "))).as("toks"): _*)
+    val kept = toks.columns.toSeq.init.map(col)
+    def shingles(k: Int): Column = NearDup.shinglesOf(col("toks"), k = k,
       distinct = false, wholeDocFallback = false)
-    Parallel.fan(docs)
-      .select(explode(array(split(normText(col("text")), " "))).as("toks"))
-      .select(explode(array(bigrams)).as("bgs"))
-      .select(explode(col("bgs")).as("bigram"))
-      .groupBy(col("bigram")).agg(count(lit(1)).as("n"))
-      .select(element_at(split(col("bigram"), " "), 1).as("w1"),
-        element_at(split(col("bigram"), " "), 2).as("w2"), col("n"))
+    if (orders.size == 1)
+      toks.select(kept :+ explode(array(shingles(orders.head))).as("_gs"): _*)
+        .select(kept :+ explode(col("_gs")).as("gram"): _*)
+    else
+      toks.select(kept :+ explode(concat(orders.sorted.map(k => transform(
+          shingles(k), g => struct(lit(k).as("k"), g.as("gram")))): _*)).as("_kg"): _*)
+        .select(kept :+ col("_kg.k").as("k") :+ col("_kg.gram").as("gram"): _*)
   }
 
-  /** [[bigramCounts]] keyed by a dispatch column (e.g. a language
-    * prediction): one tokenisation pass into a `(key, bigram)`-keyed
-    * map-side-combined count — the shuffle carries one row per distinct
-    * (key, gram) per partition, never the corpus. This is what lets
-    * [[LmIndex.buildPerLang]] train EVERY language's model from a single
-    * corpus scan instead of one filtered scan per language. Null keys
-    * train nothing (dropped here, not downstream). */
-  def bigramCountsByKey(docs: DataFrame, keyCol: String): DataFrame = {
-    val bigrams = NearDup.shinglesOf(col("toks"), k = 2,
-      distinct = false, wholeDocFallback = false)
-    Parallel.fan(docs).filter(col(keyCol).isNotNull)
-      .select(col(keyCol),
-        explode(array(split(normText(col("text")), " "))).as("toks"))
-      .select(col(keyCol), explode(array(bigrams)).as("bgs"))
-      .select(col(keyCol), explode(col("bgs")).as("bigram"))
-      .groupBy(col(keyCol), col("bigram")).agg(count(lit(1)).as("n"))
-      .select(col(keyCol),
-        element_at(split(col("bigram"), " "), 1).as("w1"),
-        element_at(split(col("bigram"), " "), 2).as("w2"), col("n"))
+  /** `df` with its `gram` column split, in place, into words `w1..wk`. */
+  private def splitGram(df: DataFrame, k: Int): DataFrame =
+    df.select(df.columns.toSeq.flatMap(c =>
+      if (c == "gram") (1 to k).map(i => element_at(split(col("gram"), " "), i).as(s"w$i"))
+      else Seq(col(c))): _*)
+
+  /** UNPRUNED gram counts of every order in `orders` from ONE corpus
+    * tokenisation, grouped by `keys` too: `(keys…, w1..wk, n)` for one
+    * order, `(keys…, k, gram, n)` for several (sliced by
+    * [[ngramCountsOf]]). Counts are ADDITIVE — two corpora's frames
+    * union+sum to the concatenated corpus's counts exactly, which is what
+    * makes [[LmIndex.merge]] an exact incremental retrain. The shuffle
+    * carries one row per distinct (keys, k, gram) per partition after
+    * map-side combine, never the corpus token stream; training several
+    * orders costs one corpus scan, not one per order (at 100 TB the scan
+    * dominates; Brants et al. 2007 train orders together for the same
+    * reason). */
+  def ngramCounts(docs: DataFrame, orders: Seq[Int],
+                  keys: Seq[Column] = Nil): DataFrame = {
+    val grams = gramStream(docs, orders, keys)
+    val counts = grams.groupBy(grams.columns.toSeq.map(col): _*)
+      .agg(count(lit(1)).as("n"))
+    if (orders.size == 1) splitGram(counts, orders.head) else counts
   }
 
-  /** [[statsFromCounts]] with the 6 dp conditional probability rounded
+  /** The order-`k` slice of a multi-order [[ngramCounts]] frame, split
+    * into word columns `(keys…, w1..wk, n)`. */
+  private def ngramCountsOf(kg: DataFrame, k: Int): DataFrame =
+    splitGram(kg.filter(col("k") === k).drop("k"), k)
+
+  /** Each order's count layer `k -> (w1..wk, n)`, in `orders`' order, from
+    * one tokenisation. Several orders share one cached
+    * gram-vocabulary-sized count frame (a construction-time job), so each
+    * slice reads it instead of re-scanning the corpus. */
+  private[ops] def countLayers(docs: DataFrame,
+                               orders: Seq[Int]): Seq[(Int, DataFrame)] =
+    if (orders.size == 1) Seq(orders.head -> ngramCounts(docs, orders))
+    else {
+      val kg = ngramCounts(docs, orders)
+      Caching.ensureCached(kg)
+      orders.map(k => k -> ngramCountsOf(kg, k))
+    }
+
+  /** Context-normalised stats over a count frame `(w1..wk, n)`:
+    * `P(wk | w1..wk-1) = n / Σ_w c(w1..wk-1 w)`, the context totals over
+    * ALL continuations, THEN the `minCount` prune — so probabilities stay
+    * normalised per context. The totals aggregate the already-aggregated
+    * count frame (gram-vocabulary-sized, never the corpus). Output
+    * `(w1..wk, n, p_cond)`, `p_cond` rounded to 6 dp. */
+  def ngramStatsFromCounts(counts: DataFrame, k: Int,
+                           minCount: Long): DataFrame =
+    prunedWithTotals(counts, k, minCount).select((1 to k).map(i => col(s"w$i")) ++
+      Seq(col("n"), round(col("n").cast(DoubleType) / col("_tot"), 6).as("p_cond")): _*)
+
+  /** [[ngramStatsFromCounts]] at order 2 with the 6 dp probability rounded
     * in EXACT INTEGER MICROS: `p_micro = (2n·10⁶ + tot) div 2tot` (half
     * away from zero in pure Long arithmetic), then ONE division of
     * identical values into a double. The double path hits real
@@ -875,28 +901,138 @@ object TextOps {
     * where Spark (shortest-decimal BigDecimal HALF_UP) and DuckDB
     * resolve differently — observed splitting q_ccnet_dispatch's `es`
     * model at sf0.1. The per-language dispatch uses this variant; the
-    * single-model [[statsFromCounts]] path keeps its 15-round-green
-    * double behavior (no boundary value has ever appeared in its
-    * distribution, and switching it would churn the whole LM family's
-    * gates for no observed defect). */
-  def statsFromCountsExact(counts: DataFrame, minCount: Long = 5): DataFrame = {
-    val w1tot = counts.groupBy(col("w1")).agg(sum(col("n")).as("_tot"))
-    counts.join(w1tot, Seq("w1"))
-      .filter(col("n") >= minCount)
+    * single-model path keeps its double rounding (no boundary value has
+    * appeared in its distribution, and switching it would churn the
+    * whole LM family's gates for no observed defect). */
+  def statsFromCountsExact(counts: DataFrame, minCount: Long = 5): DataFrame =
+    prunedWithTotals(counts, 2, minCount)
       .withColumn("_pm", expr("(n * 2000000 + _tot) div (_tot * 2)"))
       .select(col("w1"), col("w2"), col("n"),
         (col("_pm").cast(DoubleType) / lit(1000000.0)).as("p_cond"))
+
+  /** The count rows at or above `minCount`, each with its context total
+    * `_tot` over all continuations (pruned AFTER the totals). */
+  private def prunedWithTotals(counts: DataFrame, k: Int,
+                               minCount: Long): DataFrame = {
+    require(k >= 2, s"order must be at least 2, got $k")
+    val ctx = (1 until k).map(i => s"w$i")
+    counts.join(counts.groupBy(ctx.map(col): _*).agg(sum(col("n")).as("_tot")), ctx)
+      .filter(col("n") >= minCount)
   }
 
-  /** [[bigramLm]]'s stats tail over an existing count frame: denominators
-    * over ALL continuations, THEN the `minCount` prune — probabilities
-    * stay normalised exactly as in the one-shot path. */
-  def statsFromCounts(counts: DataFrame, minCount: Long = 5): DataFrame = {
-    val w1tot = counts.groupBy(col("w1")).agg(sum(col("n")).as("_tot"))
-    counts.join(w1tot, Seq("w1"))
-      .filter(col("n") >= minCount)
-      .select(col("w1"), col("w2"), col("n"),
-        round(col("n").cast(DoubleType) / col("_tot"), 6).as("p_cond"))
+  /** Stats for each order in `orders`, pruned at the paired `minCounts`,
+    * trained on `docs` from one tokenisation. Every count layer is cached
+    * (gram-vocabulary-sized) and materialised in one construction-time
+    * job: each layer feeds both its stats join and its context totals,
+    * which would otherwise re-tokenise the corpus once each (no exchange
+    * reuse across the two subtrees). Plan-only callers pay the job too;
+    * the caches live until the ContextCleaner GCs them, so loop callers
+    * should clearCache() between batches. */
+  private def trainModels(docs: DataFrame, orders: Seq[Int],
+                          minCounts: Seq[Long]): Seq[DataFrame] = {
+    val layers = countLayers(docs, orders)
+    // one job for every layer's cache (r16): separate count() jobs paid
+    // ~0.2 s of submission each, and an A/B read dropping the layer
+    // caches (stats re-filtering the shared frame per consumer) 0.5 s
+    // SLOWER on the order-5 family
+    Caching.ensureCachedAll(layers.map(_._2))
+    layers.zip(minCounts).map { case ((k, c), m) => ngramStatsFromCounts(c, k, m) }
+  }
+
+  /** Corpus bigram language-model statistics `(w1, w2, n, p_cond)` with
+    * `P(w2 | w1) = c(w1 w2) / Σ_w c(w1 w)` for every bigram occurring at
+    * least `minCount` times — the KenLM-style corpus-stats primitive
+    * (fluency scoring, domain drift, generation-artifact detection). */
+  def bigramLm(docs: DataFrame, minCount: Long = 5): DataFrame =
+    trainModels(docs, Seq(2), Seq(minCount)).head
+
+  /** [[bigramLm]] at order 3: `(w1, w2, w3, n, p_cond)` with
+    * `P(w3 | w1 w2)` (production CCNet-lineage filtering scores under
+    * higher-order KenLM models; bigrams saturate on short-range
+    * structure). */
+  def trigramLm(docs: DataFrame, minCount: Long = 5): DataFrame =
+    trainModels(docs, Seq(3), Seq(minCount)).head
+
+  /** Each order's score columns: (gram count, mean log-probability). */
+  private[ops] def scoreCols(k: Int): (String, String) = k match {
+    case 2 => ("n_bigrams", "avg_logp")
+    case 3 => ("n_trigrams", "avg_logp3")
+    case _ => (s"n_${k}grams", s"avg_logp$k")
+  }
+
+  private def requireExactUnk(unkLogP: Double): Unit =
+    require(math.abs(unkLogP * 1e9 - math.round(unkLogP * 1e9)) < 1e-6,
+      "unkLogP must have at most 9 decimal places (decimal-exact term)")
+
+  /** The stupid-backoff log-probability term (Brants et al. 2007 — the
+    * scheme production web-scale LMs use precisely because its scores
+    * need no discounting renormalisation, so the whole chain replays in
+    * exact SQL) over the probabilities `ps` of a model chain, highest
+    * order first: the first model that knows the gram scores
+    * `ln(α^j · p_j)` (the oldest context word dropped per hop), with the
+    * α products nested right (`α·(α·p)`) so the double arithmetic replays
+    * term for term; a gram no model knows pays `unkLogP`. The term rounds
+    * to 9 dp as an exact decimal, so its sums are order-independent. */
+  private def backoffTerm(ps: Seq[Column], alpha: Double, unkLogP: Double): Column =
+    coalesce(ps.zipWithIndex.map { case (p, j) =>
+      round(log((1 to j).foldLeft(p)((acc, _) => lit(alpha) * acc)), 9)
+    } :+ lit(unkLogP): _*).cast(DecimalType(28, 9))
+
+  /** The per-document score aggregate of the LM family. Each of `sides`
+    * is a model chain (`p_cond` stats frames, highest order k first,
+    * ending at bigrams) named by its mean column. The document order-k
+    * gram stream left-joins every model on the gram's last words — the
+    * frames are gram-vocabulary-sized and broadcast when small, so the
+    * corpus stream never shuffles — then ONE aggregation on doc_id counts
+    * the grams (`nCol`) and sums each side's [[backoffTerm]] as exact
+    * decimals; each mean rounds to 6 dp.
+    *
+    * Batch output keeps every document: one with fewer than k tokens
+    * scores 0 over 0 grams through a join back to `docs`. On a streaming
+    * frame the joins are stream-static and the aggregation needs an
+    * update/complete sink; the join-back (a stream-stream join after an
+    * aggregation) is skipped, so streaming output carries only documents
+    * with at least one gram — spec-pinned equal to the batch rows for
+    * those documents. */
+  private def backoffScore(docs: DataFrame, nCol: String,
+                           sides: Seq[(String, Seq[DataFrame])],
+                           alpha: Double, unkLogP: Double): DataFrame = {
+    require(alpha > 0 && alpha <= 1, "alpha must be in (0, 1]")
+    requireExactUnk(unkLogP)
+    val k = sides.head._2.size + 1
+    def p(s: Int, j: Int): String = s"_p${k - j}_$s"
+    val grams = splitGram(gramStream(docs, Seq(k), Seq(col("doc_id"))), k)
+    // model j (order k - j) matches the gram's last k - j words
+    val joined = sides.zipWithIndex.foldLeft(grams) { case (acc, ((_, models), s)) =>
+      models.zipWithIndex.foldLeft(acc) { case (a, (m, j)) =>
+        a.join(m.select((1 to k - j).map(i => col(s"w$i").as(s"w${i + j}")) :+
+          col("p_cond").as(p(s, j)): _*), (j + 1 to k).map(i => s"w$i"), "left")
+      }
+    }
+    val agg = joined
+      .select(col("doc_id") +: sides.zipWithIndex.map { case ((_, models), s) =>
+        backoffTerm(models.indices.map(j => col(p(s, j))), alpha, unkLogP).as(s"_l$s")
+      }: _*)
+      .groupBy(col("doc_id"))
+      .agg(count(lit(1)).as(nCol), sides.indices.map(s => sum(col(s"_l$s")).as(s"_s$s")): _*)
+    def mean(s: Int): Column = round(col(s"_s$s").cast(DoubleType) / col(nCol), 6)
+    val names = sides.map(_._1)
+    if (docs.isStreaming)
+      agg.select(col("doc_id") +: col(nCol) +: names.indices.map(s => mean(s).as(names(s))): _*)
+    else {
+      val n = coalesce(col(nCol), lit(0L))
+      docs.select(col("doc_id")).join(agg, Seq("doc_id"), "left")
+        .select(col("doc_id") +: n.as(nCol) +: names.indices.map(s =>
+          when(n > 0, mean(s)).otherwise(lit(0.0)).as(names(s))): _*)
+    }
+  }
+
+  /** Stupid-backoff scoring under one model chain (highest order first):
+    * `(doc_id, n_Kgrams, avg_logpK)` in [[scoreCols]]' names. */
+  private[ops] def lmScoreOf(docs: DataFrame, models: Seq[DataFrame],
+                             alpha: Double, unkLogP: Double): DataFrame = {
+    val (n, avg) = scoreCols(models.size + 1)
+    backoffScore(docs, n, Seq(avg -> models), alpha, unkLogP)
   }
 
   /** CCNet-style corpus-LM document scoring: every document's mean bigram
@@ -904,15 +1040,10 @@ object TextOps {
     * ([[bigramLm]]) — the perplexity-proxy signal CCNet buckets corpora
     * by (head/middle/tail). High (less negative) `avg_logp` = the
     * document reads like the corpus; very low = noise/garble; suspiciously
-    * high = boilerplate repetition. Bigrams the model pruned (below
-    * `minCount`) contribute the fixed `unkLogP` penalty.
-    *
-    * Determinism contract mirrors [[tokenEntropy]]: each ln term is
-    * rounded to 9 dp and summed as exact decimals — order-independent,
-    * engine-reproducible — and the mean rounds to 6 dp. Scale shape: the
-    * corpus bigram stream joins the (vocabulary-sized) stats frame on the
-    * bigram key, then one per-doc aggregation; documents with < 2 tokens
-    * score 0 with 0 bigrams. `unkLogP` must carry ≤ 9 dp. */
+    * high = boilerplate repetition. Bigrams the model pruned contribute
+    * the fixed `unkLogP` penalty (at most 9 dp). Output
+    * `(doc_id, n_bigrams, avg_logp)`; see [[backoffScore]] for the
+    * determinism, scale and streaming contract. */
   def lmScore(docs: DataFrame, minCount: Long = 5,
               unkLogP: Double = -10.0): DataFrame =
     lmScoreWith(docs, bigramLm(docs, minCount), unkLogP)
@@ -922,56 +1053,53 @@ object TextOps {
     * (their Wikipedia-trained LM), not from the corpus being scored, so
     * "reads like the reference" is the signal rather than "reads like
     * itself". `stats` is any `(w1, w2, p_cond)` frame ([[bigramLm]]
-    * output, typically persisted from an offline pass).
-    *
-    * Streaming: on a streaming frame the per-bigram scoring join is
-    * stream-static and the per-doc aggregation needs an update/complete
-    * sink; the batch path's join-back (which surfaces sub-bigram
-    * documents as 0-score rows) is a stream-stream join after an
-    * aggregation and is therefore SKIPPED — streaming output carries
-    * only documents that produced at least one bigram (spec-pinned equal
-    * to the batch rows for those documents). */
+    * output, typically an [[LmIndex]]). */
   def lmScoreWith(docs: DataFrame, stats: DataFrame,
-                  unkLogP: Double = -10.0): DataFrame = {
-    require(math.abs(unkLogP * 1e9 - math.round(unkLogP * 1e9)) < 1e-6,
-      "unkLogP must have at most 9 decimal places (decimal-exact term)")
-    val agg = docBigrams(docs)
-      .join(stats.select(col("w1"), col("w2"), col("p_cond")), Seq("w1", "w2"), "left")
-      .select(col("doc_id"),
-        coalesce(round(log(col("p_cond")), 9), lit(unkLogP))
-          .cast(DecimalType(28, 9)).as("_lp"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_bigrams"), sum(col("_lp")).as("_s"))
-    if (docs.isStreaming)
-      agg.select(col("doc_id"), col("n_bigrams"),
-        round(col("_s").cast(DoubleType) / col("n_bigrams"), 6).as("avg_logp"))
-    else
-      docs.select(col("doc_id")).join(agg, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
-          when(coalesce(col("n_bigrams"), lit(0L)) > 0,
-            round(col("_s").cast(DoubleType) / col("n_bigrams"), 6))
-            .otherwise(lit(0.0)).as("avg_logp"))
-  }
+                  unkLogP: Double = -10.0): DataFrame =
+    lmScoreOf(docs, Seq(stats), 1.0, unkLogP)
 
-  /** The per-document bigram stream `(doc_id[, keep…], w1, w2)` every LM
-    * scorer consumes — one tokenisation, one shingle pass, no
-    * aggregation. `keep` columns (e.g. a language key) ride the
-    * projection instead of being re-joined on afterwards, which would
-    * cost a corpus-sized doc_id exchange. */
-  private def docBigrams(docs: DataFrame, keep: Seq[String] = Nil): DataFrame = {
-    val bigrams = NearDup.shinglesOf(col("toks"), k = 2,
-      distinct = false, wholeDocFallback = false)
-    val kept = keep.map(col)
-    Parallel.fan(docs)
-      .select(col("doc_id") +: kept :+
-        explode(array(split(normText(col("text")), " "))).as("toks"): _*)
-      .select(col("doc_id") +: kept :+ explode(array(bigrams)).as("bgs"): _*)
-      .select(col("doc_id") +: kept :+ explode(col("bgs")).as("bigram"): _*)
-      .select(col("doc_id") +: kept :+
-        element_at(split(col("bigram"), " "), 1).as("w1") :+
-        element_at(split(col("bigram"), " "), 2).as("w2"): _*)
-  }
+  /** Stupid-backoff trigram scoring against EXTERNAL reference models:
+    * each document trigram scores `ln P(w3|w1 w2)` when the trigram
+    * survives the reference model's prune, else `ln(α·P(w3|w2))` from the
+    * bigram model, else `unkLogP`. `triStats` is a `(w1, w2, w3, p_cond)`
+    * frame ([[trigramLm]]), `biStats` a `(w1, w2, p_cond)` frame —
+    * typically both from one [[LmIndex]] artifact. Output
+    * `(doc_id, n_trigrams, avg_logp3)`. */
+  def lmScore3With(docs: DataFrame, triStats: DataFrame, biStats: DataFrame,
+                   alpha: Double = 0.4, unkLogP: Double = -10.0): DataFrame =
+    lmScoreOf(docs, Seq(triStats, biStats), alpha, unkLogP)
+
+  /** [[lmScore3With]] at the order production web-scale LMs run (KenLM's
+    * default and the CCNet filtering order is 5): a 5-gram scores
+    * `ln P(w5|w1..w4)`, else backs off through the 4-gram, trigram and
+    * bigram models, each hop multiplying α once, else `unkLogP`. The
+    * stats frames come from [[ngramStatsFromCounts]], typically an
+    * [[LmIndex]] v3 artifact. Output `(doc_id, n_5grams, avg_logp5)`. */
+  def lmScore5With(docs: DataFrame, stats5: DataFrame, stats4: DataFrame,
+                   triStats: DataFrame, biStats: DataFrame,
+                   alpha: Double = 0.4, unkLogP: Double = -10.0): DataFrame =
+    lmScoreOf(docs, Seq(stats5, stats4, triStats, biStats), alpha, unkLogP)
+
+  /** Self-scored [[lmScore3With]]: both backoff models train on the
+    * corpus being scored, from ONE shared tokenisation, so the corpus is
+    * scanned twice in total (train + the scoring stream). The trigram
+    * prune is LOWER than the bigram's by default (trigram counts thin out
+    * an order of magnitude faster). Production scoring goes through
+    * [[LmIndex.score3]] against a persisted reference model. */
+  def lmScore3(docs: DataFrame, minCountTri: Long = 3, minCountBi: Long = 5,
+               alpha: Double = 0.4, unkLogP: Double = -10.0): DataFrame =
+    lmScoreOf(docs, trainModels(docs, Seq(3, 2), Seq(minCountTri, minCountBi)),
+      alpha, unkLogP)
+
+  /** Self-scored [[lmScore5With]] ([[lmScore3]]'s posture at order 5):
+    * all four backoff models from one shared tokenisation; default
+    * prunes thin with order. Production scoring goes through
+    * [[LmIndex.score5]]. */
+  def lmScore5(docs: DataFrame, minCount5: Long = 2, minCount4: Long = 2,
+               minCountTri: Long = 3, minCountBi: Long = 5,
+               alpha: Double = 0.4, unkLogP: Double = -10.0): DataFrame =
+    lmScoreOf(docs, trainModels(docs, 5 to 2 by -1,
+      Seq(minCount5, minCount4, minCountTri, minCountBi)), alpha, unkLogP)
 
   /** KEY-DISPATCHED LM scoring — [[lmScoreWith]] where `stats` carries
     * one model PER KEY (`(keyCol, w1, w2, p_cond)` — e.g. one bigram LM
@@ -988,14 +1116,12 @@ object TextOps {
     * keeps bigram-less documents with `(0, 0.0)` like [[lmScoreWith]]. */
   def lmScoreByKeyWith(docs: DataFrame, stats: DataFrame, keyCol: String,
                        unkLogP: Double = -10.0): DataFrame = {
-    require(math.abs(unkLogP * 1e9 - math.round(unkLogP * 1e9)) < 1e-6,
-      "unkLogP must have at most 9 decimal places (decimal-exact term)")
-    val agg = docBigrams(docs, Seq(keyCol))
+    requireExactUnk(unkLogP)
+    val agg = splitGram(gramStream(docs, Seq(2), Seq(col("doc_id"), col(keyCol))), 2)
       .join(stats.select(col(keyCol), col("w1"), col("w2"), col("p_cond")),
         Seq(keyCol, "w1", "w2"), "left")
       .select(col("doc_id"), col(keyCol),
-        coalesce(round(log(col("p_cond")), 9), lit(unkLogP))
-          .cast(DecimalType(28, 9)).as("_lp"))
+        backoffTerm(Seq(col("p_cond")), 1.0, unkLogP).as("_lp"))
       .groupBy(col("doc_id"), col(keyCol))
       .agg(count(lit(1)).as("n_bigrams"), sum(col("_lp")).as("_s"))
       // the 6 dp mean is rounded in EXACT INTEGER MICROS, not through a
@@ -1030,588 +1156,152 @@ object TextOps {
     }
   }
 
-  /** The UNPRUNED trigram count frame `(w1, w2, w3, n)` — the order-3
-    * layer of the corpus LM family. Like [[bigramCounts]], counts are
-    * ADDITIVE (two corpora's frames union+sum to the concatenated
-    * corpus's counts exactly), which is what lets [[LmIndex]]'s trigram
-    * layer merge incrementally instead of re-scanning 100 TB per
-    * refresh. Scale shape: one tokenisation pass into a trigram-keyed
-    * count with map-side combine — the shuffle carries one row per
-    * distinct trigram per partition, never the corpus. */
-  def trigramCounts(docs: DataFrame): DataFrame = {
-    val trigrams = NearDup.shinglesOf(col("toks"), k = 3,
-      distinct = false, wholeDocFallback = false)
-    Parallel.fan(docs)
-      .select(explode(array(split(normText(col("text")), " "))).as("toks"))
-      .select(explode(array(trigrams)).as("tgs"))
-      .select(explode(col("tgs")).as("trigram"))
-      .groupBy(col("trigram")).agg(count(lit(1)).as("n"))
-      .select(element_at(split(col("trigram"), " "), 1).as("w1"),
-        element_at(split(col("trigram"), " "), 2).as("w2"),
-        element_at(split(col("trigram"), " "), 3).as("w3"), col("n"))
+  /** Both DSIR sides' model chains (orders highest first) from ONE corpus
+    * tokenisation: counts keyed by a group predicate (`true` = target
+    * member), cached at gram-vocabulary size, then split into the target
+    * models (rows where the predicate held) and the raw models (counts
+    * summed over both groups — exactly the whole corpus's counts, since
+    * the groups partition it). Identical stats to training every model
+    * separately, from one corpus pass. */
+  private def dsirModelsOf(docs: DataFrame, targetPred: Column, orders: Seq[Int],
+                           minTarget: Seq[Long], minRaw: Seq[Long])
+      : (Seq[DataFrame], Seq[DataFrame]) = {
+    val grouped = ngramCounts(docs, orders, Seq(targetPred.as("_tgt")))
+    // one consumer per model, vocab-sized: count the corpus once
+    Caching.ensureCached(grouped)
+    def side(counts: DataFrame, minCounts: Seq[Long]): Seq[DataFrame] =
+      orders.zip(minCounts).map { case (k, m) => ngramStatsFromCounts(
+        if (orders.size == 1) counts else ngramCountsOf(counts, k), k, m) }
+    val grams = grouped.columns.toSeq.filterNot(Set("_tgt", "n")).map(col)
+    (side(grouped.filter(col("_tgt")).drop("_tgt"), minTarget),
+      side(grouped.groupBy(grams: _*).agg(sum(col("n")).as("n")), minRaw))
   }
 
-  /** [[trigramLm]]'s stats tail over an existing count frame: context
-    * denominators `Σ_w c(w1 w2 w)` over ALL continuations, THEN the
-    * `minCount` prune — probabilities stay normalised per (w1, w2)
-    * context exactly as [[statsFromCounts]] normalises per w1. The
-    * context aggregation runs over the already-aggregated trigram
-    * frame (vocabulary-sized, never the corpus). */
-  def trigramStatsFromCounts(counts: DataFrame, minCount: Long = 5): DataFrame = {
-    val ctx = counts.groupBy(col("w1"), col("w2")).agg(sum(col("n")).as("_tot"))
-    counts.join(ctx, Seq("w1", "w2"))
-      .filter(col("n") >= minCount)
-      .select(col("w1"), col("w2"), col("w3"), col("n"),
-        round(col("n").cast(DoubleType) / col("_tot"), 6).as("p_cond"))
-  }
-
-  /** Corpus trigram language-model statistics: count and conditional
-    * probability `P(w3 | w1 w2)` for every trigram occurring at least
-    * `minCount` times — the order-3 extension of [[bigramLm]]
-    * (production CCNet-lineage filtering scores under higher-order
-    * KenLM models; bigrams saturate on short-range structure). Same
-    * caching contract as bigramLm: the count frame feeds both the
-    * output join and the denominator aggregation, cached at
-    * trigram-vocabulary size. */
-  def trigramLm(docs: DataFrame, minCount: Long = 5): DataFrame = {
-    val counts = trigramCounts(docs)
-    Caching.ensureCached(counts)
-    trigramStatsFromCounts(counts, minCount)
-  }
-
-  /** The per-document trigram stream `(doc_id, w1, w2, w3)` —
-    * [[docBigrams]]'s order-3 twin; one tokenisation, one shingle pass,
-    * no aggregation. */
-  private def docTrigrams(docs: DataFrame): DataFrame = {
-    val trigrams = NearDup.shinglesOf(col("toks"), k = 3,
-      distinct = false, wholeDocFallback = false)
-    Parallel.fan(docs)
-      .select(col("doc_id"), explode(array(split(normText(col("text")), " "))).as("toks"))
-      .select(col("doc_id"), explode(array(trigrams)).as("tgs"))
-      .select(col("doc_id"), explode(col("tgs")).as("trigram"))
-      .select(col("doc_id"),
-        element_at(split(col("trigram"), " "), 1).as("w1"),
-        element_at(split(col("trigram"), " "), 2).as("w2"),
-        element_at(split(col("trigram"), " "), 3).as("w3"))
-  }
-
-  /** Stupid-backoff trigram scoring against EXTERNAL reference models
-    * (Brants et al. 2007 — the scheme production web-scale LMs use
-    * precisely because its scores need no discounting renormalisation,
-    * so the whole chain stays replayable in exact SQL): each document
-    * trigram scores `ln P(w3|w1 w2)` when the trigram survives the
-    * reference model's prune, else backs off to `ln(α·P(w3|w2))` from
-    * the bigram model (the oldest context word dropped), else the fixed
-    * `unkLogP` penalty. Per-term values round to 9 dp and sum as exact
-    * decimals ([[lmScoreWith]]'s determinism contract); the mean rounds
-    * to 6 dp. Output `(doc_id, n_trigrams, avg_logp3)`; documents with
-    * < 3 tokens score 0 over 0 trigrams.
-    *
-    * `triStats` is a `(w1, w2, w3, p_cond)` frame ([[trigramLm]]);
-    * `biStats` a `(w1, w2, p_cond)` frame ([[bigramLm]]) — typically
-    * both from one [[LmIndex]] artifact, so the two reference joins are
-    * vocabulary-sized (broadcast when small — the corpus trigram stream
-    * never shuffles). Streaming: stream-static joins + one stateful
-    * aggregation; the batch join-back that surfaces sub-trigram
-    * documents as 0-score rows is skipped, exactly like lmScoreWith. */
-  def lmScore3With(docs: DataFrame, triStats: DataFrame, biStats: DataFrame,
-                   alpha: Double = 0.4, unkLogP: Double = -10.0): DataFrame = {
-    require(alpha > 0 && alpha <= 1, "alpha must be in (0, 1]")
-    require(math.abs(unkLogP * 1e9 - math.round(unkLogP * 1e9)) < 1e-6,
-      "unkLogP must have at most 9 decimal places (decimal-exact term)")
-    val agg = docTrigrams(docs)
-      .join(triStats.select(col("w1"), col("w2"), col("w3"),
-        col("p_cond").as("_p3")), Seq("w1", "w2", "w3"), "left")
-      .join(biStats.select(col("w1").as("w2"), col("w2").as("w3"),
-        col("p_cond").as("_p2")), Seq("w2", "w3"), "left")
-      .select(col("doc_id"),
-        coalesce(round(log(col("_p3")), 9),
-          round(log(lit(alpha) * col("_p2")), 9),
-          lit(unkLogP)).cast(DecimalType(28, 9)).as("_lp"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_trigrams"), sum(col("_lp")).as("_s"))
-    if (docs.isStreaming)
-      agg.select(col("doc_id"), col("n_trigrams"),
-        round(col("_s").cast(DoubleType) / col("n_trigrams"), 6).as("avg_logp3"))
-    else
-      docs.select(col("doc_id")).join(agg, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("n_trigrams"), lit(0L)).as("n_trigrams"),
-          when(coalesce(col("n_trigrams"), lit(0L)) > 0,
-            round(col("_s").cast(DoubleType) / col("n_trigrams"), 6))
-            .otherwise(lit(0.0)).as("avg_logp3"))
-  }
-
-  /** EVERY order's UNPRUNED counts from ONE corpus tokenisation:
-    * `(k, gram, n)` with k ∈ {2..maxOrder} — [[bigramCounts]]'s shuffle
-    * shape, the gram key widened by the order discriminator. Shared by
-    * the [[LmIndex]] v2/v3 builds and merges and the self-scored
-    * [[lmScore3]]/[[lmScore5]], so a multi-order training pass costs
-    * one corpus scan, not one per order — at 100 TB the corpus scan
-    * dominates an artifact build, and production KenLM-style models are
-    * order 5 (Brants et al. 2007 train orders together for the same
-    * reason). The shuffle still carries one row per distinct (k, gram)
-    * per partition after map-side combine, never the corpus token
-    * stream per order. */
-  def ngramCountsUpTo(docs: DataFrame, maxOrder: Int): DataFrame = {
-    require(maxOrder >= 2 && maxOrder <= 8,
-      s"maxOrder must be in [2, 8], got $maxOrder")
-    val slices = (2 to maxOrder).map { k =>
-      val grams = NearDup.shinglesOf(col("toks"), k = k,
-        distinct = false, wholeDocFallback = false)
-      transform(grams, g => struct(lit(k).as("k"), g.as("gram")))
-    }
-    Parallel.fan(docs)
-      .select(explode(array(split(normText(col("text")), " "))).as("toks"))
-      .select(explode(concat(slices: _*)).as("kg"))
-      .select(col("kg.k").as("k"), col("kg.gram").as("gram"))
-      .groupBy(col("k"), col("gram")).agg(count(lit(1)).as("n"))
-  }
-
-  /** Both orders' counts from one tokenisation — [[ngramCountsUpTo]] at
-    * order 3, kept for the v2 [[LmIndex]] layer's call sites. */
-  def ngramCounts23(docs: DataFrame): DataFrame = ngramCountsUpTo(docs, 3)
-
-  /** The order-`k` slice of an [[ngramCountsUpTo]] frame, split into
-    * word columns `(w1..wk, n)` — [[bigramCounts]]'s shape generalised. */
-  def ngramCountsOf(kg: DataFrame, k: Int): DataFrame = {
-    require(k >= 2, s"order must be at least 2, got $k")
-    val words = (1 to k).map(i =>
-      element_at(split(col("gram"), " "), i).as(s"w$i"))
-    kg.filter(col("k") === k).select(words :+ col("n"): _*)
-  }
-
-  /** The order-2 slice of [[ngramCounts23]], in [[bigramCounts]]'s
-    * `(w1, w2, n)` shape. */
-  def bigramCountsOf(kg: DataFrame): DataFrame = ngramCountsOf(kg, 2)
-
-  /** The order-3 slice of [[ngramCounts23]], in [[trigramCounts]]'s
-    * `(w1, w2, w3, n)` shape. */
-  def trigramCountsOf(kg: DataFrame): DataFrame = ngramCountsOf(kg, 3)
-
-  /** [[statsFromCounts]]/[[trigramStatsFromCounts]] generalised to any
-    * order: context denominators `Σ_w c(w1..w_{k-1} w)` over ALL
-    * continuations, THEN the `minCount` prune — probabilities stay
-    * normalised per context. The context aggregation runs over the
-    * already-aggregated count frame (gram-vocabulary-sized, never the
-    * corpus). */
-  def ngramStatsFromCounts(counts: DataFrame, k: Int,
-                           minCount: Long): DataFrame = {
-    require(k >= 2, s"order must be at least 2, got $k")
-    val ctxCols = (1 until k).map(i => col(s"w$i"))
-    val ctx = counts.groupBy(ctxCols: _*).agg(sum(col("n")).as("_tot"))
-    counts.join(ctx, (1 until k).map(i => s"w$i"))
-      .filter(col("n") >= minCount)
-      .select((1 to k).map(i => col(s"w$i")) ++ Seq(col("n"),
-        round(col("n").cast(DoubleType) / col("_tot"), 6).as("p_cond")): _*)
-  }
-
-  /** The per-document order-`k` gram stream `(doc_id, w1..wk)` —
-    * [[docBigrams]] generalised; one tokenisation, one shingle pass, no
-    * aggregation. */
-  private def docNgrams(docs: DataFrame, k: Int): DataFrame = {
-    val grams = NearDup.shinglesOf(col("toks"), k = k,
-      distinct = false, wholeDocFallback = false)
-    Parallel.fan(docs)
-      .select(col("doc_id"), explode(array(split(normText(col("text")), " "))).as("toks"))
-      .select(col("doc_id"), explode(array(grams)).as("gs"))
-      .select(col("doc_id"), explode(col("gs")).as("gram"))
-      .select(col("doc_id") +:
-        (1 to k).map(i => element_at(split(col("gram"), " "), i).as(s"w$i")): _*)
-  }
-
-  /** Stupid-backoff order-5 scoring against EXTERNAL reference models —
-    * [[lmScore3With]]'s scheme at the order production web-scale LMs
-    * actually run (KenLM's default and the CCNet filtering order is 5):
-    * each document 5-gram scores `ln P(w5|w1..w4)` when the 5-gram
-    * survives its model's prune, else backs off through the 4-gram,
-    * trigram and bigram models, each hop multiplying the α discount
-    * once (Brants et al. 2007: S(w|ctx) = α^j · P_{k-j}, the oldest
-    * context word dropped per hop), else the fixed `unkLogP` penalty.
-    * α products NEST right (`α·(α·p)`) so the double arithmetic is
-    * engine-replayable term for term; per-term values round to 9 dp
-    * and sum as exact decimals, the mean rounds to 6 dp. Output
-    * `(doc_id, n_5grams, avg_logp5)`; documents with < 5 tokens score
-    * 0 over 0 grams.
-    *
-    * `stats4`/`stats5` come from [[ngramStatsFromCounts]] (typically an
-    * [[LmIndex]] v3 artifact): every reference join is
-    * gram-vocabulary-sized and broadcasts when small — the corpus
-    * 5-gram stream never shuffles; only the per-doc aggregation and the
-    * batch join-back exchange on doc_id. Streaming: stream-static joins
-    * + one stateful aggregation, sub-5-gram documents absent, exactly
-    * like [[lmScoreWith]]. */
-  def lmScore5With(docs: DataFrame, stats5: DataFrame, stats4: DataFrame,
-                   triStats: DataFrame, biStats: DataFrame,
-                   alpha: Double = 0.4, unkLogP: Double = -10.0): DataFrame = {
-    require(alpha > 0 && alpha <= 1, "alpha must be in (0, 1]")
-    require(math.abs(unkLogP * 1e9 - math.round(unkLogP * 1e9)) < 1e-6,
-      "unkLogP must have at most 9 decimal places (decimal-exact term)")
-    val a = lit(alpha)
-    val agg = docNgrams(docs, 5)
-      .join(stats5.select(col("w1"), col("w2"), col("w3"), col("w4"),
-        col("w5"), col("p_cond").as("_p5")),
-        Seq("w1", "w2", "w3", "w4", "w5"), "left")
-      .join(stats4.select(col("w1").as("w2"), col("w2").as("w3"),
-        col("w3").as("w4"), col("w4").as("w5"), col("p_cond").as("_p4")),
-        Seq("w2", "w3", "w4", "w5"), "left")
-      .join(triStats.select(col("w1").as("w3"), col("w2").as("w4"),
-        col("w3").as("w5"), col("p_cond").as("_p3")),
-        Seq("w3", "w4", "w5"), "left")
-      .join(biStats.select(col("w1").as("w4"), col("w2").as("w5"),
-        col("p_cond").as("_p2")), Seq("w4", "w5"), "left")
-      .select(col("doc_id"),
-        coalesce(round(log(col("_p5")), 9),
-          round(log(a * col("_p4")), 9),
-          round(log(a * (a * col("_p3"))), 9),
-          round(log(a * (a * (a * col("_p2")))), 9),
-          lit(unkLogP)).cast(DecimalType(28, 9)).as("_lp"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_5grams"), sum(col("_lp")).as("_s"))
-    if (docs.isStreaming)
-      agg.select(col("doc_id"), col("n_5grams"),
-        round(col("_s").cast(DoubleType) / col("n_5grams"), 6).as("avg_logp5"))
-    else
-      docs.select(col("doc_id")).join(agg, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("n_5grams"), lit(0L)).as("n_5grams"),
-          when(coalesce(col("n_5grams"), lit(0L)) > 0,
-            round(col("_s").cast(DoubleType) / col("n_5grams"), 6))
-            .otherwise(lit(0.0)).as("avg_logp5"))
-  }
-
-  /** Self-scored order-5 wrapper ([[lmScore3]]'s posture at order 5):
-    * all four backoff models train on the corpus being scored, from ONE
-    * shared tokenisation ([[ngramCountsUpTo]], cached gram-vocabulary-
-    * sized) — the corpus is scanned twice total (train + the scoring
-    * 5-gram stream), not five times. Default prunes thin with order
-    * (5/4-gram counts are an order of magnitude sparser per step);
-    * production scoring goes through [[LmIndex.score5]] against a
-    * persisted reference model. */
-  def lmScore5(docs: DataFrame, minCount5: Long = 2, minCount4: Long = 2,
-               minCountTri: Long = 3, minCountBi: Long = 5,
-               alpha: Double = 0.4, unkLogP: Double = -10.0): DataFrame = {
-    val kg = ngramCountsUpTo(docs, 5)
-    // the cached combined frame bridges the four slice builds (without
-    // it each slice re-scans the corpus); the cached SLICES keep the
-    // stats joins from re-filtering the combined frame per consumer
-    // (r16 note: removing the slice caches was A/B-measured 0.5 s
-    // SLOWER — the four broadcast stats builds then re-derive their
-    // slice twice each from kg, and that repeated filter+split work
-    // exceeds the four one-off count() materialisation jobs)
-    Caching.ensureCached(kg)
-    val slices = (2 to 5).map(k => k -> ngramCountsOf(kg, k)).toMap
-    // one materialisation job for all four slice caches (r16) — four
-    // sequential count() jobs paid ~0.2 s of submission each for work
-    // that is one union away (kg is already materialised, so the
-    // concurrent branches race on nothing)
-    Caching.ensureCachedAll(slices.values.toSeq)
-    lmScore5With(docs,
-      ngramStatsFromCounts(slices(5), 5, minCount5),
-      ngramStatsFromCounts(slices(4), 4, minCount4),
-      ngramStatsFromCounts(slices(3), 3, minCountTri),
-      ngramStatsFromCounts(slices(2), 2, minCountBi),
-      alpha, unkLogP)
-  }
-
-  /** [[perplexityBuckets3]] under the ORDER-5 backoff score — the CCNet
-    * head/middle/tail split at the production model order: quartile
-    * cuts of [[lmScore5]] over scorable documents (one scalar
-    * aggregation broadcast back — no sort, no corpus window), then the
-    * bucket projection; sub-5-gram documents bucket `unscored`. The
-    * self-calibrated batch twin of [[LmIndex.bucket5]]. */
-  def perplexityBuckets5(docs: DataFrame, minCount5: Long = 2,
-                         minCount4: Long = 2, minCountTri: Long = 3,
-                         minCountBi: Long = 5, alpha: Double = 0.4,
-                         unkLogP: Double = -10.0): DataFrame = {
-    val scores = lmScore5(docs, minCount5, minCount4, minCountTri,
-      minCountBi, alpha, unkLogP)
-    val cuts = scores.filter(col("n_5grams") > 0)
-      .agg(round(percentile(col("avg_logp5"), lit(0.25)), 6).as("_p25"),
-        round(percentile(col("avg_logp5"), lit(0.75)), 6).as("_p75"))
-    scores.crossJoin(broadcast(cuts))
-      .withColumn("bucket",
-        when(col("n_5grams") === 0, lit("unscored"))
-          .when(col("avg_logp5") >= col("_p75"), lit("head"))
-          .when(col("avg_logp5") >= col("_p25"), lit("middle"))
-          .otherwise(lit("tail")))
-      .select(col("doc_id"), col("n_5grams"), col("avg_logp5"), col("bucket"))
-  }
-
-  /** Self-scored convenience wrapper: train both backoff models on the
-    * corpus being scored ([[lmScore]]'s posture at order 3). The
-    * trigram prune is LOWER than the bigram's by default (trigram
-    * counts thin out an order of magnitude faster — minCount 5 at both
-    * orders would back nearly everything off). Production scoring goes
-    * through [[LmIndex.score3]] against a persisted reference model —
-    * this wrapper re-trains per call, but both models come from ONE
-    * shared tokenisation ([[ngramCounts23]], cached gram-vocabulary-
-    * sized), so the corpus is scanned twice total (train + the scoring
-    * trigram stream), not three times. */
-  def lmScore3(docs: DataFrame, minCountTri: Long = 3, minCountBi: Long = 5,
-               alpha: Double = 0.4, unkLogP: Double = -10.0): DataFrame = {
-    val kg = ngramCounts23(docs)
-    // three vocabulary-sized caches: kg bridges the two slice builds
-    // (without it each slice re-scans the corpus), and the cached
-    // SLICES keep repeat scoring from re-filtering the combined frame
-    Caching.ensureCached(kg)
-    val tri = trigramCountsOf(kg)
-    val bi = bigramCountsOf(kg)
-    // one materialisation job for both slice caches (r16, see lmScore5)
-    Caching.ensureCachedAll(Seq(tri, bi))
-    lmScore3With(docs,
-      trigramStatsFromCounts(tri, minCountTri),
-      statsFromCounts(bi, minCountBi),
-      alpha, unkLogP)
-  }
-
-  /** Both DSIR models from ONE corpus tokenisation: bigram counts keyed
-    * by a group predicate (`true` = target member), persisted at
-    * bigram-vocabulary size, then split into the target model (grouped
-    * rows where the predicate held) and the raw model (counts summed
-    * over both groups — exactly the whole corpus's counts, since groups
-    * partition it). Identical stats to calling [[bigramLm]] twice; half
-    * the corpus passes. */
+  /** Both DSIR bigram models `(target, raw)` — [[bigramLm]] on the rows
+    * where `targetPred` holds and on the whole corpus — from one corpus
+    * tokenisation. */
   def dsirModels(docs: DataFrame, targetPred: Column,
                  minCountTarget: Long = 2,
                  minCountRaw: Long = 5): (DataFrame, DataFrame) = {
-    val bigrams = NearDup.shinglesOf(col("toks"), k = 2,
-      distinct = false, wholeDocFallback = false)
-    val grouped = Parallel.fan(docs)
-      .select(targetPred.as("_tgt"),
-        explode(array(split(normText(col("text")), " "))).as("toks"))
-      .select(col("_tgt"), explode(array(bigrams)).as("bgs"))
-      .select(col("_tgt"), explode(col("bgs")).as("bigram"))
-      .groupBy(col("_tgt"), col("bigram")).agg(count(lit(1)).as("n"))
-      .select(col("_tgt"),
-        element_at(split(col("bigram"), " "), 1).as("w1"),
-        element_at(split(col("bigram"), " "), 2).as("w2"), col("n"))
-    // same persist rationale as bigramLm: two consumers, vocab-sized
-    Caching.ensureCached(grouped)
-    val target = statsFromCounts(
-      grouped.filter(col("_tgt")).select(col("w1"), col("w2"), col("n")),
-      minCountTarget)
-    val raw = statsFromCounts(
-      grouped.groupBy(col("w1"), col("w2")).agg(sum(col("n")).as("n")),
-      minCountRaw)
-    (target, raw)
+    val (t, r) = dsirModelsOf(docs, targetPred, Seq(2),
+      Seq(minCountTarget), Seq(minCountRaw))
+    (t.head, r.head)
   }
+
+  /** All four DSIR order-3 models `(target tri, target bi, raw tri,
+    * raw bi)` from one corpus tokenisation, so [[dsirScore3]] can
+    * stupid-backoff under each side. */
+  def dsirModels3(docs: DataFrame, targetPred: Column,
+                  minCountTriTarget: Long = 2, minCountBiTarget: Long = 2,
+                  minCountTriRaw: Long = 3, minCountBiRaw: Long = 5)
+      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+    val (t, r) = dsirModelsOf(docs, targetPred, Seq(3, 2),
+      Seq(minCountTriTarget, minCountBiTarget), Seq(minCountTriRaw, minCountBiRaw))
+    (t(0), t(1), r(0), r(1))
+  }
+
+  /** DSIR scoring under a target and a raw model chain:
+    * `(doc_id, n_Kgrams, avg_logp_target, avg_logp_raw, log_ratio)`. */
+  private def dsirScoreOf(docs: DataFrame, target: Seq[DataFrame],
+                          raw: Seq[DataFrame], alpha: Double,
+                          unkLogP: Double): DataFrame =
+    backoffScore(docs, scoreCols(target.size + 1)._1,
+      Seq("avg_logp_target" -> target, "avg_logp_raw" -> raw), alpha, unkLogP)
+      // log_ratio is the difference of the two ROUNDED means, re-rounded:
+      // a mean-of-differences spelling can land exactly on a 6 dp rounding
+      // boundary and flip the last digit between engines (observed at
+      // sf0.1), whereas the difference of two 1e-6 multiples never sits on
+      // one — and the value becomes an exact function of the other two
+      // output columns
+      .withColumn("log_ratio", round(col("avg_logp_target") - col("avg_logp_raw"), 6))
 
   /** DSIR-style importance scoring (Xie et al. 2023, "Data Selection for
     * Language Models via Importance Resampling"): every document's mean
     * bigram log-likelihood under a TARGET reference model minus its mean
     * under the RAW corpus model — `log_ratio > 0` reads "more like the
     * target than the background", the signal importance resampling
-    * weights by. Both stats frames are [[bigramLm]] output (typically
-    * [[graft.ops.LmIndex]] artifacts); bigrams unknown to a model pay
-    * that model's `unkLogP`.
-    *
-    * One tokenisation pass: the shared bigram stream left-joins BOTH
-    * vocab-sized stats frames before a single per-doc aggregation — the
-    * whole op adds one map-side join over [[lmScoreWith]]'s shape, not a
-    * second corpus scan. Determinism follows the family contract: 9 dp
-    * ln terms summed as exact decimals; `log_ratio` is the difference of
-    * the two rounded means re-rounded to 6 dp (engine-stable — see the
-    * inline note). To complete the DSIR pipeline, quantize
-    * `exp(log_ratio)` to integer weights and feed
-    * [[Curate.weightedSample]].
-    *
-    * Streaming: same contract as [[lmScoreWith]] — stream-static joins
-    * plus an update/complete-mode aggregation, sub-bigram documents
-    * absent (the batch path surfaces them as 0-score rows). */
+    * weights by. Both stats frames are [[bigramLm]] output ([[dsirModels]]
+    * or [[LmIndex]] artifacts); bigrams unknown to a model pay that
+    * model's `unkLogP`. One tokenisation pass: the shared bigram stream
+    * joins both vocab-sized models before a single per-doc aggregation
+    * ([[backoffScore]]'s contract, streaming included). To complete the
+    * DSIR pipeline, quantize `exp(log_ratio)` to integer weights and feed
+    * [[Curate.weightedSample]]. Output `(doc_id, n_bigrams,
+    * avg_logp_target, avg_logp_raw, log_ratio)`. */
   def dsirScore(docs: DataFrame, targetStats: DataFrame, rawStats: DataFrame,
-                unkLogP: Double = -10.0): DataFrame = {
-    require(math.abs(unkLogP * 1e9 - math.round(unkLogP * 1e9)) < 1e-6,
-      "unkLogP must have at most 9 decimal places (decimal-exact term)")
-    val agg = docBigrams(docs)
-      .join(targetStats.select(col("w1"), col("w2"), col("p_cond").as("_pt")),
-        Seq("w1", "w2"), "left")
-      .join(rawStats.select(col("w1"), col("w2"), col("p_cond").as("_pr")),
-        Seq("w1", "w2"), "left")
-      .select(col("doc_id"),
-        coalesce(round(log(col("_pt")), 9), lit(unkLogP))
-          .cast(DecimalType(28, 9)).as("_lt"),
-        coalesce(round(log(col("_pr")), 9), lit(unkLogP))
-          .cast(DecimalType(28, 9)).as("_lr"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_bigrams"),
-        sum(col("_lt")).as("_st"), sum(col("_lr")).as("_sr"))
-    // log_ratio is the difference of the two ROUNDED means, re-rounded:
-    // a mean-of-differences spelling can land exactly on a 6 dp rounding
-    // boundary and flip the last digit between engines (observed at
-    // sf0.1), whereas the difference of two 1e-6 multiples never sits on
-    // one — and the value becomes an exact function of the other two
-    // output columns
-    def withRatio(base: DataFrame): DataFrame = base.withColumn("log_ratio",
-      round(col("avg_logp_target") - col("avg_logp_raw"), 6))
-    if (docs.isStreaming)
-      withRatio(agg.select(col("doc_id"), col("n_bigrams"),
-        round(col("_st").cast(DoubleType) / col("n_bigrams"), 6)
-          .as("avg_logp_target"),
-        round(col("_sr").cast(DoubleType) / col("n_bigrams"), 6)
-          .as("avg_logp_raw")))
-    else {
-      val n = coalesce(col("n_bigrams"), lit(0L))
-      def mean(s: Column): Column =
-        when(n > 0, round(s.cast(DoubleType) / col("n_bigrams"), 6))
-          .otherwise(lit(0.0))
-      withRatio(docs.select(col("doc_id")).join(agg, Seq("doc_id"), "left")
-        .select(col("doc_id"), n.as("n_bigrams"),
-          mean(col("_st")).as("avg_logp_target"),
-          mean(col("_sr")).as("avg_logp_raw")))
-    }
-  }
+                unkLogP: Double = -10.0): DataFrame =
+    dsirScoreOf(docs, Seq(targetStats), Seq(rawStats), 1.0, unkLogP)
 
-  /** All four DSIR order-3 models from ONE corpus tokenisation —
-    * [[dsirModels]] lifted to the backoff pair: per group (target =
-    * rows where `targetPred` holds, raw = the whole corpus, i.e. counts
-    * summed over both groups) a trigram AND a bigram model, so
-    * [[dsirScore3]] can stupid-backoff under each side. The pass emits
-    * both orders' shingles into a single (group, k, gram)-keyed
-    * map-side-combined count (the [[ngramCountsUpTo]] shape with the
-    * group key prepended); everything downstream is gram-vocabulary-
-    * sized. Identical stats to training the four models separately;
-    * one quarter of the corpus passes. */
-  def dsirModels3(docs: DataFrame, targetPred: Column,
-                  minCountTriTarget: Long = 2, minCountBiTarget: Long = 2,
-                  minCountTriRaw: Long = 3, minCountBiRaw: Long = 5)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val bi = NearDup.shinglesOf(col("toks"), k = 2,
-      distinct = false, wholeDocFallback = false)
-    val tri = NearDup.shinglesOf(col("toks"), k = 3,
-      distinct = false, wholeDocFallback = false)
-    val grouped = Parallel.fan(docs)
-      .select(targetPred.as("_tgt"),
-        explode(array(split(normText(col("text")), " "))).as("toks"))
-      .select(col("_tgt"), explode(concat(
-        transform(bi, g => struct(lit(2).as("k"), g.as("gram"))),
-        transform(tri, g => struct(lit(3).as("k"), g.as("gram"))))).as("kg"))
-      .select(col("_tgt"), col("kg.k").as("k"), col("kg.gram").as("gram"))
-      .groupBy(col("_tgt"), col("k"), col("gram")).agg(count(lit(1)).as("n"))
-    // same persist rationale as dsirModels: four consumers, vocab-sized
-    Caching.ensureCached(grouped)
-    def slice(k: Int, targetOnly: Boolean): DataFrame = {
-      val base =
-        if (targetOnly) grouped.filter(col("_tgt"))
-          .select(col("k"), col("gram"), col("n"))
-        else grouped.groupBy(col("k"), col("gram")).agg(sum(col("n")).as("n"))
-      ngramCountsOf(base, k)
-    }
-    (ngramStatsFromCounts(slice(3, targetOnly = true), 3, minCountTriTarget),
-      ngramStatsFromCounts(slice(2, targetOnly = true), 2, minCountBiTarget),
-      ngramStatsFromCounts(slice(3, targetOnly = false), 3, minCountTriRaw),
-      ngramStatsFromCounts(slice(2, targetOnly = false), 2, minCountBiRaw))
-  }
-
-  /** [[dsirScore]] under the ORDER-3 backoff score — the higher-order
-    * importance signal the r14 trigram layer makes one composition
-    * away: every document's mean stupid-backoff log-likelihood under
-    * the TARGET models minus its mean under the RAW models, each side
-    * backing off trigram → α-discounted bigram → that side's `unkLogP`
-    * ([[lmScore3With]]'s term discipline: 9 dp per-term rounding, exact
-    * decimal sums, 6 dp means, ratio = difference of the rounded means
-    * re-rounded — see [[dsirScore]]'s inline note for why).
-    *
-    * One tokenisation pass: the shared trigram stream left-joins all
-    * FOUR vocab-sized stats frames before a single per-doc aggregation
-    * — two map-side joins over [[dsirScore]]'s shape, never a second
-    * corpus scan. Streaming: stream-static joins + one update/complete
-    * aggregation; sub-trigram documents absent (batch surfaces them as
-    * 0-score rows). Output `(doc_id, n_trigrams, avg_logp_target,
-    * avg_logp_raw, log_ratio)`. */
+  /** [[dsirScore]] under the ORDER-3 backoff score: each side backs off
+    * trigram → α-discounted bigram → `unkLogP`, over the shared trigram
+    * stream. Output `(doc_id, n_trigrams, avg_logp_target, avg_logp_raw,
+    * log_ratio)`. */
   def dsirScore3(docs: DataFrame, targetTri: DataFrame, targetBi: DataFrame,
                  rawTri: DataFrame, rawBi: DataFrame,
-                 alpha: Double = 0.4, unkLogP: Double = -10.0): DataFrame = {
-    require(alpha > 0 && alpha <= 1, "alpha must be in (0, 1]")
-    require(math.abs(unkLogP * 1e9 - math.round(unkLogP * 1e9)) < 1e-6,
-      "unkLogP must have at most 9 decimal places (decimal-exact term)")
-    val a = lit(alpha)
-    val agg = docTrigrams(docs)
-      .join(targetTri.select(col("w1"), col("w2"), col("w3"),
-        col("p_cond").as("_p3t")), Seq("w1", "w2", "w3"), "left")
-      .join(targetBi.select(col("w1").as("w2"), col("w2").as("w3"),
-        col("p_cond").as("_p2t")), Seq("w2", "w3"), "left")
-      .join(rawTri.select(col("w1"), col("w2"), col("w3"),
-        col("p_cond").as("_p3r")), Seq("w1", "w2", "w3"), "left")
-      .join(rawBi.select(col("w1").as("w2"), col("w2").as("w3"),
-        col("p_cond").as("_p2r")), Seq("w2", "w3"), "left")
-      .select(col("doc_id"),
-        coalesce(round(log(col("_p3t")), 9), round(log(a * col("_p2t")), 9),
-          lit(unkLogP)).cast(DecimalType(28, 9)).as("_lt"),
-        coalesce(round(log(col("_p3r")), 9), round(log(a * col("_p2r")), 9),
-          lit(unkLogP)).cast(DecimalType(28, 9)).as("_lr"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_trigrams"),
-        sum(col("_lt")).as("_st"), sum(col("_lr")).as("_sr"))
-    def withRatio(base: DataFrame): DataFrame = base.withColumn("log_ratio",
-      round(col("avg_logp_target") - col("avg_logp_raw"), 6))
-    if (docs.isStreaming)
-      withRatio(agg.select(col("doc_id"), col("n_trigrams"),
-        round(col("_st").cast(DoubleType) / col("n_trigrams"), 6)
-          .as("avg_logp_target"),
-        round(col("_sr").cast(DoubleType) / col("n_trigrams"), 6)
-          .as("avg_logp_raw")))
-    else {
-      val n = coalesce(col("n_trigrams"), lit(0L))
-      def mean(s: Column): Column =
-        when(n > 0, round(s.cast(DoubleType) / col("n_trigrams"), 6))
-          .otherwise(lit(0.0))
-      withRatio(docs.select(col("doc_id")).join(agg, Seq("doc_id"), "left")
-        .select(col("doc_id"), n.as("n_trigrams"),
-          mean(col("_st")).as("avg_logp_target"),
-          mean(col("_sr")).as("avg_logp_raw")))
-    }
-  }
+                 alpha: Double = 0.4, unkLogP: Double = -10.0): DataFrame =
+    dsirScoreOf(docs, Seq(targetTri, targetBi), Seq(rawTri, rawBi), alpha, unkLogP)
 
-  /** CCNet's corpus partitioning completed: bucket every document
-    * head / middle / tail by its [[lmScore]] percentile (head = most
-    * reference-like). CCNet cuts at terciles; quartile cuts are used here
-    * because quarter fractions interpolate engine-exactly (the
+  /** The quartile cut points `(_p25, _p75)` of order-`k` scores over the
+    * scorable documents, each rounded to 6 dp — one scalar aggregation,
+    * no sort, no window over the corpus. Quartiles, not CCNet's
+    * terciles: quarter fractions interpolate engine-exactly (the
     * [[graft.ops.Stats]] determinism contract — a third is not an exact
     * binary fraction, so a tercile cut could differ in its last ulp
-    * between engines and flip boundary documents). Documents with no
-    * scorable bigram land in `unscored`.
-    *
-    * Scale shape: scoring is [[lmScore]]'s shape; the two cut points are
-    * ONE scalar aggregation broadcast back — no sort, no window over the
-    * corpus. */
-  def perplexityBuckets(docs: DataFrame, minCount: Long = 5,
-                        unkLogP: Double = -10.0): DataFrame = {
-    val scores = lmScore(docs, minCount, unkLogP)
-    val cuts = scores.filter(col("n_bigrams") > 0)
-      .agg(round(percentile(col("avg_logp"), lit(0.25)), 6).as("_p25"),
-        round(percentile(col("avg_logp"), lit(0.75)), 6).as("_p75"))
-    scores.crossJoin(broadcast(cuts))
-      .withColumn("bucket",
-        when(col("n_bigrams") === 0, lit("unscored"))
-          .when(col("avg_logp") >= col("_p75"), lit("head"))
-          .when(col("avg_logp") >= col("_p25"), lit("middle"))
-          .otherwise(lit("tail")))
-      .select(col("doc_id"), col("n_bigrams"), col("avg_logp"), col("bucket"))
+    * between engines and flip boundary documents). */
+  private[ops] def quartileCuts(scores: DataFrame, k: Int): DataFrame = {
+    val (n, avg) = scoreCols(k)
+    scores.filter(col(n) > 0)
+      .agg(round(percentile(col(avg), lit(0.25)), 6).as("_p25"),
+        round(percentile(col(avg), lit(0.75)), 6).as("_p75"))
   }
 
-  /** [[perplexityBuckets]] under the ORDER-3 backoff score: quartile
-    * cuts of [[lmScore3]] (computed on scorable documents only, rounds
-    * to 6 dp — the engine-exact quarter-fraction contract), then
-    * head/middle/tail per document; sub-trigram documents bucket
-    * `unscored`. The self-calibrated batch twin of
-    * [[LmIndex.bucket3]] (spec-pinned equal when the artifact is
-    * trained and calibrated on the same corpus at the same prunes). */
+  /** Order-`k` scores bucketed head (at or above `p75`), middle (at or
+    * above `p25`), tail, or `unscored` (no gram):
+    * `(doc_id, n_Kgrams, avg_logpK, bucket)`. */
+  private[ops] def bucketBy(scores: DataFrame, k: Int, p25: Column,
+                            p75: Column): DataFrame = {
+    val (n, avg) = scoreCols(k)
+    scores
+      .withColumn("bucket",
+        when(col(n) === 0, lit("unscored"))
+          .when(col(avg) >= p75, lit("head"))
+          .when(col(avg) >= p25, lit("middle"))
+          .otherwise(lit("tail")))
+      .select(col("doc_id"), col(n), col(avg), col("bucket"))
+  }
+
+  /** Order-`k` scores bucketed against their own quartile cuts, broadcast
+    * back as one row. */
+  private def selfBuckets(scores: DataFrame, k: Int): DataFrame =
+    bucketBy(scores.crossJoin(broadcast(quartileCuts(scores, k))), k,
+      col("_p25"), col("_p75"))
+
+  /** CCNet's corpus partitioning completed: bucket every document
+    * head / middle / tail by its [[lmScore]] quartile (head = most
+    * reference-like); documents with no scorable bigram land in
+    * `unscored`. */
+  def perplexityBuckets(docs: DataFrame, minCount: Long = 5,
+                        unkLogP: Double = -10.0): DataFrame =
+    selfBuckets(lmScore(docs, minCount, unkLogP), 2)
+
+  /** [[perplexityBuckets]] under the ORDER-3 backoff score
+    * ([[lmScore3]]); the self-calibrated batch twin of
+    * [[LmIndex.bucket3]] (spec-pinned equal when the artifact is trained
+    * and calibrated on the same corpus at the same prunes). */
   def perplexityBuckets3(docs: DataFrame, minCountTri: Long = 3,
                          minCountBi: Long = 5, alpha: Double = 0.4,
-                         unkLogP: Double = -10.0): DataFrame = {
-    val scores = lmScore3(docs, minCountTri, minCountBi, alpha, unkLogP)
-    val cuts = scores.filter(col("n_trigrams") > 0)
-      .agg(round(percentile(col("avg_logp3"), lit(0.25)), 6).as("_p25"),
-        round(percentile(col("avg_logp3"), lit(0.75)), 6).as("_p75"))
-    scores.crossJoin(broadcast(cuts))
-      .withColumn("bucket",
-        when(col("n_trigrams") === 0, lit("unscored"))
-          .when(col("avg_logp3") >= col("_p75"), lit("head"))
-          .when(col("avg_logp3") >= col("_p25"), lit("middle"))
-          .otherwise(lit("tail")))
-      .select(col("doc_id"), col("n_trigrams"), col("avg_logp3"), col("bucket"))
-  }
+                         unkLogP: Double = -10.0): DataFrame =
+    selfBuckets(lmScore3(docs, minCountTri, minCountBi, alpha, unkLogP), 3)
+
+  /** [[perplexityBuckets]] under the ORDER-5 backoff score
+    * ([[lmScore5]]); the self-calibrated batch twin of
+    * [[LmIndex.bucket5]]. */
+  def perplexityBuckets5(docs: DataFrame, minCount5: Long = 2,
+                         minCount4: Long = 2, minCountTri: Long = 3,
+                         minCountBi: Long = 5, alpha: Double = 0.4,
+                         unkLogP: Double = -10.0): DataFrame =
+    selfBuckets(lmScore5(docs, minCount5, minCount4, minCountTri,
+      minCountBi, alpha, unkLogP), 5)
 
   /** Per-document unigram token entropy in bits (`H = log2 n − Σ c·ln c /
     * (n·ln 2)`) plus token counts — low entropy flags repetitive/templated
@@ -1768,13 +1458,13 @@ object TextOps {
     * any corpus size), ONE double division of the two exact products,
     * `ln`, round 6 — the vocab-drift ln-parity contract. `minCount`
     * prunes noise bigrams (PMI is famously unstable at c₁₂ = 1).
-    * Scale shape: reuses [[bigramCounts]] (one corpus tokenisation, one
-    * bigram-vocabulary-sized aggregation); margins and the N total are
-    * aggregates OF the count frame — every join after the first
-    * aggregation touches vocabulary-sized frames only. */
+    * Scale shape: the LM family's order-2 [[ngramCounts]] (one corpus
+    * tokenisation, one bigram-vocabulary-sized aggregation); margins and
+    * the N total are aggregates OF the count frame — every join after the
+    * first aggregation touches vocabulary-sized frames only. */
   def pmiCollocations(docs: DataFrame, minCount: Long = 5): DataFrame = {
     val d38 = DecimalType(38, 0)
-    val bc = bigramCounts(docs)
+    val bc = ngramCounts(docs, Seq(2))
     Caching.ensureCached(bc)
     val m1 = bc.groupBy(col("w1")).agg(sum(col("n")).as("_c1"))
     val m2 = bc.groupBy(col("w2")).agg(sum(col("n")).as("_c2"))

@@ -94,9 +94,9 @@ object ScaleBudget {
     //    trigram-keyed map-side-combined aggregation — the shuffle
     //    carries distinct-trigram rows, which grow sublinearly in the
     //    replicated corpus (replicas repeat content). Timed UNCACHED
-    //    (TextOps.trigramCounts directly): the q_trigram_lm registry
-    //    entry would measure its ensureCached frame's cache hit on the
-    //    second run, saying nothing about corpus scaling. Above the
+    //    (TextOps.ngramCounts at order 3 directly): the q_trigram_lm
+    //    registry entry would measure its ensureCached frame's cache hit
+    //    on the second run, saying nothing about corpus scaling. Above the
     //    band means the count shuffle stopped being
     //    distinct-trigram-sized
     //  - line_counts: LineIndex's persisted counting stage (lines +
@@ -124,7 +124,7 @@ object ScaleBudget {
     //    at 10× (band = measured + 2, the short-ratio floor)
     "frontier_schedule" -> 3.6,
     // r15 addition: the v3 LmIndex build's counting stage — ALL orders
-    // 2..5 from one tokenisation (ngramCountsUpTo), timed UNCACHED like
+    // 2..5 from one tokenisation (ngramCounts), timed UNCACHED like
     // trigram_counts (the registry queries cache their count frames; a
     // cache hit says nothing about corpus scaling). The shuffle carries
     // distinct (k, gram) rows — sublinear growth in the replicated
@@ -223,10 +223,10 @@ object ScaleBudget {
       }),
       // the order-3 LM counting pass, uncached (see the band comment)
       "trigram_counts" -> ((s, dir) =>
-        graft.ops.TextOps.trigramCounts(T.load(s, dir, "documents"))),
+        graft.ops.TextOps.ngramCounts(T.load(s, dir, "documents"), Seq(3))),
       // the v3 multi-order counting pass (orders 2..5), uncached
       "ngram5_counts" -> ((s, dir) =>
-        graft.ops.TextOps.ngramCountsUpTo(T.load(s, dir, "documents"), 5)),
+        graft.ops.TextOps.ngramCounts(T.load(s, dir, "documents"), 2 to 5)),
       // the LineIndex counting stage at corpus scale: both StreamCurate
       // artifact shapes (boilerplate lines + 3-sentence shingles) from
       // one run — the union is what a nightly artifact refresh computes

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class DsirSpec extends SparkSpec {
@@ -94,6 +95,44 @@ class DsirSpec extends SparkSpec {
         .as[(Long, Long, Double, Double, Double)].collect().toSet
       assert(streamed == batch)
       assert(!streamed.exists(_._1 == 22L))
+    } finally q.stop()
+  }
+
+  test("dsirModels3's four models equal stats over separately counted target and raw corpora") {
+    val tgtPred = col("source") === "tgt"
+    val (tt, tb, rt, rb) = TextOps.dsirModels3(corpus, tgtPred)
+    def stats(docs: DataFrame, k: Int, minCount: Long) =
+      TextOps.ngramStatsFromCounts(TextOps.ngramCounts(docs, Seq(k)), k, minCount)
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
+    val target = corpus.filter(tgtPred)
+    // the operator defaults: target prunes 2/2, raw prunes 3/5
+    assert(rows(tt) == rows(stats(target, 3, 2)))
+    assert(rows(tb) == rows(stats(target, 2, 2)))
+    assert(rows(rt) == rows(stats(corpus, 3, 3)))
+    assert(rows(rb) == rows(stats(corpus, 2, 5)))
+    assert(Seq(tt, tb, rt, rb).forall(_.count() > 0), "every model must carry rows")
+  }
+
+  test("dsirScore3 streams: batch rows for every document with at least 3 tokens") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    val (tt, tb, rt, rb) = TextOps.dsirModels3(corpus, col("source") === "tgt")
+    val probes = Seq((21L, "the cat sat"), (11L, "dogs run very fast"),
+      (23L, "a the cat"), // trigram unknown to both sides: the bigram hop
+      (24L, "the cat"), (22L, "solo")) // sub-trigram: absent from the stream
+    val mem = MemoryStream[(Long, String)](spark)
+    val q = TextOps.dsirScore3(mem.toDF().toDF("doc_id", "text"), tt, tb, rt, rb)
+      .writeStream.format("memory").queryName("dsir3_stream")
+      .outputMode("complete").start()
+    try {
+      mem.addData(probes: _*)
+      q.processAllAvailable()
+      val streamed = spark.table("dsir3_stream")
+        .as[(Long, Long, Double, Double, Double)].collect().toSet
+      val batch = TextOps.dsirScore3(probes.toDF("doc_id", "text"), tt, tb, rt, rb)
+        .as[(Long, Long, Double, Double, Double)].collect().toSet
+      assert(streamed == batch.filter(_._2 >= 1))
+      assert(streamed.map(_._1) == Set(21L, 11L, 23L))
+      assert(batch.filter(_._2 == 0).map(_._1) == Set(24L, 22L))
     } finally q.stop()
   }
 }

@@ -273,6 +273,38 @@ class LmIndexSpec extends SparkSpec {
       metaText(v3).contains("minCount4") && metaText(v3).contains("minCount5"))
   }
 
+  test("meta.json of every format version, built, calibrated or merged, is pinned byte for byte") {
+    def metaText(dir: String): String = new String(
+      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(dir, "meta.json")),
+      "UTF-8")
+    val corpus = ((1L to 5L).map(i => (i, "the cat sat on mats")) ++ Seq(
+      (7L, "the cat sat on mats for hours and hours on end"),
+      (8L, "the dog sat on logs for hours"),
+      (9L, "x y"))).toDF("doc_id", "text")
+    val v1 = tmpDir("lm_bytes_v1"); val v2 = tmpDir("lm_bytes_v2")
+    val v3 = tmpDir("lm_bytes_v3"); val v3m = tmpDir("lm_bytes_v3m")
+    LmIndex.build(corpus, v1, minCount = 2)
+    LmIndex.recordCuts(spark, v1, corpus)
+    LmIndex.buildWithTrigrams(corpus, v2, minCount = 2, minCount3 = 2)
+    LmIndex.recordCuts3(spark, v2, corpus)
+    LmIndex.buildWithOrders(corpus, v3)
+    LmIndex.recordCuts(spark, v3, corpus)
+    LmIndex.recordCuts3(spark, v3, corpus)
+    LmIndex.recordCuts5(spark, v3, corpus)
+    LmIndex.merge(spark, v3, corpus.filter(col("doc_id") > 6), v3m)
+    assert(Seq(v1, v2, v3, v3m).map(metaText) == Seq(
+      """{"minCount":2,"nBigrams":5,"p25":-5.449804,"p75":-0.110458}""",
+      """{"minCount":2,"nBigrams":5,"p25_3":-2.862939,"p75_3":-0.051384,""" +
+        """"version":2,"minCount3":2,"nTrigrams":3}""",
+      """{"minCount":5,"nBigrams":4,"p25":-6.616471,"p75":-0.110458,""" +
+        """"p25_3":-3.36759,"p75_3":-0.051384,"p25_5":-4.285715,"p75_5":0.0,""" +
+        """"version":3,"minCount3":3,"nTrigrams":3,"minCount4":2,"n4grams":2,""" +
+        """"minCount5":2,"n5grams":1}""",
+      // a merge keeps the layers and prunes and drops every recorded cut
+      """{"minCount":5,"nBigrams":4,"version":3,"minCount3":3,"nTrigrams":3,""" +
+        """"minCount4":2,"n4grams":12,"minCount5":2,"n5grams":10}"""))
+  }
+
   test("a future-version artifact is rejected loudly, never read under v3 semantics") {
     val dir = tmpDir("lm_v9")
     LmIndex.build(reference, dir, minCount = 5)
